@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from geotiff_spark.functions import pip as pipmod
+from geotiff_spark.plans.fusion import map_in_pandas
 from geotiff_spark.sources import polygons as polysrc
 
 
@@ -199,4 +200,4 @@ def fused_pages_pip(
             out["poly_id"] = out_pids
             yield out
 
-    return pages.select(*carry, html).mapInPandas(run, schema=out_schema)
+    return map_in_pandas(pages, run, out_schema, columns=(*carry, html))

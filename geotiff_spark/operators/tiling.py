@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from geotiff_spark.plans.fusion import map_in_pandas
+
 TILE_SCHEMA = StructType(
     [
         StructField("raster_id", StringType()),
@@ -79,7 +81,7 @@ def raster_to_tiles(rasters: DataFrame, tile_size: int = 256) -> DataFrame:
                         })
             yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
 
-    return rasters.mapInPandas(run, schema=TILE_SCHEMA)
+    return map_in_pandas(rasters, run, TILE_SCHEMA)
 
 
 def tiles_to_raster(tiles_pdf: pd.DataFrame, tile_size: int = 256) -> np.ndarray:
@@ -134,7 +136,7 @@ def tile_stats(tiles: DataFrame) -> DataFrame:
                 })
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    return tiles.mapInPandas(run, schema=schema)
+    return map_in_pandas(tiles, run, schema)
 
 
 FOCAL_STATS_SCHEMA = StructType([
@@ -285,7 +287,7 @@ def focal_stats(
             "f_min": int(fsum.min()), "f_max": int(fsum.max()),
         }])
 
-    frags = tiles.mapInPandas(emit, schema=_HALO_SCHEMA)
+    frags = map_in_pandas(tiles, emit, _HALO_SCHEMA)
     return (
         frags.groupBy("raster_id", "tile_x", "tile_y")
         .applyInPandas(assemble, schema=FOCAL_STATS_SCHEMA)
@@ -425,4 +427,4 @@ def vectorize_threshold(
                     })
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    return rasters.mapInPandas(run, schema=schema)
+    return map_in_pandas(rasters, run, schema)

@@ -1,12 +1,17 @@
 """Per-partition lineage + row-count metrics (north rule).
 
-`instrument(df, stage)` wraps a DataFrame in a zero-copy mapInPandas pass
-that counts rows per physical partition; metrics flow back through a Spark
-accumulator (survives speculative re-execution by keying on partition id
-and keeping the max) and `flush(path)` persists them as parquet — the
-lineage side-table for checkpoint-resumable reruns.
+`instrument(df, stage)` counts rows per physical partition in a
+pass-through pandas stage that rides the adjacent engine map stage
+(plans/fusion.py): it is composed into the operator before it, or
+absorbed by the one after it (e.g. `fused_pages_pip`), whose column
+selection still reaches the scan. Only with no adjacent engine map stage
+does it run as a mapInPandas pass of its own. Metrics flow back
+through a Spark accumulator (survives speculative re-execution by keying
+on partition id and keeping the max) and `flush(path)` persists them as
+parquet, written on the driver with pyarrow: the lineage side-table for
+checkpoint-resumable reruns.
 
-The wrapper costs one iterator pass, no data copies, no extra shuffle.
+Counting costs one iterator pass, no data copies, no extra shuffle.
 """
 
 from __future__ import annotations
@@ -14,9 +19,20 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame, SparkSession
+
+from geotiff_spark.plans.fusion import map_in_pandas
+
+_SIDE_TABLE = pa.schema([
+    ("partition_id", pa.int64()),
+    ("rows", pa.int64()),
+    ("stage", pa.string()),
+])
 
 
 class _DictMaxParam(AccumulatorParam):
@@ -35,7 +51,6 @@ class StageMetrics:
     """Collects (stage, partition_id) → row counts across jobs."""
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
         self.acc = spark.sparkContext.accumulator({}, _DictMaxParam())
         self.started = time.time()
 
@@ -50,7 +65,8 @@ class StageMetrics:
                 yield pdf
             acc.add({f"{stage}\x1f{pid}": rows})
 
-        return df.mapInPandas(count_rows, schema=df.schema)
+        return map_in_pandas(df, count_rows, df.schema,
+                             name=f"count[{stage}]", passthrough=True)
 
     def snapshot(self) -> list[dict]:
         out = []
@@ -67,6 +83,12 @@ class StageMetrics:
         with open(f"{path}/metrics_{stamp}.json", "w") as fh:
             json.dump(rows, fh)
         if rows:
-            self.spark.createDataFrame(rows).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{path}/parquet")
+            # a few rows: one part file per flush, appended next to the
+            # earlier ones, with no Spark job
+            os.makedirs(f"{path}/parquet", exist_ok=True)
+            table = pa.Table.from_pylist(rows, schema=_SIDE_TABLE)
+            pq.write_table(
+                table,
+                f"{path}/parquet/part-00000-{uuid.uuid4()}-c000.snappy.parquet",
+                compression="snappy",
+            )

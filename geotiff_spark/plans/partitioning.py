@@ -6,10 +6,12 @@ gives spatial locality (co-located cells share files → partition pruning
 on spatial predicates), but a FIXED prefix depth either under-splits hot
 regions or over-splits empty ones.
 
-One aggregation pass measures the histogram at the deepest depth; every
+Two aggregations measure the histogram: one approx_count_distinct probe
+picks the deepest depth the driver can afford (measured_depth), then one
+groupBy counts rows per prefix at that depth (deep_histogram). Every
 coarser depth's histogram derives from it driver-side (prefix sums), so
-choosing the balanced depth and the hot prefixes costs a single Spark job
-regardless of how many depths are considered.
+choosing the balanced depth and the hot prefixes costs those two Spark
+jobs regardless of how many depths are considered.
 """
 
 from __future__ import annotations
@@ -86,8 +88,9 @@ def deep_histogram(
     max_depth: int = 12,
     driver_budget: int = DRIVER_HISTOGRAM_BUDGET,
 ) -> pd.DataFrame:
-    """(prefix@depth, n) — the one measured aggregation, collected at
-    the deepest depth the driver budget affords (see measured_depth)."""
+    """(prefix@depth, n) — the measured histogram, collected at the
+    deepest depth the driver budget affords. Two jobs: the measured_depth
+    probe, then the groupBy."""
     depth = measured_depth(df, token, max_depth, driver_budget)
     return (
         df.groupBy(F.substring(F.col(token), 1, depth).alias("prefix"))
@@ -129,7 +132,7 @@ def adaptive_prefix_column(
     """Variable-depth prefix: shallowest uniform depth for the bulk, two
     extra levels for prefixes still above target_rows. Balanced against
     the measured distribution — hot cities split finer, oceans stay
-    coarse. Costs exactly one aggregation over df."""
+    coarse. Costs the two aggregations of deep_histogram over df."""
     hist = deep_histogram(df, token, max_depth)
     depth = base_depth or choose_prefix_depth(
         hist, target_rows=target_rows * 4, max_depth=max_depth

@@ -11,7 +11,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
 
 DEFAULT_CONFIGS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -24,27 +23,6 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # broadcast the polygon cell index / raster dim tables aggressively
     "spark.sql.autoBroadcastJoinThreshold": "67108864",
     "spark.sql.session.timeZone": "UTC",
-    # local mode: the driver JVM IS the executor — size it for 32
-    # concurrent tasks streaming Arrow batches
-    "spark.driver.memory": _DRIVER_MEM,
-    # Pin the heap (-Xms == driver memory) and pre-touch it once at
-    # startup. Round-6 finding: with the default lazy/shrinkable heap,
-    # long sessions intermittently collapsed into KERNEL-time page-fault
-    # storms (sys 85-95%, user ~1%; /proc sampling showed
-    # exc_page_fault + memcg accounting; identical queries ran 10-30x
-    # slower: rep_signals 13 s -> 431 s mid-session) — G1 uncommits
-    # heap after concurrent cycles and this sandbox's virtualized host
-    # makes RE-faulting returned pages brutally slow whenever the host
-    # is tight. Pinning forbids the uncommit and pre-touch pays the
-    # fault cost exactly once at startup; an interleaved same-window
-    # A/B (BENCH/BASELINE.md round 6) showed the pinned config stable
-    # at 13-18 s where the lazy config hit 147 s. The default dropped
-    # 48g -> 16g to bound the one-time pre-touch tax (a tight-host
-    # window made a 28g pre-touch take minutes; 16g starts in ~10 s and
-    # the full suite fits it). On a real cluster this is the standard
-    # spark-executor posture anyway (fixed-size pre-touched heaps).
-    "spark.driver.extraJavaOptions":
-        f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch",
     # Same fault-storm fix for the PYTHON workers (they cannot pre-touch
     # a fixed heap): stop glibc from returning freed memory to the OS —
     # no trim, and keep sub-32MB allocations (every Arrow batch at the
@@ -57,15 +35,52 @@ DEFAULT_CONFIGS: dict[str, str] = {
 }
 
 
+def _heap_configs() -> dict[str, str]:
+    """The driver heap: SPARK_GRAFT_DRIVER_MEM, else min(16g, 55% of
+    MemTotal), so the pinned, pre-touched heap fits the host with room
+    left for the Python workers (a 16g heap cannot start on a 15 GB host
+    with no swap)."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        try:
+            with open("/proc/meminfo") as fh:
+                kb = next(int(line.split()[1]) for line in fh
+                          if line.startswith("MemTotal:"))
+            mem = f"{min(16 * 1024, int(kb * 0.55) // 1024)}m"
+        except (OSError, StopIteration, ValueError):
+            mem = "16g"
+    return {
+        # local mode: the driver JVM IS the executor
+        "spark.driver.memory": mem,
+        # Pin the heap (-Xms == driver memory) and pre-touch it once at
+        # startup. Round-6 finding: with the default lazy/shrinkable heap,
+        # long sessions intermittently collapsed into KERNEL-time page-fault
+        # storms (sys 85-95%, user ~1%; /proc sampling showed
+        # exc_page_fault + memcg accounting; identical queries ran 10-30x
+        # slower: rep_signals 13 s -> 431 s mid-session) — G1 uncommits
+        # heap after concurrent cycles and a virtualized host
+        # makes RE-faulting returned pages brutally slow whenever the host
+        # is tight. Pinning forbids the uncommit and pre-touch pays the
+        # fault cost exactly once at startup; an interleaved same-window
+        # A/B (BENCH/BASELINE.md round 6) showed the pinned config stable
+        # at 13-18 s where the lazy config hit 147 s. The cap dropped
+        # 48g -> 16g to bound the one-time pre-touch tax (a tight-host
+        # window made a 28g pre-touch take minutes; 16g starts in ~10 s and
+        # the full suite fits it). On a real cluster this is the standard
+        # spark-executor posture anyway (fixed-size pre-touched heaps).
+        "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+AlwaysPreTouch",
+    }
+
+
 def get_spark(
     app_name: str = "geotiff_spark",
     master: str | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
-    for k, v in {**DEFAULT_CONFIGS, **(extra or {})}.items():
+    for k, v in {**DEFAULT_CONFIGS, **_heap_configs(), **(extra or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

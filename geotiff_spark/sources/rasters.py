@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from geotiff_spark.plans.fusion import map_in_pandas
+
 RASTER_SCHEMA = StructType(
     [
         StructField("raster_id", StringType()),
@@ -136,7 +138,8 @@ def read_rasters(
         .load(paths)
         .select("path", "content")
     )
-    return scan.mapInPandas(_decode_batches, schema=RASTER_SCHEMA)
+    return map_in_pandas(scan, _decode_batches, RASTER_SCHEMA,
+                         name="read_rasters")
 
 
 def read_rasters_parallel(

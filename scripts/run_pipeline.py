@@ -9,7 +9,9 @@ Stages (all DataFrame ops):
  2. fused decode → text extraction → geotag → cell encode → broadcast
     cell-index PIP join (single mapInPandas stage, zero shuffle)
  3. per-partition lineage + row-count metrics (accumulator side-table,
-    persisted)
+    persisted): the counters ride inside the stage-2 Python operator
+    (plans/fusion.py), so counting adds no Python pass and the scan still
+    reads only `url, html`
  4. hot-cell measurement → adaptive cell-prefix partition key
  5. resumable partitioned write (manifest-committed buckets): kill the
     job at any point and rerun — completed buckets are skipped and the

@@ -100,6 +100,28 @@ def test_lineage_metrics_row_counts(spark, tmp_path):
     assert any(f.startswith("metrics_") for f in files)
 
 
+def test_lineage_flush_appends_parquet_side_table(spark, tmp_path):
+    """Each flush appends one part file; Spark reads them back as
+    (partition_id bigint, rows bigint, stage string)."""
+    from geotiff_spark.plans.lineage import StageMetrics
+
+    m = StageMetrics(spark)
+    assert m.instrument(spark.range(0, 100, numPartitions=2), "a").count() == 100
+    out = str(tmp_path / "metrics")
+    m.flush(out)
+    m.flush(out)
+    parts = [f for f in os.listdir(f"{out}/parquet") if f.endswith(".parquet")]
+    assert len(parts) == 2
+    side = spark.read.parquet(f"{out}/parquet")
+    assert side.dtypes == [
+        ("partition_id", "bigint"), ("rows", "bigint"), ("stage", "string"),
+    ]
+    got = sorted(tuple(r) for r in side.collect())
+    assert got == sorted(
+        (r["partition_id"], r["rows"], r["stage"]) for r in m.snapshot() * 2
+    )
+
+
 def test_checkpoint_resume_kill_and_rerun(spark, tmp_path):
     """Kill mid-write, rerun, output identical to uninterrupted write and
     completed buckets skipped."""
