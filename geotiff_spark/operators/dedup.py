@@ -283,7 +283,6 @@ def bucket_candidate_pairs(
     key: str,
     bucket_cols: list[str],
     max_inline_bucket: int = 256,
-    distinct: bool = True,
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) from a bucketed table —
     the shared core of every LSH family here (MinHash bands, sign-LSH
@@ -300,14 +299,6 @@ def bucket_candidate_pairs(
     the single-host materializer; on a real cluster with executor churn
     use reliable checkpoint() / persist-with-replication — the blocks
     have no lineage to recompute from.)
-
-    ``distinct=False`` skips the cross-table pair dedup and returns the
-    raw (possibly repeated) pair stream — for callers that verify
-    candidates and can dedup AFTER their selective filter, where the
-    dedup exchange shrinks from every candidate to the survivors
-    (round 8: the full-width distinct was ~6.5 s of
-    embedding_near_dups_planted's 20 s at sf1.0; verifying ~28% more
-    raw pairs costs far less).
     """
     stacked = stacked.select(key, *bucket_cols).localCheckpoint(eager=True)
     grouped = stacked.groupBy(*bucket_cols).agg(
@@ -341,8 +332,7 @@ def bucket_candidate_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    out = small.unionByName(big)
-    return out.distinct() if distinct else out
+    return small.unionByName(big).distinct()
 
 
 def minhash_lsh_pairs(

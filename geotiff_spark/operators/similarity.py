@@ -251,7 +251,6 @@ def lsh_near_dup_pairs(
     dim: int = 64,
     n_planes: int = 3,
     n_tables: int = 32,
-    max_inline_bucket: int = 512,
     max_local_bucket: int = 4096,
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold via sign-LSH self-bucketing + exact
@@ -372,6 +371,9 @@ def lsh_near_dup_pairs(
         ib = (np.concatenate(out_b) if out_b else ids_all[:0])
         cc = (np.concatenate(out_c) if out_c
               else np.array([], dtype=np.float64))
+        # a key present twice in one bucket would pair with itself
+        keep = ia != ib
+        ia, ib, cc = ia[keep], ib[keep], cc[keep]
         swap = ia > ib
         return pd.DataFrame({
             "id_a": np.where(swap, ib, ia),

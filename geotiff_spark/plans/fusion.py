@@ -1,16 +1,16 @@
 """Fuse chained pandas map stages into one Python operator per task.
 
 Why: every ``mapInPandas`` in a plan is its own Python runner in every
-task, and each runner pays a fixed start-up cost however many rows it
-handles. On PySpark 4.1 with Python 3.11 that cost is ~0.3 s of worker
-CPU per operator per task: ``worker_util.setup_spark_files`` calls
-``importlib.invalidate_caches()``, which makes each of the ~16
-zipimporters on the worker path re-read the 1,328-entry directory of
-``pyspark.zip``. Measured on a 4-core host at local[2], an identity
-``mapInPandas`` costs 0.58-0.62 s per job at 1k, 60k and 600k rows alike,
-while the function body takes ~5 ms. A row-local chain such as
-decode → tiles → stats paid that cost once per stage although no row ever
-leaves the partition between the stages.
+task, and each stage of a row-local chain such as decode → tiles → stats
+ships its whole output across Arrow to the JVM and back into the next
+runner although no row ever leaves the partition between the stages.
+Fusing saves one Arrow round trip (serialize, copy, deserialize) per
+fused stage. It was first measured against a larger fixed cost, ~0.3 s
+of worker CPU per operator per task: ``worker_util.setup_spark_files``
+calls ``importlib.invalidate_caches()``, which made each zipimporter on
+the worker path re-read the directory of ``pyspark.zip``. That cost is
+now removed at its root by ``geotiff_spark.worker_daemon`` (see
+``session.py``), which keeps Spark's archives off the worker path.
 
 ``map_in_pandas(df, fn, schema)`` returns a DataFrame that remembers its
 input and its function. When exactly that DataFrame object is handed to

@@ -1200,9 +1200,10 @@ def rep_signals_frame(docs):
     five times per row and folded the top-bigram run through an
     interpreted higher-order aggregate (~24 s at 2M pages); one Python
     dict-count per doc over the same tokens is ~5× cheaper and still
-    row-local — zero shuffle either way. The token split is the
-    explicit Java-\\s class [ \\t\\n\\x0B\\f\\r] so Python re and Java
-    regex tokenize identically by construction; every count is an
+    row-local — zero shuffle either way. The token split is RE2's \\s
+    class [ \\t\\n\\f\\r], without the \\x0B that Python's and Java's \\s
+    add, so it tokenizes exactly as the DuckDB oracle's
+    string_split_regex(text, '\\s+') does; every count is an
     exact integer, and the fraction arithmetic (division + round)
     stays in the SAME JVM expressions as before, so the output doubles
     are bit-identical to the previous form and to the oracle
@@ -1214,7 +1215,7 @@ def rep_signals_frame(docs):
 
     @pandas_udf("struct<n2:long,d2:long,n3:long,d3:long,top:long>")
     def counts_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        ws = re.compile("[ \t\n\x0b\f\r]+")
+        ws = re.compile("[ \t\n\f\r]+")
         for texts in it:
             n2 = []
             d2 = []

@@ -310,3 +310,16 @@ def test_pii_scrub_semantics(spark):
     assert row.n_long_digit_runs == 1  # 8-digit run stays
     assert row.scrubbed_md5 == hashlib.md5(expected.encode()).hexdigest()
     assert row.scrubbed_len == len(expected)
+
+
+def test_lsh_near_dups_never_pair_a_key_with_itself(spark):
+    """A key present twice (same vector) must not come back as an
+    id_a == id_b pair with cos 1.0."""
+    from geotiff_spark.operators import similarity
+
+    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (0, [1.0, 0.0, 0.0, 0.0]),
+            (1, [1.0, 0.1, 0.0, 0.0]), (2, [0.0, 0.0, 1.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = similarity.lsh_near_dup_pairs(emb, threshold=0.9, dim=4).collect()
+    assert [(r["id_a"], r["id_b"]) for r in got] == [(0, 1)]
+    assert got[0]["cos"] == round(1 / (1 + 0.01) ** 0.5, 6)

@@ -217,6 +217,36 @@ def test_rep_signals_top_gram_run_length_semantics(spark):
     assert got[2]["dup_2gram_frac"] == 0.8  # 1 distinct of 5
 
 
+def test_rep_signals_vertical_tab_splits_like_duckdb(spark):
+    """\\x0B is not whitespace to RE2, so DuckDB's
+    string_split_regex(t, '\\s+') keeps it inside a token; the engine's
+    tokenizer must too, and the signals must equal the oracle's."""
+    import duckdb
+    import pandas as pd
+
+    from geotiff_spark.queries_textdata import (
+        SQL_REP_SIGNALS, rep_signals_frame,
+    )
+
+    documents = pd.DataFrame({
+        "doc_id": [0, 1, 2],
+        "text": ["a\x0bb a b a\x0bb", "x\x0b y\x0b\x0bz y", "p q\tp q\x0b"],
+    })
+    con = duckdb.connect()
+    con.register("documents", documents)
+    toks = con.execute(
+        "SELECT list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
+        " FROM documents ORDER BY doc_id").fetchall()
+    assert toks[0][0] == ["a\x0bb", "a", "b", "a\x0bb"]
+    want = {r[0]: r[1:] for r in con.execute(SQL_REP_SIGNALS).fetchall()}
+    got = {
+        r["doc_id"]: (r["dup_2gram_frac"], r["dup_3gram_frac"],
+                      r["top_2gram_frac"])
+        for r in rep_signals_frame(spark.createDataFrame(documents)).collect()
+    }
+    assert got == want
+
+
 def test_url_canonical_dedup_single_exchange(spark):
     """Canonicalization is row-local codegen; the only data exchange is
     the canonical-keyed aggregation (partial-aggregatable, so hot
