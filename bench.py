@@ -11,7 +11,8 @@ pages table is generated deterministically once per sf and cached as
 parquet in /tmp so the benchmark measures the ENGINE, not the generator.
 
 Usage: python bench.py            # full suite, one JSON line
-       python bench.py --parallelism 8   # override cores (scaling runs)
+       python bench.py --parallelism 8   # local[8] instead of get_spark's
+                                         # default master (scaling runs)
 """
 
 from __future__ import annotations
@@ -27,14 +28,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 PAGES_PER_SF = 2_000_000  # sf0.1 -> 200k pages
 
 
-def build_spark(cpus: int):
+def build_spark(cpus: int | None = None):
+    """local[cpus], or get_spark's default master when cpus is None;
+    shuffle partitions follow the parallelism the session reports."""
     from geotiff_spark.session import get_spark
 
-    return get_spark(
-        "bench",
-        master=f"local[{cpus}]",
-        extra={"spark.sql.shuffle.partitions": str(max(cpus * 2, 8))},
-    )
+    spark = get_spark("bench", master=f"local[{cpus}]" if cpus else None)
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(spark.sparkContext.defaultParallelism * 2, 8)))
+    return spark
 
 
 STEADY_MIN_PAGES = 2_000_000  # big-n steady state: amortize worker spin-up
@@ -109,9 +111,10 @@ def bench_queries(spark, sf_dir: str, pages_path: str, bign_path: str,
         ).count()
 
     def raster_decode():
+        from geotiff_spark.oracle_raster import RESOURCE_DIR
         from geotiff_spark.sources.rasters import read_rasters
 
-        df = read_rasters(spark, "/root/reference/resources")
+        df = read_rasters(spark, RESOURCE_DIR)
         return df.filter(F.col("error").isNull()).count()
 
     picks = [
@@ -321,8 +324,7 @@ def pages_e2e_count(spark, pages_path: str, res: int = 7) -> int:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--parallelism", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--only", nargs="*", default=None)
     args = ap.parse_args()
 
@@ -332,6 +334,7 @@ def main() -> int:
 
     spark = build_spark(args.parallelism)
     spark.sparkContext.setLogLevel("ERROR")
+    parallelism = spark.sparkContext.defaultParallelism
     pages_path = ensure_pages(spark, f"sf{sf}", n_pages)
     bign_n = max(n_pages, STEADY_MIN_PAGES)
     bign_path = ensure_pages(spark, f"bign{bign_n}", bign_n)
@@ -339,7 +342,7 @@ def main() -> int:
     # spin up the Python worker pool before any timing — a long-lived
     # cluster has warm workers, and without this the first Python-stage
     # query absorbs ~2s of one-time process forks
-    spark.range(10_000, numPartitions=args.parallelism).mapInPandas(
+    spark.range(10_000, numPartitions=parallelism).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
 
@@ -468,7 +471,7 @@ def main() -> int:
         "n_pages": n_pages,
         "steady_n_pages": bign_n,
         "pages_per_sec": pages_per_sec,
-        "parallelism": args.parallelism,
+        "parallelism": parallelism,
         "diagnostics": diagnostics,
         "over_band": over_band,
         "row_counts": counts,

@@ -88,11 +88,12 @@ def bench_frames(spark, sf_dir: str, pages_path: str, bign_path: str,
         return bpe_encode_counts(pages2m(), merges=merges, byte_level=True)
 
     def raster_decode():
+        from geotiff_spark.oracle_raster import RESOURCE_DIR
         from geotiff_spark.sources.rasters import read_rasters
 
         # geo_keys is a map column (not hashable by force_all) — drop it;
         # the decode itself still runs (mapInPandas is opaque to pruning)
-        return read_rasters(spark, "/root/reference/resources").filter(
+        return read_rasters(spark, RESOURCE_DIR).filter(
             F.col("error").isNull()
         ).drop("geo_keys")
 
@@ -114,8 +115,7 @@ def bench_frames(spark, sf_dir: str, pages_path: str, bign_path: str,
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--parallelism", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--names", nargs="*", default=None)
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--runs", type=int, default=1)
@@ -136,7 +136,8 @@ def main() -> int:
     bign_path = bench.ensure_pages(spark, f"bign{bign_n}", bign_n)
 
     # warm the Python worker pool (same as bench.py)
-    spark.range(10_000, numPartitions=args.parallelism).mapInPandas(
+    n_parts = spark.sparkContext.defaultParallelism
+    spark.range(10_000, numPartitions=n_parts).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
 

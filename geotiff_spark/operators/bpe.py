@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
+from geotiff_spark.operators.textstats import WS_CHARS
+
 # Fixed default vocabulary for the oracle-gated registry query: 26
 # merges over lowercase ASCII, hand-ordered to exercise cascades
 # (t+a→ta→tab→table), priority interplay ((a,s) outranks later merges
@@ -57,14 +59,10 @@ DEFAULT_MERGES: list[tuple[str, str]] = [
 # replays the merge loop over chr(31)-separated token states, so a word
 # containing the separator would silently diverge (ADVICE r06). Treating
 # it as a word boundary on BOTH sides makes the equivalence precondition
-# structural instead of an assumption about the corpus.
-# The whitespace class is spelled EXPLICITLY (ADVICE r07): Java-regex
-# \s includes U+000B (vertical tab) while RE2's \s — what the oracle's
-# string_split_regex uses — does not, so a \x0B-carrying document would
-# tokenize differently on the two sides under \s. This class is exactly
-# RE2's \s plus the U+001F guard; current corpora carry no \x0B, so
-# existing hashes are unchanged.
-_WORD_SEP = r"[ \t\n\f\r\u001F]+"
+# structural instead of an assumption about the corpus. The whitespace
+# part is textstats.WS_CHARS (RE2's \s, no U+000B), and the one string
+# serves the JVM split and the Python UDF alike.
+_WORD_SEP = f"[{WS_CHARS}\x1f]+"
 
 
 def bpe_train(word_counts: dict[str, int], n_merges: int) -> list[tuple[str, str]]:
@@ -277,11 +275,6 @@ def bpe_token_count_udf(merges: list[tuple[str, str]],
     return n_bpe_tokens.asNondeterministic()
 
 
-# Python twin of _WORD_SEP (same explicit character class, so the two
-# tokenizations agree by construction — see the _WORD_SEP note)
-_WORD_SEP_PY = "[ \t\n\f\r\x1f]+"
-
-
 def bpe_encode_counts(
     docs: DataFrame,
     merges: list[tuple[str, str]] | None = None,
@@ -305,7 +298,7 @@ def bpe_encode_counts(
             DEFAULT_MERGES if merges is None else merges
         )
     }
-    ws = re.compile(_WORD_SEP_PY)
+    ws = re.compile(_WORD_SEP)
 
     @pandas_udf("struct<n_words:long,n_bpe_tokens:long>")
     def counts(texts: pd.Series) -> pd.DataFrame:

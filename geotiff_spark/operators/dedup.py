@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from geotiff_spark.operators.textstats import tokens
+from geotiff_spark.plans.partitioning import ensure_map_parallelism
+
 
 def exact_dedup(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
     """Exact duplicate groups: md5(text) groupBy; keeper = min key.
@@ -137,7 +140,7 @@ def _shingle_array(text: str, n: int):
     fewer than n tokens yield NULL (no shingles) — a truncated shingle
     would let unrelated short docs collide at jaccard 1.0, the same
     accidental semantics ADVICE r3 flagged for char n-grams."""
-    toks = F.filter(F.split(F.col(text), r"\s+"), lambda t: t != "")
+    toks = tokens(F.col(text))
     if n <= 1:
         return F.array_distinct(toks)
     sh = F.when(
@@ -259,7 +262,7 @@ def minhash_signatures(
     # UDF nondeterministic forbids the alias inlining, so the filter
     # references the materialized column and the plan holds exactly ONE
     # ArrowEvalPython (pinned by test_plan_shapes).
-    df = _ensure_map_parallelism(df)
+    df = ensure_map_parallelism(df)
     base = F.transform(
         _shingle_array(text, shingle),
         lambda s: _base_hash_expr(s, hash_mode),
@@ -268,14 +271,6 @@ def minhash_signatures(
         df.select(F.col(key), sigs_udf.asNondeterministic()(base).alias("sigs"))
         .filter(F.col("sigs").isNotNull())
     )
-
-
-# ensure_map_parallelism moved to plans.partitioning (round 8): the same
-# degenerate-scan fan-out now also protects the documents/embeddings
-# table reads in the query registry, not just the signature stages.
-from geotiff_spark.plans.partitioning import (  # noqa: E402
-    ensure_map_parallelism as _ensure_map_parallelism,
-)
 
 
 def bucket_candidate_pairs(
@@ -454,10 +449,8 @@ def simhash_signatures(
     # would inline + duplicate the JVM hash chain below the exchange),
     # and the UDF marked nondeterministic so the alias can't inline into
     # the filter and double-plan the Python stage (see minhash_signatures).
-    df = _ensure_map_parallelism(df)
-    toks = F.array_distinct(
-        F.filter(F.split(F.col(text), r"\s+"), lambda t: t != "")
-    )
+    df = ensure_map_parallelism(df)
+    toks = F.array_distinct(tokens(F.col(text)))
     hashes = F.transform(toks, lambda t: _base_hash_expr(t, hash_mode))
     return (
         df.select(F.col(key), fold.asNondeterministic()(hashes).alias("simhash"))
@@ -659,7 +652,7 @@ def repeated_ngram_mine(
     TakeOrdered (per-partition k, no global sort)."""
     from pyspark.sql.window import Window
 
-    toks = F.filter(F.split(F.col(text), r"\s+"), lambda t: t != "")
+    toks = tokens(F.col(text))
     grams = F.when(
         F.size(toks) >= n,
         F.transform(

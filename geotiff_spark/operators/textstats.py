@@ -16,20 +16,34 @@ STOPWORDS = {
 }
 
 
-def _tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+# Whitespace run for every engine tokenizer: RE2's \s spelled out as
+# literal characters. Java regex and Python re would also match U+000B
+# under \s, DuckDB's string_split_regex (RE2) does not, so the oracles
+# keep a vertical tab inside a token and so must the engine. Java regex,
+# Python re and RE2 all parse this class identically.
+WS_CHARS = " \t\n\f\r"
+WS = f"[{WS_CHARS}]+"
+
+
+def tokens(text: Column) -> Column:
+    """Whitespace tokens of `text`, empty strings dropped."""
+    return F.filter(F.split(text, WS), lambda t: t != "")
 
 
 def token_count(text: Column) -> Column:
     """Whitespace token count."""
-    return F.size(_tokens(text))
+    return F.size(tokens(F.lower(text)))
 
 
 # GPT-2-style pre-tokenizer, simplified to the lookaround-free core so the
 # SAME pattern runs identically under Java regex (Spark) and RE2 (DuckDB):
 # contractions, space-prefixed letter runs, digit runs, punctuation runs.
 # Both engines use leftmost-first alternation, so matches agree exactly.
-BPE_REGEX = r"'s|'t|'re|'ve|'m|'ll|'d| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\s]+"
+# Punctuation excludes WS_CHARS, not \s, so U+000B is punctuation on both.
+BPE_REGEX = (
+    r"'s|'t|'re|'ve|'m|'ll|'d| ?[a-zA-Z]+| ?[0-9]+"
+    f"| ?[^a-zA-Z0-9{WS_CHARS}]+"
+)
 
 
 def bpe_token_count(text: Column) -> Column:
@@ -43,7 +57,7 @@ def stopword_hits(text: Column, lang: str) -> Column:
     """Number of distinct language-stopwords present (set semantics)."""
     return F.size(
         F.array_intersect(
-            F.array_distinct(_tokens(text)),
+            F.array_distinct(tokens(F.lower(text))),
             F.array(*[F.lit(w) for w in STOPWORDS[lang]]),
         )
     )
@@ -78,7 +92,7 @@ def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
         .withColumn(
             "mean_tok_len",
             F.round(
-                (F.length(F.regexp_replace(t, r"\s+", "")))
+                (F.length(F.regexp_replace(t, WS, "")))
                 / F.greatest(n_tok, F.lit(1)),
                 6,
             ),

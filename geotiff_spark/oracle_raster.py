@@ -30,14 +30,14 @@ import numpy as np
 
 ORACLE_DIR = "/tmp/geotiff_spark_oracle_v2"
 
-AUSTRIAN = (
-    "/root/reference/resources/"
-    "austrian_capitals_model_tie_point_and_pixel_scale_pixel_is_area.tif"
-)
 RESOURCE_DIR = "/root/reference/resources"
 # committed synthetic fixtures (tiled + planar + deflate — layouts the
 # reference corpus lacks; see scripts/make_synth_fixture.py)
 SYNTH_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
+AUSTRIAN = (
+    f"{RESOURCE_DIR}/"
+    "austrian_capitals_model_tie_point_and_pixel_scale_pixel_is_area.tif"
+)
 
 # every dir whose *.tif files form the raster-query corpus (tile_stats,
 # pyramid_stats and their oracles must agree on this list)
@@ -214,8 +214,7 @@ SELECT poly_id, value AS mode_value, n AS n_mode FROM (
 
 
 TIE_RASTER = (
-    "/root/reference/resources/"
-    "austrian_capitals_model_tie_points_pixel_is_area.tif"
+    f"{RESOURCE_DIR}/austrian_capitals_model_tie_points_pixel_is_area.tif"
 )
 
 # deterministic model-space sample points inside the austrian extent —

@@ -19,10 +19,6 @@ from geotiff_spark.operators import extract as ex
 Registry = dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 # --------------------------------------------------------------------------
 # Spatial operators (the engine's reason to exist)
 # --------------------------------------------------------------------------
@@ -195,10 +191,7 @@ def q_cell_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     as chained CTEs (compact_oracle_sql)."""
     from geotiff_spark.operators.compact import compact_cells
 
-    # _light: the grid derivation is a handful of integer ops and the
-    # distinct reshuffles anyway — the degenerate-scan fan-out would be
-    # a pure extra exchange here (see pipeline.geo_documents_light)
-    docs = pipeline.geo_documents_light(spark, sf_dir)
+    docs = pipeline.geo_documents(spark, sf_dir, parallel=False)
     n = 1 << 7
     grid = docs.select(
         F.least(
@@ -248,8 +241,8 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key salted join — must equal the plain join exactly."""
     from geotiff_spark.plans.salting import salted_join
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = pipeline.load_table(spark, sf_dir, "lineitem")
+    p = pipeline.load_table(spark, sf_dir, "part")
     return (
         salted_join(li, p.withColumnRenamed("p_partkey", "l_partkey"),
                     "l_partkey", n_salt=4,
@@ -474,9 +467,10 @@ def q_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     coords → clip → Morton cell — exactly SQL-expressible over the pixel
     parquet (oracle: geotiff_spark.oracle_raster.vectorize_sql)."""
     from geotiff_spark.operators.tiling import vectorize_threshold
+    from geotiff_spark.oracle_raster import RESOURCE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, "/root/reference/resources").filter(
+    rasters = read_rasters(spark, RESOURCE_DIR).filter(
         F.col("raster_id") == "marbles.tif"
     )
     return vectorize_threshold(rasters, res=7, threshold=200.0)
@@ -484,7 +478,7 @@ def q_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles (median/p90) per order status."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = pipeline.load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.round(F.expr("percentile(o_totalprice, 0.5)"), 4).alias("median_price"),
         F.round(F.expr("percentile(o_totalprice, 0.9)"), 4).alias("p90_price"),
@@ -699,8 +693,10 @@ def q_stream_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl-ingest enrichment shape; batch-equivalent oracle is the plain
     two-way join + groupBy."""
     stream = _events_stream(spark, sf_dir)
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cust = pipeline.load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey")
+    nation = pipeline.load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name")
     dim = F.broadcast(
         cust.join(nation, cust.c_nationkey == nation.n_nationkey)
         .select("c_custkey", "n_name")

@@ -11,15 +11,12 @@ Conventions for oracle parity:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotiff_spark import oracle as _oracle
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from geotiff_spark.operators.textstats import tokens
+from geotiff_spark.pipeline import load_table as _t
 
 
 # ---- scans / filters / projections ----------------------------------------
@@ -653,11 +650,7 @@ WINDOW w AS (ORDER BY o_totalprice ASC, o_orderkey ASC)
 def q_top_tokens(spark, sf_dir):
     """Explode (UDTF shape): global top-20 document tokens."""
     d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-        ).alias("token")
-    )
+    toks = d.select(F.explode(tokens(F.lower("text"))).alias("token"))
     return (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))

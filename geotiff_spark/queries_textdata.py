@@ -9,34 +9,15 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geotiff_spark.operators import dedup, packing, similarity, textstats
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       parallel: bool = True) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if parallel and name in ("documents", "embeddings"):
-        # these two tables carry the heavy per-row compute (regex/UDF/
-        # cosine kernels) but ship as ONE parquet row group at every sf,
-        # so the scan plans a single partition and serializes every
-        # downstream map stage on one core (guide §2.5 input skew). The
-        # fan-out is a no-op whenever the scan already has real
-        # parallelism — a 100 TB table never triggers it.
-        from geotiff_spark.plans.partitioning import ensure_map_parallelism
-
-        df = ensure_map_parallelism(df)
-    return df
+from geotiff_spark.pipeline import load_table as _t
 
 
 # ---- dedup -------------------------------------------------------------------
 
 def q_exact_dedup(spark, sf_dir):
-    # parallel=False: one md5 per row feeding a digest groupBy that
-    # reshuffles anyway — the degenerate-scan fan-out exchange would be
-    # pure overhead for this query
     return dedup.exact_dedup(_t(spark, sf_dir, "documents", parallel=False))
 
 
@@ -329,7 +310,7 @@ def _corpus_curation(spark, sf_dir, exact_pairs: bool):
     over the jaccard-0.8 graph of survivors, component representative
     kept) -> per-language corpus stats."""
     docs = _t(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != ""))
+    n_tokens = F.size(textstats.tokens(F.col("text")))
     kept = docs.withColumn("n_tokens", n_tokens).filter(
         (F.length("text") >= 20) & (F.col("n_tokens") >= 3)
     )
@@ -788,7 +769,7 @@ def chunks_frame(docs):
     """(doc_id, pos, chunk): the deterministic 10-token chunker shared
     by chunk_dedup and bloom_chunk_dedup — row-local JVM expressions,
     no shuffle."""
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
+    toks = textstats.tokens(F.col("text"))
     n_chunks = F.ceil(F.size(toks) / F.lit(10)).cast("int")
     # guard: sequence(0, -1) would COUNT DOWN in Spark, not be empty
     chunk_arr = F.when(
@@ -831,7 +812,7 @@ def chunk_dedup_frame(docs):
         .groupBy(F.col("w.doc_id").alias("doc_id"))
         .agg(F.sort_array(F.collect_list("w.pos")).alias("keep_pos"))
     )
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
+    toks = textstats.tokens(F.col("text"))
     # n_chunks is row-local (ceil(tokens/10)) — no second chunk scan;
     # zero-chunk docs are excluded, matching the oracle's totals CTE
     return (
@@ -1200,22 +1181,21 @@ def rep_signals_frame(docs):
     five times per row and folded the top-bigram run through an
     interpreted higher-order aggregate (~24 s at 2M pages); one Python
     dict-count per doc over the same tokens is ~5× cheaper and still
-    row-local — zero shuffle either way. The token split is RE2's \\s
-    class [ \\t\\n\\f\\r], without the \\x0B that Python's and Java's \\s
-    add, so it tokenizes exactly as the DuckDB oracle's
-    string_split_regex(text, '\\s+') does; every count is an
-    exact integer, and the fraction arithmetic (division + round)
-    stays in the SAME JVM expressions as before, so the output doubles
-    are bit-identical to the previous form and to the oracle
-    (equality pinned by tests/test_plan_shapes.py semantics test and
-    the rep_signals oracle gate)."""
+    row-local — zero shuffle either way. The token split is
+    textstats.WS, the tokenizer of every engine query, so it tokenizes
+    exactly as the DuckDB oracle's string_split_regex(text, '\\s+')
+    does; every count is an exact integer, and the fraction arithmetic
+    (division + round) stays in the SAME JVM expressions as before, so
+    the output doubles are bit-identical to the previous form and to
+    the oracle (equality pinned by tests/test_plan_shapes.py semantics
+    test and the rep_signals oracle gate)."""
     import re
 
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("struct<n2:long,d2:long,n3:long,d3:long,top:long>")
     def counts_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        ws = re.compile("[ \t\n\f\r]+")
+        ws = re.compile(textstats.WS)
         for texts in it:
             n2 = []
             d2 = []
@@ -1436,9 +1416,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-        ).alias("token"),
+        F.explode(textstats.tokens(F.lower("text"))).alias("token"),
     )
     tf = tok.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("tf_sum"))
     dfreq = (
@@ -1905,7 +1883,7 @@ def q_decontaminate(spark, sf_dir):
     oracle: the same shingle sets in DuckDB via a plain anti/semi
     join."""
     docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
+    toks = textstats.tokens(F.col("text"))
     grams = F.when(
         F.size(toks) >= 8,
         F.transform(

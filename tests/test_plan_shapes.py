@@ -5,6 +5,9 @@ reaching the scan."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -21,8 +24,8 @@ def _optimized(df) -> str:
 def test_minhash_signatures_plan_has_no_exchange(spark):
     """On well-partitioned input the signature stage is a pure map (zero
     exchanges added); on a degenerate 1-row-group scan exactly one
-    parallelism-restoring repartition fires (dedup._ensure_map_parallelism)
-    and nothing else."""
+    parallelism-restoring repartition fires
+    (plans.partitioning.ensure_map_parallelism) and nothing else."""
     from geotiff_spark.operators.dedup import minhash_signatures
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -245,6 +248,66 @@ def test_rep_signals_vertical_tab_splits_like_duckdb(spark):
         for r in rep_signals_frame(spark.createDataFrame(documents)).collect()
     }
     assert got == want
+
+
+# every registry query that splits text on whitespace
+VT_QUERIES = [
+    "token_count", "language_id", "quality_features", "pack_sequences",
+    "top_tokens", "tfidf_top_terms", "chunk_dedup", "bloom_chunk_dedup",
+    "repeated_ngrams", "decontaminate", "token_jaccard_pairs",
+    "dedup_keeper", "dedup_components", "minhash_lsh_pairs",
+    "minhash_recall", "simhash_pairs", "simhash_complete",
+    "corpus_curation", "bpe_encode", "pack_sequences_bpe", "rep_signals",
+]
+
+
+@pytest.fixture(scope="module")
+def vt_sf(tmp_path_factory):
+    """The sf0.01 tables, with one space of every 5th document's text
+    turned into \\x0B."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = os.path.join(os.path.dirname(SF), "sf0.01")
+    dst = tmp_path_factory.mktemp("sf_vt")
+    for f in os.listdir(src):
+        shutil.copy(os.path.join(src, f), dst / f)
+    docs = pq.read_table(dst / "documents.parquet")
+    i = docs.schema.get_field_index("text")
+    texts = [
+        t.replace(" ", "\x0b", 1) if t is not None and n % 5 == 0 else t
+        for n, t in enumerate(docs.column(i).to_pylist())
+    ]
+    docs = docs.set_column(i, docs.schema.field(i),
+                           pa.array(texts, docs.schema.field(i).type))
+    pq.write_table(docs, dst / "documents.parquet")
+    return str(dst)
+
+
+@pytest.mark.parametrize("name", VT_QUERIES)
+def test_vertical_tab_splits_like_duckdb(spark, vt_sf, name):
+    """\\x0B is whitespace to Java regex and Python re but not to RE2,
+    so DuckDB's string_split_regex(t, '\\s+') keeps it inside a token;
+    every engine tokenizer must too, and each query's output must equal
+    its oracle's on a corpus that carries \\x0B."""
+    import duckdb
+    from oracle_check import TABLES, value_hash
+
+    from geotiff_spark.queries_relational import relational_queries
+    from geotiff_spark.queries_textdata import textdata_queries
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{vt_sf}/{t}.parquet'")
+    assert con.execute(
+        "SELECT count(*) FROM (SELECT unnest(string_split_regex(text, "
+        "'\\s+')) AS tok FROM documents) WHERE contains(tok, chr(11))"
+    ).fetchone()[0] >= 90
+    fn, sql = {**textdata_queries(), **relational_queries()}[name]
+    got = value_hash(fn(spark, vt_sf).toPandas())
+    assert got == value_hash(con.execute(sql).df())
 
 
 def test_url_canonical_dedup_single_exchange(spark):
