@@ -11,21 +11,25 @@ Scale shape (SURVEY.md §4.3): rasters are ALWAYS decoded on executors
 (no pixel decode) sizes the decoded corpus, then:
 
 - ``broadcast`` branch (corpus ≤ the size guard): decoded records are
-  collected once and broadcast; sampling is a zero-shuffle Arrow gather.
+  collected once and broadcast; sampling is a zero-shuffle ``arrow_udf``.
 - ``copartition`` branch (corpus above the guard): points shuffle by
   raster_id (optionally salted for hot rasters), each decoded raster row
   ships once per salt bucket, and the same gather kernel runs
-  group-locally inside a cogroup — the pixel data never transits the
-  driver, and per-raster work scales with executors, not driver cores.
+  group-locally inside a cogroup ``applyInArrow`` — the pixel data never
+  transits the driver, and per-raster work scales with executors.
+
+Both hand Python pyarrow data, not pandas frames, and sample NULL out of
+bounds, on an unknown raster_id and on a NaN pixel.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from geotiff_spark.functions import transforms as tf
@@ -60,15 +64,19 @@ def _cache_key(paths: list[str]) -> tuple:
     return tuple(parts)
 
 
-def _add_record(records: dict, rid: str, rec: dict) -> None:
+def _duplicate_basename(rid: str) -> ValueError:
     """raster_id is the file BASENAME — two corpus paths sharing one
-    basename would silently collapse to a single record (dict
-    overwrite); fail loudly instead (ADVICE r04)."""
+    basename would silently collapse to a single record (ADVICE r04).
+    Both sampling modes fail loudly with this error instead."""
+    return ValueError(
+        f"duplicate raster basename {rid!r} in corpus — raster_id is "
+        "the basename, so each file needs a distinct one"
+    )
+
+
+def _add_record(records: dict, rid: str, rec: dict) -> None:
     if rid in records:
-        raise ValueError(
-            f"duplicate raster basename {rid!r} in corpus — raster_id is "
-            "the basename, so each file needs a distinct one"
-        )
+        raise _duplicate_basename(rid)
     records[rid] = rec
 
 
@@ -205,23 +213,25 @@ def sample_udf(
     sample: int = 0,
     strict: bool = True,
 ):
-    """pandas UDF (raster_id, x, y) → double value (NULL out-of-bounds).
-    strict=False maps tie-points coverage holes to NULL instead of
-    failing the task (bulk-sampling semantics)."""
+    """Arrow UDF (raster_id, x, y) → double value: NULL out of bounds,
+    on an unknown raster_id and on a NaN pixel. strict=False maps
+    tie-points coverage holes to NULL instead of failing the task
+    (bulk-sampling semantics)."""
     bc = spark.sparkContext.broadcast(records)
 
-    @pandas_udf("double")
-    def sample_value(raster_id: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
+    @arrow_udf("double")
+    def sample_value(raster_id: pa.Array, x: pa.Array, y: pa.Array) -> pa.Array:
         recs = bc.value
-        xs = x.to_numpy(dtype=np.float64)
-        ys = y.to_numpy(dtype=np.float64)
+        xs = x.to_numpy(zero_copy_only=False)
+        ys = y.to_numpy(zero_copy_only=False)
         out = np.full(len(xs), np.nan)
-        rids = raster_id.to_numpy()
-        for rid in pd.unique(rids):
+        rids = raster_id.dictionary_encode()
+        codes = rids.indices.fill_null(-1).to_numpy()
+        for code, rid in enumerate(rids.dictionary.to_pylist()):
             rec = recs.get(rid)
             if rec is None:
                 continue
-            mask = rids == rid
+            mask = codes == code
             flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
             kind, coeffs = rec["transform"]
             idx, valid = tf.sample_indices(
@@ -232,7 +242,7 @@ def sample_udf(
             vals = flat[idx].astype(np.float64)
             vals[~valid] = np.nan
             out[mask] = vals
-        return pd.Series(out)
+        return pa.array(out, mask=np.isnan(out))
 
     # deterministic in fact; marked otherwise so a downstream filter on
     # the sampled value (e.g. zonal_mode's isNotNull) cannot inline the
@@ -279,35 +289,35 @@ def sample_join_copartitioned(
             "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
         )
 
-    def kernel(_key, pts_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        res = pts_pdf[point_cols].copy()
-        if len(r_pdf) == 0:
-            res[out] = np.nan  # unknown raster_id → NULL, like broadcast
-            return res
+    def kernel(_key: tuple, points: pa.Table, raster: pa.Table) -> pa.Table:
+        res = points.select(point_cols)
+        if raster.num_rows == 0:  # unknown raster_id → NULL, like broadcast
+            return res.append_column(out, pa.nulls(res.num_rows, pa.float64()))
+        if raster.num_rows > 1:  # a salted group still holds one raster row
+            raise _duplicate_basename(raster.column("__rid")[0].as_py())
         from geotiff_spark.functions.tiff import NUMPY_BY_NAME
 
-        rec = r_pdf.iloc[0]
+        rec = raster.to_pylist()[0]
         if rec["error"] is not None:
             raise RuntimeError(
                 f"raster decode failed for {rec['__rid']}: {rec['error']}"
             )
-        flat = np.frombuffer(bytes(rec["data"]), dtype=NUMPY_BY_NAME[rec["dtype"]])
+        flat = np.frombuffer(rec["data"], dtype=NUMPY_BY_NAME[rec["dtype"]])
         idx, valid = tf.sample_indices(
-            rec["t_kind"], list(rec["t_coeffs"]),
-            int(rec["width"]), int(rec["height"]), int(rec["num_samples"]),
-            rec["raster_type"],
-            pts_pdf[x].to_numpy(np.float64), pts_pdf[y].to_numpy(np.float64),
+            rec["t_kind"], rec["t_coeffs"], rec["width"], rec["height"],
+            rec["num_samples"], rec["raster_type"],
+            points.column(x).to_numpy(), points.column(y).to_numpy(),
             sample, strict,
         )
         vals = flat[idx].astype(np.float64)
-        vals[~valid] = np.nan
-        res[out] = vals
-        return res
+        return res.append_column(
+            out, pa.array(vals, mask=~valid | np.isnan(vals))
+        )
 
     return (
         pts.groupBy(*keys)
         .cogroup(r.groupBy(*keys))
-        .applyInPandas(kernel, schema=out_schema)
+        .applyInArrow(kernel, schema=out_schema)
     )
 
 

@@ -14,7 +14,8 @@ assignment" (cell encode): this is the raster side of the tiling engine.
 - focal_stats: 3×3 focal (neighborhood) map algebra via HALO EXCHANGE —
   each tile ships only its 1-pixel border strips to the 8 neighbor tiles,
   so the shuffle moves O(perimeter) bytes per tile, not O(area); the
-  focal kernel then runs tile-locally on the assembled padded block.
+  focal kernel then runs tile-locally on the assembled padded block,
+  one grouped Arrow call (applyInArrow) per tile.
   This is the scale architecture for any stencil op (focal mean/slope/
   hillshade/convolution) on a 100 TB raster table: one shuffle whose
   volume is ~4/tile_size of the data (≈1.6% at 256), never a pixel-level
@@ -27,8 +28,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -182,8 +185,10 @@ def focal_stats(
     Plan shape (the part that matters at 100 TB):
       tiles --mapInPandas--> center row + ≤8 border fragments (r px wide,
             addressed by GLOBAL pixel coords)
-            --groupBy(raster, tx, ty) applyInPandas--> padded frame
+            --groupBy(raster, tx, ty) applyInArrow--> padded frame
             --numpy stencil--> per-tile stats.
+    The grouped stage gets pyarrow Tables, not pandas frames: with ≤9
+    fragments per group, per-group pandas handling outweighs the stencil.
     One shuffle, whose payload is the tile data plus ~4·r·tile_size·px
     of halo per tile (≈1.6% overhead at 256, r=1) — versus the naive
     pixel self-join, which shuffles (2r+1)² × the full pixel table.
@@ -246,34 +251,34 @@ def focal_stats(
                         })
             yield pd.DataFrame(rows, columns=cols)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    out_schema = to_arrow_schema(FOCAL_STATS_SCHEMA)
+
+    def assemble(key: tuple, frags: pa.Table) -> pa.Table:
         from geotiff_spark.functions.tiff import NUMPY_BY_NAME
 
-        rid, tx, ty = key
-        center = pdf[pdf["is_center"] == 1]
-        if center.empty:  # halo addressed past the raster edge
-            return pd.DataFrame(
-                columns=[f.name for f in FOCAL_STATS_SCHEMA.fields]
-            )
-        c = center.iloc[0]
-        dt = NUMPY_BY_NAME[c["dtype"]]
-        th, tw = int(c["frag_h"]), int(c["frag_w"])
-        ox, oy = int(tx) * tile_size - r, int(ty) * tile_size - r
+        rid, tx, ty = (k.as_py() for k in key)
+        centre = np.flatnonzero(frags.column("is_center").to_numpy() == 1)
+        if len(centre) == 0:  # halo addressed past the raster edge
+            return out_schema.empty_table()
+        c = int(centre[0])
+        dt = NUMPY_BY_NAME[frags.column("dtype")[c].as_py()]
+        fws = frags.column("frag_w").to_pylist()
+        fhs = frags.column("frag_h").to_pylist()
+        th, tw = fhs[c], fws[c]
+        ox, oy = tx * tile_size - r, ty * tile_size - r
         frame_h, frame_w = th + 2 * r, tw + 2 * r
         padded = np.zeros((frame_h, frame_w), dtype=np.int64)
         mask = np.zeros((frame_h, frame_w), dtype=np.int64)
-        for _, f in pdf.iterrows():
-            frag = np.frombuffer(bytes(f["data"]), dtype=dt).reshape(
-                int(f["frag_h"]), int(f["frag_w"])
-            )
-            x0, y0 = int(f["gx0"]) - ox, int(f["gy0"]) - oy
-            fh = min(int(f["frag_h"]), frame_h - y0)
-            fw = min(int(f["frag_w"]), frame_w - x0)
+        for fw, fh, gx0, gy0, buf in zip(
+            fws, fhs, frags.column("gx0").to_pylist(),
+            frags.column("gy0").to_pylist(), frags.column("data").to_pylist(),
+        ):
+            frag = np.frombuffer(buf, dtype=dt).reshape(fh, fw)
+            x0, y0 = gx0 - ox, gy0 - oy
+            fh, fw = min(fh, frame_h - y0), min(fw, frame_w - x0)
             if fh <= 0 or fw <= 0:
                 continue
-            padded[y0 : y0 + fh, x0 : x0 + fw] = frag[:fh, :fw].astype(
-                np.int64
-            )
+            padded[y0 : y0 + fh, x0 : x0 + fw] = frag[:fh, :fw]
             mask[y0 : y0 + fh, x0 : x0 + fw] = 1
         fsum = np.zeros((th, tw), dtype=np.int64)
         fcnt = np.zeros((th, tw), dtype=np.int64)
@@ -281,16 +286,16 @@ def focal_stats(
             for v in range(2 * r + 1):
                 fsum += padded[u : u + th, v : v + tw]
                 fcnt += mask[u : u + th, v : v + tw]
-        return pd.DataFrame([{
-            "raster_id": rid, "tile_x": int(tx), "tile_y": int(ty),
+        return pa.Table.from_pylist([{
+            "raster_id": rid, "tile_x": tx, "tile_y": ty,
             "f_sum": int(fsum.sum()), "f_cnt": int(fcnt.sum()),
             "f_min": int(fsum.min()), "f_max": int(fsum.max()),
-        }])
+        }], schema=out_schema)
 
     frags = map_in_pandas(tiles, emit, _HALO_SCHEMA)
     return (
         frags.groupBy("raster_id", "tile_x", "tile_y")
-        .applyInPandas(assemble, schema=FOCAL_STATS_SCHEMA)
+        .applyInArrow(assemble, schema=FOCAL_STATS_SCHEMA)
     )
 
 

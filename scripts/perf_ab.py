@@ -1,0 +1,67 @@
+"""Interleaved A/B of two checkouts on the repository's benchmark.
+
+    python3 scripts/perf_ab.py BASE_DIR CHANGE_DIR --workload raster --seeds 31-40
+
+For each seed, runs ``perfbench/run.py --workload W --seed S --seconds 10
+--trace 0`` in both checkouts back to back; even seeds run BASE first, odd
+seeds CHANGE first, so a drift of the host's load does not favour one side.
+Exits non-zero on a run whose result is not ``correct``. Prints one line per
+run, then per end-to-end metric of BENCHMARK.json: each side's median and
+q1/q3, and the number of pairs the change won.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def run(checkout: str, workload: str, seed: int) -> dict:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", "10", "--trace", "0"]
+    proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = proc.stdout.strip().splitlines()
+    result = json.loads(lines[-1]) if proc.returncode == 0 and lines else {}
+    if not result.get("correct"):
+        sys.exit(f"{checkout} seed {seed}: not correct\n{proc.stderr[-2000:]}")
+    return {k: m["value"] for k, m in result["metrics"].items()}
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("base")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="first-last, e.g. 31-40")
+    args = ap.parse_args()
+    first, last = map(int, args.seeds.split("-"))
+    with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
+        metrics = json.load(fh)["end_to_end"]
+    sides = {"base": [], "change": []}
+    for seed in range(first, last + 1):
+        order = ("base", "change") if seed % 2 == 0 else ("change", "base")
+        for side in order:
+            sides[side].append(run(getattr(args, side), args.workload, seed))
+            shown = {m["name"]: round(sides[side][-1][m["name"]], 3)
+                     for m in metrics}
+            print(f"seed {seed} {side}: {json.dumps(shown)}", flush=True)
+    for m in metrics:
+        name, sign = m["name"], (1 if m["better"] == "lower" else -1)
+        base = [r[name] for r in sides["base"]]
+        change = [r[name] for r in sides["change"]]
+        won = sum(sign * (c - b) < 0 for b, c in zip(base, change))
+        summary = []
+        for side, vals in (("base", base), ("change", change)):
+            q1, med, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+            summary.append(f"{side} {med:.4g} (q1 {q1:.4g}, q3 {q3:.4g})")
+        print(f"{args.workload} {name}: {'; '.join(summary)}; "
+              f"change won {won}/{len(base)} pairs "
+              f"({(statistics.median(change) / statistics.median(base) - 1) * 100:+.1f}%)")
+
+
+if __name__ == "__main__":
+    main()

@@ -101,6 +101,55 @@ def test_focal_stats_single_exchange_on_tile_key(spark):
     assert "Join" not in plan, plan
 
 
+@pytest.fixture(scope="module")
+def tiny_raster_dir(tmp_path_factory):
+    """One synthetic u16 GeoTIFF, enough to plan the raster operators."""
+    import numpy as np
+    from tiff_writer import write_tiff
+
+    d = tmp_path_factory.mktemp("plan_rasters")
+    arr = np.arange(12 * 10, dtype="uint16").reshape(12, 10)
+    (d / "t.tif").write_bytes(write_tiff(
+        arr, pixel_scale=[1.0, 1.0, 0.0],
+        tie_points=[0.0, 0.0, 0.0, 0.0, 12.0, 0.0],
+    ))
+    return str(d)
+
+
+def test_focal_stats_assembles_in_arrow(spark, tiny_raster_dir):
+    """The halo assembler is a grouped Arrow call: pyarrow Tables in and
+    out, no pandas frame per tile group, behind the one tile-key shuffle."""
+    from geotiff_spark.operators.tiling import focal_stats, raster_to_tiles
+    from geotiff_spark.sources.rasters import read_rasters
+
+    plan = _plan(focal_stats(
+        raster_to_tiles(read_rasters(spark, tiny_raster_dir), 4), tile_size=4
+    ))
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(raster_id" in plan, plan
+
+
+def test_sampling_kernels_are_arrow_udfs(spark, tiny_raster_dir):
+    """Copartition sampling cogroups in Arrow; the broadcast gather is a
+    scalar Arrow UDF."""
+    from pyspark.util import PythonEvalType
+
+    from geotiff_spark.operators.sample import (
+        sample_join_copartitioned, sample_udf,
+    )
+    from geotiff_spark.sources.rasters import read_rasters
+
+    pts = spark.createDataFrame([(0, 1.5, 1.5)], "pid long, x double, y double")
+    plan = _plan(sample_join_copartitioned(
+        pts, read_rasters(spark, tiny_raster_dir), F.lit("t.tif")
+    ))
+    assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert sample_udf(spark, {}).evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
+
+
 def test_compact_cells_no_cartesian_and_broadcast_anti_join(spark):
     """The single parent anti-join of the closed-form compaction is a
     broadcast join; no cartesian anywhere."""

@@ -127,14 +127,14 @@ def test_auto_mode_size_guard_picks_branch(spark):
     smp._SIZES_CACHE.clear()
     small = smp.with_raster_sample(pts, spark, paths, F.col("rid"), mode="auto")
     plan_small = small._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" not in plan_small
+    assert "FlatMapCoGroupsInArrow" not in plan_small
     assert "ArrowEvalPython" in plan_small
 
     forced = smp.with_raster_sample(
         pts, spark, paths, F.col("rid"), mode="auto", max_broadcast_bytes=1
     )
     plan_forced = forced._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan_forced
+    assert "FlatMapCoGroupsInArrow" in plan_forced
     # and the forced branch still computes the same values
     a = {r.pid: r.value for r in small.collect()}
     b = {r.pid: r.value for r in forced.collect()}
