@@ -6,12 +6,12 @@ gives spatial locality (co-located cells share files → partition pruning
 on spatial predicates), but a FIXED prefix depth either under-splits hot
 regions or over-splits empty ones.
 
-Two aggregations measure the histogram: one approx_count_distinct probe
-picks the deepest depth the driver can afford (measured_depth), then one
-groupBy counts rows per prefix at that depth (deep_histogram). Every
+One exact groupBy measures the histogram: rows per prefix at the deepest
+depth whose distinct prefixes fit the driver budget (deep_histogram), the
+pull bounded by a limit and backed off one depth when it overflows. Every
 coarser depth's histogram derives from it driver-side (prefix sums), so
-choosing the balanced depth and the hot prefixes costs those two Spark
-jobs regardless of how many depths are considered.
+choosing the balanced depth and the hot prefixes costs that one Spark job
+regardless of how many depths are considered.
 """
 
 from __future__ import annotations
@@ -55,48 +55,30 @@ def ensure_map_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-
-def measured_depth(
-    df: DataFrame,
-    token: str,
-    max_depth: int = 12,
-    driver_budget: int = DRIVER_HISTOGRAM_BUDGET,
-) -> int:
-    """Deepest prefix depth whose distinct-prefix count fits the driver
-    budget, probed with ONE aggregation of approx_count_distinct at
-    every candidate depth (HLL sketches, no data to the driver). At
-    continental cell occupancy a fixed max_depth histogram would be
-    4^12 ≈ 16.7M driver rows (VERDICT r05 "What's wrong" #3); this
-    bounds the later toPandas to the budget regardless of occupancy —
-    the price is histogram resolution saturating at the measured depth,
-    which is exactly the depth the driver could afford to look at. The
-    0.85 slack absorbs approx_count_distinct's default ~5% error."""
-    row = df.agg(*[
-        F.approx_count_distinct(
-            F.substring(F.col(token), 1, d)
-        ).alias(f"d{d}")
-        for d in range(1, max_depth + 1)
-    ]).collect()[0]
-    fitting = [d for d in range(1, max_depth + 1)
-               if row[f"d{d}"] <= driver_budget * 0.85]
-    return max(fitting) if fitting else 1
-
-
 def deep_histogram(
     df: DataFrame,
     token: str,
     max_depth: int = 12,
     driver_budget: int = DRIVER_HISTOGRAM_BUDGET,
 ) -> pd.DataFrame:
-    """(prefix@depth, n) — the measured histogram, collected at the
-    deepest depth the driver budget affords. Two jobs: the measured_depth
-    probe, then the groupBy."""
-    depth = measured_depth(df, token, max_depth, driver_budget)
-    return (
-        df.groupBy(F.substring(F.col(token), 1, depth).alias("prefix"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .toPandas()
-    )
+    """(prefix@depth, n) — the exact histogram at the deepest depth whose
+    distinct prefixes fit the driver budget. One groupBy per depth tried,
+    collected through limit(driver_budget + 1): a result that fits is the
+    histogram, one that overflows is dropped and the next shallower depth
+    is tried. So the driver never holds more than budget + 1 rows however
+    dense the cells are, and a res-7 token (at most 4^7 prefixes) costs one
+    job."""
+    for depth in range(max_depth, 0, -1):
+        hist = (
+            df.groupBy(F.substring(F.col(token), 1, depth).alias("prefix"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .limit(driver_budget + 1)
+            .toPandas()
+        )
+        if len(hist) <= driver_budget:
+            return hist
+    raise ValueError(
+        f"{token}: more than {driver_budget} distinct depth-1 prefixes")
 
 
 def _histogram_at(hist: pd.DataFrame, depth: int) -> pd.Series:
@@ -104,17 +86,11 @@ def _histogram_at(hist: pd.DataFrame, depth: int) -> pd.Series:
 
 
 def choose_prefix_depth(
-    hist_or_df,
-    token: str | None = None,
+    hist: pd.DataFrame,
     target_rows: int = 100_000,
     max_depth: int = 12,
 ) -> int:
     """Shallowest depth whose largest prefix bucket ≤ target_rows."""
-    hist = (
-        hist_or_df
-        if isinstance(hist_or_df, pd.DataFrame) and "prefix" in hist_or_df
-        else deep_histogram(hist_or_df, token, max_depth)
-    )
     for depth in range(1, max_depth + 1):
         if _histogram_at(hist, depth).max() <= target_rows:
             return depth
@@ -125,16 +101,15 @@ def adaptive_prefix_column(
     df: DataFrame,
     token: str,
     target_rows: int,
-    base_depth: int | None = None,
     max_depth: int = 12,
-    out: str = "cell_prefix",
 ) -> DataFrame:
-    """Variable-depth prefix: shallowest uniform depth for the bulk, two
-    extra levels for prefixes still above target_rows. Balanced against
-    the measured distribution — hot cities split finer, oceans stay
-    coarse. Costs the two aggregations of deep_histogram over df."""
+    """Adds `cell_prefix`, a variable-depth prefix: the shallowest uniform
+    depth for the bulk, two extra levels for prefixes still above
+    target_rows. Balanced against the measured distribution — hot cities
+    split finer, oceans stay coarse. Costs deep_histogram's one groupBy
+    over df (one more per depth it has to back off)."""
     hist = deep_histogram(df, token, max_depth)
-    depth = base_depth or choose_prefix_depth(
+    depth = choose_prefix_depth(
         hist, target_rows=target_rows * 4, max_depth=max_depth
     )
     deep = min(depth + 2, max_depth)
@@ -144,17 +119,4 @@ def adaptive_prefix_column(
         F.substring(F.col(token), 1, depth).isin(hot) if hot else F.lit(False),
         F.substring(F.col(token), 1, deep),
     ).otherwise(F.substring(F.col(token), 1, depth))
-    return df.withColumn(out, col)
-
-
-def repartition_by_prefix(
-    df: DataFrame,
-    token: str,
-    target_rows: int,
-    **kwargs,
-) -> DataFrame:
-    """Adaptive cell-prefix repartition: spatial locality with measured
-    balance. Use before partitioned writes (`partitionBy(out)`) or
-    co-located cell joins."""
-    with_prefix = adaptive_prefix_column(df, token, target_rows, **kwargs)
-    return with_prefix.repartition(F.col("cell_prefix"))
+    return df.withColumn("cell_prefix", col)

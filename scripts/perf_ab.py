@@ -1,13 +1,18 @@
 """Interleaved A/B of two checkouts on the repository's benchmark.
 
     python3 scripts/perf_ab.py BASE_DIR CHANGE_DIR --workload raster --seeds 31-40
+    python3 scripts/perf_ab.py BASE_DIR CHANGE_DIR --workload ingest --seeds 31-35 \
+        --trace 1 --metrics plans.partitioning.adaptive_prefix_column_s
 
 For each seed, runs ``perfbench/run.py --workload W --seed S --seconds 10
---trace 0`` in both checkouts back to back; even seeds run BASE first, odd
+--trace T`` in both checkouts back to back; even seeds run BASE first, odd
 seeds CHANGE first, so a drift of the host's load does not favour one side.
 Exits non-zero on a run whose result is not ``correct``. Prints one line per
-run, then per end-to-end metric of BENCHMARK.json: each side's median and
-q1/q3, and the number of pairs the change won.
+run, then per compared metric each side's median and q1/q3, and the number of
+pairs the change won. An untraced run reports the end-to-end metrics of
+BENCHMARK.json and a traced one its per-layer metrics, so ``--trace 0``
+compares the former and ``--trace 1`` the per-layer metrics named in
+``--metrics``.
 """
 
 from __future__ import annotations
@@ -20,9 +25,9 @@ import subprocess
 import sys
 
 
-def run(checkout: str, workload: str, seed: int) -> dict:
+def run(checkout: str, workload: str, seed: int, trace: int) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", "10", "--trace", "0"]
+           "--seed", str(seed), "--seconds", "10", "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     result = json.loads(lines[-1]) if proc.returncode == 0 and lines else {}
@@ -37,15 +42,29 @@ def main() -> None:
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="first-last, e.g. 31-40")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--metrics", default="",
+                    help="comma-separated per-layer metrics (with --trace 1)")
     args = ap.parse_args()
     first, last = map(int, args.seeds.split("-"))
     with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["end_to_end"]
+        spec = json.load(fh)
+    per_layer = {m["name"]: m for m in spec["per_layer"]}
+    names = [n for n in args.metrics.split(",") if n]
+    unknown = [n for n in names if n not in per_layer]
+    if unknown:
+        ap.error(f"not a per-layer metric of BENCHMARK.json: {unknown}")
+    if bool(args.trace) != bool(names):
+        ap.error("--metrics names the per-layer metrics a --trace 1 run "
+                 "reports; an untraced run reports end-to-end ones only")
+    metrics = ([per_layer[n] for n in names] if args.trace
+               else spec["end_to_end"])
     sides = {"base": [], "change": []}
     for seed in range(first, last + 1):
         order = ("base", "change") if seed % 2 == 0 else ("change", "base")
         for side in order:
-            sides[side].append(run(getattr(args, side), args.workload, seed))
+            sides[side].append(
+                run(getattr(args, side), args.workload, seed, args.trace))
             shown = {m["name"]: round(sides[side][-1][m["name"]], 3)
                      for m in metrics}
             print(f"seed {seed} {side}: {json.dumps(shown)}", flush=True)

@@ -8,18 +8,16 @@ the oracle — the Rust crate cannot run in this sandbox.
 from __future__ import annotations
 
 import math
-from pathlib import Path
 
 import numpy as np
 import pytest
 
+from fixture_paths import reference
 from geotiff_spark.functions.geotiff import get_values_at, read_geotiff
-
-RESOURCES = Path("/root/reference/resources")
 
 
 def load(name: str) -> dict:
-    return read_geotiff((RESOURCES / name).read_bytes())
+    return read_geotiff(reference(name).read_bytes())
 
 
 @pytest.fixture(scope="module")

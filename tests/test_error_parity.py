@@ -11,6 +11,7 @@ from geotiff_spark.functions.geokeys import GeoKeyError, parse_geo_key_directory
 from geotiff_spark.functions.geotiff import read_geotiff
 from geotiff_spark.functions.transforms import TransformError, transform_from_tag_data
 
+from fixture_paths import reference
 from tiff_writer import write_tiff
 
 
@@ -109,7 +110,7 @@ def test_error_status_rows_not_job_failures(spark, tmp_path):
 
     d = tmp_path / "mixed"
     d.mkdir()
-    shutil.copy("/root/reference/resources/merc.tif", d / "good.tif")
+    shutil.copy(reference("merc.tif"), d / "good.tif")
     (d / "corrupt.tif").write_bytes(b"II*\x00garbage-not-a-tiff")
     rows = {r.raster_id: r for r in read_rasters(spark, str(d)).collect()}
     assert rows["good.tif"].error is None

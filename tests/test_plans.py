@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -38,7 +40,7 @@ def test_hot_keys_detects_skew(spark):
 def test_adaptive_prefix_balances_hot_cells(spark):
     from geotiff_spark.operators.extract import with_cell_token
     from geotiff_spark.plans.partitioning import (
-        adaptive_prefix_column, choose_prefix_depth,
+        adaptive_prefix_column, choose_prefix_depth, deep_histogram,
     )
     from geotiff_spark.sources.pages import synth_pages
     from geotiff_spark.operators.extract import with_geotag
@@ -47,7 +49,8 @@ def test_adaptive_prefix_balances_hot_cells(spark):
         F.col("lat").isNotNull()
     )
     tok = with_cell_token(pages, res=10)
-    depth = choose_prefix_depth(tok, "cell_token", target_rows=800)
+    depth = choose_prefix_depth(deep_histogram(tok, "cell_token"),
+                                target_rows=800)
     assert 1 <= depth <= 10
     pref = adaptive_prefix_column(tok, "cell_token", target_rows=200)
     hist = pref.groupBy("cell_prefix").count().collect()
@@ -62,11 +65,11 @@ def test_adaptive_prefix_balances_hot_cells(spark):
 
 def test_deep_histogram_driver_pull_is_bounded(spark):
     """A dense synthetic grid (every max-depth prefix distinct) must NOT
-    reach the driver at full depth: measured_depth coarsens until the
-    distinct-prefix count fits the budget, so the collected histogram is
-    bounded no matter the cell occupancy (VERDICT r05 #3)."""
+    reach the driver at full depth: deep_histogram backs off one depth at a
+    time until the distinct prefixes fit the budget, so the collected
+    histogram is bounded no matter the cell occupancy (VERDICT r05 #3)."""
     from geotiff_spark.plans.partitioning import (
-        choose_prefix_depth, deep_histogram, measured_depth,
+        choose_prefix_depth, deep_histogram,
     )
 
     # 4^8 = 65536 distinct depth-8 tokens — dense at every depth
@@ -75,14 +78,63 @@ def test_deep_histogram_driver_pull_is_bounded(spark):
         .alias("cell_token")
     )
     budget = 1000
-    d = measured_depth(df, "cell_token", max_depth=8, driver_budget=budget)
-    assert d == 4  # 4^4 = 256 <= 850 < 4^5
     hist = deep_histogram(df, "cell_token", max_depth=8,
                           driver_budget=budget)
+    assert set(hist["prefix"].str.len()) == {4}  # 4^4 = 256 <= 1000 < 4^5
     assert len(hist) <= budget
     assert hist["n"].sum() == 4 ** 8
     # the depth chooser still works on the coarsened histogram
     assert choose_prefix_depth(hist, target_rows=4 ** 5) >= 3
+
+
+def _skewed_tokens(spark):
+    """2000 uniform depth-8 tokens plus 6000 under the one hot prefix 0123."""
+    rng = np.random.default_rng(7)
+    digits = np.array(list("0123"))
+    cold = ["".join(r) for r in digits[rng.integers(0, 4, size=(2000, 8))]]
+    hot = ["0123" + "".join(r)
+           for r in digits[rng.integers(0, 4, size=(6000, 4))]]
+    tokens = pd.Series(cold + hot, name="cell_token")
+    return tokens, spark.createDataFrame(tokens.to_frame())
+
+
+def test_deep_histogram_is_exact(spark):
+    """Exact counts, not sketches: the histogram and its driver-side
+    roll-up equal pandas value_counts of the prefixes, hot prefix
+    included."""
+    from geotiff_spark.plans.partitioning import _histogram_at, deep_histogram
+
+    tokens, df = _skewed_tokens(spark)
+    for depth in (8, 5):
+        hist = deep_histogram(df, "cell_token", max_depth=depth)
+        assert dict(zip(hist["prefix"], hist["n"])) == (
+            tokens.str[:depth].value_counts().to_dict())
+    rolled = _histogram_at(hist, 4)
+    assert rolled.to_dict() == tokens.str[:4].value_counts().to_dict()
+    assert rolled["0123"] >= 6000
+
+
+def test_deep_histogram_that_fits_is_one_action(spark, monkeypatch):
+    """A histogram within the driver budget is collected by exactly one
+    Spark action — no probe ahead of the groupBy."""
+    from geotiff_spark.plans.partitioning import deep_histogram
+
+    _, df = _skewed_tokens(spark)
+    actions, active = [], []
+    cls = type(df)
+    for name in ("toPandas", "collect"):
+        def counted(self, *a, _orig=getattr(cls, name), _name=name, **k):
+            if not active:  # count outermost calls only
+                actions.append(_name)
+            active.append(_name)
+            try:
+                return _orig(self, *a, **k)
+            finally:
+                active.pop()
+        monkeypatch.setattr(cls, name, counted)
+    hist = deep_histogram(df, "cell_token", max_depth=8)
+    assert hist["n"].sum() == 8000
+    assert actions == ["toPandas"]
 
 
 def test_lineage_metrics_row_counts(spark, tmp_path):

@@ -4,14 +4,12 @@ then raster sampling must return BLACK for all 9 capitals
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import pytest
 
+from fixture_paths import reference
 from geotiff_spark.functions.geotiff import get_values_at, read_geotiff
 from geotiff_spark.functions.proj import laea_forward
 
-RESOURCES = Path("/root/reference/resources")
 
 # (lon, lat) from /root/reference/tests/transform.rs:29-64 (GRAZ duplicates
 # EISENSTADT in the reference — kept as committed)
@@ -38,7 +36,7 @@ CAPITALS = [
     ],
 )
 def test_capitals_black(fixture_name, shift):
-    rec = read_geotiff((RESOURCES / fixture_name).read_bytes())
+    rec = read_geotiff(reference(fixture_name).read_bytes())
     lons = [c[0] for c in CAPITALS]
     lats = [c[1] for c in CAPITALS]
     x, y = laea_forward(lons, lats)

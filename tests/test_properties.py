@@ -10,6 +10,7 @@ from geotiff_spark.functions import cells as C
 from geotiff_spark.functions import transforms as T
 from geotiff_spark.functions.tiff import lzw_decode, packbits_decode
 
+from fixture_paths import reference
 from tiff_writer import packbits_encode
 
 
@@ -79,7 +80,7 @@ def test_affine_roundtrip(a, b, c, d, e, f, x, y):
 def test_lzw_roundtrip_via_reference_fixture():
     """No LZW encoder here — bit-exactness is pinned by marbles.tif; this
     checks the decoder tolerates truncated streams without crashing."""
-    data = open("/root/reference/resources/marbles.tif", "rb").read()
+    data = reference("marbles.tif").read_bytes()
     # feed garbage-prefixed stream: must raise or return bytes, not hang
     try:
         lzw_decode(data[1000:1100])

@@ -8,6 +8,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from fixture_paths import reference
+
 
 def test_spark_sample_zh_dem_goldens(spark):
     from geotiff_spark.operators.sample import with_raster_sample
@@ -20,7 +22,7 @@ def test_spark_sample_zh_dem_goldens(spark):
         ["x", "y"],
     )
     out = with_raster_sample(
-        pts, spark, ["/root/reference/resources/zh_dem_25.tif"],
+        pts, spark, [str(reference("zh_dem_25.tif"))],
         "zh_dem_25.tif",
     ).orderBy(F.desc("x")).collect()
     by_xy = {(r.x, r.y): r.value for r in out}
@@ -34,7 +36,7 @@ def test_spark_rasters_df_all_fixtures_decode(spark):
     from geotiff_spark.sources.rasters import read_rasters, rasters_metadata
 
     meta = rasters_metadata(
-        read_rasters(spark, "/root/reference/resources")
+        read_rasters(spark, str(reference()))
     ).collect()
     assert len(meta) == 9
     errors = {r.raster_id: r.error for r in meta if r.error}
@@ -59,8 +61,8 @@ def test_spark_multi_raster_routing(spark):
     out = with_raster_sample(
         pts, spark,
         [
-            "/root/reference/resources/zh_dem_25.tif",
-            "/root/reference/resources/marbles.tif",
+            str(reference("zh_dem_25.tif")),
+            str(reference("marbles.tif")),
         ],
         F.col("rid"),
     ).collect()
@@ -75,9 +77,9 @@ def test_parallel_strip_decode_bit_identical(spark):
     from geotiff_spark.sources.rasters import read_rasters, read_rasters_parallel
 
     a = {r.raster_id: r for r in read_rasters(
-        spark, "/root/reference/resources").collect()}
+        spark, str(reference())).collect()}
     b = {r.raster_id: r for r in read_rasters_parallel(
-        spark, "/root/reference/resources").collect()}
+        spark, str(reference())).collect()}
     assert set(a) == set(b) and len(a) == 9
     for k in a:
         assert a[k].error == b[k].error
@@ -128,7 +130,7 @@ def test_persisted_rasters_table_roundtrip(spark, tmp_path):
     from geotiff_spark.sources.rasters import read_rasters
 
     out = str(tmp_path / "rasters_table")
-    read_rasters(spark, "/root/reference/resources").write.parquet(out)
+    read_rasters(spark, str(reference())).write.parquet(out)
     persisted = spark.read.parquet(out)
     row = persisted.filter(F.col("raster_id") == "zh_dem_25.tif").collect()[0]
 
@@ -163,6 +165,7 @@ def test_zonal_and_tile_oracles_hash_match(spark):
 
     from oracle_check import value_hash
 
+    reference()  # flagship and the tile oracle read the reference corpus
     spark_z = flagship(spark, "/root/testdata/sf0.001").toPandas()
     duck_z = con.execute(oracle_raster.zonal_stats_sql()).fetchdf()
     assert value_hash(spark_z) == value_hash(duck_z)

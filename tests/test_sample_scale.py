@@ -16,18 +16,22 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fixture_paths import reference
 from geotiff_spark.operators import sample as smp
+from geotiff_spark.oracle_raster import CORPUS_DIRS
 
-RESOURCE_DIR = "/root/reference/resources"
-AUSTRIAN = (
-    f"{RESOURCE_DIR}/"
-    "austrian_capitals_model_tie_point_and_pixel_scale_pixel_is_area.tif"
-)
-MERC = f"{RESOURCE_DIR}/merc.tif"
+AUSTRIAN = "austrian_capitals_model_tie_point_and_pixel_scale_pixel_is_area.tif"
+MERC = "merc.tif"
 
 
 def _all_fixture_paths():
-    return sorted(glob.glob(f"{RESOURCE_DIR}/*.tif"))
+    """The raster-query corpus: the reference fixtures where present, plus
+    the committed synthetic ones, so these tests never run on no rasters."""
+    return sorted(p for d in CORPUS_DIRS for p in glob.glob(f"{d}/*.tif"))
+
+
+def _routing_paths():
+    return [str(reference(AUSTRIAN)), str(reference(MERC))]
 
 
 def test_distributed_records_equal_driver_records(spark):
@@ -73,7 +77,7 @@ def test_decode_runs_on_executors_not_driver(spark, monkeypatch):
         (F.lit(2749044.03) - F.col("id") * 1000).alias("y"),
     )
     out = smp.with_raster_sample(
-        pts, spark, [AUSTRIAN], AUSTRIAN.rsplit("/", 1)[-1]
+        pts, spark, [str(reference(AUSTRIAN))], AUSTRIAN
     ).collect()
     assert len(out) == 5
 
@@ -81,8 +85,7 @@ def test_decode_runs_on_executors_not_driver(spark, monkeypatch):
 def _routing_points(spark):
     """Points routed per-row across two rasters (different transforms),
     plus out-of-bounds rows and an unknown raster id."""
-    aus = AUSTRIAN.rsplit("/", 1)[-1]
-    mer = MERC.rsplit("/", 1)[-1]
+    aus, mer = AUSTRIAN, MERC
     rows = []
     for i in range(200):
         # austrian extent: x [4302000, 4809000), y [2621000, 2811000)
@@ -102,7 +105,7 @@ def _routing_points(spark):
 @pytest.mark.parametrize("n_salt", [1, 3])
 def test_copartition_equals_broadcast(spark, n_salt):
     pts = _routing_points(spark)
-    paths = [AUSTRIAN, MERC]
+    paths = _routing_paths()
     bc = smp.with_raster_sample(
         pts, spark, paths, F.col("rid"), mode="broadcast"
     ).collect()
@@ -123,7 +126,7 @@ def test_auto_mode_size_guard_picks_branch(spark):
     """auto: small corpus broadcasts (ArrowEvalPython gather); a tiny
     guard forces the co-partitioned cogroup plan."""
     pts = _routing_points(spark)
-    paths = [AUSTRIAN, MERC]
+    paths = _routing_paths()
     smp._SIZES_CACHE.clear()
     small = smp.with_raster_sample(pts, spark, paths, F.col("rid"), mode="auto")
     plan_small = small._jdf.queryExecution().executedPlan().toString()
@@ -158,6 +161,7 @@ def test_flagship_pipeline_unchanged_through_new_path(spark):
     oracle gate; here we pin non-degenerate output)."""
     from geotiff_spark.pipeline import flagship
 
+    reference(AUSTRIAN)  # the flagship samples the austrian raster
     rows = flagship(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0
     assert any(r.avg_value is not None for r in rows)

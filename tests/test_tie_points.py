@@ -4,19 +4,17 @@ goldens, plus triangulation/transform property tests."""
 from __future__ import annotations
 
 import math
-from pathlib import Path
 
 import numpy as np
 import pytest
 
+from fixture_paths import reference
 from geotiff_spark.functions.delaunay import Triangulation
 from geotiff_spark.functions.geotiff import get_values_at, read_geotiff
 from geotiff_spark.functions.proj import laea_forward
 from geotiff_spark.functions.tie_points import (
     tie_points_to_model, tie_points_to_raster,
 )
-
-RESOURCES = Path("/root/reference/resources")
 
 CAPITALS = [
     (9.74926, 47.50315), (15.43301, 47.06298), (15.43301, 47.06298),
@@ -29,7 +27,7 @@ CAPITALS = [
 def test_tie_points_goldens(variant, shift):
     # /root/reference/tests/transform.rs:101-117 (feature-gated pair)
     rec = read_geotiff(
-        (RESOURCES / f"austrian_capitals_model_tie_points_pixel_is_{variant}.tif")
+        reference(f"austrian_capitals_model_tie_points_pixel_is_{variant}.tif")
         .read_bytes()
     )
     assert rec["transform"][0] == "tie_points"

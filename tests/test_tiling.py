@@ -5,22 +5,22 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from fixture_paths import reference
+
 
 def test_tile_roundtrip_bit_identical(spark):
     from geotiff_spark.functions.geotiff import read_geotiff
     from geotiff_spark.operators.tiling import raster_to_tiles, tiles_to_raster
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, "/root/reference/resources")
+    rasters = read_rasters(spark, str(reference()))
     tiles = raster_to_tiles(rasters, tile_size=256).toPandas()
     assert (tiles["tile_w"] <= 256).all() and (tiles["tile_h"] <= 256).all()
 
     for rid in ["marbles.tif", "zh_dem_25.tif", "merc.tif"]:
         sub = tiles[tiles["raster_id"] == rid]
         rebuilt = tiles_to_raster(sub, tile_size=256)
-        orig = read_geotiff(
-            open(f"/root/reference/resources/{rid}", "rb").read()
-        )["array"]
+        orig = read_geotiff(reference(rid).read_bytes())["array"]
         np.testing.assert_array_equal(rebuilt, orig)
 
 
@@ -31,12 +31,11 @@ def test_tile_stats_prune_correctly(spark):
     from geotiff_spark.operators.tiling import raster_to_tiles, tile_stats
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, "/root/reference/resources", glob="zh_dem_25.tif")
+    zh = reference("zh_dem_25.tif")
+    rasters = read_rasters(spark, str(zh.parent), glob=zh.name)
     tiles = raster_to_tiles(rasters, tile_size=128)
     stats = tile_stats(tiles).toPandas()
-    arr = read_geotiff(
-        open("/root/reference/resources/zh_dem_25.tif", "rb").read()
-    )["array"][:, :, 0]
+    arr = read_geotiff(zh.read_bytes())["array"][:, :, 0]
     threshold = 600.0
     surviving = stats[stats["v_max"] > threshold]
     # ground truth: tiles that actually contain qualifying pixels
@@ -58,13 +57,14 @@ def test_vectorize_threshold_matches_direct(spark):
     from geotiff_spark.sources.rasters import read_rasters
 
     res, thr = 12, 600.0
-    rasters = read_rasters(spark, "/root/reference/resources", glob="zh_dem_25.tif")
+    zh = reference("zh_dem_25.tif")
+    rasters = read_rasters(spark, str(zh.parent), glob=zh.name)
     got = {
         (r.cell, r.n_pixels, r.v_max)
         for r in vectorize_threshold(rasters, res, thr).collect()
     }
 
-    rec = read_geotiff(open("/root/reference/resources/zh_dem_25.tif", "rb").read())
+    rec = read_geotiff(zh.read_bytes())
     vals = rec["array"][:, :, 0].astype(float)
     ys, xs = np.nonzero(vals > thr)
     kind, coeffs = rec["transform"]
@@ -86,7 +86,8 @@ def test_pyramid_levels_match_numpy_downsample(spark):
     )
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, "/root/reference/resources", glob="zh_dem_25.tif")
+    zh = reference("zh_dem_25.tif")
+    rasters = read_rasters(spark, str(zh.parent), glob=zh.name)
     tiles = raster_to_tiles(rasters, tile_size=128)
     pyr = build_pyramid(tiles, levels=2, tile_size=128).toPandas()
     assert set(pyr["level"]) == {0, 1, 2}
@@ -94,9 +95,7 @@ def test_pyramid_levels_match_numpy_downsample(spark):
     lvl1 = pyr[pyr["level"] == 1].drop(columns=["level"])
     rebuilt = tiles_to_raster(lvl1, tile_size=128)
 
-    arr = read_geotiff(
-        open("/root/reference/resources/zh_dem_25.tif", "rb").read()
-    )["array"].astype(np.float64)
+    arr = read_geotiff(zh.read_bytes())["array"].astype(np.float64)
     h, w, _ = arr.shape
     # replicate the operator's per-tile edge handling: tiles are halved
     # independently, so compare tile-by-tile
