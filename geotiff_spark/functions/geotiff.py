@@ -21,11 +21,15 @@ def read_geotiff(data: bytes) -> dict:
     transform (kind, coeffs), raster_type, geo_keys (flat dict), extent
     (minx, miny, maxx, maxy).
     """
-    bo, ifds = tiff.parse_ifds(data)
+    _bo, ifds = tiff.parse_ifds(data)
     ifd = ifds[0]  # first IFD only, like Decoder::new + read_image
-
     img = tiff.decode_tiff_ifd(data, ifd)
+    return {**img, **geo_header(ifd, img["width"], img["height"])}
 
+
+def geo_header(ifd: tiff.Ifd, width: int, height: int) -> dict:
+    """The georeferencing half of a raster record, from tags alone:
+    transform (kind, coeffs), raster_type, geo_keys, extent."""
     # GeoKeyDirectory (decoder_ext.rs:45-67)
     directory = ifd.values(tiff.TAG_GEO_KEY_DIRECTORY)
     if directory is None:
@@ -47,20 +51,13 @@ def read_geotiff(data: bytes) -> dict:
         )
 
     raster_type = gk.get("raster_type")
-    extent = transforms.model_extent(
-        kind, coeffs, img["width"], img["height"], raster_type
-    )
-
     return {
-        "width": img["width"],
-        "height": img["height"],
-        "num_samples": img["num_samples"],
-        "dtype": img["dtype"],
-        "array": img["array"],
         "transform": (kind, coeffs),
         "raster_type": raster_type,
         "geo_keys": gk,
-        "extent": extent,
+        "extent": transforms.model_extent(
+            kind, coeffs, width, height, raster_type
+        ),
     }
 
 

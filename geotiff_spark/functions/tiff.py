@@ -18,6 +18,11 @@ The decoder is deliberately *whole-image eager* per raster, matching
 raster row is the unit of parallelism and each one is decoded once inside a
 ``mapInPandas`` batch.
 
+One segment plan (``segment_plan``) serves both readers: the per-file
+``decode_tiff_ifd`` decodes its segments in turn, and the strip-parallel
+``sources/rasters.read_rasters_parallel`` decodes them on any executor;
+both place them with ``assemble_segments``.
+
 No Spark imports here — keep this importable on bare executors.
 """
 
@@ -25,6 +30,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -392,85 +398,97 @@ def _resolve_dtype(ifd: Ifd) -> tuple[np.dtype, str]:
 
 
 # ---------------------------------------------------------------------------
-# Segment plan: per-strip/tile work units for distributed decode
+# Segment plan: per-strip/tile work units, the one layout model
 # ---------------------------------------------------------------------------
 
-def segment_plan(data: bytes, ifd: Ifd) -> tuple[dict, list[dict]]:
+def segment_plan(ifd: Ifd) -> tuple[dict, list[dict]]:
     """Split one image into independently-decodable segments.
 
     Returns (image_meta, segments): image_meta carries dims/spp/dtype/
     compression/predictor/photometric; each segment dict holds the byte
     range plus placement (y0/x0/rows/cols/band). Segments decode in any
     order on any executor and reassemble by placement — the engine's
-    within-file parallelism for large rasters (SURVEY.md B2).
+    within-file parallelism for large rasters (SURVEY.md B2). Every
+    layout check lives here, so both readers reject the same files; the
+    offsets and byte counts must list exactly one entry per segment, so
+    every pixel is placed by exactly one segment.
     """
     width = ifd.scalar(TAG_IMAGE_WIDTH)
     height = ifd.scalar(TAG_IMAGE_LENGTH)
+    if width is None or height is None:
+        raise TiffDecodeError("missing ImageWidth/ImageLength")
     spp = ifd.scalar(TAG_SAMPLES_PER_PIXEL, 1)
-    compression = ifd.scalar(TAG_COMPRESSION, COMPRESSION_NONE)
-    predictor = ifd.scalar(TAG_PREDICTOR, 1)
     planar = ifd.scalar(TAG_PLANAR_CONFIG, 1)
-    photometric = ifd.scalar(TAG_PHOTOMETRIC, 1)
+    if planar not in (1, 2):
+        raise TiffDecodeError(f"unsupported PlanarConfiguration {planar}")
     dtype, dtype_name = _resolve_dtype(ifd)
     meta = {
         "width": width, "height": height, "num_samples": spp,
         "dtype": dtype_name, "dtype_np": dtype.str,
-        "compression": compression, "predictor": predictor,
-        "planar": planar, "photometric": photometric,
+        "compression": ifd.scalar(TAG_COMPRESSION, COMPRESSION_NONE),
+        "predictor": ifd.scalar(TAG_PREDICTOR, 1),
+        "planar": planar, "photometric": ifd.scalar(TAG_PHOTOMETRIC, 1),
     }
-    segs: list[dict] = []
-    tiled = ifd.values(TAG_TILE_OFFSETS) is not None
-    if tiled:
+    # (y0, x0, rows, cols) of each segment in one plane; tiles are always
+    # padded to full (th, tw) in the decoded stream, strips are clipped
+    if ifd.values(TAG_TILE_OFFSETS) is not None:
         tw = ifd.scalar(TAG_TILE_WIDTH)
         th = ifd.scalar(TAG_TILE_LENGTH)
+        if not tw or not th:
+            raise TiffDecodeError("missing TileWidth/TileLength")
         offsets = ifd.values(TAG_TILE_OFFSETS)
         counts = ifd.values(TAG_TILE_BYTE_COUNTS)
-        tiles_across = -(-width // tw)
-        per_plane = tiles_across * (-(-height // th))
-        bands = range(spp) if planar == 2 else [None]
-        for bi, band in enumerate(bands):
-            for t in range(per_plane):
-                idx = bi * per_plane + t
-                ty, tx = divmod(t, tiles_across)
-                segs.append({
-                    "offset": offsets[idx], "nbytes": counts[idx],
-                    "rows": th, "cols": tw,
-                    "spp": 1 if band is not None else spp,
-                    "y0": ty * th, "x0": tx * tw, "band": band,
-                })
+        cells = [(y0, x0, th, tw) for y0 in range(0, height, th)
+                 for x0 in range(0, width, tw)]
     else:
+        rows_per_strip = ifd.scalar(TAG_ROWS_PER_STRIP, height)
         offsets = ifd.values(TAG_STRIP_OFFSETS)
         counts = ifd.values(TAG_STRIP_BYTE_COUNTS)
-        rows_per_strip = ifd.scalar(TAG_ROWS_PER_STRIP, height)
-        strips_per_band = -(-height // rows_per_strip)
-        bands = range(spp) if planar == 2 else [None]
-        for bi, band in enumerate(bands):
-            for s in range(strips_per_band):
-                idx = bi * strips_per_band + s
-                y0 = s * rows_per_strip
-                segs.append({
-                    "offset": offsets[idx], "nbytes": counts[idx],
-                    "rows": min(rows_per_strip, height - y0), "cols": width,
-                    "spp": 1 if band is not None else spp,
-                    "y0": y0, "x0": 0, "band": band,
-                })
+        cells = [(y0, 0, min(rows_per_strip, height - y0), width)
+                 for y0 in range(0, height, rows_per_strip)]
+    if offsets is None or counts is None:
+        raise TiffDecodeError("missing segment offsets/byte counts")
+    # planes are concatenated band-major
+    bands = range(spp) if planar == 2 else [None]
+    n_segs = len(bands) * len(cells)
+    if len(offsets) != n_segs or len(counts) != n_segs:
+        raise TiffDecodeError(
+            f"layout has {n_segs} segments but {len(offsets)} offsets "
+            f"and {len(counts)} byte counts"
+        )
+    placements = ((band, cell) for band in bands for cell in cells)
+    segs = [
+        {"offset": off, "nbytes": cnt, "rows": rows, "cols": cols,
+         "spp": spp if band is None else 1, "y0": y0, "x0": x0, "band": band}
+        for (band, (y0, x0, rows, cols)), off, cnt
+        in zip(placements, offsets, counts)
+    ]
     return meta, segs
 
 
 def decode_planned_segment(seg_bytes: bytes, meta: dict, seg: dict) -> np.ndarray:
-    """Decode one planned segment's raw bytes to its placed array."""
+    """Decode one planned segment's raw bytes to its (rows, cols, spp)
+    array, native byte order, predictor undone."""
     dtype = np.dtype(meta["dtype_np"])
-    return _decode_segment(
-        seg_bytes, 0, len(seg_bytes), meta["compression"], dtype,
-        seg["rows"], seg["cols"], seg["spp"], meta["predictor"],
-    )
+    raw = _decompress(seg_bytes, meta["compression"])
+    shape = (seg["rows"], seg["cols"], seg["spp"])
+    expected = shape[0] * shape[1] * shape[2] * dtype.itemsize
+    if len(raw) < expected:
+        raise TiffDecodeError(
+            f"segment decodes to {len(raw)} bytes, expected {expected}"
+        )
+    arr = np.frombuffer(raw[:expected], dtype=dtype).reshape(shape)
+    # native byte order before any arithmetic
+    arr = arr.astype(dtype.newbyteorder("="), copy=False)
+    return _apply_predictor(arr, meta["predictor"])
 
 
 def assemble_segments(
-    meta: dict, pieces: list[tuple[dict, np.ndarray]]
+    meta: dict, pieces: Iterable[tuple[dict, np.ndarray]]
 ) -> np.ndarray:
     """Place decoded segments into the full (h, w, spp) chunky array and
-    apply whole-image semantics (WhiteIsZero inversion)."""
+    apply whole-image semantics (WhiteIsZero inversion). ``pieces`` may be
+    a generator: only one decoded segment need be alive at a time."""
     h, w, spp = meta["height"], meta["width"], meta["num_samples"]
     native = np.dtype(meta["dtype_np"]).newbyteorder("=")
     out = np.empty((h, w, spp), dtype=native)
@@ -486,10 +504,6 @@ def assemble_segments(
         out = _invert_white_is_zero(out)
     return out
 
-
-# ---------------------------------------------------------------------------
-# Image decode
-# ---------------------------------------------------------------------------
 
 def _apply_predictor(block: np.ndarray, predictor: int) -> np.ndarray:
     """Horizontal predictor (2): per-row per-sample cumulative sum with
@@ -514,138 +528,27 @@ def _invert_white_is_zero(arr: np.ndarray) -> np.ndarray:
     return -arr  # float: best-effort; no fixture exercises it
 
 
-def _decode_segment(
-    data: bytes,
-    offset: int,
-    nbytes: int,
-    compression: int,
-    dtype: np.dtype,
-    rows: int,
-    cols: int,
-    spp: int,
-    predictor: int,
-) -> np.ndarray:
-    """Decode one strip/tile into (rows, cols, spp), native byte order.
-
-    ``rows`` may exceed what the compressed data holds for the final short
-    strip — the caller passes the clipped count.
-    """
-    raw = _decompress(data[offset : offset + nbytes], compression)
-    itemsize = dtype.itemsize
-    expected = rows * cols * spp * itemsize
-    if len(raw) < expected:
-        raise TiffDecodeError(
-            f"segment decodes to {len(raw)} bytes, expected {expected}"
-        )
-    arr = np.frombuffer(raw[:expected], dtype=dtype).reshape(rows, cols, spp)
-    # native byte order before any arithmetic
-    arr = arr.astype(dtype.newbyteorder("="), copy=False)
-    return _apply_predictor(arr, predictor)
-
+# ---------------------------------------------------------------------------
+# Image decode
+# ---------------------------------------------------------------------------
 
 def decode_tiff_ifd(data: bytes, ifd: Ifd) -> dict:
-    """Decode the image described by one IFD into a dense chunky array.
+    """Decode the image described by one IFD into a dense chunky array:
+    segment plan → decode each segment → assemble.
 
     Returns dict with keys: width, height, num_samples, dtype (name like
     'u8'/'i16'), array (np.ndarray shape (h, w, spp), native byte order).
     """
-    width = ifd.scalar(TAG_IMAGE_WIDTH)
-    height = ifd.scalar(TAG_IMAGE_LENGTH)
-    if width is None or height is None:
-        raise TiffDecodeError("missing ImageWidth/ImageLength")
-    spp = ifd.scalar(TAG_SAMPLES_PER_PIXEL, 1)
-    compression = ifd.scalar(TAG_COMPRESSION, COMPRESSION_NONE)
-    predictor = ifd.scalar(TAG_PREDICTOR, 1)
-    planar = ifd.scalar(TAG_PLANAR_CONFIG, 1)
-    photometric = ifd.scalar(TAG_PHOTOMETRIC, 1)
-    dtype, dtype_name = _resolve_dtype(ifd)
-
-    tiled = ifd.values(TAG_TILE_OFFSETS) is not None
-    if tiled:
-        arr = _decode_tiled(data, ifd, width, height, spp, compression, dtype, predictor, planar)
-    else:
-        arr = _decode_striped(data, ifd, width, height, spp, compression, dtype, predictor, planar)
-
-    if photometric == 0:
-        arr = _invert_white_is_zero(arr)
-
+    meta, segs = segment_plan(ifd)
+    pieces = (
+        (seg, decode_planned_segment(
+            data[seg["offset"] : seg["offset"] + seg["nbytes"]], meta, seg))
+        for seg in segs
+    )
     return {
-        "width": width,
-        "height": height,
-        "num_samples": spp,
-        "dtype": dtype_name,
-        "array": arr,
+        "width": meta["width"],
+        "height": meta["height"],
+        "num_samples": meta["num_samples"],
+        "dtype": meta["dtype"],
+        "array": assemble_segments(meta, pieces),
     }
-
-
-def _decode_striped(data, ifd, width, height, spp, compression, dtype, predictor, planar):
-    offsets = ifd.values(TAG_STRIP_OFFSETS)
-    counts = ifd.values(TAG_STRIP_BYTE_COUNTS)
-    if offsets is None or counts is None:
-        raise TiffDecodeError("missing strip offsets/byte counts")
-    rows_per_strip = ifd.scalar(TAG_ROWS_PER_STRIP, height)
-    strips_per_band = -(-height // rows_per_strip)  # ceil
-
-    if planar == 1:
-        out = np.empty((height, width, spp), dtype=dtype.newbyteorder("="))
-        for s, (off, cnt) in enumerate(zip(offsets, counts)):
-            y0 = s * rows_per_strip
-            rows = min(rows_per_strip, height - y0)
-            out[y0 : y0 + rows] = _decode_segment(
-                data, off, cnt, compression, dtype, rows, width, spp, predictor
-            )
-        return out
-    if planar == 2:
-        # per-band strip sets concatenated band-major; interleave at the end
-        if len(offsets) != strips_per_band * spp:
-            raise TiffDecodeError("planar strip count mismatch")
-        out = np.empty((height, width, spp), dtype=dtype.newbyteorder("="))
-        for band in range(spp):
-            for s in range(strips_per_band):
-                idx = band * strips_per_band + s
-                y0 = s * rows_per_strip
-                rows = min(rows_per_strip, height - y0)
-                plane = _decode_segment(
-                    data, offsets[idx], counts[idx], compression, dtype,
-                    rows, width, 1, predictor,
-                )
-                out[y0 : y0 + rows, :, band] = plane[:, :, 0]
-        return out
-    raise TiffDecodeError(f"unsupported PlanarConfiguration {planar}")
-
-
-def _decode_tiled(data, ifd, width, height, spp, compression, dtype, predictor, planar):
-    tw = ifd.scalar(TAG_TILE_WIDTH)
-    th = ifd.scalar(TAG_TILE_LENGTH)
-    offsets = ifd.values(TAG_TILE_OFFSETS)
-    counts = ifd.values(TAG_TILE_BYTE_COUNTS)
-    if not tw or not th:
-        raise TiffDecodeError("missing TileWidth/TileLength")
-    tiles_across = -(-width // tw)
-    tiles_down = -(-height // th)
-    per_plane = tiles_across * tiles_down
-    out = np.empty((height, width, spp), dtype=dtype.newbyteorder("="))
-
-    if planar == 1:
-        bands = [(None, spp)]
-    elif planar == 2:
-        bands = [(b, 1) for b in range(spp)]
-    else:
-        raise TiffDecodeError(f"unsupported PlanarConfiguration {planar}")
-
-    for bi, (band, seg_spp) in enumerate(bands):
-        for t in range(per_plane):
-            idx = bi * per_plane + t
-            ty, tx = divmod(t, tiles_across)
-            # tiles are always padded to full (th, tw) in the decoded stream
-            tile = _decode_segment(
-                data, offsets[idx], counts[idx], compression, dtype,
-                th, tw, seg_spp, predictor,
-            )
-            y0, x0 = ty * th, tx * tw
-            ys, xs = min(th, height - y0), min(tw, width - x0)
-            if band is None:
-                out[y0 : y0 + ys, x0 : x0 + xs, :] = tile[:ys, :xs, :]
-            else:
-                out[y0 : y0 + ys, x0 : x0 + xs, band] = tile[:ys, :xs, 0]
-    return out

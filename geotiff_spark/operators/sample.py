@@ -13,10 +13,10 @@ Scale shape (SURVEY.md §4.3): rasters are ALWAYS decoded on executors
 - ``broadcast`` branch (corpus ≤ the size guard): decoded records are
   collected once and broadcast; sampling is a zero-shuffle ``arrow_udf``.
 - ``copartition`` branch (corpus above the guard): points shuffle by
-  raster_id (optionally salted for hot rasters), each decoded raster row
-  ships once per salt bucket, and the same gather kernel runs
-  group-locally inside a cogroup ``applyInArrow`` — the pixel data never
-  transits the driver, and per-raster work scales with executors.
+  raster_id, each decoded raster row ships once, and the same gather
+  kernel runs group-locally inside a cogroup ``applyInArrow`` — the pixel
+  data never transits the driver, and per-raster work scales with
+  executors.
 
 Both hand Python pyarrow data, not pandas frames, and sample NULL out of
 bounds, on an unknown raster_id and on a NaN pixel.
@@ -34,11 +34,11 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField, Str
 
 from geotiff_spark.functions import transforms as tf
 from geotiff_spark.functions.geotiff import read_geotiff
+from geotiff_spark.functions.tiff import NUMPY_BY_NAME
 
 # Decoded corpora at or under this many bytes broadcast; larger corpora
-# take the co-partitioned join. Overridable per-session via the Spark
-# conf ``spark.geotiff.sample.maxBroadcastBytes`` or per-call.
-DEFAULT_MAX_BROADCAST_BYTES = 512 << 20
+# take the co-partitioned join.
+MAX_BROADCAST_BYTES = 512 << 20
 
 # Per-process caches so repeated sampling queries in one session don't
 # re-run the decode/probe jobs for the same (small) raster corpus. Keyed
@@ -49,6 +49,14 @@ DEFAULT_MAX_BROADCAST_BYTES = 512 << 20
 _RECORDS_CACHE: dict[tuple, dict[str, dict]] = {}
 _SIZES_CACHE: dict[tuple, int] = {}
 _CACHE_MAX = 4
+
+
+def _cache_put(cache: dict, key: tuple, value):
+    """Insert into a bounded cache, evicting the oldest entry when full."""
+    if len(cache) >= _CACHE_MAX:
+        cache.pop(next(iter(cache)))
+    cache[key] = value
+    return value
 
 
 def _cache_key(paths: list[str]) -> tuple:
@@ -78,6 +86,43 @@ def _add_record(records: dict, rid: str, rec: dict) -> None:
     if rid in records:
         raise _duplicate_basename(rid)
     records[rid] = rec
+
+
+def _row_record(r) -> dict:
+    """One rasters-DataFrame row (a ``Row`` or an Arrow ``to_pylist``
+    dict) → sampling record. Raises on an error row — a silently missing
+    raster would turn into all-NULL samples downstream."""
+    if r["error"] is not None:
+        raise RuntimeError(
+            f"raster decode failed for {r['raster_id']}: {r['error']}"
+        )
+    return {
+        "width": r["width"],
+        "height": r["height"],
+        "num_samples": r["num_samples"],
+        # rasters DF carries reference-style names (u8/i16/f32 —
+        # sample_type, A2); records use numpy names like the driver loop
+        "dtype": str(NUMPY_BY_NAME[r["dtype"]]),
+        "transform": (r["transform"]["kind"], list(r["transform"]["coeffs"])),
+        "raster_type": r["raster_type"],
+        "extent": (
+            r["extent"]["minx"], r["extent"]["miny"],
+            r["extent"]["maxx"], r["extent"]["maxy"],
+        ),
+        "data": bytes(r["data"]),
+    }
+
+
+def _gather(rec: dict, xs, ys, sample: int, strict: bool):
+    """One record's pixel values at model-space points: (values in the
+    raster dtype, valid mask; invalid values are arbitrary)."""
+    flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
+    kind, coeffs = rec["transform"]
+    idx, valid = tf.sample_indices(
+        kind, coeffs, rec["width"], rec["height"], rec["num_samples"],
+        rec["raster_type"], xs, ys, sample, strict,
+    )
+    return flat[idx], valid
 
 
 def load_raster_records(paths: list[str]) -> dict[str, dict]:
@@ -111,40 +156,17 @@ def load_raster_records_distributed(
     """Executor-side decode (sources/rasters.py mapInPandas) collected to
     the broadcastable records dict. Decode parallelism = number of files;
     the driver only receives the finished arrays. Raises on any decode
-    error row — a silently missing raster would turn into all-NULL
-    samples downstream."""
+    error row."""
     key = _cache_key(paths)
     cached = _RECORDS_CACHE.get(key)
     if cached is not None:
         return cached
-    from geotiff_spark.functions.tiff import NUMPY_BY_NAME
     from geotiff_spark.sources.rasters import read_rasters
 
     records: dict[str, dict] = {}
     for r in read_rasters(spark, list(paths), glob="*").collect():
-        if r["error"] is not None:
-            raise RuntimeError(
-                f"raster decode failed for {r['raster_id']}: {r['error']}"
-            )
-        _add_record(records, r["raster_id"], {
-            "width": r["width"],
-            "height": r["height"],
-            "num_samples": r["num_samples"],
-            # rasters DF carries reference-style names (u8/i16/f32 —
-            # sample_type, A2); records use numpy names like the driver loop
-            "dtype": str(NUMPY_BY_NAME[r["dtype"]]),
-            "transform": (r["transform"]["kind"], list(r["transform"]["coeffs"])),
-            "raster_type": r["raster_type"],
-            "extent": (
-                r["extent"]["minx"], r["extent"]["miny"],
-                r["extent"]["maxx"], r["extent"]["maxy"],
-            ),
-            "data": bytes(r["data"]),
-        })
-    if len(_RECORDS_CACHE) >= _CACHE_MAX:
-        _RECORDS_CACHE.pop(next(iter(_RECORDS_CACHE)))
-    _RECORDS_CACHE[key] = records
-    return records
+        _add_record(records, r["raster_id"], _row_record(r))
+    return _cache_put(_RECORDS_CACHE, key, records)
 
 
 def raster_decoded_sizes(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -167,7 +189,7 @@ def raster_decoded_sizes(spark: SparkSession, paths: list[str]) -> DataFrame:
                 rid = path.rsplit("/", 1)[-1]
                 try:
                     _bo, ifds = tiff.parse_ifds(bytes(content))
-                    meta, _segs = tiff.segment_plan(bytes(content), ifds[0])
+                    meta, _segs = tiff.segment_plan(ifds[0])
                     nbytes = (
                         meta["width"] * meta["height"] * meta["num_samples"]
                         * np.dtype(meta["dtype_np"]).itemsize
@@ -201,10 +223,7 @@ def _total_decoded_bytes(spark: SparkSession, paths: list[str]) -> int:
             f"{bad[0]['error']}"
         )
     total = int(sum(r["decoded_bytes"] for r in rows))
-    if len(_SIZES_CACHE) >= _CACHE_MAX:
-        _SIZES_CACHE.pop(next(iter(_SIZES_CACHE)))
-    _SIZES_CACHE[key] = total
-    return total
+    return _cache_put(_SIZES_CACHE, key, total)
 
 
 def sample_udf(
@@ -232,16 +251,8 @@ def sample_udf(
             if rec is None:
                 continue
             mask = codes == code
-            flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
-            kind, coeffs = rec["transform"]
-            idx, valid = tf.sample_indices(
-                kind, coeffs, rec["width"], rec["height"],
-                rec["num_samples"], rec["raster_type"],
-                xs[mask], ys[mask], sample, strict,
-            )
-            vals = flat[idx].astype(np.float64)
-            vals[~valid] = np.nan
-            out[mask] = vals
+            vals, valid = _gather(rec, xs[mask], ys[mask], sample, strict)
+            out[mask] = np.where(valid, vals, np.nan)
         return pa.array(out, mask=np.isnan(out))
 
     # deterministic in fact; marked otherwise so a downstream filter on
@@ -260,63 +271,39 @@ def sample_join_copartitioned(
     out: str = "value",
     sample: int = 0,
     strict: bool = True,
-    n_salt: int = 1,
 ) -> DataFrame:
     """Sampling join for raster corpora too large to broadcast: cogroup
-    points (shuffled by raster_id, optionally salted) with the decoded
-    rasters DataFrame (each raster row ships once per salt bucket), and
-    run the same vectorized gather group-locally. The pixel data never
-    touches the driver. ``n_salt > 1`` splits a hot raster's points
-    across n_salt tasks at the cost of shipping its pixels n_salt times —
-    size it to points-per-raster skew, not to the corpus."""
+    points (shuffled by raster_id) with the decoded rasters DataFrame
+    (each raster row ships once), and run the same vectorized gather
+    group-locally. The pixel data never touches the driver."""
     point_cols = [f.name for f in df.schema.fields]
     out_schema = StructType(df.schema.fields + [StructField(out, DoubleType())])
     pts = df.withColumn("__rid", raster_id)
     r = rasters.select(
-        F.col("raster_id").alias("__rid"),
-        "width", "height", "num_samples", "dtype",
-        F.col("transform.kind").alias("t_kind"),
-        F.col("transform.coeffs").alias("t_coeffs"),
-        "raster_type", "data", "error",
+        "raster_id", "width", "height", "num_samples", "dtype",
+        "transform", "raster_type", "extent", "data", "error",
     )
-    keys = ["__rid"]
-    if n_salt > 1:
-        keys = ["__rid", "__salt"]
-        pts = pts.withColumn(
-            "__salt", F.pmod(F.hash(F.col(x), F.col(y)), F.lit(n_salt))
-        )
-        r = r.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
 
     def kernel(_key: tuple, points: pa.Table, raster: pa.Table) -> pa.Table:
         res = points.select(point_cols)
         if raster.num_rows == 0:  # unknown raster_id → NULL, like broadcast
             return res.append_column(out, pa.nulls(res.num_rows, pa.float64()))
-        if raster.num_rows > 1:  # a salted group still holds one raster row
-            raise _duplicate_basename(raster.column("__rid")[0].as_py())
-        from geotiff_spark.functions.tiff import NUMPY_BY_NAME
-
-        rec = raster.to_pylist()[0]
-        if rec["error"] is not None:
-            raise RuntimeError(
-                f"raster decode failed for {rec['__rid']}: {rec['error']}"
-            )
-        flat = np.frombuffer(rec["data"], dtype=NUMPY_BY_NAME[rec["dtype"]])
-        idx, valid = tf.sample_indices(
-            rec["t_kind"], rec["t_coeffs"], rec["width"], rec["height"],
-            rec["num_samples"], rec["raster_type"],
+        if raster.num_rows > 1:
+            raise _duplicate_basename(raster.column("raster_id")[0].as_py())
+        vals, valid = _gather(
+            _row_record(raster.to_pylist()[0]),
             points.column(x).to_numpy(), points.column(y).to_numpy(),
             sample, strict,
         )
-        vals = flat[idx].astype(np.float64)
+        vals = vals.astype(np.float64)
         return res.append_column(
             out, pa.array(vals, mask=~valid | np.isnan(vals))
         )
 
+    # cogroup pairs the two sides' keys by position, not by name
     return (
-        pts.groupBy(*keys)
-        .cogroup(r.groupBy(*keys))
+        pts.groupBy("__rid")
+        .cogroup(r.groupBy("raster_id"))
         .applyInArrow(kernel, schema=out_schema)
     )
 
@@ -332,26 +319,18 @@ def with_raster_sample(
     sample: int = 0,
     strict: bool = True,
     mode: str = "auto",
-    max_broadcast_bytes: int | None = None,
-    n_salt: int = 1,
 ) -> DataFrame:
     """Attach a sampled raster value column. `raster_id` may be a literal
     (every row samples one raster) or a column (per-row raster routing).
 
-    mode: 'auto' (header-probe the decoded size, broadcast under the
-    guard, co-partition above it), 'broadcast', or 'copartition'. Both
-    branches produce identical values (pytest-pinned)."""
+    mode: 'auto' (header-probe the decoded size, broadcast at or under
+    MAX_BROADCAST_BYTES, co-partition above it), 'broadcast', or
+    'copartition'. Both branches produce identical values
+    (pytest-pinned)."""
     rid_col = F.lit(raster_id) if isinstance(raster_id, str) else raster_id
     if mode == "auto":
-        if max_broadcast_bytes is None:
-            max_broadcast_bytes = int(
-                spark.conf.get(
-                    "spark.geotiff.sample.maxBroadcastBytes",
-                    str(DEFAULT_MAX_BROADCAST_BYTES),
-                )
-            )
         total = _total_decoded_bytes(spark, raster_paths)
-        mode = "broadcast" if total <= max_broadcast_bytes else "copartition"
+        mode = "broadcast" if total <= MAX_BROADCAST_BYTES else "copartition"
     if mode == "broadcast":
         records = load_raster_records_distributed(spark, raster_paths)
         udf = sample_udf(spark, records, sample, strict)
@@ -361,7 +340,7 @@ def with_raster_sample(
 
         rasters = read_rasters(spark, list(raster_paths), glob="*")
         return sample_join_copartitioned(
-            df, rasters, rid_col, x, y, out, sample, strict, n_salt
+            df, rasters, rid_col, x, y, out, sample, strict
         )
     raise ValueError(f"unknown sampling mode {mode!r}")
 
@@ -391,14 +370,7 @@ def sample_exact_udf(spark: SparkSession, records: dict[str, dict], sample: int 
                 continue
             mask = rids == rid
             dt = np.dtype(rec["dtype"])
-            flat = np.frombuffer(rec["data"], dtype=dt)
-            kind, coeffs = rec["transform"]
-            idx, valid = tf.sample_indices(
-                kind, coeffs, rec["width"], rec["height"],
-                rec["num_samples"], rec["raster_type"],
-                xs[mask], ys[mask], sample,
-            )
-            vals = flat[idx]
+            vals, valid = _gather(rec, xs[mask], ys[mask], sample, True)
             midx = np.nonzero(mask)[0]
             for j, (v, ok) in enumerate(zip(vals, valid)):
                 if not ok:

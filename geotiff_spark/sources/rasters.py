@@ -4,6 +4,9 @@ Engine equivalent of GeoTiff::read (/root/reference/src/lib.rs:49-84), run
 once per file on executors. read_rasters parallelizes across FILES (the
 common corpus shape); read_rasters_parallel parallelizes WITHIN files at
 strip/tile granularity (bit-identical, for corpora of few huge rasters).
+One segment plan (functions/tiff.segment_plan) serves both readers, so
+they place pixels and reject malformed layouts the same way, and one row
+builder turns either reader's record or failure into a RASTER_SCHEMA row.
 At 100 TB the rasters table is written once to Parquet and reused — the
 decode cost is paid one time per raster, not per query (persisted-table
 sampling is golden-tested).
@@ -19,7 +22,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -68,6 +70,36 @@ RASTER_SCHEMA = StructType(
 )
 
 
+def _raster_row(raster_id: str, rec: dict) -> dict:
+    """One RASTER_SCHEMA row from a read_geotiff-shaped record."""
+    kind, coeffs = rec["transform"]
+    return {
+        "raster_id": raster_id,
+        "width": rec["width"],
+        "height": rec["height"],
+        "num_samples": rec["num_samples"],
+        "dtype": rec["dtype"],
+        "transform": {"kind": kind, "coeffs": [float(c) for c in coeffs]},
+        "raster_type": rec["raster_type"],
+        "geo_keys": {k: str(v) for k, v in rec["geo_keys"].items()},
+        "extent": dict(zip(("minx", "miny", "maxx", "maxy"), rec["extent"])),
+        "data": rec["array"].tobytes(),
+        "error": None,
+    }
+
+
+def _error_message(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
+
+
+def _error_row(raster_id: str, error: str) -> dict:
+    """The error-status row of a raster that failed to decode: the job
+    goes on, every other column is NULL."""
+    row = dict.fromkeys(RASTER_SCHEMA.fieldNames())
+    row.update(raster_id=raster_id, error=error)
+    return row
+
+
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # import inside the UDF: executors only need the pure-numpy kernel
     from geotiff_spark.functions.geotiff import read_geotiff
@@ -75,49 +107,11 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
+            rid = path.rsplit("/", 1)[-1]
             try:
-                rec = read_geotiff(bytes(content))
-                rows.append(
-                    {
-                        "raster_id": path.rsplit("/", 1)[-1],
-                        "width": rec["width"],
-                        "height": rec["height"],
-                        "num_samples": rec["num_samples"],
-                        "dtype": rec["dtype"],
-                        "transform": {
-                            "kind": rec["transform"][0],
-                            "coeffs": [float(c) for c in rec["transform"][1]],
-                        },
-                        "raster_type": rec["raster_type"],
-                        "geo_keys": {
-                            k: str(v) for k, v in rec["geo_keys"].items()
-                        },
-                        "extent": {
-                            "minx": rec["extent"][0],
-                            "miny": rec["extent"][1],
-                            "maxx": rec["extent"][2],
-                            "maxy": rec["extent"][3],
-                        },
-                        "data": rec["array"].tobytes(),
-                        "error": None,
-                    }
-                )
+                rows.append(_raster_row(rid, read_geotiff(bytes(content))))
             except Exception as exc:  # error-status row, don't kill the job
-                rows.append(
-                    {
-                        "raster_id": path.rsplit("/", 1)[-1],
-                        "width": None,
-                        "height": None,
-                        "num_samples": None,
-                        "dtype": None,
-                        "transform": None,
-                        "raster_type": None,
-                        "geo_keys": None,
-                        "extent": None,
-                        "data": None,
-                        "error": f"{type(exc).__name__}: {exc}",
-                    }
-                )
+                rows.append(_error_row(rid, _error_message(exc)))
         yield pd.DataFrame(rows)
 
 
@@ -162,15 +156,16 @@ def read_rasters_parallel(
     """
     import json
 
-    from geotiff_spark.functions import geokeys, tiff, transforms
+    import numpy as np
+
+    from geotiff_spark.functions import tiff
+    from geotiff_spark.functions.geotiff import geo_header
 
     seg_schema = StructType([
         StructField("raster_id", StringType()),
-        StructField("seg_idx", IntegerType()),
         StructField("seg_bytes", BinaryType()),
         StructField("seg_json", StringType()),
-        StructField("meta_json", StringType()),   # only on seg_idx == 0
-        StructField("n_segs", IntegerType()),
+        StructField("meta_json", StringType()),   # only on the first segment
     ])
 
     def explode_segments(batches):
@@ -180,38 +175,13 @@ def read_rasters_parallel(
                 data = bytes(content)
                 rid = pth.rsplit("/", 1)[-1]
                 try:
-                    bo, ifds = tiff.parse_ifds(data)
-                    ifd = ifds[0]
-                    meta, segs = tiff.segment_plan(data, ifd)
-                    # header metadata: geokeys + transform + extent
-                    directory = ifd.values(tiff.TAG_GEO_KEY_DIRECTORY)
-                    if directory is None:
-                        gk = geokeys.default_geo_key_directory()
-                    else:
-                        gk = geokeys.parse_geo_key_directory(
-                            directory,
-                            ifd.values(tiff.TAG_GEO_DOUBLE_PARAMS, []),
-                            ifd.scalar(tiff.TAG_GEO_ASCII_PARAMS, ""),
-                        )
-                    ps = ifd.values(tiff.TAG_MODEL_PIXEL_SCALE)
-                    tp = ifd.values(tiff.TAG_MODEL_TIEPOINT)
-                    mx = ifd.values(tiff.TAG_MODEL_TRANSFORMATION)
-                    if ps is None and tp is None and mx is None:
-                        kind, coeffs = "identity", []
-                    else:
-                        kind, coeffs = transforms.transform_from_tag_data(ps, tp, mx)
-                    meta.update({
-                        "geo_keys": gk, "kind": kind,
-                        "coeffs": [float(c) for c in coeffs],
-                        "raster_type": gk.get("raster_type"),
-                    })
+                    _bo, ifds = tiff.parse_ifds(data)
+                    meta, segs = tiff.segment_plan(ifds[0])
+                    meta.update(geo_header(ifds[0], meta["width"], meta["height"]))
                 except Exception as exc:
                     rows.append({
-                        "raster_id": rid, "seg_idx": 0, "seg_bytes": b"",
-                        "seg_json": "", "n_segs": 1,
-                        "meta_json": json.dumps(
-                            {"error": f"{type(exc).__name__}: {exc}"}
-                        ),
+                        "raster_id": rid, "seg_bytes": b"", "seg_json": "",
+                        "meta_json": json.dumps({"error": _error_message(exc)}),
                     })
                     continue
                 # each segment carries its own decode essentials so stage 2
@@ -227,17 +197,14 @@ def read_rasters_parallel(
                     sj.update(dec_meta)
                     rows.append({
                         "raster_id": rid,
-                        "seg_idx": i,
                         "seg_bytes": data[seg["offset"]: seg["offset"] + seg["nbytes"]],
                         "seg_json": json.dumps(sj),
                         "meta_json": json.dumps(meta) if i == 0 else None,
-                        "n_segs": len(segs),
                     })
             yield pd.DataFrame(rows, columns=[f.name for f in seg_schema.fields])
 
     dec_schema = StructType([
         StructField("raster_id", StringType()),
-        StructField("seg_idx", IntegerType()),
         StructField("decoded", BinaryType()),
         StructField("seg_json", StringType()),
         StructField("meta_json", StringType()),
@@ -246,81 +213,43 @@ def read_rasters_parallel(
     def decode_segments(batches):
         for pdf in batches:
             rows = []
-            for rid, i, seg_bytes, seg_json, meta_json in zip(
-                pdf["raster_id"], pdf["seg_idx"], pdf["seg_bytes"],
-                pdf["seg_json"], pdf["meta_json"],
+            for rid, seg_bytes, seg_json, meta_json in zip(
+                pdf["raster_id"], pdf["seg_bytes"], pdf["seg_json"],
+                pdf["meta_json"],
             ):
-                if not seg_json:  # error header row
-                    rows.append({"raster_id": rid, "seg_idx": int(i),
-                                 "decoded": b"", "seg_json": "",
-                                 "meta_json": meta_json})
-                    continue
-                seg = json.loads(seg_json)
-                try:
-                    arr = tiff.decode_planned_segment(
-                        bytes(seg_bytes), seg, seg
-                    )
-                    decoded = arr.tobytes()
-                except Exception as exc:
-                    decoded = b""
-                    seg["decode_error"] = f"{type(exc).__name__}: {exc}"
-                rows.append({
-                    "raster_id": rid, "seg_idx": int(i),
-                    "decoded": decoded, "seg_json": json.dumps(seg),
-                    "meta_json": meta_json,
-                })
+                decoded = b""
+                if seg_json:  # empty on the row of a raster whose header failed
+                    try:
+                        seg = json.loads(seg_json)
+                        decoded = tiff.decode_planned_segment(
+                            bytes(seg_bytes), seg, seg
+                        ).tobytes()
+                    except Exception as exc:  # reported by assemble
+                        seg_json = ""
+                        meta_json = json.dumps({"error": _error_message(exc)})
+                rows.append({"raster_id": rid, "decoded": decoded,
+                             "seg_json": seg_json, "meta_json": meta_json})
             yield pd.DataFrame(rows, columns=[f.name for f in dec_schema.fields])
 
     def assemble(key, pdf):  # (key, pdf) -> pdf; hints omitted so pyspark
         # uses the positional applyInPandas protocol without warnings
-        import numpy as np
-
         rid = key[0]
-        header = pdf.loc[pdf["meta_json"].notna(), "meta_json"]
-        meta = json.loads(header.iloc[0]) if len(header) else {}
-        if "error" in meta or not meta:
-            return pd.DataFrame([{
-                "raster_id": rid, "width": None, "height": None,
-                "num_samples": None, "dtype": None, "transform": None,
-                "raster_type": None, "geo_keys": None, "extent": None,
-                "data": None, "error": meta.get("error", "missing header"),
-            }])
+        metas = [json.loads(m) for m in pdf["meta_json"].dropna()]
+        errors = [m["error"] for m in metas if "error" in m]
+        if errors:
+            return pd.DataFrame([_error_row(rid, errors[0])])
+        meta = metas[0]
+        native = np.dtype(meta["dtype_np"]).newbyteorder("=")
+        pieces = (
+            (seg, np.frombuffer(buf, dtype=native).reshape(
+                seg["rows"], seg["cols"], seg["spp"]))
+            for seg, buf in zip(map(json.loads, pdf["seg_json"]), pdf["decoded"])
+        )
         try:
-            import numpy as np
-
-            native = np.dtype(meta["dtype_np"]).newbyteorder("=")
-            pieces = []
-            for _, row in pdf.iterrows():
-                seg = json.loads(row["seg_json"])
-                if "decode_error" in seg:
-                    raise RuntimeError(seg["decode_error"])
-                arr = np.frombuffer(bytes(row["decoded"]), dtype=native).reshape(
-                    seg["rows"], seg["cols"], seg["spp"]
-                )
-                pieces.append((seg, arr))
             full = tiff.assemble_segments(meta, pieces)
-            extent = transforms.model_extent(
-                meta["kind"], meta["coeffs"], meta["width"], meta["height"],
-                meta["raster_type"],
-            )
-            return pd.DataFrame([{
-                "raster_id": rid,
-                "width": meta["width"], "height": meta["height"],
-                "num_samples": meta["num_samples"], "dtype": meta["dtype"],
-                "transform": {"kind": meta["kind"], "coeffs": meta["coeffs"]},
-                "raster_type": meta["raster_type"],
-                "geo_keys": {k: str(v) for k, v in meta["geo_keys"].items()},
-                "extent": dict(zip(("minx", "miny", "maxx", "maxy"), extent)),
-                "data": full.tobytes(),
-                "error": None,
-            }])
         except Exception as exc:
-            return pd.DataFrame([{
-                "raster_id": rid, "width": None, "height": None,
-                "num_samples": None, "dtype": None, "transform": None,
-                "raster_type": None, "geo_keys": None, "extent": None,
-                "data": None, "error": f"{type(exc).__name__}: {exc}",
-            }])
+            return pd.DataFrame([_error_row(rid, _error_message(exc))])
+        return pd.DataFrame([_raster_row(rid, {**meta, "array": full})])
 
     scan = (
         spark.read.format("binaryFile")

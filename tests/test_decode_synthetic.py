@@ -10,9 +10,13 @@ import numpy as np
 import pytest
 
 from geotiff_spark.functions.geotiff import read_geotiff
-from geotiff_spark.functions.tiff import lzw_decode, packbits_decode
+from geotiff_spark.functions.tiff import (
+    TiffDecodeError,
+    lzw_decode,
+    packbits_decode,
+)
 
-from tiff_writer import write_tiff
+from tiff_writer import patch_tag, write_tiff
 
 RNG = np.random.default_rng(42)
 
@@ -141,3 +145,99 @@ def test_packbits_decode_cases():
         "AA AA AA 80 00 2A AA AA AA AA 80 00 2A 22 AA AA AA AA AA AA AA AA AA AA".replace(" ", "")
     )
     assert packbits_decode(src) == want
+
+
+# ---------------------------------------------------------------------------
+# Malformed layouts: one segment plan rejects them for both readers
+# ---------------------------------------------------------------------------
+
+def _malformed():
+    """name -> a striped file whose tags do not describe its layout."""
+    arr = np.arange(12 * 6, dtype=np.uint8).reshape(12, 6)
+    three_strips = write_tiff(arr, rows_per_strip=4)
+    return {
+        # RowsPerStrip 3 implies 4 strips; StripOffsets lists 3
+        "short_strip_list.tif": patch_tag(three_strips, 278, value=3),
+        "planar_3.tif": patch_tag(three_strips, 284, value=3),
+        # an unknown tag id hides StripOffsets
+        "no_strip_offsets.tif": patch_tag(three_strips, 273, new_tag=65000),
+        # 3 offsets, 2 byte counts
+        "counts_shorter.tif": patch_tag(three_strips, 279, count=2),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_malformed()))
+def test_malformed_layout_raises(name):
+    with pytest.raises(TiffDecodeError):
+        read_geotiff(_malformed()[name])
+
+
+def test_malformed_layout_is_error_row_in_both_readers(spark, tmp_path):
+    from geotiff_spark.sources.rasters import read_rasters, read_rasters_parallel
+
+    for name, data in _malformed().items():
+        (tmp_path / name).write_bytes(data)
+    per_file = {r.raster_id: r for r in read_rasters(spark, str(tmp_path)).collect()}
+    parallel = {r.raster_id: r for r in
+                read_rasters_parallel(spark, str(tmp_path)).collect()}
+    assert set(per_file) == set(parallel) == set(_malformed())
+    for name in per_file:
+        a, b = per_file[name], parallel[name]
+        assert a.error.startswith("TiffDecodeError: "), (name, a.error)
+        assert a.error == b.error, name
+        assert a.data is None and b.data is None
+        assert a.width is None and b.width is None
+
+
+# ---------------------------------------------------------------------------
+# Strip-parallel ingest equals per-file ingest
+# ---------------------------------------------------------------------------
+
+def _parity_corpus():
+    """name -> (array, write_tiff kwargs): strip and tile, chunky and
+    planar, all three writer codecs, predictor 2, WhiteIsZero."""
+    rng = np.random.default_rng(3)
+    geo = {"pixel_scale": [30.0, 30.0, 0.0],
+           "tie_points": [0.0, 0.0, 0.0, 500000.0, 4200000.0, 0.0],
+           "geo_directory": [1, 1, 0, 2, 1024, 0, 1, 1, 1025, 0, 1, 2]}
+    corpus = {}
+    for codec in (1, 8, 32773):
+        for layout, lkw in (("strip", {"rows_per_strip": 5}),
+                            ("tile", {"tile": (16, 8)})):
+            for planar in (1, 2):
+                name = f"{layout}_p{planar}_c{codec}.tif"
+                dtype = {1: np.uint8, 8: np.uint16, 32773: np.int16}[codec]
+                info = np.iinfo(dtype)
+                arr = rng.integers(info.min, info.max, size=(19, 23, 3),
+                                   dtype=dtype, endpoint=True)
+                corpus[name] = (arr, {"compression": codec, "planar": planar,
+                                      "predictor": 2 if planar == 2 else 1,
+                                      **lkw, **geo})
+    arr = rng.normal(size=(9, 11)).astype(np.float32)
+    corpus["f32_strip.tif"] = (arr, {"rows_per_strip": 2, "byte_order": ">"})
+    arr = rng.integers(0, 256, size=(9, 11), dtype=np.uint8)
+    corpus["white_is_zero.tif"] = (arr, {"photometric": 0, "tile": (16, 16),
+                                         "compression": 8})
+    return corpus
+
+
+def test_parallel_ingest_equals_per_file_synthetic(spark, tmp_path):
+    """read_rasters_parallel (segments decoded anywhere, reassembled per
+    raster) returns the same rows as read_rasters on a tiff_writer corpus."""
+    from geotiff_spark.sources.rasters import read_rasters, read_rasters_parallel
+
+    corpus = _parity_corpus()
+    for name, (arr, kw) in corpus.items():
+        (tmp_path / name).write_bytes(write_tiff(arr, **kw))
+    a = {r.raster_id: r for r in read_rasters(spark, str(tmp_path)).collect()}
+    b = {r.raster_id: r for r in
+         read_rasters_parallel(spark, str(tmp_path)).collect()}
+    assert set(a) == set(b) == set(corpus)
+    for name, (arr, kw) in corpus.items():
+        assert a[name].error is None and b[name].error is None, name
+        assert a[name].data == b[name].data, name
+        assert a[name].extent == b[name].extent, name
+        assert a[name].geo_keys == b[name].geo_keys, name
+        if kw.get("photometric") != 0:
+            assert a[name].data == arr.astype(arr.dtype.newbyteorder("=")).tobytes()
+    assert a["strip_p1_c1.tif"].geo_keys["raster_type"] == "point"

@@ -93,15 +93,14 @@ def _points(arrays):
     return rows, want
 
 
-@pytest.mark.parametrize("n_salt", [1, 2])
-def test_sampling_modes_equal_numpy_gather(spark, corpus, n_salt):
+def test_sampling_modes_equal_numpy_gather(spark, corpus):
     paths, arrays = corpus
     rows, want = _points(arrays)
     pts = spark.createDataFrame(rows, "pid long, rid string, x double, y double")
     got = {}
     for mode in ("broadcast", "copartition"):
         out = smp.with_raster_sample(
-            pts, spark, paths, F.col("rid"), mode=mode, n_salt=n_salt
+            pts, spark, paths, F.col("rid"), mode=mode
         ).collect()
         got[mode] = {r.pid: r.value for r in out}
         # the point columns pass through untouched

@@ -13,7 +13,6 @@ import glob
 import math
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from fixture_paths import reference
@@ -102,15 +101,14 @@ def _routing_points(spark):
     )
 
 
-@pytest.mark.parametrize("n_salt", [1, 3])
-def test_copartition_equals_broadcast(spark, n_salt):
+def test_copartition_equals_broadcast(spark):
     pts = _routing_points(spark)
     paths = _routing_paths()
     bc = smp.with_raster_sample(
         pts, spark, paths, F.col("rid"), mode="broadcast"
     ).collect()
     cp = smp.with_raster_sample(
-        pts, spark, paths, F.col("rid"), mode="copartition", n_salt=n_salt
+        pts, spark, paths, F.col("rid"), mode="copartition"
     ).collect()
     a = {r.pid: r.value for r in bc}
     b = {r.pid: r.value for r in cp}
@@ -122,7 +120,7 @@ def test_copartition_equals_broadcast(spark, n_salt):
     assert any(v is not None for v in a.values())
 
 
-def test_auto_mode_size_guard_picks_branch(spark):
+def test_auto_mode_size_guard_picks_branch(spark, monkeypatch):
     """auto: small corpus broadcasts (ArrowEvalPython gather); a tiny
     guard forces the co-partitioned cogroup plan."""
     pts = _routing_points(spark)
@@ -133,8 +131,9 @@ def test_auto_mode_size_guard_picks_branch(spark):
     assert "FlatMapCoGroupsInArrow" not in plan_small
     assert "ArrowEvalPython" in plan_small
 
+    monkeypatch.setattr(smp, "MAX_BROADCAST_BYTES", 1)
     forced = smp.with_raster_sample(
-        pts, spark, paths, F.col("rid"), mode="auto", max_broadcast_bytes=1
+        pts, spark, paths, F.col("rid"), mode="auto"
     )
     plan_forced = forced._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInArrow" in plan_forced

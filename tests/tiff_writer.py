@@ -191,3 +191,31 @@ def write_tiff(
         out += struct.pack(bo + "HHI", tag, ftype, count) + raw
     out += struct.pack(bo + "I", 0)  # no next IFD
     return bytes(out)
+
+
+def patch_tag(
+    data: bytes,
+    tag: int,
+    value: int | None = None,
+    count: int | None = None,
+    new_tag: int | None = None,
+) -> bytes:
+    """Rewrite one entry of the first IFD of a little-endian TIFF: its
+    inline SHORT/LONG ``value``, its ``count``, or its tag id (``new_tag``;
+    an unknown id hides the tag from a reader). For malformed-file tests."""
+    out = bytearray(data)
+    (ifd,) = struct.unpack_from("<I", out, 4)
+    (n,) = struct.unpack_from("<H", out, ifd)
+    for pos in range(ifd + 2, ifd + 2 + 12 * n, 12):
+        t, ftype, cnt = struct.unpack_from("<HHI", out, pos)
+        if t != tag:
+            continue
+        if value is not None:
+            ch = {_TYPE_SHORT: "H", _TYPE_LONG: "I"}[ftype]
+            out[pos + 8 : pos + 12] = struct.pack("<" + ch, value).ljust(4, b"\0")
+        if count is not None:
+            struct.pack_into("<I", out, pos + 4, count)
+        if new_tag is not None:
+            struct.pack_into("<H", out, pos, new_tag)
+        return bytes(out)
+    raise KeyError(f"tag {tag} not in the first IFD")
