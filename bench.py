@@ -98,9 +98,9 @@ def bench_queries(spark, sf_dir: str, pages_path: str, bign_path: str,
         ).count()
 
     def pages_e2e_twostage():
-        """Declarative two-stage variant (decode UDF + broadcast join +
-        refine UDF) — kept as a DIAGNOSTIC to quantify the fusion win;
-        excluded from the headline total."""
+        """Two-stage variant (fused decode stage, then pip_join's separate
+        map-side PIP stage) — kept as a DIAGNOSTIC to quantify the fusion
+        win; excluded from the headline total."""
         pages = spark.read.parquet(pages_path)
         pages = ex.with_fused_geo(pages, res, carry=("url",))
         hits = sj.pip_join(

@@ -6,7 +6,8 @@ ships with the model); training happens once on an aggregated
 word-frequency table. Both halves live here with that shape:
 
 - :func:`bpe_train` — classic Sennrich training loop over a
-  word→count dict (pure python). :func:`bpe_train_frame` feeds it the
+  word→count dict (pure python), the reference for the heap-indexed
+  :func:`bpe_train_fast`. :func:`bpe_train_frame` feeds the latter the
   Spark-aggregated word counts: ONE distributed aggregation with a
   min_count cutoff bounds the dict (a 100 TB corpus's cutoff vocabulary
   is ~10^6-10^7 words — driver-feasible, same tier as the IVF centroid
@@ -194,14 +195,13 @@ def bpe_train_frame(
     min_count: int = 1,
     max_vocab: int = 1_000_000,
     byte_level: bool = False,
-    fast: bool = False,
 ) -> list[tuple[str, str]]:
     """Train merges from a corpus: one Spark aggregation builds the
     (word, count) table — partial-aggregated, min_count-cut, capped at
     max_vocab by frequency (ties toward the lexicographically smaller
     word, so the pull is deterministic) — then the merge loop runs
-    driver-side (:func:`bpe_train`, or :func:`bpe_train_fast` for
-    production-size tables). byte_level=True trains over UTF-8 bytes
+    driver-side (:func:`bpe_train_fast`, whose merges equal
+    :func:`bpe_train`'s). byte_level=True trains over UTF-8 bytes
     (latin-1-char symbols), giving complete input coverage: no word
     can be out-of-vocabulary."""
     toks = F.filter(F.split(F.col(text), _WORD_SEP), lambda t: t != "")
@@ -217,7 +217,7 @@ def bpe_train_frame(
     counts = {
         (byte_word(r["w"]) if byte_level else r["w"]): r["c"] for r in rows
     }
-    return (bpe_train_fast if fast else bpe_train)(counts, n_merges)
+    return bpe_train_fast(counts, n_merges)
 
 
 def bpe_apply(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

@@ -107,10 +107,11 @@ def cell_udf(res: int):
         return pd.Series(res_arr)
 
     # deterministic in fact, but marked otherwise so Catalyst cannot
-    # inline the `cell` alias into downstream filters (the equi-join's
-    # inferred isnotnull(cell)) and re-plan a SECOND ArrowEvalPython —
-    # the whole encode chain ran twice on the pip path (plan-verified,
-    # round 4; same pathology as dedup.minhash_signatures)
+    # inline the `cell` alias into downstream filters (e.g. the inferred
+    # isnotnull(cell) of knn's equi-join on cell, or a filter over
+    # cell_assign's output) and re-plan a SECOND ArrowEvalPython — the
+    # whole encode chain then runs twice (plan-verified, round 4; same
+    # pathology as dedup.minhash_signatures)
     return encode.asNondeterministic()
 
 

@@ -533,24 +533,10 @@ def _anchor_assign_udf(spark, anchors: np.ndarray, n_probe: int = 1):
     return assign
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    iters: int = 3,
-) -> DataFrame:
-    """Approximate top-k via inverted lists: corpus rows live in their
-    nearest-centroid list; each query probes its n_probe nearest lists and
-    re-ranks exactly (JVM cosine) inside them. Candidate volume is
-    ~corpus × n_probe / n_centroids instead of corpus × queries."""
-    spark = corpus.sparkSession
-    cents = train_ivf_centroids(spark, corpus, n_centroids, iters, key, vec)
-    one = _assign_udf(spark, cents, 1)
-    probe = _assign_udf(spark, cents, n_probe)
+def _ivf_search(corpus, queries, k, key, vec, one, probe) -> DataFrame:
+    """The IVF search body shared by both quantizers: `one` assigns each
+    corpus row its list, `probe` each query its n_probe lists (both
+    array<int> UDFs); candidates are re-ranked by exact JVM cosine."""
     c = corpus.select(
         F.col(key).alias("nn_id"), F.col(vec).alias("cvec"),
         one(F.col(vec))[0].alias("cid"),
@@ -574,6 +560,27 @@ def ivf_topk(
     )
 
 
+def ivf_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    key: str = "vec_id",
+    vec: str = "embedding",
+    n_centroids: int = 16,
+    n_probe: int = 4,
+    iters: int = 3,
+) -> DataFrame:
+    """Approximate top-k via inverted lists: corpus rows live in their
+    nearest-centroid list; each query probes its n_probe nearest lists and
+    re-ranks exactly (JVM cosine) inside them. Candidate volume is
+    ~corpus × n_probe / n_centroids instead of corpus × queries."""
+    spark = corpus.sparkSession
+    cents = train_ivf_centroids(spark, corpus, n_centroids, iters, key, vec)
+    return _ivf_search(corpus, queries, k, key, vec,
+                       _assign_udf(spark, cents, 1),
+                       _assign_udf(spark, cents, n_probe))
+
+
 def ivf_topk_md5(
     corpus: DataFrame,
     queries: DataFrame,
@@ -594,24 +601,6 @@ def ivf_topk_md5(
     oracle-gated form."""
     spark = corpus.sparkSession
     anchors = md5_anchor_centroids(corpus, n_centroids, key, vec)
-    one = _anchor_assign_udf(spark, anchors, 1)
-    probe = _anchor_assign_udf(spark, anchors, n_probe)
-    c = corpus.select(
-        F.col(key).alias("nn_id"), F.col(vec).alias("cvec"),
-        one(F.col(vec))[0].alias("cid"),
-    )
-    q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec).alias("qvec"),
-        F.explode(probe(F.col(vec))).alias("cid"),
-    )
-    cand = (
-        c.join(F.broadcast(q), "cid")
-        .filter(F.col("nn_id") != F.col("query_id"))
-    )
-    scored = cand.withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nn_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nn_id", "rank")
-    )
+    return _ivf_search(corpus, queries, k, key, vec,
+                       _anchor_assign_udf(spark, anchors, 1),
+                       _anchor_assign_udf(spark, anchors, n_probe))

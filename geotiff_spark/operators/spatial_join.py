@@ -1,32 +1,44 @@
-"""Point-in-polygon spatial join: broadcast cell-index equi-join + exact
-ray-casting refinement on boundary cells only.
+"""Point-in-polygon spatial join: a map-side lookup in a broadcast cell
+index + exact ray-casting refinement on boundary cells only.
 
-Plan shape (scale rationale, SURVEY.md §4):
+Plan shape (scale rationale, SURVEY.md §4, measurements PLANS.md §1):
 
-    pages(+cell) ⋈broadcast cell_index(cell, poly_id, is_boundary)
-        → interior hits pass through untouched (no Python)
-        → boundary hits run the exact PIP pandas UDF (Arrow batches)
+    points → ONE mapInPandas stage per task:
+        cell encode → hash lookup in the broadcast dict
+        cell → [(poly_id, is_boundary)]
+        → interior hits pass through untouched
+        → boundary hits run the exact vectorized ray-cast
 
-The equi-join on `cell` is the coarse prefilter (reference analog: R-tree
+The cell lookup is the coarse prefilter (reference analog: R-tree
 envelope search, /root/reference/src/coordinate_transform/tie_points.rs:188-192);
 ray casting is the exact test (analog of Face::contains half-plane tests,
-:205-229). The polygon index is a small dim → always broadcast: no shuffle
-of the 10^12-row pages side, and AQE skew handling is irrelevant because
-the big side never moves. Exactness: interior cells are proven inside at
-index build time, so skipping the UDF there cannot change results.
+:205-229). The polygon index and geometry are small, so they ride
+`SparkContext.broadcast` dicts, one copy per worker. The 10^12-row points
+side is never shuffled and no join node is planned, so AQE skew handling
+does not apply. Exactness: interior cells are proven inside at index build
+time, so skipping the ray-cast there cannot change results.
+
+Two point sources share the one stage (`_pip_stage`): `fused_pages_pip`
+mines points from crawl html, `pip_join` reads `lat`/`lon` columns.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.types import (
+    DoubleType, LongType, StringType, StructField, StructType,
+)
 
+from geotiff_spark.functions import cells as cellmod
 from geotiff_spark.functions import pip as pipmod
 from geotiff_spark.plans.fusion import map_in_pandas
 from geotiff_spark.sources import polygons as polysrc
+
+Points = Callable[[pd.DataFrame], tuple[np.ndarray, np.ndarray]]
 
 
 def _polygon_lookup() -> dict[str, tuple[np.ndarray, list[np.ndarray]]]:
@@ -37,117 +49,31 @@ def _polygon_lookup() -> dict[str, tuple[np.ndarray, list[np.ndarray]]]:
     }
 
 
-def pip_refine_udf(spark: SparkSession):
-    """Exact PIP test as a vectorized pandas UDF over
-    (poly_id, lon, lat, is_boundary).
-
-    Interior-cell rows (is_boundary=False) short-circuit to True inside the
-    same Arrow pass — one UDF stage, no plan branch, no double evaluation.
-    Polygon geometry rides a SparkContext broadcast — one copy per worker,
-    not per task (at scale the polygon set is MBs, the pages are TBs).
-    """
-    bc = spark.sparkContext.broadcast(_polygon_lookup())
-
-    @pandas_udf("boolean")
-    def inside(
-        poly_id: pd.Series, lon: pd.Series, lat: pd.Series,
-        is_boundary: pd.Series,
-    ) -> pd.Series:
-        polys = bc.value
-        px = lon.to_numpy(dtype=np.float64)
-        py = lat.to_numpy(dtype=np.float64)
-        bnd = is_boundary.to_numpy(dtype=bool)
-        out = ~bnd  # interior cells: proven inside at index build time
-        if bnd.any():
-            pids = poly_id.to_numpy()
-            # group by polygon: one vectorized ray-cast per polygon per batch
-            for pid in pd.unique(pids[bnd]):
-                mask = bnd & (pids == pid)
-                ring, holes = polys[pid]
-                out[mask] = pipmod.points_in_polygon(
-                    px[mask], py[mask], ring, holes
-                )
-        return pd.Series(out)
-
-    return inside
-
-
-def pip_join(
+def _pip_stage(
     spark: SparkSession,
-    pages_with_cell: DataFrame,
+    df: DataFrame,
     res: int,
-    how: str = "inner",
+    carry: tuple[str, ...],
+    columns: tuple[str, ...],
+    points: Points,
+    name: str,
 ) -> DataFrame:
-    """pages (with `cell`, `lat`, `lon`) ⋈ polygons → + poly_id.
+    """The one PIP join loop. `points(pdf)` maps a batch of `columns` to
+    float64 (lat, lon) arrays, NaN where a row has no point; such rows
+    match nothing.
 
-    Returns one row per (page, containing polygon). Interior-cell hits skip
-    the exact test; boundary-cell hits are refined. Pages without geotag
-    (cell NULL) are dropped on inner, kept with NULL poly_id on left.
+    Output: (carry..., lat, lon, cell, poly_id) — one row per (input
+    row, containing polygon).
     """
-    index = F.broadcast(polysrc.polygon_cell_index(spark, res))
-    refine = pip_refine_udf(spark)
-
-    joined = pages_with_cell.join(index, "cell", "inner")
-    exact = (
-        joined.withColumn(
-            "_inside",
-            refine(
-                F.col("poly_id"), F.col("lon"), F.col("lat"),
-                F.col("is_boundary"),
-            ),
-        )
-        .filter(F.col("_inside"))
-        .drop("_inside", "is_boundary")
-    )
-
-    if how == "inner":
-        return exact
-    if how == "left":
-        hits = exact.select("url", "poly_id")
-        return pages_with_cell.join(hits, "url", "left")
-    raise ValueError(f"unsupported how={how}")
-
-
-def fused_pages_pip(
-    spark: SparkSession,
-    pages: DataFrame,
-    res: int,
-    html: str = "html",
-    carry: tuple[str, ...] = ("url",),
-) -> DataFrame:
-    """The single-stage fast path: html decode → text extraction → geotag
-    → cell encode → broadcast cell-index lookup → exact PIP refine, all in
-    ONE mapInPandas pass (a map-side broadcast join with custom refine).
-
-    Why: every pandas-UDF stage costs a wave of Python workers plus a JVM
-    row queue; chaining decode-UDF → join → refine-UDF pays both twice
-    (measured: 2-4× the fused cost at sf0.1). The polygon cell index is a
-    small broadcast dict — the equi-join on `cell` is a hash lookup inside
-    the same Arrow batch that computed `cell`. Results are identical to
-    with_fused_geo + pip_join (tested).
-
-    Output: (carry..., lat, lon, cell, poly_id) — one row per (page,
-    containing polygon).
-    """
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
-    from geotiff_spark.operators.extract import extract_batch
-
-    from geotiff_spark.functions import cells as cellmod
-    from geotiff_spark.sources.polygons import polygon_cell_index_pdf
-
-    idx_pdf = polygon_cell_index_pdf(res)
     cell_index: dict[int, list[tuple[str, bool]]] = {}
+    idx_pdf = polysrc.polygon_cell_index_pdf(res)
     for cell, pid, bnd in idx_pdf.itertuples(index=False):
         cell_index.setdefault(int(cell), []).append((pid, bool(bnd)))
     bc_index = spark.sparkContext.broadcast(cell_index)
     bc_polys = spark.sparkContext.broadcast(_polygon_lookup())
 
-    carry_fields = [pages.schema[c] for c in carry]
     out_schema = StructType(
-        carry_fields
+        [df.schema[c] for c in carry]
         + [
             StructField("lat", DoubleType()),
             StructField("lon", DoubleType()),
@@ -155,17 +81,16 @@ def fused_pages_pip(
             StructField("poly_id", StringType()),
         ]
     )
+
     def run(batches):
         index = bc_index.value
         polys = bc_polys.value
         for pdf in batches:
-            n = len(pdf)
-            _texts, lats, lons = extract_batch(pdf[html])
-            ok = ~np.isnan(lats)
+            lats, lons = points(pdf)
+            ok = ~(np.isnan(lats) | np.isnan(lons))
             if not ok.any():
-                yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
                 continue
-            cells = np.zeros(n, dtype=np.int64)
+            cells = np.zeros(len(pdf), dtype=np.int64)
             cells[ok] = cellmod.latlon_to_cell(lats[ok], lons[ok], res)
 
             # map-side join: candidates grouped per cell, one vectorized
@@ -200,4 +125,53 @@ def fused_pages_pip(
             out["poly_id"] = out_pids
             yield out
 
-    return map_in_pandas(pages, run, out_schema, columns=(*carry, html))
+    return map_in_pandas(df, run, out_schema, columns=(*carry, *columns),
+                         name=name)
+
+
+def pip_join(
+    spark: SparkSession,
+    df: DataFrame,
+    res: int,
+    carry: tuple[str, ...] = ("url",),
+) -> DataFrame:
+    """Points in the `lat`/`lon` columns of `df` ⋈ polygons.
+
+    Output: (carry..., lat, lon, cell, poly_id) — one row per (row,
+    containing polygon). A row with either coordinate NULL or NaN
+    matches nothing.
+    """
+    def points(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        return (pdf["lat"].to_numpy(dtype=np.float64, na_value=np.nan),
+                pdf["lon"].to_numpy(dtype=np.float64, na_value=np.nan))
+
+    return _pip_stage(spark, df, res, carry, ("lat", "lon"), points,
+                      "pip_join")
+
+
+def fused_pages_pip(
+    spark: SparkSession,
+    pages: DataFrame,
+    res: int,
+    html: str = "html",
+    carry: tuple[str, ...] = ("url",),
+) -> DataFrame:
+    """The single-stage fast path: html decode → text extraction → geotag
+    → the PIP stage, all in ONE mapInPandas pass.
+
+    Why: every pandas-UDF stage costs a wave of Python workers plus a JVM
+    row queue; chaining a decode stage into a separate PIP stage pays both
+    twice (measured: 2-4× the fused cost at sf0.1). Results are identical
+    to with_fused_geo + pip_join (tested).
+
+    Output: (carry..., lat, lon, cell, poly_id) — one row per (page,
+    containing polygon).
+    """
+    from geotiff_spark.operators.extract import extract_batch
+
+    def points(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        _texts, lats, lons = extract_batch(pdf[html])
+        return lats, lons
+
+    return _pip_stage(spark, pages, res, carry, (html,), points,
+                      "fused_pages_pip")

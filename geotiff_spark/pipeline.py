@@ -78,9 +78,9 @@ def geo_documents_with_cell(spark: SparkSession, sf_dir: str, res: int = DEFAULT
 
 
 def doc_pip_join(spark: SparkSession, sf_dir: str, res: int = DEFAULT_RES) -> DataFrame:
-    """Documents ⋈ admin polygons (broadcast cell index + exact refine)."""
-    docs = geo_documents_with_cell(spark, sf_dir, res)
-    return sj.pip_join(spark, docs, res)
+    """Documents ⋈ admin polygons → (doc_id, lat, lon, cell, poly_id)."""
+    return sj.pip_join(spark, geo_documents(spark, sf_dir), res,
+                       carry=("doc_id",))
 
 
 def laea_udf():

@@ -4,9 +4,9 @@ Polygon set per FIXTURES.md §2: convex + non-convex shapes, shared borders,
 one polygon with a hole, one crossing a cell-prefix boundary. All vertices
 derive from a fixed seed, committed by value through the generator.
 
-The cell-cover index (polygon_cell_index) is the engine's broadcast side:
-(cell, poly_id, is_boundary). Interior cells skip exact PIP at join time —
-mirroring the reference's envelope-prefilter-then-exact-test pattern
+The cell-cover index (polygon_cell_index_pdf) is the engine's broadcast
+side: (cell, poly_id, is_boundary). Interior cells skip exact PIP at join
+time — mirroring the reference's envelope-prefilter-then-exact-test pattern
 (/root/reference/src/coordinate_transform/tie_points.rs:182-195).
 """
 
@@ -14,35 +14,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from geotiff_spark.functions import pip as pipmod
-
-POINT = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
-POLYGONS_SCHEMA = StructType(
-    [
-        StructField("poly_id", StringType()),
-        StructField("name", StringType()),
-        StructField("ring", ArrayType(POINT)),
-        StructField("holes", ArrayType(ArrayType(POINT))),
-    ]
-)
-CELL_INDEX_SCHEMA = StructType(
-    [
-        StructField("cell", LongType()),
-        StructField("poly_id", StringType()),
-        StructField("is_boundary", BooleanType()),
-    ]
-)
 
 
 def _regular_polygon(cx, cy, radius, n_vertices, rotate=0.0, squash=1.0):
@@ -148,24 +121,9 @@ def synth_polygons() -> list[dict]:
     return polys
 
 
-def polygons_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        {
-            "poly_id": p["poly_id"],
-            "name": p["name"],
-            "ring": [{"x": float(x), "y": float(y)} for x, y in p["ring"]],
-            "holes": [
-                [{"x": float(x), "y": float(y)} for x, y in h] for h in p["holes"]
-            ],
-        }
-        for p in synth_polygons()
-    ]
-    return spark.createDataFrame(rows, schema=POLYGONS_SCHEMA)
-
-
 def polygon_cell_index_pdf(res: int) -> pd.DataFrame:
     """Driver-side cell cover for the synthetic polygon set (small dim —
-    broadcast side of the spatial join)."""
+    broadcast side of the spatial join, operators/spatial_join.py)."""
     rows = []
     for p in synth_polygons():
         cell_ids, boundary = pipmod.polygon_cell_cover(p["ring"], p["holes"], res)
@@ -173,6 +131,3 @@ def polygon_cell_index_pdf(res: int) -> pd.DataFrame:
             rows.append({"cell": int(c), "poly_id": p["poly_id"], "is_boundary": bool(b)})
     return pd.DataFrame(rows, columns=["cell", "poly_id", "is_boundary"])
 
-
-def polygon_cell_index(spark: SparkSession, res: int) -> DataFrame:
-    return spark.createDataFrame(polygon_cell_index_pdf(res), schema=CELL_INDEX_SCHEMA)

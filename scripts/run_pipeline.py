@@ -41,15 +41,6 @@ except ImportError:  # direct `python scripts/run_pipeline.py` from a checkout
     )
 
 
-def load_pages(spark, path: str, source: str | None = None):
-    """Iceberg table if the runtime is on the classpath, else parquet
-    (geotiff_spark.sources.pages.load_pages — probed by class lookup so a
-    misconfigured catalog never silently degrades)."""
-    from geotiff_spark.sources.pages import load_pages as _load
-
-    return _load(spark, path, source)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", default="/tmp/geotiff_spark_bench/pages_sf0.1")
@@ -68,6 +59,7 @@ def main() -> int:
     from geotiff_spark.plans.lineage import StageMetrics
     from geotiff_spark.plans.partitioning import adaptive_prefix_column
     from geotiff_spark.session import get_spark
+    from geotiff_spark.sources.pages import load_pages
 
     spark = get_spark("geotiff-pipeline")
     spark.sparkContext.setLogLevel("ERROR")

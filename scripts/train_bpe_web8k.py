@@ -1,7 +1,7 @@
 """Train the committed web8k byte-level BPE merges table.
 
 One-time artifact build (VERDICT r06 next-round #4): trains ≥8192
-merges with bpe_train_frame(fast=True, byte_level=True) over the full
+merges with bpe_train_frame(byte_level=True) over the full
 2M-page synthetic bench corpus (the same deterministic table bench.py
 uses), then writes geotiff_spark/data/bpe_merges_web8k.json. The
 artifact is committed so the bench and tests load a fixed table — the
@@ -43,7 +43,7 @@ def main() -> int:
     t0 = time.time()
     merges = bpe_train_frame(
         docs, n_merges=n_merges, min_count=1, max_vocab=max_vocab,
-        byte_level=True, fast=True,
+        byte_level=True,
     )
     dt = time.time() - t0
     out_dir = os.path.join(

@@ -55,35 +55,164 @@ def test_pages_deterministic_across_partitionings(spark):
     assert a == b
 
 
-def test_pip_join_matches_bruteforce(spark):
-    """Spark PIP join == driver-side brute force on the same pages."""
+def _pip_pairs(df) -> set:
+    return {(r.url, r.poly_id) for r in df.select("url", "poly_id").collect()}
+
+
+def _bruteforce_pip(rows) -> set:
+    """(url, poly_id) for every polygon containing a (url, lat, lon) row,
+    by the exact ray-cast over the whole polygon set (no cell index)."""
     from geotiff_spark.functions import pip as P
-    from geotiff_spark.operators.extract import with_cell, with_geotag
-    from geotiff_spark.operators.spatial_join import pip_join
-    from geotiff_spark.sources.pages import synth_pages
     from geotiff_spark.sources.polygons import synth_polygons
 
-    res = 7
-    pages = with_cell(with_geotag(synth_pages(spark, 3000, partitions=4)), res)
-    got = {
-        (r.url, r.poly_id)
-        for r in pip_join(spark, pages.filter(F.col("cell").isNotNull()), res)
-        .select("url", "poly_id")
-        .collect()
-    }
-
-    pts = pages.filter(F.col("lat").isNotNull()).select("url", "lat", "lon").collect()
-    urls = np.array([r.url for r in pts])
-    lat = np.array([r.lat for r in pts])
-    lon = np.array([r.lon for r in pts])
+    urls = np.array([r.url for r in rows])
+    lat = np.array([r.lat for r in rows], dtype=np.float64)
+    lon = np.array([r.lon for r in rows], dtype=np.float64)
     want = set()
     for p in synth_polygons():
         inside = P.points_in_polygon(
             lon, lat, np.asarray(p["ring"]), [np.asarray(h) for h in p["holes"]]
         )
-        for u in urls[inside]:
-            want.add((u, p["poly_id"]))
-    assert got == want
+        want.update((u, p["poly_id"]) for u in urls[inside])
+    return want
+
+
+def _assert_pip_paths_agree(spark, pages, res: int) -> set:
+    """pip_join on the geotag columns, fused_pages_pip on the html and the
+    brute force must give the same (url, poly_id) pairs."""
+    from geotiff_spark.operators.extract import with_geotag
+    from geotiff_spark.operators.spatial_join import fused_pages_pip, pip_join
+
+    geo = with_geotag(pages)
+    joined = _pip_pairs(pip_join(spark, geo, res))
+    fused = _pip_pairs(fused_pages_pip(spark, pages, res))
+    want = _bruteforce_pip(
+        geo.filter(F.col("lat").isNotNull()).select("url", "lat", "lon").collect()
+    )
+    assert joined == want
+    assert fused == want
+    return want
+
+
+def test_pip_join_matches_bruteforce(spark):
+    """Both PIP operators == driver-side brute force on synth pages."""
+    from geotiff_spark.sources.pages import synth_pages
+
+    want = _assert_pip_paths_agree(
+        spark, synth_pages(spark, 3000, partitions=4), 7)
+    assert len(want) > 100
+
+
+def test_pip_join_hot_boundary_cell(spark):
+    """Hot-cell drill: 95% of the points fall in ONE boundary cell of the
+    holed polygon, about half of them inside it; the rest spread over the
+    polygon's bounding box, reaching its interior cells."""
+    import pandas as pd
+
+    from geotiff_spark.functions import cells as C
+    from geotiff_spark.functions import pip as P
+    from geotiff_spark.sources.pages import HTML_PREFIX, HTML_SUFFIX, PAGES_SCHEMA
+    from geotiff_spark.sources.polygons import (
+        polygon_cell_index_pdf, synth_polygons,
+    )
+
+    res, pid = 9, "P_vienna_donut"
+    poly = next(p for p in synth_polygons() if p["poly_id"] == pid)
+    ring, holes = np.asarray(poly["ring"]), [np.asarray(h) for h in poly["holes"]]
+    index = polygon_cell_index_pdf(res)
+    index = index[index.poly_id == pid]
+    assert (~index.is_boundary).any()  # the background reaches interior cells
+    rng = np.random.default_rng(7)
+
+    def in_cell(cell, n):
+        lat0, lon0, lat1, lon1 = (float(v[0]) for v in C.cell_bounds([cell]))
+        m = 1e-3  # the geotag keeps 5 decimals: stay off the cell edges
+        return (rng.uniform(lat0 + m, lat1 - m, n),
+                rng.uniform(lon0 + m, lon1 - m, n))
+
+    def inside_frac(cell):
+        lat, lon = in_cell(cell, 400)
+        return P.points_in_polygon(lon, lat, ring, holes).mean()
+
+    hot = min(index[index.is_boundary].cell, key=lambda c: abs(inside_frac(c) - 0.5))
+    n_hot, n_bg = 1900, 100
+    lat_h, lon_h = in_cell(hot, n_hot)
+    lat = np.concatenate([lat_h, rng.uniform(ring[:, 1].min(), ring[:, 1].max(), n_bg)])
+    lon = np.concatenate([lon_h, rng.uniform(ring[:, 0].min(), ring[:, 0].max(), n_bg)])
+    text = [f"hot geo: {a:.5f},{o:.5f}" for a, o in zip(lat, lon)]
+    pages = spark.createDataFrame(pd.DataFrame({
+        "url": [f"https://hot.example/p/{i}" for i in range(len(text))],
+        "warc_ts": pd.Timestamp("2026-01-01"),
+        "html": [HTML_PREFIX + t.encode() + HTML_SUFFIX for t in text],
+        "text": text,
+        "lang": "en",
+    }), schema=PAGES_SCHEMA).repartition(3)
+
+    cells = C.latlon_to_cell(np.round(lat, 5), np.round(lon, 5), res)
+    assert (cells == hot).mean() >= 0.9
+    want = _assert_pip_paths_agree(spark, pages, res)
+    hits_in_hot = sum(
+        1 for u, p in want if p == pid and int(u.rsplit("/", 1)[1]) < n_hot
+    )
+    assert 0.2 * n_hot < hits_in_hot < 0.8 * n_hot  # the ray-cast decides
+
+
+def test_pip_join_skips_half_null_points(spark):
+    """A row with only lat or only lon NULL (or lon NaN) matches nothing
+    and raises nothing; every other row matches as in the brute force
+    and in fused_pages_pip."""
+    from geotiff_spark.operators.extract import with_geotag
+    from geotiff_spark.operators.spatial_join import fused_pages_pip, pip_join
+    from geotiff_spark.sources.pages import synth_pages
+
+    pages = synth_pages(spark, 2000, partitions=3)
+    h = F.abs(F.hash("url")) % 4
+    null = F.lit(None).cast("double")
+    geo = with_geotag(pages).withColumn("h", h)
+    holed = (
+        geo.withColumn("lat", F.when(h == 0, null).otherwise(F.col("lat")))
+        .withColumn("lon", F.when(h == 1, null)
+                    .when(h == 2, F.lit(float("nan")))
+                    .otherwise(F.col("lon")))
+    )
+    got = _pip_pairs(pip_join(spark, holed, 7))
+
+    rows = geo.filter(F.col("lat").isNotNull()).select(
+        "url", "lat", "lon", "h").collect()
+    kept = _bruteforce_pip([r for r in rows if r.h == 3])
+    dropped = _bruteforce_pip([r for r in rows if r.h != 3])
+    assert len(kept) > 50 and len(dropped) > 50  # both sides non-vacuous
+    assert got == kept
+    keep_urls = {r.url for r in rows if r.h == 3}
+    fused = _pip_pairs(fused_pages_pip(spark, pages, 7))
+    assert {(u, p) for u, p in fused if u in keep_urls} == kept
+
+
+@pytest.mark.parametrize("name", ["pip_join", "pip_counts"])
+def test_pip_queries_match_duckdb_oracle(spark, name):
+    """The registry's spatial joins hash-match their DuckDB even-odd
+    oracles at sf0.01 (the fixture directory alone, nothing else)."""
+    import os
+
+    import duckdb
+    from oracle_check import TABLES, value_hash
+
+    from geotiff_spark import oracle
+    from geotiff_spark.queries import q_pip_counts, q_pip_join
+
+    sf = os.path.join(os.path.dirname(SF), "sf0.01")
+    fn, sql = {
+        "pip_join": (q_pip_join, oracle.pip_join_sql()),
+        "pip_counts": (q_pip_counts, oracle.pip_counts_sql()),
+    }[name]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    want = con.execute(sql).df()
+    got = fn(spark, sf).toPandas()
+    assert len(want) > 0
+    assert sorted(got.columns) == sorted(want.columns)
+    assert value_hash(got) == value_hash(want)
 
 
 def test_minhash_lsh_recall_on_near_dups(spark):
@@ -217,19 +346,6 @@ def test_zonal_stats_flagship_deterministic(spark):
     a = [tuple(r) for r in flagship(spark, SF).collect()]
     b = [tuple(r) for r in flagship(spark, SF).collect()]
     assert a == b
-
-
-def test_pip_join_left_keeps_nongeotagged(spark):
-    from geotiff_spark.operators.extract import with_fused_geo
-    from geotiff_spark.operators.spatial_join import pip_join
-    from geotiff_spark.sources.pages import synth_pages
-
-    pages = with_fused_geo(synth_pages(spark, 800, partitions=2), 7,
-                           carry=("url",))
-    left = pip_join(spark, pages, 7, how="left")
-    assert left.count() >= 800  # every page kept (hits may fan out)
-    n_no_geo = pages.filter(F.col("cell").isNull()).count()
-    assert left.filter(F.col("poly_id").isNull()).count() >= n_no_geo
 
 
 def test_ivf_topk_recall(spark):

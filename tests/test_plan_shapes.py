@@ -57,9 +57,13 @@ def test_pip_join_broadcasts_polygon_index(spark):
     from geotiff_spark.pipeline import doc_pip_join
 
     plan = _plan(doc_pip_join(spark, SF, res=7))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-    # the big (pages/documents) side must not be exchanged before the join
-    assert "SortMergeJoin" not in plan, plan
+    # the polygon index rides an sc.broadcast dict into ONE map-side Python
+    # stage: no join node, and the big (documents) side is never
+    # hash-partitioned (the scan's parallelism-restoring round-robin stays)
+    assert "hashpartitioning" not in plan, plan
+    assert "Join" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_filter_project_pushdown_reaches_scan(spark):
