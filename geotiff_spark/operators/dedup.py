@@ -877,15 +877,15 @@ def exact_substring_dedup(
 
 # ---- Bloom-filter incremental dedup -----------------------------------------
 #
-# The 100 TB incremental-crawl path: dedup TODAY's batch against the
-# WHOLE historical corpus without ever joining against it. The filter's
-# bit-set is bounded by k*m bits no matter how large the history is, so
-# the history-side scan aggregates to a constant-size artifact (built
-# once, reused every batch) and the batch side tests membership with k
-# broadcast joins — zero exchange on the batch data. False positives
-# (over-dropping) are the documented Bloom trade; false negatives are
-# impossible. Positions use md5 (available verbatim in DuckDB), so the
-# driver oracle simulates the identical filter bit-for-bit.
+# Dedup a new batch against the whole history without joining against
+# it. The history collapses to a partitioned Bloom filter, one m-bit
+# array per hash seed, packed into uint64 words and built in one
+# bounded aggregation (bloom_pack). The batch tests membership in one
+# vectorized Arrow pass over JVM-computed positions against the
+# broadcast bitmaps (bloom_membership), so it never shuffles to be
+# filtered. False positives (over-dropping) are the Bloom trade; false
+# negatives are impossible. Positions use md5 (available verbatim in
+# DuckDB), so the oracle replays the identical filter bit-for-bit.
 
 
 def bloom_positions(col: Column | str, seed: int, m: int) -> Column:
@@ -896,112 +896,47 @@ def bloom_positions(col: Column | str, seed: int, m: int) -> Column:
     return (F.conv(hex8, 16, 10).cast("long") % m).alias(f"pos_{seed}")
 
 
-def bloom_bit_set(df: DataFrame, value_col: str = "text",
-                  m: int = 4096, k: int = 4,
-                  materialize: bool = True,
-                  distinct: bool = True) -> DataFrame:
-    """(seed, pos) set bits of a partitioned Bloom filter over
-    df[value_col] — one bit-array of m bits per seed (Kirsch-
-    Mitzenmacher partitioned variant; keeps the SQL oracle a plain
-    (seed, pos) equi-join). Scale: the output domain is bounded by k*m
-    rows regardless of corpus size, and distinct() partial-aggregates
-    map-side, so the exchange carries at most k*m rows at 100 TB.
+class PackedBloom(dict):
+    """bloom_pack's return type: a dict of seed -> packed uint64 bitmap
+    that is additionally weakref-able, so the broadcast cache below can
+    auto-release a retired filter's broadcasts the moment the filter
+    object dies (ADVICE r06: the strong-ref cache leaked up to
+    ~128 MB/seed per build-probe cycle and defeated ContextCleaner).
 
-    `materialize` (default True) localCheckpoints the bounded result so
-    the history is scanned ONCE — bloom_membership broadcasts the bit
-    set k times, and without materialization each broadcast would
-    re-run the full history scan (the build-once/probe-many contract is
-    the operator's whole point; production pipelines persist the bit
-    set to a table between batches)."""
+    Lifetime contract: the broadcasts live exactly as long as this
+    object, so a probe plan built from it must not outlive it —
+    bloom_membership pins the filter on the DataFrame wrapper it
+    returns (`_bloom_packed_owner`), and any caller that re-wraps that
+    frame (groupBy etc.) must carry the pin over to the frame it hands
+    out, as bloom_incremental_frame does."""
+
+
+def bloom_pack(df: DataFrame, value_col: str = "text",
+               m: int = 4096, k: int = 4) -> PackedBloom:
+    """Build the filter over the non-NULL values of df[value_col]: k
+    packed uint64 bitmaps of m bits (seed -> m/64 + 1 words). The k
+    positions of each value are ORed into their words by one word-keyed
+    bit_or, which partial-aggregates map-side, so the exchange and the
+    driver collect carry at most k * m/64 rows whatever the history
+    size. bit_or is idempotent, so duplicate values need no distinct."""
     pos = F.array(*[
         F.struct(F.lit(s).alias("seed"),
                  bloom_positions(value_col, s, m).alias("pos"))
         for s in range(1, k + 1)
     ])
-    bits = (
+    words = (
         df.filter(F.col(value_col).isNotNull())
         .select(F.explode(pos).alias("b"))
         .select("b.seed", "b.pos")
-    )
-    # distinct=True is required for the (seed, pos) JOIN probe
-    # (bloom_membership multiplies matches); bloom_pack's bit_or is
-    # idempotent, so the packed path passes distinct=False and skips a
-    # corpus-sized exchange — the word groupBy partial-aggregates
-    # map-side and its exchange carries at most k*m/64 rows.
-    if distinct:
-        bits = bits.distinct()
-    return bits.localCheckpoint(eager=True) if materialize else bits
-
-
-def bloom_membership(df: DataFrame, bits: DataFrame, value_col: str = "text",
-                     m: int = 4096, k: int = 4) -> DataFrame:
-    """Adds `bloom_hit` (1 = possibly-seen, 0 = definitely-new) to df by
-    probing all k bit positions with k BROADCAST joins against the
-    bounded `bits` set — the probe side never shuffles. `bits` must come
-    from :func:`bloom_bit_set` with the same (m, k)."""
-    clash = [c for c in df.columns
-             if c.startswith("_bp") or c.startswith("_bh")]
-    if clash:
-        raise ValueError(
-            f"bloom_membership uses helper columns _bp1.._bp{k} / "
-            f"_bh1.._bh{k}; input already has {clash} — rename them first"
-        )
-    out = df
-    for s in range(1, k + 1):
-        side = F.broadcast(
-            bits.filter(F.col("seed") == s)
-            .select(F.col("pos").alias(f"_bp{s}"),
-                    F.lit(1).alias(f"_bh{s}"))
-        )
-        out = out.withColumn(f"_bp{s}", bloom_positions(value_col, s, m))
-        out = out.join(side, f"_bp{s}", "left")
-    hit = F.lit(True)
-    for s in range(1, k + 1):
-        hit = hit & F.col(f"_bh{s}").isNotNull()
-    out = out.withColumn("bloom_hit", hit.cast("long"))
-    return out.drop(*[c for s in range(1, k + 1)
-                      for c in (f"_bp{s}", f"_bh{s}")])
-
-
-def bloom_word_table(bits: DataFrame) -> DataFrame:
-    """(seed, w, mask): the word-packed form of a (seed, pos) bit set,
-    still DISTRIBUTED — the m-unbounded filter artifact. The word-keyed
-    bit_or partial-aggregates map-side, so the exchange is bounded by
-    k * m/64 rows regardless of history size, and unlike the collected
-    dict the table itself never has to fit one machine: persist it
-    (bucketed by (seed, w)) between batches and probe with
-    :func:`bloom_membership_words`.
-
-    m-sizing rule (why this tier exists): optimal m ≈ n·k/ln2 for FP
-    rate 2^-k. k=4: n=10^8 history chunks → m ≈ 72 MB total — single
-    broadcast (bloom_pack). n=10^10 → 7.2 GB — segmented broadcasts
-    (bloom_membership_packed n_segments>1; caps per-variable size, but
-    every executor still holds all of m). n=10^12 (the 100 TB corpus)
-    → 721 GB — nothing broadcasts; THIS table + the word join is the
-    only shape that survives, at the price of shuffling the probe
-    side's (key, seed, w) triples (never its text)."""
-    return (
-        bits.groupBy(
-            "seed", (F.col("pos") / 64).cast("long").alias("w")
-        )
+        .groupBy("seed", (F.col("pos") / 64).cast("long").alias("w"))
         .agg(
             F.expr(
                 "bit_or(shiftleft(CAST(1 AS BIGINT), "
                 "CAST(pos % 64 AS INT)))"
             ).alias("mask")
         )
+        .toPandas()
     )
-
-
-def bloom_pack(bits: DataFrame, m: int, k: int) -> dict[int, np.ndarray]:
-    """Collapse a (seed, pos) bit-set into k packed uint64 numpy arrays
-    (m/64 words each) — the LARGE-m artifact bloom_membership_packed
-    broadcasts. The word-keyed bit_or aggregation partial-aggregates
-    map-side, so the exchange and the driver collect are bounded by
-    k * m/64 rows (m = 2^26 → ≤ 4M rows ≈ 100 MB) regardless of
-    history size. For m beyond driver/broadcast reach, keep the words
-    distributed instead: :func:`bloom_word_table`."""
-    words = bloom_word_table(bits).toPandas()
     packed = PackedBloom(
         (s, np.zeros(m // 64 + 1, dtype=np.uint64))
         for s in range(1, k + 1)
@@ -1014,178 +949,59 @@ def bloom_pack(bits: DataFrame, m: int, k: int) -> dict[int, np.ndarray]:
     return packed
 
 
-def bloom_membership_words(
-    df: DataFrame,
-    words: DataFrame,
-    key_cols: list[str],
-    value_col: str = "text",
-    m: int = 4096,
-    k: int = 4,
-) -> DataFrame:
-    """m-unbounded probe: test membership against a DISTRIBUTED
-    (seed, w, mask) word table (:func:`bloom_word_table`) instead of a
-    broadcast bitmap. Returns the DECISION PLANE — (key_cols...,
-    bloom_hit) — rather than widening df, so the only data that ever
-    shuffles is (key, seed, w, bit) integer quadruples: k rows per
-    probe value through one equi-join on (seed, w) and one per-key
-    aggregation. Identical bloom_hit semantics to bloom_membership /
-    bloom_membership_packed (pytest-pinned); key_cols must uniquely
-    identify probe rows."""
-    pos = F.array(*[
-        F.struct(F.lit(s).alias("seed"),
-                 bloom_positions(value_col, s, m).alias("pos"))
-        for s in range(1, k + 1)
-    ])
-    exploded = (
-        df.select(*key_cols, F.explode(pos).alias("b"))
-        .select(
-            *key_cols,
-            F.col("b.seed").alias("seed"),
-            (F.col("b.pos") / 64).cast("long").alias("w"),
-            (F.col("b.pos") % 64).cast("int").alias("bit"),
-        )
-    )
-    j = exploded.join(words, ["seed", "w"], "left")
-    # expr form: the python shiftrightunsigned() helper only accepts a
-    # literal shift amount, not a per-row Column
-    bit_hit = F.when(
-        F.col("mask").isNotNull(),
-        F.expr("shiftrightunsigned(mask, bit) & 1").cast("long"),
-    ).otherwise(F.lit(0))
-    return (
-        j.select(*key_cols, bit_hit.alias("bit_hit"))
-        .groupBy(*key_cols)
-        .agg(F.min("bit_hit").alias("bloom_hit"))
-    )
-
-
-class PackedBloom(dict):
-    """bloom_pack's return type: a plain dict of seed -> packed uint64
-    bitmap that is additionally weakref-able, so the broadcast cache
-    below can auto-release a retired filter's broadcasts the moment the
-    filter object dies (ADVICE r06: the strong-ref cache leaked up to
-    ~128 MB/seed per build-probe cycle and defeated ContextCleaner).
-
-    Lifetime contract: the broadcasts live exactly as long as this
-    object, so a probe plan built from it must not outlive it —
-    bloom_membership_packed pins the filter on the DataFrame wrapper it
-    returns (`_bloom_packed_owner`), and any caller that re-wraps that
-    frame (groupBy etc.) must carry the pin over to the frame it hands
-    out, as bloom_incremental_frame does."""
-
-
-# One broadcast (set) per packed filter, not per probe call: the
+# One broadcast per seed per packed filter, not per probe call: the
 # intended build-once/probe-every-batch loop would otherwise accumulate
 # a fresh (up to ~128 MB/seed) broadcast on driver and executors per
-# batch (ADVICE r05). The cache key is guarded by a weakref to the
-# packed filter with a weakref.finalize that pops the entry and
-# destroys the broadcasts when the filter is garbage-collected, so
-# retired filters release driver+executor memory without any manual
-# bloom_broadcast_destroy call (ADVICE r06). Non-weakref-able plain
-# dicts (hand-built test filters) fall back to the old strong-ref
-# behavior and explicit destroy.
-_PACKED_BCASTS: dict[tuple[int, int], tuple[object, list]] = {}
+# batch (ADVICE r05). The entry is guarded by a weakref to the filter,
+# and a weakref.finalize pops it and destroys the broadcasts when the
+# filter is garbage-collected, so a retired filter releases driver and
+# executor memory with no manual call (ADVICE r06).
+_PACKED_BCASTS: dict[int, tuple[weakref.ref, list]] = {}
 
 
-def _destroy_cached_bcasts(cache_key: tuple[int, int]) -> None:
+def _destroy_cached_bcasts(cache_key: int) -> None:
     entry = _PACKED_BCASTS.pop(cache_key, None)
     if entry is None:
         return
-    for seg_list in entry[1]:
-        for b in seg_list:
-            try:
-                b.destroy()
-            except Exception:
-                pass  # SparkContext already stopped / shutdown race
+    for b in entry[1]:
+        try:
+            b.destroy()
+        except Exception:
+            pass  # SparkContext already stopped / shutdown race
 
 
-def _packed_broadcasts(sc, packed: dict[int, np.ndarray],
-                       n_segments: int) -> list:
-    """One broadcast VARIABLE per (seed, word-range segment) — at
-    n_segments=1 this is the classic whole-bitmap-per-seed shipment;
-    at >1 each variable stays under Spark's per-broadcast limits even
-    when a seed's bitmap alone would not (the executors still hold all
-    of m between them — once m itself outgrows executor memory, switch
-    to bloom_membership_words). Returns [seed-1][segment] -> Broadcast."""
-    cache_key = (id(packed), n_segments)
+def _packed_broadcasts(sc, packed: PackedBloom) -> list:
+    """The filter's broadcasts, one per seed in seed order."""
+    cache_key = id(packed)
     entry = _PACKED_BCASTS.get(cache_key)
-    if entry is not None:
-        held = entry[0]() if isinstance(entry[0], weakref.ref) else entry[0]
-        if held is packed:
-            return entry[1]
-        _PACKED_BCASTS.pop(cache_key, None)
-    seeds = sorted(packed)
-    n_words = len(packed[seeds[0]])
-    seg_len = -(-n_words // n_segments)  # ceil
-    bcasts = [
-        [sc.broadcast(packed[s][i * seg_len:(i + 1) * seg_len])
-         for i in range(n_segments)]
-        for s in seeds
-    ]
-    try:
-        held = weakref.ref(packed)
-        weakref.finalize(packed, _destroy_cached_bcasts, cache_key)
-    except TypeError:
-        held = packed  # plain dict: retire with bloom_broadcast_destroy
-    _PACKED_BCASTS[cache_key] = (held, bcasts)
+    if entry is not None and entry[0]() is packed:
+        return entry[1]
+    bcasts = [sc.broadcast(packed[s]) for s in sorted(packed)]
+    weakref.finalize(packed, _destroy_cached_bcasts, cache_key)
+    _PACKED_BCASTS[cache_key] = (weakref.ref(packed), bcasts)
     return bcasts
 
 
-def bloom_broadcast_destroy(packed: dict[int, np.ndarray]) -> None:
-    """Eagerly release every cached broadcast for a retired filter
-    (frees the bitmap copies on driver and executors, all segment
-    counts). For PackedBloom filters GC does this automatically when
-    the filter dies; this is the explicit hurry-up (and the only path
-    for hand-built plain-dict filters)."""
-    for key in [k for k in _PACKED_BCASTS if k[0] == id(packed)]:
-        held = _PACKED_BCASTS[key][0]
-        held = held() if isinstance(held, weakref.ref) else held
-        if held is packed:
-            _destroy_cached_bcasts(key)
-
-
-def bloom_membership_packed(df: DataFrame, packed: dict[int, np.ndarray],
-                            value_col: str = "text",
-                            m: int = 4096, k: int = 4,
-                            n_segments: int = 1) -> DataFrame:
-    """Large-m probe path: identical `bloom_hit` semantics to
-    :func:`bloom_membership` (pytest pins equality), but the filter
-    travels as packed uint64 bitmaps in broadcast variables
-    (m = 2^30 → 128 MB/seed) instead of (seed, pos) join rows — the
-    join form's hashed relation stops being broadcastable around
-    ~10^7 set bits, which is exactly when a Bloom filter starts paying
-    for itself. Positions stay JVM-computed (md5 codegen); the bit test
-    is one vectorized Arrow batch pass, no shuffle anywhere.
-
-    n_segments > 1 shards each seed's bitmap into word-range segments,
-    one broadcast variable each (pytest pins segmented ≡ whole-bitmap
-    bloom_hit) — the middle tier of the m-sizing rule on
-    :func:`bloom_word_table`: it lifts the per-variable broadcast cap,
-    not the per-executor memory bound. Broadcasts are memoized per
-    (packed, n_segments); call :func:`bloom_broadcast_destroy` when the
-    filter is retired."""
-    sc = df.sparkSession.sparkContext
-    bcasts = _packed_broadcasts(sc, packed, n_segments)
-    n_words = len(packed[sorted(packed)[0]])
-    seg_len = -(-n_words // n_segments)
+def bloom_membership(df: DataFrame, packed: PackedBloom,
+                     value_col: str = "text",
+                     m: int = 4096, k: int = 4) -> DataFrame:
+    """Adds `bloom_hit` (1 = possibly-seen, 0 = definitely-new; a NULL
+    value is 0) to df by testing its k positions against the filter from
+    :func:`bloom_pack` with the same (m, k). Positions are JVM-computed
+    (md5 codegen); the bit test is one vectorized Arrow pass against
+    the broadcast bitmaps, with no shuffle anywhere."""
+    bcasts = _packed_broadcasts(df.sparkSession.sparkContext, packed)
 
     @pandas_udf("long")
     def _hit(*pos_series: pd.Series) -> pd.Series:
         out = np.ones(len(pos_series[0]), dtype=bool)
-        for si, ps in enumerate(pos_series):
-            p = ps.to_numpy(dtype=np.int64)
-            w = p >> 6
+        for b, ps in zip(bcasts, pos_series):
+            # a NULL value has NULL positions: no hit, and fill before
+            # the int64 cast (NaN would become an out-of-range index)
+            out &= ps.notna().to_numpy()
+            p = ps.fillna(0).to_numpy(dtype=np.int64)
             bit = p.astype(np.uint64) & np.uint64(63)
-            if n_segments == 1:
-                masks = bcasts[si][0].value[w]
-            else:
-                seg = w // seg_len
-                idx = w % seg_len
-                masks = np.empty(len(p), dtype=np.uint64)
-                for g in np.unique(seg):
-                    sel = seg == g
-                    masks[sel] = bcasts[si][g].value[idx[sel]]
-            out &= (masks >> bit) & np.uint64(1) == 1
+            out &= (b.value[p >> 6] >> bit) & np.uint64(1) == 1
         return pd.Series(out.astype("int64"))
 
     pos_cols = [bloom_positions(value_col, s, m) for s in range(1, k + 1)]

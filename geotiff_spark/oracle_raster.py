@@ -24,6 +24,7 @@ floor() at a pixel boundary, which for 1000 m pixels needs a point within
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -51,8 +52,20 @@ def _write_parquet(path: str, cols: dict[str, np.ndarray]) -> None:
     pq.write_table(pa.table(cols), path)
 
 
+def _corpus_digest(paths: list[str]) -> str:
+    """Digest of the corpus files' basenames and bytes: the pixel-table
+    cache key, so a changed fixture never serves a stale oracle."""
+    h = hashlib.sha256()
+    for p in paths:
+        with open(p, "rb") as fh:
+            data = fh.read()
+        h.update(os.path.basename(p).encode() + b"\0")
+        h.update(hashlib.sha256(data).digest())
+    return h.hexdigest()[:16]
+
+
 def pixel_tables() -> tuple[str, str]:
-    """Materialize (once per boot) and return paths of:
+    """Materialize (once per corpus content) and return paths of:
     - the flagship austrian raster pixel table (ix, iy, value)
     - the band-0 pixel table of every reference fixture
       (raster_id, ix, iy, value)
@@ -61,16 +74,17 @@ def pixel_tables() -> tuple[str, str]:
 
     from geotiff_spark.operators.sample import load_raster_records
 
-    austrian_path = f"{ORACLE_DIR}/austrian_pixels.parquet"
-    all_path = f"{ORACLE_DIR}/fixture_pixels_band0.parquet"
-    marker = f"{ORACLE_DIR}/_DONE"
-    if os.path.exists(marker):
-        return austrian_path, all_path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-
     paths = sorted(
         p for d in CORPUS_DIRS for p in glob.glob(f"{d}/*.tif")
     )
+    out_dir = f"{ORACLE_DIR}/pixels_{_corpus_digest(paths)}"
+    austrian_path = f"{out_dir}/austrian_pixels.parquet"
+    all_path = f"{out_dir}/fixture_pixels_band0.parquet"
+    marker = f"{out_dir}/_DONE"
+    if os.path.exists(marker):
+        return austrian_path, all_path
+    os.makedirs(out_dir, exist_ok=True)
+
     records = load_raster_records(paths)
 
     rids, ixs, iys, vals = [], [], [], []

@@ -879,12 +879,12 @@ def q_bloom_chunk_dedup(spark, sf_dir):
     filter over their 10-token chunks (k=4 md5-derived positions into
     m=4096-bit arrays); the new batch (doc_id % 5 == 0) probes it and
     reports, per doc, how many of its chunks were probably-seen. Scale
-    shape: the filter bit-set is bounded by k*m rows no matter how
-    large the history (built once per day, reused every batch), the
-    probe is k broadcast joins with zero exchange on the batch side,
-    and the only batch shuffle is the per-doc count aggregation. The
-    `n_seen_exact` column is gate instrumentation pinning the false-
-    positive semantics (4096-bit arrays on ~1.9k historical chunks run
+    shape: the history collapses to k packed m-bit arrays no matter how
+    large it is (built once, reused every batch), the probe is one
+    vectorized pass against their broadcast with zero exchange on the
+    batch side, and the only batch shuffle is the per-doc count
+    aggregation. The `n_seen_exact` column is gate instrumentation
+    pinning the false-positive semantics (4096-bit arrays on ~1.9k historical chunks run
     at ~31% per-seed fill, so a few deterministic false positives are
     EXPECTED and the oracle reproduces them bit-for-bit); the
     production path returns the Bloom counts alone — broadcasting the
@@ -893,13 +893,13 @@ def q_bloom_chunk_dedup(spark, sf_dir):
     impossible."""
     _BM, _BK = 4096, 4
     docs = _t(spark, sf_dir, "documents")
-    hist_chunks = dedup.bloom_bit_set(
+    packed = dedup.bloom_pack(
         chunks_frame(docs.filter(F.col("doc_id") % 5 != 0)),
         value_col="chunk", m=_BM, k=_BK,
     )
     new_docs = docs.filter(F.col("doc_id") % 5 == 0)
     probed = dedup.bloom_membership(
-        chunks_frame(new_docs), hist_chunks, value_col="chunk",
+        chunks_frame(new_docs), packed, value_col="chunk",
         m=_BM, k=_BK,
     )
     hist_digests = (
@@ -919,12 +919,15 @@ def q_bloom_chunk_dedup(spark, sf_dir):
             ).alias("n_seen_exact"),
         )
     )
-    return new_docs.select("doc_id").join(per_doc, "doc_id", "left").select(
+    out = new_docs.select("doc_id").join(per_doc, "doc_id", "left").select(
         "doc_id",
         F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
         F.coalesce("n_maybe_seen", F.lit(0)).alias("n_maybe_seen"),
         F.coalesce("n_seen_exact", F.lit(0)).alias("n_seen_exact"),
     )
+    # keep the filter (and so its broadcasts) alive with the plan
+    out._bloom_packed_owner = packed
+    return out
 
 
 SQL_BLOOM_CHUNK_DEDUP = r"""
@@ -982,37 +985,21 @@ WHERE doc.doc_id % 5 = 0
 
 
 def bloom_incremental_frame(docs, m: int = 1 << 22, k: int = 4,
-                            hist_mod: int = 5, n_segments: int = 1):
+                            hist_mod: int = 5):
     """Production-shaped incremental chunk dedup over any (doc_id,
     text) frame — the engine core of :func:`q_bloom_chunk_dedup` at
     LARGE m, benched over the 2M-row synthetic pages corpus
-    (bench.py). History docs (doc_id % hist_mod != 0) build the
-    bounded (seed,pos) bit set once; it is collapsed to k packed
-    uint64 bitmaps (driver collect bounded by k*m/64 words — m=2^22 →
-    2 MB total) and broadcast to a single vectorized Arrow probe over
-    the new batch's chunks, so the batch side never shuffles to be
-    filtered and the history is never joined against. Returns per new
-    doc: (doc_id, n_chunks, n_maybe_seen)."""
+    (bench.py). History docs (doc_id % hist_mod != 0) build the filter
+    once: k packed uint64 bitmaps (driver collect bounded by k*m/64
+    words — m=2^22 → 2 MB total), broadcast to a single vectorized
+    Arrow probe over the new batch's chunks, so the batch side never
+    shuffles to be filtered and the history is never joined against.
+    Returns per new doc: (doc_id, n_chunks, n_maybe_seen)."""
     hist = docs.filter(F.col("doc_id") % hist_mod != 0)
     new_docs = docs.filter(F.col("doc_id") % hist_mod == 0)
-    # materialize=False: bloom_pack's word-aggregation is the ONLY
-    # consumer here, so the bit set needs no build-once cache — and at
-    # large m the localCheckpoint is actively dangerous: it stores up to
-    # k*m ≈ 16.7M (seed,pos) rows DESERIALIZED, and MemoryStore's
-    # SizeEstimator object-graph walks under 32 concurrent putIterator
-    # threads are bimodal (measured: the identical job lands at ~16 s or
-    # >240 s depending on put/eviction timing — jstack shows every task
-    # spinning in SizeEstimator.visitArray/IdentityHashMap). This was
-    # the real shape of round 5's "79 s" official bloom record.
-    # distinct=False as well: bit_or is idempotent, so the pack path
-    # needs no corpus-sized distinct exchange either.
-    bits = dedup.bloom_bit_set(
-        chunks_frame(hist), value_col="chunk", m=m, k=k,
-        materialize=False, distinct=False)
-    packed = dedup.bloom_pack(bits, m=m, k=k)
-    probed = dedup.bloom_membership_packed(
-        chunks_frame(new_docs), packed, value_col="chunk", m=m, k=k,
-        n_segments=n_segments)
+    packed = dedup.bloom_pack(chunks_frame(hist), value_col="chunk", m=m, k=k)
+    probed = dedup.bloom_membership(
+        chunks_frame(new_docs), packed, value_col="chunk", m=m, k=k)
     out = (
         probed.groupBy("doc_id")
         .agg(

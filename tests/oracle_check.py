@@ -8,11 +8,14 @@ Usage: python tests/oracle_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -44,11 +47,11 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entrymod
     from geotiff_spark.session import get_spark
 
-    spark = get_spark("oracle-check", master="local[8]")
+    spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -40,10 +40,11 @@ def test_bloom_no_false_negatives_and_fp_is_possible(spark):
     hist = spark.createDataFrame([(v,) for v in hist_vals], ["text"])
     new = spark.createDataFrame([(v,) for v in new_vals], ["text"])
     m, k = 64, 2  # tiny on purpose: ~64% per-seed fill
-    bits = dedup.bloom_bit_set(hist, "text", m=m, k=k)
+    packed = dedup.bloom_pack(hist, "text", m=m, k=k)
     out = {
         r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership(new, bits, "text", m=m, k=k).collect()
+        for r in dedup.bloom_membership(new, packed, "text", m=m, k=k)
+        .collect()
     }
     assert all(out[v] == 1 for v in hist_vals[:8]), "false negative!"
     unseen_hits = sum(out[f"unseen-{i}"] for i in range(256))
@@ -57,9 +58,22 @@ def test_bloom_bit_set_is_bounded_and_null_safe(spark):
     df = spark.createDataFrame(
         [("a",), ("b",), ("a",), (None,)], ["text"]
     )
-    bits = dedup.bloom_bit_set(df, "text", m=16, k=3).collect()
-    assert len(bits) <= 2 * 3  # distinct values × seeds, minus collisions
-    assert all(0 <= r["pos"] < 16 and 1 <= r["seed"] <= 3 for r in bits)
+    m, k = 16, 3
+    packed = dedup.bloom_pack(df, "text", m=m, k=k)
+    assert sorted(packed) == [1, 2, 3]
+    bits = [
+        (s, w * 64 + b)
+        for s, words in packed.items()
+        for w, word in enumerate(words.tolist())
+        for b in range(64) if word >> b & 1
+    ]
+    # distinct values × seeds, minus collisions; every bit inside m
+    assert len(bits) <= 2 * k
+    assert all(pos < m for _, pos in bits)
+    nulls = spark.createDataFrame([(None,), (None,)], "text string")
+    assert not any(
+        words.any() for words in dedup.bloom_pack(nulls, "text", m, k).values()
+    )
 
 
 def test_pack_sequences_greedy_semantics(spark):
@@ -191,51 +205,50 @@ def test_url_canonical_dedup_rules(spark, tmp_path):
     assert len(got) == 3
 
 
-def test_bloom_packed_probe_equals_join_probe(spark):
-    """bloom_membership_packed (numpy-bitmap broadcast, the large-m
-    production path) must produce bit-identical `bloom_hit` to
-    bloom_membership (the (seed,pos) join form the SQL oracle mirrors)
-    on the same history — including false positives, which depend on
-    every set bit landing in the right word/offset of the packed
-    array."""
+def test_bloom_probe_equals_python_filter(spark):
+    """bloom_membership must agree on every value with a filter built in
+    pure Python from the reference positions — including the false
+    positives, which depend on every set bit landing in the right
+    word/offset of the packed array."""
     hist_vals = [f"doc-{i}" for i in range(64)]
     new_vals = [f"doc-{i}" for i in range(16)] + \
         [f"unseen-{i}" for i in range(256)]
     hist = spark.createDataFrame([(v,) for v in hist_vals], ["text"])
     new = spark.createDataFrame([(v,) for v in new_vals], ["text"])
     m, k = 128, 3  # tiny m so false positives exercise the bit test
-    bits = dedup.bloom_bit_set(hist, "text", m=m, k=k)
-    via_join = {
-        r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership(new, bits, "text", m=m, k=k).collect()
+    bits = {(s, _bloom_pos_py(v, s, m))
+            for v in hist_vals for s in range(1, k + 1)}
+    expected = {
+        v: int(all((s, _bloom_pos_py(v, s, m)) in bits
+                   for s in range(1, k + 1)))
+        for v in new_vals
     }
-    packed = dedup.bloom_pack(bits, m=m, k=k)
-    via_packed = {
+    packed = dedup.bloom_pack(hist, "text", m=m, k=k)
+    got = {
         r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership_packed(
-            new, packed, "text", m=m, k=k).collect()
+        for r in dedup.bloom_membership(new, packed, "text", m=m, k=k)
+        .collect()
     }
-    assert via_packed == via_join
-    assert sum(via_join[v] for v in hist_vals[:16]) == 16  # no false negs
-    assert 0 < sum(via_join[f"unseen-{i}"] for i in range(256)) < 256
-    # segmented broadcasts (the 100-TB-m middle tier: one variable per
-    # word-range shard) must be bit-identical too — n_segments=3 does
-    # not divide the 3-word bitmap evenly, exercising the ragged tail
-    via_seg = {
+    assert got == expected
+    assert sum(got[v] for v in hist_vals[:16]) == 16  # no false negs
+    assert 0 < sum(got[f"unseen-{i}"] for i in range(256)) < 256
+
+
+def test_bloom_null_values_never_hit(spark):
+    """NULL rows set no bit in the history and probe as bloom_hit = 0
+    (their positions are NULL; the probe must not index with them)."""
+    m, k = 4096, 4
+    hist = spark.createDataFrame([("a",), (None,)], "text string")
+    new = spark.createDataFrame([("a",), ("zz",), (None,)], "text string")
+    assert not all(_bloom_pos_py("zz", s, m) == _bloom_pos_py("a", s, m)
+                   for s in range(1, k + 1))
+    packed = dedup.bloom_pack(hist, "text", m=m, k=k)
+    got = {
         r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership_packed(
-            new, packed, "text", m=m, k=k, n_segments=3).collect()
+        for r in dedup.bloom_membership(new, packed, "text", m=m, k=k)
+        .collect()
     }
-    assert via_seg == via_join
-    # and the m-UNBOUNDED tier: probe by equi-join against the
-    # distributed (seed, w, mask) word table — decision-plane output
-    words = dedup.bloom_word_table(bits)
-    via_words = {
-        r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership_words(
-            new, words, ["text"], "text", m=m, k=k).collect()
-    }
-    assert via_words == via_join
+    assert got == {"a": 1, "zz": 0, None: 0}
 
 
 def test_bloom_packed_broadcasts_auto_release(spark):
@@ -248,13 +261,12 @@ def test_bloom_packed_broadcasts_auto_release(spark):
 
     hist = spark.createDataFrame([(f"h{i}",) for i in range(32)], ["text"])
     new = spark.createDataFrame([(f"h{i}",) for i in range(8)], ["text"])
-    bits = dedup.bloom_bit_set(hist, "text", m=256, k=2)
-    packed = dedup.bloom_pack(bits, m=256, k=2)
+    packed = dedup.bloom_pack(hist, "text", m=256, k=2)
     assert isinstance(packed, dedup.PackedBloom)
-    key = (id(packed), 1)
-    probe = dedup.bloom_membership_packed(new, packed, "text", m=256, k=2)
+    key = id(packed)
+    probe = dedup.bloom_membership(new, packed, "text", m=256, k=2)
     assert key in dedup._PACKED_BCASTS
-    bcast = dedup._PACKED_BCASTS[key][1][0][0]
+    bcast = dedup._PACKED_BCASTS[key][1][0]
     # the probe frame pins the filter: dropping the caller's own ref
     # must NOT kill the broadcasts while the plan can still run
     del packed
@@ -279,34 +291,11 @@ def test_bloom_packed_probe_plan_has_no_shuffle(spark):
         F.concat(F.lit("h"), F.col("id")).alias("text"))
     new = spark.range(50).select(
         F.concat(F.lit("n"), F.col("id")).alias("text"))
-    bits = dedup.bloom_bit_set(hist, "text", m=256, k=4)
-    packed = dedup.bloom_pack(bits, m=256, k=4)
-    out = dedup.bloom_membership_packed(new, packed, "text", m=256, k=4)
+    packed = dedup.bloom_pack(hist, "text", m=256, k=4)
+    out = dedup.bloom_membership(new, packed, "text", m=256, k=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" in plan, plan
-
-
-def test_bloom_probe_plan_has_no_probe_side_exchange(spark):
-    """The k membership joins must all be broadcast: no Exchange may
-    appear on the probe side before the joins (the whole point of the
-    Bloom path is that the batch never shuffles to be filtered)."""
-    hist = spark.range(100).select(
-        F.concat(F.lit("h"), F.col("id")).alias("text"))
-    new = spark.range(100).select(
-        F.concat(F.lit("n"), F.col("id")).alias("text"))
-    bits = dedup.bloom_bit_set(hist, "text", m=256, k=4)
-    out = dedup.bloom_membership(new, bits, "text", m=256, k=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 4, plan
-    # the only exchanges allowed are broadcast exchanges + the bounded
-    # bit-set distinct; no shuffle of the probe relation itself
-    import re
-    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    for args in shuffles:
-        assert "seed" in args or "pos" in args, (
-            f"unexpected probe-side shuffle on ({args}):\n{plan}"
-        )
 
 
 def test_repeated_ngram_mine_catches_straddling_duplicates(spark):

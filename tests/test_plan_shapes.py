@@ -402,44 +402,6 @@ def test_repeated_ngrams_partial_agg_and_take_ordered(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_bloom_sharded_probe_plan_has_no_shuffle(spark):
-    """The segmented-broadcast probe keeps the packed path's shape:
-    one ArrowEvalPython over JVM-computed positions, zero Exchange."""
-    from geotiff_spark.operators import dedup
-
-    hist = spark.range(50).select(
-        F.concat(F.lit("h"), F.col("id")).alias("text"))
-    new = spark.range(50).select(
-        F.concat(F.lit("n"), F.col("id")).alias("text"))
-    bits = dedup.bloom_bit_set(hist, "text", m=256, k=4)
-    packed = dedup.bloom_pack(bits, m=256, k=4)
-    out = dedup.bloom_membership_packed(
-        new, packed, "text", m=256, k=4, n_segments=3)
-    plan = _plan(out)
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan, plan
-
-
-def test_bloom_words_probe_shuffles_integers_only(spark):
-    """The m-unbounded word-table probe may shuffle, but only the
-    integer decision plane: no text column appears in any exchange."""
-    from geotiff_spark.operators import dedup
-
-    hist = spark.range(50).select(
-        F.concat(F.lit("h"), F.col("id")).alias("text"))
-    new = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("n"), F.col("id")).alias("text"))
-    bits = dedup.bloom_bit_set(hist, "text", m=256, k=4)
-    words = dedup.bloom_word_table(bits)
-    out = dedup.bloom_membership_words(
-        new, words, ["doc_id"], "text", m=256, k=4)
-    import re
-    plan = _plan(out)
-    for args in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
-        assert "text" not in args, f"text shuffled on ({args}):\n{plan}"
-
-
 def test_exact_substring_dedup_single_digest_scan(spark):
     """ExactSubstr's fingerprint pass must run ONCE and be map-only
     (r06 VERDICT: the old groupBy+join shape computed and exchanged it
