@@ -1,24 +1,28 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: image/audio/video as binary payloads + typed metadata.
 
-The sandbox has no image/audio libraries (no Pillow/ffmpeg), so REAL codec
-decode is stubbed behind an import-try that raises NotImplementedError;
-everything Spark-side — schema, partitioning, mapInPandas signatures,
-Arrow batch shapes, resize/feature/frame-sample math — is real and tested
-against a documented deterministic fake container:
+Real codecs decode in pure numpy (functions/): PNG, baseline and
+progressive JPEG, GIF and lossless WebP (VP8L) through `decode_image`,
+lossy WebP (VP8) through `webp_lossy_features`, WAV through
+`decode_audio` and YUV4MPEG2 through `sample_video_frames`. Compressed
+audio and video codecs (mp3, opus, ...) raise NotImplementedError. A
+documented deterministic fake container keeps the downstream shapes
+testable independently of any codec:
 
     FAKE-IMG: b"FIMG" | u16 w | u16 h | u8 c | w*h*c u8 pixels
     FAKE-AUD: b"FAUD" | u32 sample_rate | u32 n | n f32 samples
     FAKE-VID: b"FVID" | u16 w | u16 h | u16 n_frames | frames of w*h u8
 
-Payloads derive from a key via splitmix64, so media tables synthesize
-deterministically at any scale (generated per-batch on executors — the
-driver never materializes them).
+`CORPORA` names every synthetic corpus the registry queries run on: a
+row function, whose payload derives from media_id via splitmix64, and
+the corpus size. `synth_media` generates a corpus per Arrow batch on
+executors (the driver never materializes it); oracle_media.py rebuilds
+the same rows single-process for the expected tables.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -72,11 +76,11 @@ def encode_fake_image(media_id: int, w: int, h: int, c: int) -> bytes:
 
 
 def decode_image(payload: bytes) -> np.ndarray:
-    """Decode to (h, w, c) uint8. PNG, baseline JPEG, GIF, and lossless
-    WebP (VP8L) decode for real (pure-numpy codecs under functions/);
-    lossy-VP8 WebP is the one image path still stubbed (would need
-    Pillow, absent in this sandbox). The fake container keeps downstream
-    shapes testable independently of any codec."""
+    """Decode to (h, w, c) uint8. PNG, baseline and progressive JPEG,
+    GIF, and lossless WebP (VP8L) decode for real (pure-numpy codecs
+    under functions/); lossy-VP8 WebP decodes to YUV planes through
+    webp_lossy_features instead and raises here. The fake container
+    keeps downstream shapes testable independently of any codec."""
     if payload[:4] == b"FIMG":
         w, h, c = struct.unpack_from("<HHB", payload, 4)
         return (
@@ -117,8 +121,9 @@ def decode_image(payload: bytes) -> np.ndarray:
 
 
 def synth_media_row(mid: int) -> dict:
-    """One deterministic media row for id `mid` — shared by the Spark
-    generator and the driver-side oracle builder (oracle_raster.py)."""
+    """One deterministic FAKE-container media row for id `mid`; ids
+    cycle image/audio/video. Shared by the Spark generator and the
+    driver-side oracle builder (oracle_media.py)."""
     mid = int(mid)
     r = int(_splitmix(np.array([mid], dtype=np.uint64))[0])
     kind = ("image", "audio", "video")[mid % 3]
@@ -154,12 +159,17 @@ def synth_media_row(mid: int) -> dict:
     }
 
 
-def synth_media(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    """Deterministic media table: ids 0..n-1 cycle image/audio/video."""
+def synth_media(
+    spark: SparkSession, row_fn: Callable[[int], dict], n: int,
+    partitions: int | None = None,
+) -> DataFrame:
+    """Deterministic media table of `row_fn(mid)` for ids 0..n-1,
+    generated on executors per Arrow batch. Call it with a corpus:
+    `synth_media(spark, *CORPORA["png"])`."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame([synth_media_row(mid) for mid in pdf["id"]])
+            yield pd.DataFrame([row_fn(mid) for mid in pdf["id"]])
 
     rng = spark.range(0, n, numPartitions=partitions or 8)
     return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
@@ -205,20 +215,6 @@ def synth_png_row(mid: int) -> dict:
     }
 
 
-def synth_png_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    """Deterministic REAL-PNG image table (ids 0..n-1), generated on
-    executors per Arrow batch — the corpus behind png_image_features."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([synth_png_row(mid) for mid in pdf["id"]])
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
 IMAGE_FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -234,33 +230,46 @@ IMAGE_FEATURES_SCHEMA = StructType(
 )
 
 
-def image_features(media: DataFrame) -> DataFrame:
-    """Decode → per-channel mean + gray std, one mapInPandas pass."""
+def _map_payloads(
+    media: DataFrame, kind: str, schema: StructType,
+    fn: Callable[[int, bytes], list[dict]],
+) -> DataFrame:
+    """The one per-media pass: keep the `kind` rows and map each
+    (media_id, payload) through `fn`, which returns that media's output
+    rows as dicts, in one mapInPandas stage."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_image(bytes(payload))
-                means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "width": arr.shape[1],
-                        "height": arr.shape[0],
-                        "mean_r": float(means[0]),
-                        "mean_g": float(means[1]) if len(means) > 1 else None,
-                        "mean_b": float(means[2]) if len(means) > 2 else None,
-                        "std_gray": float(arr.mean(axis=2).std()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame(
+                [row for mid, payload in zip(pdf["media_id"], pdf["payload"])
+                 for row in fn(int(mid), bytes(payload))],
+                columns=schema.fieldNames(),
+            )
 
     return (
-        media.filter(F.col("kind") == "image")
+        media.filter(F.col("kind") == kind)
         .select("media_id", "payload")
-        .mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+        .mapInPandas(run, schema=schema)
     )
+
+
+def image_features(media: DataFrame) -> DataFrame:
+    """Decode → per-channel mean + gray std, one mapInPandas pass."""
+
+    def features(mid: int, payload: bytes) -> list[dict]:
+        arr = decode_image(payload)
+        means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
+        return [{
+            "media_id": mid,
+            "width": arr.shape[1],
+            "height": arr.shape[0],
+            "mean_r": float(means[0]),
+            "mean_g": float(means[1]) if len(means) > 1 else None,
+            "mean_b": float(means[2]) if len(means) > 2 else None,
+            "std_gray": float(arr.mean(axis=2).std()),
+        }]
+
+    return _map_payloads(media, "image", IMAGE_FEATURES_SCHEMA, features)
 
 
 def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -272,29 +281,19 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_image(bytes(payload))
-                h, w, c = arr.shape
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                resized = arr[yi][:, xi]
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "payload": struct.pack("<4sHHB", b"FIMG", out_w, out_h, c)
-                        + resized.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def resize(mid: int, payload: bytes) -> list[dict]:
+        arr = decode_image(payload)
+        h, w, c = arr.shape
+        yi = (np.arange(out_h) * h // out_h)
+        xi = (np.arange(out_w) * w // out_w)
+        resized = arr[yi][:, xi]
+        return [{
+            "media_id": mid,
+            "payload": struct.pack("<4sHHB", b"FIMG", out_w, out_h, c)
+            + resized.tobytes(),
+        }]
 
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema=out_schema)
-    )
+    return _map_payloads(media, "image", out_schema, resize)
 
 
 def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
@@ -307,40 +306,31 @@ def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                if payload[:9] == b"YUV4MPEG2":
-                    frames = decode_y4m_luma(payload)
-                    nf, h, w = frames.shape
-                elif payload[:4] == b"FVID":
-                    w, h, nf = struct.unpack_from("<HHH", payload, 4)
-                    frames = np.frombuffer(
-                        payload, dtype=np.uint8, offset=10, count=w * h * nf
-                    ).reshape(nf, h, w)
-                else:
-                    raise NotImplementedError(
-                        "compressed video codecs unavailable; payload is "
-                        "neither Y4M nor a FAKE-VID container"
-                    )
-                for i in range(0, nf, every):
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": i,
-                            "frame": struct.pack("<4sHHB", b"FIMG", w, h, 1)
-                            + frames[i].tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def sample(mid: int, payload: bytes) -> list[dict]:
+        if payload[:9] == b"YUV4MPEG2":
+            frames = decode_y4m_luma(payload)
+            nf, h, w = frames.shape
+        elif payload[:4] == b"FVID":
+            w, h, nf = struct.unpack_from("<HHH", payload, 4)
+            frames = np.frombuffer(
+                payload, dtype=np.uint8, offset=10, count=w * h * nf
+            ).reshape(nf, h, w)
+        else:
+            raise NotImplementedError(
+                "compressed video codecs unavailable; payload is "
+                "neither Y4M nor a FAKE-VID container"
+            )
+        return [
+            {
+                "media_id": mid,
+                "frame_idx": i,
+                "frame": struct.pack("<4sHHB", b"FIMG", w, h, 1)
+                + frames[i].tobytes(),
+            }
+            for i in range(0, nf, every)
+        ]
 
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema=out_schema)
-    )
+    return _map_payloads(media, "video", out_schema, sample)
 
 
 def decode_y4m_luma(payload: bytes) -> np.ndarray:
@@ -450,17 +440,6 @@ def synth_jpeg_row(mid: int) -> dict:
     }
 
 
-def synth_jpeg_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([synth_jpeg_row(mid) for mid in pdf["id"]])
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
 def synth_jpeg_progressive_row(mid: int) -> dict:
     """One deterministic PROGRESSIVE-JPEG media row: same pixel/shape/
     quality cycling as synth_jpeg_row, but through the SOF2 encoder,
@@ -505,19 +484,6 @@ def synth_jpeg_progressive_row(mid: int) -> dict:
     }
 
 
-def synth_jpeg_progressive_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [synth_jpeg_progressive_row(mid) for mid in pdf["id"]]
-            )
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
 def synth_gif_row(mid: int) -> dict:
     """One deterministic REAL-GIF media row: splitmix palette indices
     through the numpy GIF encoder, cycling palette sizes (incl. 256 for
@@ -540,17 +506,6 @@ def synth_gif_row(mid: int) -> dict:
             "sample_rate": None, "n_frames": None, "format": "GIF",
         },
     }
-
-
-def synth_gif_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([synth_gif_row(mid) for mid in pdf["id"]])
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def synth_webp_row(mid: int) -> dict:
@@ -608,17 +563,6 @@ def synth_webp_row(mid: int) -> dict:
             "sample_rate": None, "n_frames": None, "format": "WEBP",
         },
     }
-
-
-def synth_webp_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([synth_webp_row(mid) for mid in pdf["id"]])
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def synth_webp_lossy_row(mid: int) -> dict:
@@ -726,18 +670,6 @@ def synth_webp_lossy_row(mid: int) -> dict:
     }
 
 
-def synth_webp_lossy_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [synth_webp_lossy_row(mid) for mid in pdf["id"]])
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
 WEBP_LOSSY_FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -756,29 +688,21 @@ def webp_lossy_features(media: DataFrame) -> DataFrame:
     one mapInPandas pass. Features live in YUV420 — VP8's native coding
     space — so no RGB upsampler enters the comparison surface."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def features(mid: int, payload: bytes) -> list[dict]:
         from geotiff_spark.functions.vp8 import decode_webp_lossy_yuv
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                y, u, v = decode_webp_lossy_yuv(bytes(payload))
-                rows.append({
-                    "media_id": int(mid),
-                    "width": int(y.shape[1]),
-                    "height": int(y.shape[0]),
-                    "mean_y": float(y.mean()),
-                    "mean_u": float(u.mean()),
-                    "mean_v": float(v.mean()),
-                    "std_y": float(y.std()),
-                })
-            yield pd.DataFrame(rows)
+        y, u, v = decode_webp_lossy_yuv(payload)
+        return [{
+            "media_id": mid,
+            "width": int(y.shape[1]),
+            "height": int(y.shape[0]),
+            "mean_y": float(y.mean()),
+            "mean_u": float(u.mean()),
+            "mean_v": float(v.mean()),
+            "std_y": float(y.std()),
+        }]
 
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema=WEBP_LOSSY_FEATURES_SCHEMA)
-    )
+    return _map_payloads(media, "image", WEBP_LOSSY_FEATURES_SCHEMA, features)
 
 
 def synth_wav_row(mid: int) -> dict:
@@ -827,26 +751,19 @@ def synth_y4m_row(mid: int) -> dict:
     }
 
 
-def synth_wav_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([synth_wav_row(mid) for mid in pdf["id"]])
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def synth_y4m_media(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([synth_y4m_row(mid) for mid in pdf["id"]])
-
-    rng = spark.range(0, n, numPartitions=partitions or 8)
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
+# name -> (row function, corpus size): the one definition of each
+# registry corpus, read by the queries and by their oracles alike
+CORPORA = {
+    "fake": (synth_media_row, 300),
+    "png": (synth_png_row, 200),
+    "jpeg": (synth_jpeg_row, 120),
+    "jpeg_progressive": (synth_jpeg_progressive_row, 120),
+    "gif": (synth_gif_row, 120),
+    "webp": (synth_webp_row, 120),
+    "webp_lossy": (synth_webp_lossy_row, 120),
+    "wav": (synth_wav_row, 200),
+    "y4m": (synth_y4m_row, 200),
+}
 
 
 def decode_audio(payload: bytes) -> tuple[int, np.ndarray]:
@@ -991,31 +908,21 @@ AUDIO_FEATURES_SCHEMA = StructType(
 
 def audio_features(media: DataFrame) -> DataFrame:
     """Decode → duration / RMS / zero-crossing count / peak, one
-    mapInPandas pass (the audio analog of image_features)."""
+    mapInPandas pass (the audio analog of image_features). A payload
+    with no samples reads as SQL aggregates over an empty set do: zero
+    counts and duration, NULL rms and peak."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                sr, s = decode_audio(bytes(payload))
-                s64 = s.astype(np.float64)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "sample_rate": sr,
-                        "n_samples": len(s),
-                        "duration_sec": len(s) / sr,
-                        "rms": float(np.sqrt(np.mean(s64 * s64))),
-                        "zero_crossings": int(
-                            np.count_nonzero(np.diff(np.signbit(s64)))
-                        ),
-                        "peak": float(np.abs(s64).max()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def features(mid: int, payload: bytes) -> list[dict]:
+        sr, s = decode_audio(payload)
+        s64 = s.astype(np.float64)
+        return [{
+            "media_id": mid,
+            "sample_rate": sr,
+            "n_samples": len(s),
+            "duration_sec": len(s) / sr,
+            "rms": float(np.sqrt(np.mean(s64 * s64))) if len(s) else None,
+            "zero_crossings": int(np.count_nonzero(np.diff(np.signbit(s64)))),
+            "peak": float(np.abs(s64).max()) if len(s) else None,
+        }]
 
-    return (
-        media.filter(F.col("kind") == "audio")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-    )
+    return _map_payloads(media, "audio", AUDIO_FEATURES_SCHEMA, features)

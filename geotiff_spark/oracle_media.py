@@ -1,444 +1,148 @@
 """DuckDB oracles for the multimodal queries.
 
-Same trust pattern as the raster pixel tables (oracle_raster.py): the
-media payloads are deterministic functions of media_id, so a driver-side
-single-process loop over the SAME decode kernels materializes the
-expected feature rows once, and the oracle SQL reads them back. What the
-gate then verifies is the Spark side — mapInPandas batching, kind
-filtering, schema, the Arrow round trip — against a non-distributed
-computation, exactly like the zonal/tile oracles verify the distributed
-gather against the local decoder. The kernels themselves are pinned by
-tests/test_multimodal.py.
+Same trust pattern as the raster pixel tables (oracle_raster.py): every
+media payload is a deterministic function of media_id, so a driver-side
+single-process loop over the SAME corpus rows (multimodal.CORPORA) and
+the same decode kernels materializes the expected feature rows once, and
+the oracle SQL reads them back. What the gate then verifies is the Spark
+side — mapInPandas batching, kind filtering, schema, the Arrow round
+trip — against a non-distributed computation, exactly like the
+zonal/tile oracles verify the distributed gather against the local
+decoder. A codec bug identical on both sides is invisible here; the
+codecs are pinned by their own tests: encoder↔decoder roundtrips
+(tests/test_png.py, test_gif.py, test_media_codecs.py, VP8L in
+test_webp.py), baseline≡progressive bit-equality (tests/test_jpeg.py)
+and lossy VP8 YUV bit-exact against libwebp (tests/test_webp.py).
+
+The feature math below (_image, _resized, _yuv, _audio, _frames) is a
+second copy of the engine's per-media kernels in operators/multimodal.py
+on purpose: it is the reference the gate compares against, so it is
+never imported from the engine.
+
+Each table is cached under a key of the corpus rows it is computed from
+(oracle_raster.cached_tables), so a changed generator, or a lossy corpus
+built with or without the system libwebp, gets its own table.
 """
 
 from __future__ import annotations
 
-import os
+import functools
+import hashlib
 
 import numpy as np
 
-from geotiff_spark.oracle_raster import ORACLE_DIR, _write_parquet
+from geotiff_spark.oracle_raster import cached_tables
 
-N_MEDIA = 300  # must match the registry queries' synth_media(spark, 300)
+IMAGE_COLS = ["media_id", "width", "height", "mean_r", "mean_g", "mean_b",
+              "std_gray"]
+YUV_COLS = ["media_id", "width", "height", "mean_y", "mean_u", "mean_v",
+            "std_y"]
+AUDIO_COLS = ["media_id", "sample_rate", "n_samples", "duration_sec", "rms",
+              "zero_crossings", "peak"]
+FRAME_COLS = ["media_id", "n_frames_sampled"]
 
 
-def media_feature_tables() -> dict[str, str]:
-    """Materialize (once per boot) the expected image/audio/video feature
-    rows for media ids 0..N_MEDIA-1. Returns {name: parquet_path}."""
-    import pandas as pd
+def _pixel_stats(arr: np.ndarray) -> tuple:
+    """(width, height, per-channel means, gray std) of an (h, w, c) image;
+    a mean the image has no channel for is NULL."""
+    means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
+    return (arr.shape[1], arr.shape[0], float(means[0]),
+            float(means[1]) if len(means) > 1 else None,
+            float(means[2]) if len(means) > 2 else None,
+            float(arr.mean(axis=2).std()))
 
-    from geotiff_spark.operators.multimodal import (
-        decode_audio, decode_image, synth_media_row,
-    )
 
-    paths = {
-        "image": f"{ORACLE_DIR}/media_image_features.parquet",
-        "audio": f"{ORACLE_DIR}/media_audio_features.parquet",
-        "video": f"{ORACLE_DIR}/media_video_counts.parquet",
-    }
-    marker = f"{ORACLE_DIR}/_MEDIA_DONE_{N_MEDIA}"
-    if os.path.exists(marker):
-        return paths
-    os.makedirs(ORACLE_DIR, exist_ok=True)
+def _image(row: dict) -> tuple:
+    from geotiff_spark.operators.multimodal import decode_image
 
-    img, aud, vid = [], [], []
-    for mid in range(N_MEDIA):
-        row = synth_media_row(mid)
-        payload = row["payload"]
-        if row["kind"] == "image":
-            arr = decode_image(payload)
-            means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
-            img.append((mid, arr.shape[1], arr.shape[0], float(means[0]),
-                        float(means[1]), float(means[2]),
-                        float(arr.mean(axis=2).std())))
-        elif row["kind"] == "audio":
-            sr, s = decode_audio(payload)
-            s64 = s.astype(np.float64)
-            aud.append((mid, sr, len(s), len(s) / sr,
-                        float(np.sqrt(np.mean(s64 * s64))),
-                        int(np.count_nonzero(np.diff(np.signbit(s64)))),
-                        float(np.abs(s64).max())))
-        else:
-            nf = row["meta"]["n_frames"]
-            vid.append((mid, -(-nf // 2)))  # every=2 -> ceil(nf/2)
+    return _pixel_stats(decode_image(row["payload"]))
 
-    ipdf = pd.DataFrame(
-        img, columns=["media_id", "width", "height", "mean_r", "mean_g",
-                      "mean_b", "std_gray"],
-    )
-    apdf = pd.DataFrame(
-        aud, columns=["media_id", "sample_rate", "n_samples", "duration_sec",
-                      "rms", "zero_crossings", "peak"],
-    )
-    vpdf = pd.DataFrame(vid, columns=["media_id", "n_frames_sampled"])
-    _write_parquet(paths["image"], {c: ipdf[c].to_numpy() for c in ipdf})
-    _write_parquet(paths["audio"], {c: apdf[c].to_numpy() for c in apdf})
-    _write_parquet(paths["video"], {c: vpdf[c].to_numpy() for c in vpdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return paths
 
+def _resized(row: dict) -> tuple:
+    """Features after the png_resize_features query's 12x12
+    nearest-neighbor resize (source index i * h // 12)."""
+    from geotiff_spark.operators.multimodal import decode_image
 
-def image_features_sql() -> str:
-    p = media_feature_tables()["image"]
-    return f"SELECT * FROM read_parquet('{p}')"
+    arr = decode_image(row["payload"])
+    h, w, _c = arr.shape
+    idx = np.arange(12)
+    return _pixel_stats(arr[idx * h // 12][:, idx * w // 12])
 
 
-def audio_features_sql() -> str:
-    p = media_feature_tables()["audio"]
-    return f"SELECT * FROM read_parquet('{p}')"
-
-
-def video_frame_sample_sql() -> str:
-    p = media_feature_tables()["video"]
-    return f"SELECT * FROM read_parquet('{p}')"
-
-
-N_PNG = 200  # must match the registry query's synth_png_media(spark, 200)
-PNG_V = 2    # bump when synth_png_row's generator changes (marker/table versioning)
-
-
-def png_feature_table() -> str:
-    """Expected image_features rows over the REAL-PNG corpus
-    (synth_png_media): the same driver-side single-process trust pattern
-    as media_feature_tables, but the payloads here are genuine PNG bytes
-    decoded by the pure-numpy codec (functions/png.py), whose two
-    directions are pinned against each other by tests/test_png.py."""
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import decode_image, synth_png_row
-
-    path = f"{ORACLE_DIR}/png_image_features_v{PNG_V}.parquet"
-    marker = f"{ORACLE_DIR}/_PNG_DONE_{N_PNG}_v{PNG_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = []
-    for mid in range(N_PNG):
-        arr = decode_image(synth_png_row(mid)["payload"])
-        means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
-        rows.append((mid, arr.shape[1], arr.shape[0], float(means[0]),
-                     float(means[1]) if len(means) > 1 else None,
-                     float(means[2]) if len(means) > 2 else None,
-                     float(arr.mean(axis=2).std())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "width", "height", "mean_r", "mean_g",
-                       "mean_b", "std_gray"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def png_image_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{png_feature_table()}')"
-
-
-def png_resize_feature_table() -> str:
-    """Expected features after 12x12 nearest-neighbor resize of the PNG
-    corpus — the same index-selection math as multimodal.resize_images,
-    computed single-process over the trusted decode."""
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import decode_image, synth_png_row
-
-    path = f"{ORACLE_DIR}/png_resize_features_v{PNG_V}.parquet"
-    marker = f"{ORACLE_DIR}/_PNG_RESIZE_DONE_{N_PNG}_v{PNG_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    out_w = out_h = 12
-    rows = []
-    for mid in range(N_PNG):
-        arr = decode_image(synth_png_row(mid)["payload"])
-        h, w, _c = arr.shape
-        yi = np.arange(out_h) * h // out_h
-        xi = np.arange(out_w) * w // out_w
-        r = arr[yi][:, xi]
-        means = r.reshape(-1, r.shape[2]).mean(axis=0)
-        rows.append((mid, out_w, out_h, float(means[0]),
-                     float(means[1]) if len(means) > 1 else None,
-                     float(means[2]) if len(means) > 2 else None,
-                     float(r.mean(axis=2).std())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "width", "height", "mean_r", "mean_g",
-                       "mean_b", "std_gray"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def png_resize_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{png_resize_feature_table()}')"
-
-
-N_WAV = 200
-N_Y4M = 200
-MEDIA_V = 1  # bump when wav/y4m generators change
-
-
-def wav_feature_table() -> str:
-    """Expected audio_features rows over the REAL-WAV corpus — same
-    single-process trust pattern as media_feature_tables; decode_wav's
-    two directions are pinned by tests/test_media_codecs.py."""
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import decode_audio, synth_wav_row
-
-    path = f"{ORACLE_DIR}/wav_audio_features_v{MEDIA_V}.parquet"
-    marker = f"{ORACLE_DIR}/_WAV_DONE_{N_WAV}_v{MEDIA_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = []
-    for mid in range(N_WAV):
-        sr, s = decode_audio(synth_wav_row(mid)["payload"])
-        s64 = s.astype(np.float64)
-        rows.append((mid, sr, len(s), len(s) / sr,
-                     float(np.sqrt(np.mean(s64 * s64))),
-                     int(np.count_nonzero(np.diff(np.signbit(s64)))),
-                     float(np.abs(s64).max())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "sample_rate", "n_samples", "duration_sec",
-                       "rms", "zero_crossings", "peak"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def wav_audio_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{wav_feature_table()}')"
-
-
-def y4m_counts_table() -> str:
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import synth_y4m_row
-
-    path = f"{ORACLE_DIR}/y4m_frame_counts_v{MEDIA_V}.parquet"
-    marker = f"{ORACLE_DIR}/_Y4M_DONE_{N_Y4M}_v{MEDIA_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = [
-        (mid, -(-synth_y4m_row(mid)["meta"]["n_frames"] // 2))
-        for mid in range(N_Y4M)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "n_frames_sampled"])
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def y4m_frame_sample_sql() -> str:
-    return f"SELECT * FROM read_parquet('{y4m_counts_table()}')"
-
-
-N_JPEG = 120
-
-
-def jpeg_feature_table() -> str:
-    """Expected image_features rows over the REAL-JPEG corpus — the
-    decoder's two directions are pinned by tests/test_jpeg.py; this
-    single-process pass pins the Spark side against it."""
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import decode_image, synth_jpeg_row
-
-    path = f"{ORACLE_DIR}/jpeg_image_features_v{MEDIA_V}.parquet"
-    marker = f"{ORACLE_DIR}/_JPEG_DONE_{N_JPEG}_v{MEDIA_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = []
-    for mid in range(N_JPEG):
-        arr = decode_image(synth_jpeg_row(mid)["payload"])
-        means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
-        rows.append((mid, arr.shape[1], arr.shape[0], float(means[0]),
-                     float(means[1]) if len(means) > 1 else None,
-                     float(means[2]) if len(means) > 2 else None,
-                     float(arr.mean(axis=2).std())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "width", "height", "mean_r", "mean_g",
-                       "mean_b", "std_gray"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def jpeg_image_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{jpeg_feature_table()}')"
-
-
-N_JPEG_PROG = 120
-
-
-def jpeg_progressive_feature_table() -> str:
-    """Expected image_features rows over the PROGRESSIVE-JPEG corpus.
-    Like every media oracle here, this gate pins distributed-vs-driver
-    consistency over the identical corpus; the codec itself is pinned
-    independently by tests/test_jpeg.py's baseline≡progressive
-    bit-equality (same quantized coefficients through both entropy
-    codings must decode to the same pixels) and quantization-bounded
-    roundtrips — a bug identical in BOTH decode directions is the only
-    shape this cannot see (no external decoder in this sandbox)."""
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import (
-        decode_image, synth_jpeg_progressive_row,
-    )
-
-    path = f"{ORACLE_DIR}/jpeg_progressive_features_v{MEDIA_V}.parquet"
-    marker = f"{ORACLE_DIR}/_JPEGP_DONE_{N_JPEG_PROG}_v{MEDIA_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = []
-    for mid in range(N_JPEG_PROG):
-        arr = decode_image(synth_jpeg_progressive_row(mid)["payload"])
-        means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
-        rows.append((mid, arr.shape[1], arr.shape[0], float(means[0]),
-                     float(means[1]) if len(means) > 1 else None,
-                     float(means[2]) if len(means) > 2 else None,
-                     float(arr.mean(axis=2).std())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "width", "height", "mean_r", "mean_g",
-                       "mean_b", "std_gray"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def jpeg_progressive_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{jpeg_progressive_feature_table()}')"
-
-
-N_GIF = 120
-
-
-def gif_feature_table() -> str:
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import decode_image, synth_gif_row
-
-    path = f"{ORACLE_DIR}/gif_image_features_v{MEDIA_V}.parquet"
-    marker = f"{ORACLE_DIR}/_GIF_DONE_{N_GIF}_v{MEDIA_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = []
-    for mid in range(N_GIF):
-        arr = decode_image(synth_gif_row(mid)["payload"])
-        means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
-        rows.append((mid, arr.shape[1], arr.shape[0], float(means[0]),
-                     float(means[1]), float(means[2]),
-                     float(arr.mean(axis=2).std())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "width", "height", "mean_r", "mean_g",
-                       "mean_b", "std_gray"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def gif_image_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{gif_feature_table()}')"
-
-
-N_WEBP = 120
-
-
-def webp_feature_table() -> str:
-    """Expected image_features rows over the VP8L corpus. LIMITATION
-    (ADVICE r05): this oracle decodes synth_webp_row payloads with the
-    same decode_image/VP8L code path the engine uses, so the gate
-    verifies distributed-vs-driver consistency only — a codec bug
-    identical on both sides is invisible. The codec itself is pinned by
-    tests/test_webp.py's encoder↔decoder roundtrips (lossless, so
-    bit-exact) across transforms/cache/meta-prefix variants; where an
-    environment has Pillow/libwebp, add a cross-decoder parity test
-    over the same corpus."""
-    import pandas as pd
-
-    from geotiff_spark.operators.multimodal import decode_image, synth_webp_row
-
-    path = f"{ORACLE_DIR}/webp_image_features_v{MEDIA_V}.parquet"
-    marker = f"{ORACLE_DIR}/_WEBP_DONE_{N_WEBP}_v{MEDIA_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = []
-    for mid in range(N_WEBP):
-        arr = decode_image(synth_webp_row(mid)["payload"])
-        means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
-        rows.append((mid, arr.shape[1], arr.shape[0], float(means[0]),
-                     float(means[1]), float(means[2]),
-                     float(arr.mean(axis=2).std())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "width", "height", "mean_r", "mean_g",
-                       "mean_b", "std_gray"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def webp_image_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{webp_feature_table()}')"
-
-
-N_WEBP_LOSSY = 120
-WEBP_LOSSY_V = 2  # v2: crafted-arm magnitudes bounded to the
-# real-encoder envelope (beyond it SIMD libwebp wraps IDCT
-# intermediates at int16 and stops being a valid oracle)
-
-
-def webp_lossy_feature_table() -> str:
-    """Expected webp_lossy_features rows over the lossy VP8 corpus.
-    Same trust pattern as the other media oracles (the gate verifies
-    the distributed run against a driver-side decode of the identical
-    corpus); the CODEC itself is pinned independently and much harder:
-    tests/test_webp.py compares the from-scratch decoder's YUV output
-    bit-for-bit against libwebp's WebPDecodeYUV over real libwebp
-    encodes AND crafted every-mode streams."""
-    import pandas as pd
-
+def _yuv(row: dict) -> tuple:
     from geotiff_spark.functions.vp8 import decode_webp_lossy_yuv
-    from geotiff_spark.operators.multimodal import synth_webp_lossy_row
 
-    path = f"{ORACLE_DIR}/webp_lossy_features_v{WEBP_LOSSY_V}.parquet"
-    marker = f"{ORACLE_DIR}/_WEBP_LOSSY_DONE_{N_WEBP_LOSSY}_v{WEBP_LOSSY_V}"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rows = []
-    for mid in range(N_WEBP_LOSSY):
-        y, u, v = decode_webp_lossy_yuv(synth_webp_lossy_row(mid)["payload"])
-        rows.append((mid, int(y.shape[1]), int(y.shape[0]),
-                     float(y.mean()), float(u.mean()), float(v.mean()),
-                     float(y.std())))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "width", "height", "mean_y", "mean_u",
-                       "mean_v", "std_y"],
-    )
-    _write_parquet(path, {c: pdf[c].to_numpy() for c in pdf})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
+    y, u, v = decode_webp_lossy_yuv(row["payload"])
+    return (int(y.shape[1]), int(y.shape[0]), float(y.mean()),
+            float(u.mean()), float(v.mean()), float(y.std()))
 
 
-def webp_lossy_features_sql() -> str:
-    return f"SELECT * FROM read_parquet('{webp_lossy_feature_table()}')"
+def _audio(row: dict) -> tuple:
+    """Duration / RMS / zero crossings / peak; over no samples these read
+    as SQL aggregates over an empty set: zeros and NULL rms and peak."""
+    from geotiff_spark.operators.multimodal import decode_audio
+
+    sr, s = decode_audio(row["payload"])
+    s64 = s.astype(np.float64)
+    n = len(s64)
+    return (sr, n, n / sr,
+            float(np.sqrt(np.mean(s64 * s64))) if n else None,
+            int(np.count_nonzero(np.diff(np.signbit(s64)))),
+            float(np.abs(s64).max()) if n else None)
+
+
+def _frames(row: dict) -> tuple:
+    """Frames the queries' sample_video_frames(every=2) keeps."""
+    return (-(-row["meta"]["n_frames"] // 2),)
+
+
+# registry query -> (corpus in multimodal.CORPORA, kind the engine keeps,
+# expected feature row of one corpus row, oracle columns)
+ORACLES = {
+    "image_features": ("fake", "image", _image, IMAGE_COLS),
+    "png_image_features": ("png", "image", _image, IMAGE_COLS),
+    "png_resize_features": ("png", "image", _resized, IMAGE_COLS),
+    "jpeg_image_features": ("jpeg", "image", _image, IMAGE_COLS),
+    "jpeg_progressive_features": (
+        "jpeg_progressive", "image", _image, IMAGE_COLS),
+    "gif_image_features": ("gif", "image", _image, IMAGE_COLS),
+    "webp_image_features": ("webp", "image", _image, IMAGE_COLS),
+    "webp_lossy_features": ("webp_lossy", "image", _yuv, YUV_COLS),
+    "audio_features": ("fake", "audio", _audio, AUDIO_COLS),
+    "wav_audio_features": ("wav", "audio", _audio, AUDIO_COLS),
+    "video_frame_sample": ("fake", "video", _frames, FRAME_COLS),
+    "y4m_frame_sample": ("y4m", "video", _frames, FRAME_COLS),
+}
+
+
+@functools.cache
+def _corpus_key(row_fn, n: int) -> bytes:
+    """Digest of every row's kind, meta and payload: the content the
+    expected tables are computed from. Row functions are pure in
+    media_id, so each process generates a corpus for its key once."""
+    h = hashlib.sha256()
+    for mid in range(n):
+        row = row_fn(mid)
+        h.update(repr((row["kind"], row["meta"])).encode())
+        h.update(hashlib.sha256(row["payload"]).digest())
+    return h.digest()
+
+
+def feature_sql(query: str) -> str:
+    """Oracle SQL of a multimodal registry query: its expected rows,
+    materialized once per corpus content."""
+    import pandas as pd
+
+    from geotiff_spark.operators.multimodal import CORPORA
+
+    corpus, kind, expected, columns = ORACLES[query]
+    row_fn, n = CORPORA[corpus]
+
+    def build() -> dict:
+        rows = [(row["media_id"], *expected(row))
+                for row in map(row_fn, range(n)) if row["kind"] == kind]
+        pdf = pd.DataFrame(rows, columns=columns)
+        return {query: {c: pdf[c].to_numpy() for c in pdf}}
+
+    path = cached_tables(query, _corpus_key(row_fn, n), build)[query]
+    return f"SELECT * FROM read_parquet('{path}')"

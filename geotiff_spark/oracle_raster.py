@@ -29,7 +29,7 @@ import os
 
 import numpy as np
 
-ORACLE_DIR = "/tmp/geotiff_spark_oracle_v2"
+ORACLE_DIR = "/tmp/geotiff_spark_oracle_v3"
 
 RESOURCE_DIR = "/root/reference/resources"
 # committed synthetic fixtures (tiled + planar + deflate — layouts the
@@ -45,28 +45,56 @@ AUSTRIAN = (
 CORPUS_DIRS = [RESOURCE_DIR, SYNTH_DIR]
 
 
-def _write_parquet(path: str, cols: dict[str, np.ndarray]) -> None:
+def cached_tables(tag: str, key: bytes, build) -> dict[str, str]:
+    """The one oracle-table cache. `build()` returns {table: {column:
+    array}}; the tables are written under ORACLE_DIR/<tag>_<digest of
+    key>/ and published by one atomic directory rename, so a directory
+    that exists is complete and a build that raises publishes nothing.
+    `key` is the bytes the tables are computed from. Returns {table:
+    parquet path}."""
+    import shutil
+    import tempfile
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pq.write_table(pa.table(cols), path)
+    out = f"{ORACLE_DIR}/{tag}_{hashlib.sha256(key).hexdigest()[:16]}"
+    if not os.path.isdir(out):
+        os.makedirs(ORACLE_DIR, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f"{os.path.basename(out)}.tmp",
+                               dir=ORACLE_DIR)
+        try:
+            for table, cols in build().items():
+                pq.write_table(pa.table(cols), f"{tmp}/{table}.parquet")
+            try:
+                os.rename(tmp, out)
+            except OSError:
+                if not os.path.isdir(out):  # else a concurrent build won
+                    raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return {
+        f[: -len(".parquet")]: f"{out}/{f}"
+        for f in sorted(os.listdir(out)) if f.endswith(".parquet")
+    }
 
 
-def _corpus_digest(paths: list[str]) -> str:
-    """Digest of the corpus files' basenames and bytes: the pixel-table
-    cache key, so a changed fixture never serves a stale oracle."""
-    h = hashlib.sha256()
+def _files_key(paths: list[str]) -> bytes:
+    """The files' basenames and bytes: the cache key of a table built
+    from them, so a changed fixture never serves a stale oracle."""
+    key = b""
     for p in paths:
         with open(p, "rb") as fh:
             data = fh.read()
-        h.update(os.path.basename(p).encode() + b"\0")
-        h.update(hashlib.sha256(data).digest())
-    return h.hexdigest()[:16]
+        key += os.path.basename(p).encode() + b"\0"
+        key += hashlib.sha256(data).digest()
+    return key
 
 
-def pixel_tables() -> tuple[str, str]:
+def pixel_tables() -> tuple[str | None, str]:
     """Materialize (once per corpus content) and return paths of:
-    - the flagship austrian raster pixel table (ix, iy, value)
+    - the flagship austrian raster pixel table (ix, iy, value), None
+      when the corpus lacks that raster
     - the band-0 pixel table of every reference fixture
       (raster_id, ix, iy, value)
     """
@@ -77,43 +105,32 @@ def pixel_tables() -> tuple[str, str]:
     paths = sorted(
         p for d in CORPUS_DIRS for p in glob.glob(f"{d}/*.tif")
     )
-    out_dir = f"{ORACLE_DIR}/pixels_{_corpus_digest(paths)}"
-    austrian_path = f"{out_dir}/austrian_pixels.parquet"
-    all_path = f"{out_dir}/fixture_pixels_band0.parquet"
-    marker = f"{out_dir}/_DONE"
-    if os.path.exists(marker):
-        return austrian_path, all_path
-    os.makedirs(out_dir, exist_ok=True)
 
-    records = load_raster_records(paths)
-
-    rids, ixs, iys, vals = [], [], [], []
-    for rid, rec in records.items():
-        h, w, spp = rec["height"], rec["width"], rec["num_samples"]
-        flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
-        band0 = flat.reshape(h, w, spp)[:, :, 0].astype(np.float64)
-        iy, ix = np.divmod(np.arange(h * w, dtype=np.int64), w)
-        rids.append(np.full(h * w, rid, dtype=object))
-        ixs.append(ix)
-        iys.append(iy)
-        vals.append(band0.ravel())
-        if rid == AUSTRIAN.rsplit("/", 1)[-1]:
-            _write_parquet(
-                austrian_path,
-                {"ix": ix, "iy": iy, "value": band0.ravel()},
-            )
-    _write_parquet(
-        all_path,
-        {
+    def build() -> dict:
+        tables = {}
+        rids, ixs, iys, vals = [], [], [], []
+        for rid, rec in load_raster_records(paths).items():
+            h, w, spp = rec["height"], rec["width"], rec["num_samples"]
+            flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
+            band0 = flat.reshape(h, w, spp)[:, :, 0].astype(np.float64)
+            iy, ix = np.divmod(np.arange(h * w, dtype=np.int64), w)
+            rids.append(np.full(h * w, rid, dtype=object))
+            ixs.append(ix)
+            iys.append(iy)
+            vals.append(band0.ravel())
+            if rid == AUSTRIAN.rsplit("/", 1)[-1]:
+                tables["austrian_pixels"] = {
+                    "ix": ix, "iy": iy, "value": band0.ravel()}
+        tables["fixture_pixels_band0"] = {
             "raster_id": np.concatenate(rids),
             "ix": np.concatenate(ixs),
             "iy": np.concatenate(iys),
             "value": np.concatenate(vals),
-        },
-    )
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return austrian_path, all_path
+        }
+        return tables
+
+    tables = cached_tables("pixels", _files_key(paths), build)
+    return tables.get("austrian_pixels"), tables["fixture_pixels_band0"]
 
 
 def _laea_xy_sql(lat_expr: str = "lat", lon_expr: str = "lon") -> str:
@@ -264,51 +281,49 @@ def tiepoints_tables() -> tuple[str, str]:
     from geotiff_spark.functions.tie_points import _build_meshes, face_check_edges
     from geotiff_spark.operators.sample import load_raster_records
 
-    faces_path = f"{ORACLE_DIR}/tiepoints_faces.parquet"
-    edges_path = f"{ORACLE_DIR}/tiepoints_edges.parquet"
-    marker = f"{ORACLE_DIR}/_TIE_DONE"
-    if os.path.exists(marker):
-        return faces_path, edges_path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
+    def build() -> dict:
+        rec = load_raster_records([TIE_RASTER])[TIE_RASTER.rsplit("/", 1)[-1]]
+        coeffs = tuple(np.asarray(rec["transform"][1]).ravel())
+        raster_mesh, model_mesh = _build_meshes(coeffs)
 
-    rec = load_raster_records([TIE_RASTER])[TIE_RASTER.rsplit("/", 1)[-1]]
-    coeffs = tuple(np.asarray(rec["transform"][1]).ravel())
-    raster_mesh, model_mesh = _build_meshes(coeffs)
+        frows: dict[str, list] = {k: [] for k in (
+            "face_id", "s_ax", "s_ay", "s_bx", "s_by", "s_cx", "s_cy",
+            "t_ax", "t_ay", "t_bx", "t_by", "t_cx", "t_cy",
+        )}
+        erows: dict[str, list] = {k: [] for k in (
+            "face_id", "e1x", "e1y", "e2x", "e2y",
+        )}
+        # model→raster: containment + locate in the MODEL mesh,
+        # interpolate in the RASTER mesh (tie_points_to_raster
+        # source/target order)
+        for fid, (src, tgt) in enumerate(zip(model_mesh, raster_mesh)):
+            (sa, sb, sc), (ta, tb, tc) = src["support"], tgt["support"]
+            frows["face_id"].append(fid)
+            for k, v in zip(
+                ("s_ax", "s_ay", "s_bx", "s_by", "s_cx", "s_cy",
+                 "t_ax", "t_ay", "t_bx", "t_by", "t_cx", "t_cy"),
+                (*sa, *sb, *sc, *ta, *tb, *tc),
+            ):
+                frows[k].append(float(v))
+            edges = face_check_edges(src)
+            if not edges:
+                # boundary-None face contains everything: a degenerate
+                # edge whose cross product is identically +0.0 always
+                # passes
+                edges = [(np.zeros(2), np.zeros(2))]
+            for c1, c2 in edges:
+                erows["face_id"].append(fid)
+                erows["e1x"].append(float(c1[0]))
+                erows["e1y"].append(float(c1[1]))
+                erows["e2x"].append(float(c2[0]))
+                erows["e2y"].append(float(c2[1]))
+        return {
+            "tiepoints_faces": {k: np.asarray(v) for k, v in frows.items()},
+            "tiepoints_edges": {k: np.asarray(v) for k, v in erows.items()},
+        }
 
-    frows: dict[str, list] = {k: [] for k in (
-        "face_id", "s_ax", "s_ay", "s_bx", "s_by", "s_cx", "s_cy",
-        "t_ax", "t_ay", "t_bx", "t_by", "t_cx", "t_cy",
-    )}
-    erows: dict[str, list] = {k: [] for k in (
-        "face_id", "e1x", "e1y", "e2x", "e2y",
-    )}
-    # model→raster: containment + locate in the MODEL mesh, interpolate in
-    # the RASTER mesh (tie_points_to_raster source/target order)
-    for fid, (src, tgt) in enumerate(zip(model_mesh, raster_mesh)):
-        (sa, sb, sc), (ta, tb, tc) = src["support"], tgt["support"]
-        frows["face_id"].append(fid)
-        for k, v in zip(
-            ("s_ax", "s_ay", "s_bx", "s_by", "s_cx", "s_cy",
-             "t_ax", "t_ay", "t_bx", "t_by", "t_cx", "t_cy"),
-            (*sa, *sb, *sc, *ta, *tb, *tc),
-        ):
-            frows[k].append(float(v))
-        edges = face_check_edges(src)
-        if not edges:
-            # boundary-None face contains everything: a degenerate edge
-            # whose cross product is identically +0.0 always passes
-            edges = [(np.zeros(2), np.zeros(2))]
-        for c1, c2 in edges:
-            erows["face_id"].append(fid)
-            erows["e1x"].append(float(c1[0]))
-            erows["e1y"].append(float(c1[1]))
-            erows["e2x"].append(float(c2[0]))
-            erows["e2y"].append(float(c2[1]))
-    _write_parquet(faces_path, {k: np.asarray(v) for k, v in frows.items()})
-    _write_parquet(edges_path, {k: np.asarray(v) for k, v in erows.items()})
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return faces_path, edges_path
+    tables = cached_tables("tiepoints", _files_key([TIE_RASTER]), build)
+    return tables["tiepoints_faces"], tables["tiepoints_edges"]
 
 
 def tiepoints_sample_sql() -> str:
@@ -557,26 +572,18 @@ def u64_pixel_table() -> str:
     python int → str)."""
     from geotiff_spark.operators.sample import load_raster_records
 
-    path = f"{ORACLE_DIR}/u64_pixels.parquet"
-    marker = f"{ORACLE_DIR}/_U64_DONE"
-    if os.path.exists(marker):
-        return path
-    os.makedirs(ORACLE_DIR, exist_ok=True)
-    rec = load_raster_records([U64_RASTER])["synth_u64.tif"]
-    h, w = rec["height"], rec["width"]
-    flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
-    iy, ix = np.divmod(np.arange(h * w, dtype=np.int64), w)
-    _write_parquet(
-        path,
-        {
+    def build() -> dict:
+        rec = load_raster_records([U64_RASTER])["synth_u64.tif"]
+        h, w = rec["height"], rec["width"]
+        flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
+        iy, ix = np.divmod(np.arange(h * w, dtype=np.int64), w)
+        return {"u64_pixels": {
             "ix": ix,
             "iy": iy,
             "val_str": np.array([str(int(v)) for v in flat], dtype=object),
-        },
-    )
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
+        }}
+
+    return cached_tables("u64", _files_key([U64_RASTER]), build)["u64_pixels"]
 
 
 def u64_sample_sql() -> str:

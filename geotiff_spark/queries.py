@@ -279,14 +279,14 @@ def spatial_queries() -> Registry:
 
 
 # --------------------------------------------------------------------------
-# Multimodal (deterministic fake containers; real codecs stubbed —
-# rows-only driver check, exactness tested in pytest vs local decode)
+# Multimodal (deterministic corpora from multimodal.CORPORA, decoded by
+# the pure-numpy codecs; every query hash-matches its oracle_media table)
 # --------------------------------------------------------------------------
 
 def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.image_features(mm.synth_media(spark, 300))
+    return mm.image_features(mm.synth_media(spark, *mm.CORPORA["fake"]))
 
 
 def q_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -294,10 +294,10 @@ def q_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every filter type, gray/RGB/RGBA/palette) decoded by the pure-numpy
     codec (functions/png.py) inside the same mapInPandas kernel — the
     round-3 'honest stub' made real. Oracle: driver-side single-process
-    decode of the identical corpus (oracle_media.png_feature_table)."""
+    decode of the identical corpus (oracle_media.feature_sql)."""
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.image_features(mm.synth_png_media(spark, 200))
+    return mm.image_features(mm.synth_media(spark, *mm.CORPORA["png"]))
 
 
 def q_png_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,7 +308,7 @@ def q_png_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the same chain single-process (oracle_media)."""
     from geotiff_spark.operators import multimodal as mm
 
-    corpus = mm.synth_png_media(spark, 200)
+    corpus = mm.synth_media(spark, *mm.CORPORA["png"])
     resized = mm.resize_images(corpus, 12, 12).withColumn(
         "kind", F.lit("image")
     )
@@ -318,18 +318,17 @@ def q_png_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.audio_features(mm.synth_media(spark, 300))
+    return mm.audio_features(mm.synth_media(spark, *mm.CORPORA["fake"]))
 
 
 def q_jpeg_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """image_features over REAL baseline-JPEG bytes decoded by the
     pure-numpy codec (functions/jpeg.py): gray / RGB 4:4:4 / RGB 4:2:0
-    across quality levels (round 4; GIF followed the same round, and
-    lossless WebP landed round 5 — only lossy VP8 remains stubbed). Oracle: single-process decode of the identical
-    corpus (oracle_media.jpeg_feature_table)."""
+    across quality levels (round 4). Oracle: single-process decode of
+    the identical corpus (oracle_media.feature_sql)."""
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.image_features(mm.synth_jpeg_media(spark, 120))
+    return mm.image_features(mm.synth_media(spark, *mm.CORPORA["jpeg"]))
 
 
 def q_jpeg_progressive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,33 +341,31 @@ def q_jpeg_progressive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_jpeg.py's baseline≡progressive bit-equality."""
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.image_features(mm.synth_jpeg_progressive_media(spark, 120))
+    return mm.image_features(
+        mm.synth_media(spark, *mm.CORPORA["jpeg_progressive"]))
 
 
 def q_gif_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """image_features over REAL GIF bytes decoded by the pure-numpy GIF
     codec (functions/gif.py — GIF-LZW, interlace, palette sizes up to
-    256 forcing code-width growth). With round 5's VP8L codec, lossy
-    VP8 is the only image path left stubbed. Oracle: single-process decode of the
-    identical corpus."""
+    256 forcing code-width growth). Oracle: single-process decode of
+    the identical corpus (oracle_media.feature_sql)."""
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.image_features(mm.synth_gif_media(spark, 120))
+    return mm.image_features(mm.synth_media(spark, *mm.CORPORA["gif"]))
 
 
 def q_webp_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """image_features over REAL lossless-WebP bytes decoded by the
-    pure-numpy VP8L codec (functions/webp.py — round 5; the last image
-    format a crawl corpus commonly carries that was still stubbed). The
-    corpus cycles every decoder branch: all four transforms (incl.
-    every packing width of color-indexing and all 14 predictor modes),
-    LZ77 with plane-code and direct distances, color caches, and
-    meta-prefix groups. Lossy VP8 remains honestly stubbed. Oracle:
-    single-process decode of the identical corpus
-    (oracle_media.webp_feature_table)."""
+    pure-numpy VP8L codec (functions/webp.py — round 5). The corpus
+    cycles every decoder branch: all four transforms (incl. every
+    packing width of color-indexing and all 14 predictor modes), LZ77
+    with plane-code and direct distances, color caches, and meta-prefix
+    groups. Oracle: single-process decode of the identical corpus
+    (oracle_media.feature_sql)."""
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.image_features(mm.synth_webp_media(spark, 120))
+    return mm.image_features(mm.synth_media(spark, *mm.CORPORA["webp"]))
 
 
 def q_webp_lossy_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,10 +379,11 @@ def q_webp_lossy_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharpness cycles, skip patterns. Features are YUV-plane stats (the
     codec's native space). Codec pinned bit-for-bit against libwebp's
     WebPDecodeYUV (tests/test_webp.py). Oracle: single-process decode
-    of the identical corpus (oracle_media.webp_lossy_feature_table)."""
+    of the identical corpus (oracle_media.feature_sql)."""
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.webp_lossy_features(mm.synth_webp_lossy_media(spark, 120))
+    return mm.webp_lossy_features(
+        mm.synth_media(spark, *mm.CORPORA["webp_lossy"]))
 
 
 def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,10 +391,10 @@ def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     8/16/24/32-bit and IEEE-float 32/64, mono and stereo, decoded by the
     pure-numpy WAV codec (round 4 — the audio stub made real; mp3/opus
     remain honestly stubbed). Oracle: single-process decode of the
-    identical corpus (oracle_media.wav_feature_table)."""
+    identical corpus (oracle_media.feature_sql)."""
     from geotiff_spark.operators import multimodal as mm
 
-    return mm.audio_features(mm.synth_wav_media(spark, 200))
+    return mm.audio_features(mm.synth_media(spark, *mm.CORPORA["wav"]))
 
 
 def q_y4m_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,7 +404,8 @@ def q_y4m_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotiff_spark.operators import multimodal as mm
 
     return (
-        mm.sample_video_frames(mm.synth_y4m_media(spark, 200), every=2)
+        mm.sample_video_frames(
+            mm.synth_media(spark, *mm.CORPORA["y4m"]), every=2)
         .groupBy("media_id")
         .agg(F.count(F.lit(1)).alias("n_frames_sampled"))
     )
@@ -416,7 +415,8 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotiff_spark.operators import multimodal as mm
 
     return (
-        mm.sample_video_frames(mm.synth_media(spark, 300), every=2)
+        mm.sample_video_frames(
+            mm.synth_media(spark, *mm.CORPORA["fake"]), every=2)
         .groupBy("media_id")
         .agg(F.count(F.lit(1)).alias("n_frames_sampled"))
     )
@@ -496,30 +496,22 @@ FROM orders GROUP BY o_orderstatus
 def multimodal_queries() -> Registry:
     from geotiff_spark import oracle_media, oracle_raster
 
+    media = (
+        ("image_features", q_image_features),
+        ("png_image_features", q_png_image_features),
+        ("png_resize_features", q_png_resize_features),
+        ("jpeg_image_features", q_jpeg_image_features),
+        ("jpeg_progressive_features", q_jpeg_progressive_features),
+        ("gif_image_features", q_gif_image_features),
+        ("webp_image_features", q_webp_image_features),
+        ("webp_lossy_features", q_webp_lossy_features),
+        ("audio_features", q_audio_features),
+        ("wav_audio_features", q_wav_audio_features),
+        ("video_frame_sample", q_video_frame_sample),
+        ("y4m_frame_sample", q_y4m_frame_sample),
+    )
     return {
-        "image_features": (q_image_features, oracle_media.image_features_sql()),
-        "png_image_features": (
-            q_png_image_features, oracle_media.png_image_features_sql()),
-        "png_resize_features": (
-            q_png_resize_features, oracle_media.png_resize_features_sql()),
-        "jpeg_image_features": (
-            q_jpeg_image_features, oracle_media.jpeg_image_features_sql()),
-        "jpeg_progressive_features": (
-            q_jpeg_progressive_features,
-            oracle_media.jpeg_progressive_features_sql()),
-        "gif_image_features": (
-            q_gif_image_features, oracle_media.gif_image_features_sql()),
-        "webp_image_features": (
-            q_webp_image_features, oracle_media.webp_image_features_sql()),
-        "webp_lossy_features": (
-            q_webp_lossy_features, oracle_media.webp_lossy_features_sql()),
-        "audio_features": (q_audio_features, oracle_media.audio_features_sql()),
-        "wav_audio_features": (
-            q_wav_audio_features, oracle_media.wav_audio_features_sql()),
-        "video_frame_sample": (
-            q_video_frame_sample, oracle_media.video_frame_sample_sql()),
-        "y4m_frame_sample": (
-            q_y4m_frame_sample, oracle_media.y4m_frame_sample_sql()),
+        **{name: (fn, oracle_media.feature_sql(name)) for name, fn in media},
         "tile_stats": (q_tile_stats, oracle_raster.tile_stats_sql()),
         "pyramid_stats": (q_pyramid_stats, oracle_raster.pyramid_stats_sql(levels=2)),
         "focal_stats": (q_focal_stats, oracle_raster.focal_stats_sql()),

@@ -68,10 +68,10 @@ def test_y4m_frame_sampling_dispatch(spark):
     from pyspark.sql import functions as F
 
     from geotiff_spark.operators.multimodal import (
-        sample_video_frames, synth_y4m_media, synth_y4m_row,
+        sample_video_frames, synth_media, synth_y4m_row,
     )
 
-    media = synth_y4m_media(spark, 9)
+    media = synth_media(spark, synth_y4m_row, 9)
     out = sample_video_frames(media, every=2)
     counts = {
         r.media_id: r.n
@@ -83,9 +83,12 @@ def test_y4m_frame_sampling_dispatch(spark):
 
 
 def test_wav_features_match_local_decode(spark):
-    from geotiff_spark.operators.multimodal import audio_features, synth_wav_media, synth_wav_row
+    from geotiff_spark.operators.multimodal import (
+        audio_features, synth_media, synth_wav_row,
+    )
 
-    feats = {r.media_id: r for r in audio_features(synth_wav_media(spark, 12)).collect()}
+    media = synth_media(spark, synth_wav_row, 12)
+    feats = {r.media_id: r for r in audio_features(media).collect()}
     assert len(feats) == 12
     for mid in range(12):
         sr, s = decode_audio(synth_wav_row(mid)["payload"])

@@ -11,8 +11,10 @@ from geotiff_spark.operators import multimodal as mm
 
 
 def test_synth_media_deterministic(spark):
-    a = mm.synth_media(spark, 60, partitions=2).orderBy("media_id").collect()
-    b = mm.synth_media(spark, 60, partitions=5).orderBy("media_id").collect()
+    a = mm.synth_media(spark, mm.synth_media_row, 60, partitions=2) \
+        .orderBy("media_id").collect()
+    b = mm.synth_media(spark, mm.synth_media_row, 60, partitions=5) \
+        .orderBy("media_id").collect()
     assert [(r.media_id, bytes(r.payload)) for r in a] == [
         (r.media_id, bytes(r.payload)) for r in b
     ]
@@ -21,7 +23,7 @@ def test_synth_media_deterministic(spark):
 
 
 def test_image_features_match_local_decode(spark):
-    media = mm.synth_media(spark, 30)
+    media = mm.synth_media(spark, mm.synth_media_row, 30)
     feats = {r.media_id: r for r in mm.image_features(media).collect()}
     assert len(feats) == 10  # every 3rd id is an image
     for r in media.filter(F.col("kind") == "image").collect():
@@ -36,7 +38,7 @@ def test_image_features_match_local_decode(spark):
 
 
 def test_resize_shapes(spark):
-    media = mm.synth_media(spark, 30)
+    media = mm.synth_media(spark, mm.synth_media_row, 30)
     out = mm.resize_images(media, 8, 8).collect()
     assert len(out) == 10
     for r in out:
@@ -45,7 +47,7 @@ def test_resize_shapes(spark):
 
 
 def test_video_frame_sampling(spark):
-    media = mm.synth_media(spark, 30)
+    media = mm.synth_media(spark, mm.synth_media_row, 30)
     frames = mm.sample_video_frames(media, every=2).collect()
     metas = {
         r.media_id: r.meta.n_frames
@@ -82,7 +84,7 @@ def test_real_codec_path_raises():
 
 
 def test_audio_features_match_local_decode(spark):
-    media = mm.synth_media(spark, 30)
+    media = mm.synth_media(spark, mm.synth_media_row, 30)
     feats = {r.media_id: r for r in mm.audio_features(media).collect()}
     assert len(feats) == 10  # media_id % 3 == 1 -> audio
     for r in media.filter(F.col("kind") == "audio").collect():

@@ -349,7 +349,7 @@ def test_vp8_rightmost_above_right_replication():
 
 
 def test_vp8_lossy_corpus_decodes_deterministically():
-    """The registry corpus (synth_webp_lossy_media rows) decodes, has
+    """The registry corpus (synth_webp_lossy_row rows) decodes, has
     the advertised dimensions, and two decodes are bit-identical — the
     no-libwebp-needed half of the correctness story."""
     from geotiff_spark.functions.vp8 import decode_webp_lossy_yuv
@@ -378,7 +378,7 @@ def test_vp8_rejects_non_keyframe_and_garbage():
 
 
 def test_vp8_lossy_corpus_fallback_arm_without_libwebp(monkeypatch):
-    """If libwebp is absent, synth_webp_lossy_media's even rows fall
+    """If libwebp is absent, synth_webp_lossy_row's even rows fall
     back to crafted vp8_enc streams — the corpus must still generate
     and decode (the driver gate then runs entirely on crafted streams,
     deterministically for that environment)."""
