@@ -115,12 +115,12 @@ def bench_frames(spark, sf_dir: str, pages_path: str, bign_path: str,
         )
 
     def raster_decode():
-        from geotiff_spark.oracle_raster import RESOURCE_DIR
+        from geotiff_spark.oracle_raster import FIXTURE_DIR
         from geotiff_spark.sources.rasters import read_rasters
 
         # geo_keys is a map column (not hashable by force_all) — drop it;
         # the decode itself still runs (mapInPandas is opaque to pruning)
-        return read_rasters(spark, RESOURCE_DIR).filter(
+        return read_rasters(spark, FIXTURE_DIR).filter(
             F.col("error").isNull()
         ).drop("geo_keys")
 

@@ -15,7 +15,8 @@ Transform semantics mirrored here:
    tie_point_and_pixel_scale.rs:39-49)
 - sampling: floor + half-open bounds (/root/reference/src/lib.rs:164-199)
 
-All raster values in the reference fixtures are integers (u8/i16), so
+All raster values in the committed corpus (FIXTURE_DIR, written by
+scripts/make_fixtures.py) are integers (u8/u16), so
 every aggregate (sum/avg/min/max) is exact in float64 regardless of
 accumulation order — the only cross-engine risk is a trig ulp flipping a
 floor() at a pixel boundary, which for 1000 m pixels needs a point within
@@ -31,18 +32,14 @@ import numpy as np
 
 ORACLE_DIR = "/tmp/geotiff_spark_oracle_v3"
 
-RESOURCE_DIR = "/root/reference/resources"
-# committed synthetic fixtures (tiled + planar + deflate — layouts the
-# reference corpus lacks; see scripts/make_synth_fixture.py)
-SYNTH_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
-AUSTRIAN = (
-    f"{RESOURCE_DIR}/"
-    "austrian_capitals_model_tie_point_and_pixel_scale_pixel_is_area.tif"
+# the raster-query corpus: every *.tif directly in this directory (the
+# glob is non-recursive; u64/ holds the u64 gate's raster). All of it is
+# committed and written by scripts/make_fixtures.py.
+FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
+AUSTRIAN = os.path.join(
+    FIXTURE_DIR,
+    "austrian_capitals_model_tie_point_and_pixel_scale_pixel_is_area.tif",
 )
-
-# every dir whose *.tif files form the raster-query corpus (tile_stats,
-# pyramid_stats and their oracles must agree on this list)
-CORPUS_DIRS = [RESOURCE_DIR, SYNTH_DIR]
 
 
 def cached_tables(tag: str, key: bytes, build) -> dict[str, str]:
@@ -95,16 +92,14 @@ def pixel_tables() -> tuple[str | None, str]:
     """Materialize (once per corpus content) and return paths of:
     - the flagship austrian raster pixel table (ix, iy, value), None
       when the corpus lacks that raster
-    - the band-0 pixel table of every reference fixture
+    - the band-0 pixel table of every corpus raster
       (raster_id, ix, iy, value)
     """
     import glob
 
     from geotiff_spark.operators.sample import load_raster_records
 
-    paths = sorted(
-        p for d in CORPUS_DIRS for p in glob.glob(f"{d}/*.tif")
-    )
+    paths = sorted(glob.glob(f"{FIXTURE_DIR}/*.tif"))
 
     def build() -> dict:
         tables = {}
@@ -244,8 +239,8 @@ SELECT poly_id, value AS mode_value, n AS n_mode FROM (
 """
 
 
-TIE_RASTER = (
-    f"{RESOURCE_DIR}/austrian_capitals_model_tie_points_pixel_is_area.tif"
+TIE_RASTER = os.path.join(
+    FIXTURE_DIR, "austrian_capitals_model_tie_points_pixel_is_area.tif"
 )
 
 # deterministic model-space sample points inside the austrian extent —
@@ -506,9 +501,9 @@ def pyramid_stats_sql(levels: int = 2, tile_size: int = 256) -> str:
     change the mean; the argument applies recursively, so level k is k
     nested FLOOR(AVG) groupings. CONSTRAINT: exact only for integer-dtype
     rasters — build_pyramid floors the 2x2 mean only for integer dtypes
-    (operators/tiling.py), so a float-typed fixture added to CORPUS_DIRS
+    (operators/tiling.py), so a float-typed fixture added to FIXTURE_DIR
     would need the FLOOR() dropped per-raster here. All current corpus
-    fixtures are u8/i16/u16; integer values keep every aggregate exact."""
+    fixtures are u8/u16; integer values keep every aggregate exact."""
     _, all_path = pixel_tables()
     lvl_sql = []
     prev = f"SELECT raster_id, ix, iy, value FROM read_parquet('{all_path}')"
@@ -541,7 +536,7 @@ GROUP BY raster_id, tile_x, tile_y"""
 # DecimalType(20,0) carries the full u64 range, compared as digit strings
 # so no engine's numeric encoding can lossy-convert) --------------------------
 
-U64_RASTER = os.path.join(SYNTH_DIR, "u64", "synth_u64.tif")
+U64_RASTER = os.path.join(FIXTURE_DIR, "u64", "synth_u64.tif")
 
 # deterministic in/out-of-bounds sample points from doc_id — int ops then
 # one IEEE division, identical doubles in Spark and DuckDB. x in [0, 80)

@@ -230,10 +230,10 @@ def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracle_raster.focal_stats_sql) — the shape the engine must NOT use
     at scale, which is exactly what makes it a good oracle."""
     from geotiff_spark.operators.tiling import focal_stats, raster_to_tiles
-    from geotiff_spark.oracle_raster import CORPUS_DIRS
+    from geotiff_spark.oracle_raster import FIXTURE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, CORPUS_DIRS)
+    rasters = read_rasters(spark, FIXTURE_DIR)
     return focal_stats(raster_to_tiles(rasters, tile_size=256))
 
 
@@ -423,17 +423,17 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raster tiling + per-tile pruning stats over the full corpus —
-    the 9 reference fixtures PLUS the committed synthetic tiled+planar+
-    deflate fixture (scripts/make_synth_fixture.py), so the tiled/planar
-    decode branches (functions/tiff.py) sit on the driver-verified path.
-    Exact oracle via the trusted-decoder pixel parquet
-    (geotiff_spark.oracle_raster.tile_stats_sql)."""
+    """Raster tiling + per-tile pruning stats over the committed corpus
+    (oracle_raster.FIXTURE_DIR, written by scripts/make_fixtures.py):
+    strips and tiles, chunky and planar, Deflate with and without
+    predictor 2, so the decode branches of functions/tiff.py sit on the
+    driver-verified path. Exact oracle via the trusted-decoder pixel
+    parquet (geotiff_spark.oracle_raster.tile_stats_sql)."""
     from geotiff_spark.operators.tiling import raster_to_tiles, tile_stats
-    from geotiff_spark.oracle_raster import CORPUS_DIRS
+    from geotiff_spark.oracle_raster import FIXTURE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, CORPUS_DIRS)
+    rasters = read_rasters(spark, FIXTURE_DIR)
     return tile_stats(raster_to_tiles(rasters, tile_size=256))
 
 
@@ -446,10 +446,10 @@ def q_pyramid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotiff_spark.operators.tiling import (
         build_pyramid, raster_to_tiles, tile_stats,
     )
-    from geotiff_spark.oracle_raster import CORPUS_DIRS
+    from geotiff_spark.oracle_raster import FIXTURE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, CORPUS_DIRS)
+    rasters = read_rasters(spark, FIXTURE_DIR)
     pyr = build_pyramid(raster_to_tiles(rasters, tile_size=256), levels=2)
     out = None
     for lvl in (1, 2):
@@ -467,10 +467,10 @@ def q_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     coords → clip → Morton cell — exactly SQL-expressible over the pixel
     parquet (oracle: geotiff_spark.oracle_raster.vectorize_sql)."""
     from geotiff_spark.operators.tiling import vectorize_threshold
-    from geotiff_spark.oracle_raster import RESOURCE_DIR
+    from geotiff_spark.oracle_raster import FIXTURE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
-    rasters = read_rasters(spark, RESOURCE_DIR).filter(
+    rasters = read_rasters(spark, FIXTURE_DIR).filter(
         F.col("raster_id") == "marbles.tif"
     )
     return vectorize_threshold(rasters, res=7, threshold=200.0)

@@ -1,6 +1,7 @@
 """Local stand-in for the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() in DuckDB at sf0.01,
-compare row count + column names + order-insensitive value hash.
+compare row count + column names + order-insensitive value hash, and
+print the hash of each match.
 
 Usage: python tests/oracle_check.py [sf_dir] [query ...]
 """
@@ -97,7 +98,7 @@ def main() -> int:
             failures.append(name)
         else:
             print(f"ok    {name}: rows={len(spark_pdf)} hash match "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"{value_hash(spark_pdf)} [{time.time()-t0:.1f}s]")
     spark.stop()
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -115,15 +115,15 @@ def test_train_split_key_arithmetic_survives_huge_ids(spark):
 
 def test_synth_fixture_in_corpus(spark):
     """The committed tiled+planar+deflate fixture decodes through the
-    distributed read path alongside the reference corpus."""
+    distributed read path alongside the rest of the committed corpus."""
     import numpy as np
 
     from geotiff_spark.functions.tiff import NUMPY_BY_NAME
-    from geotiff_spark.oracle_raster import CORPUS_DIRS
+    from geotiff_spark.oracle_raster import FIXTURE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
     rows = (
-        read_rasters(spark, CORPUS_DIRS)
+        read_rasters(spark, FIXTURE_DIR)
         .filter(F.col("raster_id") == "synth_tiled_planar_deflate.tif")
         .collect()
     )

@@ -13,7 +13,7 @@ from tiff_writer import write_tiff
 def test_pixel_tables_follow_fixture_content(tmp_path, monkeypatch):
     corpus = tmp_path / "corpus"
     corpus.mkdir()
-    monkeypatch.setattr(oracle_raster, "CORPUS_DIRS", [str(corpus)])
+    monkeypatch.setattr(oracle_raster, "FIXTURE_DIR", str(corpus))
     monkeypatch.setattr(oracle_raster, "ORACLE_DIR", str(tmp_path / "oracle"))
     raster = corpus / "r.tif"
 

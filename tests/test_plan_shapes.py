@@ -95,10 +95,10 @@ def test_focal_stats_single_exchange_on_tile_key(spark):
     """Halo exchange = exactly ONE shuffle, keyed by tile coords — never
     a pixel-level self-join (PLANS.md §6)."""
     from geotiff_spark.operators.tiling import focal_stats, raster_to_tiles
-    from geotiff_spark.oracle_raster import CORPUS_DIRS
+    from geotiff_spark.oracle_raster import FIXTURE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
-    df = focal_stats(raster_to_tiles(read_rasters(spark, CORPUS_DIRS)))
+    df = focal_stats(raster_to_tiles(read_rasters(spark, FIXTURE_DIR)))
     plan = _plan(df)
     assert plan.count("Exchange") == 1, plan
     assert "hashpartitioning(raster_id" in plan, plan

@@ -165,15 +165,13 @@ def test_zonal_and_tile_oracles_hash_match(spark):
 
     from oracle_check import value_hash
 
-    reference()  # flagship and the tile oracle read the reference corpus
     spark_z = flagship(spark, "/root/testdata/sf0.001").toPandas()
     duck_z = con.execute(oracle_raster.zonal_stats_sql()).fetchdf()
     assert value_hash(spark_z) == value_hash(duck_z)
 
-    # same corpus as the registry query: reference fixtures + the
-    # committed synthetic tiled+planar fixture (oracle includes both)
+    # same corpus as the registry query: the committed fixtures
     tiles = tile_stats(
-        raster_to_tiles(read_rasters(spark, oracle_raster.CORPUS_DIRS))
+        raster_to_tiles(read_rasters(spark, oracle_raster.FIXTURE_DIR))
     ).toPandas()
     duck_t = con.execute(oracle_raster.tile_stats_sql()).fetchdf()
     assert value_hash(tiles) == value_hash(duck_t)

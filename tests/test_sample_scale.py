@@ -17,16 +17,15 @@ from pyspark.sql import functions as F
 
 from fixture_paths import reference
 from geotiff_spark.operators import sample as smp
-from geotiff_spark.oracle_raster import CORPUS_DIRS
+from geotiff_spark.oracle_raster import FIXTURE_DIR
 
 AUSTRIAN = "austrian_capitals_model_tie_point_and_pixel_scale_pixel_is_area.tif"
 MERC = "merc.tif"
 
 
 def _all_fixture_paths():
-    """The raster-query corpus: the reference fixtures where present, plus
-    the committed synthetic ones, so these tests never run on no rasters."""
-    return sorted(p for d in CORPUS_DIRS for p in glob.glob(f"{d}/*.tif"))
+    """The raster-query corpus: every committed fixture."""
+    return sorted(glob.glob(f"{FIXTURE_DIR}/*.tif"))
 
 
 def _routing_paths():
@@ -35,7 +34,7 @@ def _routing_paths():
 
 def test_distributed_records_equal_driver_records(spark):
     """Executor-side decode must produce byte-identical records to the
-    (trusted, golden-verified) driver loop for every reference fixture."""
+    (trusted, golden-verified) driver loop for every committed fixture."""
     paths = _all_fixture_paths()
     smp._RECORDS_CACHE.clear()
     dist = smp.load_raster_records_distributed(spark, paths)
@@ -76,7 +75,7 @@ def test_decode_runs_on_executors_not_driver(spark, monkeypatch):
         (F.lit(2749044.03) - F.col("id") * 1000).alias("y"),
     )
     out = smp.with_raster_sample(
-        pts, spark, [str(reference(AUSTRIAN))], AUSTRIAN
+        pts, spark, [f"{FIXTURE_DIR}/{AUSTRIAN}"], AUSTRIAN
     ).collect()
     assert len(out) == 5
 
@@ -160,7 +159,6 @@ def test_flagship_pipeline_unchanged_through_new_path(spark):
     oracle gate; here we pin non-degenerate output)."""
     from geotiff_spark.pipeline import flagship
 
-    reference(AUSTRIAN)  # the flagship samples the austrian raster
     rows = flagship(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0
     assert any(r.avg_value is not None for r in rows)

@@ -4,6 +4,7 @@ goldens, plus triangulation/transform property tests."""
 from __future__ import annotations
 
 import math
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -15,6 +16,8 @@ from geotiff_spark.functions.proj import laea_forward
 from geotiff_spark.functions.tie_points import (
     tie_points_to_model, tie_points_to_raster,
 )
+from geotiff_spark.functions.transforms import sample_indices
+from geotiff_spark.oracle_raster import TIE_RASTER
 
 CAPITALS = [
     (9.74926, 47.50315), (15.43301, 47.06298), (15.43301, 47.06298),
@@ -46,6 +49,32 @@ def test_tie_points_goldens(variant, shift):
 
     outside = get_values_at(rec, [want[0], want[2] + 1], [want[1], want[3] + 1], 0)
     assert math.isnan(outside[0]) and math.isnan(outside[1])
+
+
+def test_committed_tie_points_raster_follows_its_affine():
+    """The committed stand-in puts its 5 tie points on one affine (4 corners
+    and (124, 126)). Every pixel centre a face covers samples its own
+    pixel; the rest fall in wedge holes, which strict mode rejects and
+    non-strict mode (the registry's tiepoints_sample) marks invalid, i.e.
+    NULL."""
+    rec = read_geotiff(Path(TIE_RASTER).read_bytes())
+    kind, coeffs = rec["transform"]
+    w, h = rec["width"], rec["height"]
+    assert kind == "tie_points" and (w, h) == (507, 190)
+    iy, ix = np.divmod(np.arange(w * h), w)
+    x = 4302000.0 + 1000.0 * (ix + 0.5)
+    y = 2811000.0 - 1000.0 * (iy + 0.5)
+
+    def sample(sel, strict):
+        return sample_indices(kind, coeffs, w, h, 1, rec["raster_type"],
+                              x[sel], y[sel], 0, strict=strict)
+
+    idx, valid = sample(slice(None), strict=False)
+    assert int(valid.sum()) == 89_985 and int((~valid).sum()) == 6_345
+    assert (idx[valid] == (iy * w + ix)[valid]).all()
+    assert (sample(valid, strict=True)[0] == idx[valid]).all()
+    with pytest.raises(ValueError, match="6345 points not contained"):
+        sample(~valid, strict=True)
 
 
 def test_roundtrip_inside_hull():
