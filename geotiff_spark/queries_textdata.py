@@ -33,8 +33,10 @@ def q_token_jaccard_pairs(spark, sf_dir):
     )
 
 
-SQL_TOKEN_JACCARD_PAIRS = r"""
-WITH tok AS (
+# DuckDB CTEs of the exact token-set Jaccard oracles: `tok` holds each
+# document's distinct whitespace tokens, `sizes` the set sizes and `inter`
+# the intersection size of every document pair sharing a token.
+_TOKEN_SETS = r"""tok AS (
   SELECT DISTINCT doc_id, tok
   FROM (
     SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
@@ -46,7 +48,11 @@ inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
   FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
-)
+)"""
+
+
+SQL_TOKEN_JACCARD_PAIRS = rf"""
+WITH {_TOKEN_SETS}
 SELECT id_a, id_b,
        ROUND(n_inter / (sa.n_tok + sb.n_tok - n_inter), 6) AS jaccard
 FROM inter
@@ -117,20 +123,8 @@ def q_dedup_components_exact(spark, sf_dir):
     return dedup.connected_components(pairs, nodes=docs)
 
 
-SQL_DEDUP_COMPONENTS = r"""
-WITH RECURSIVE tok AS (
-  SELECT DISTINCT doc_id, tok
-  FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-    FROM documents
-  ) WHERE tok <> ''
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
+SQL_DEDUP_COMPONENTS = rf"""
+WITH RECURSIVE {_TOKEN_SETS},
 pairs AS (
   SELECT id_a, id_b
   FROM inter
@@ -710,20 +704,8 @@ def q_dedup_keeper(spark, sf_dir):
     )
 
 
-SQL_DEDUP_KEEPER = r"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, tok
-  FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-    FROM documents
-  ) WHERE tok <> ''
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
+SQL_DEDUP_KEEPER = rf"""
+WITH {_TOKEN_SETS},
 pairs AS (
   SELECT id_a, id_b FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
@@ -1606,20 +1588,8 @@ def q_minhash_recall(spark, sf_dir):
     )
 
 
-SQL_MINHASH_RECALL = r"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, tok
-  FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-    FROM documents
-  ) WHERE tok <> ''
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+SQL_MINHASH_RECALL = rf"""
+WITH {_TOKEN_SETS}
 SELECT COUNT(*) AS n_exact, TRUE AS subset_ok, TRUE AS recall_ok
 FROM inter
 JOIN sizes sa ON sa.doc_id = id_a
