@@ -1,7 +1,7 @@
 """Benchmark harness: the bench table's entries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on get_spark's default master.
 
-Every entry is forced with force_all, `--runs` times (default 1), under a
+Every entry is forced with force_all, `--runs` times (default 3), under a
 job group named after it; its figure is the median of its runs, and every
 run is in the record. Prints ONE JSON line:
   {"metric": "...", "value": <sum of the suite entries' medians>,
@@ -15,7 +15,7 @@ from the pages_e2e_bign entry. A pages table is generated deterministically
 before the timed runs of the first entry that reads it and cached as parquet
 in /tmp, so the benchmark measures the ENGINE, not the generator.
 
-Usage: python bench.py                    # every table entry, one run each
+Usage: python bench.py                    # every table entry, three runs each
        python bench.py --only cell_compact zonal_stats --runs 3
                                           # any table or registry names
        python bench.py --parallelism 8    # local[8] instead of get_spark's
@@ -277,7 +277,7 @@ TABLE = {
 
 
 def run(spark, sf_dir: str, only: list[str] | None = None,
-        runs: int = 1) -> dict:
+        runs: int = 3) -> dict:
     """Force each entry named in `only` (default: the whole table) `runs`
     times and return the bench record. `only` may name any table or
     registry entry; a registry query outside the table is a diagnostic.
@@ -345,7 +345,7 @@ def main() -> int:
     ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--only", nargs="*", default=None,
                     help="table or registry entries (default: the table)")
-    ap.add_argument("--runs", type=int, default=1,
+    ap.add_argument("--runs", type=int, default=3,
                     help="runs per entry; its figure is their median")
     args = ap.parse_args()
 

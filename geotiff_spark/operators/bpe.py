@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
-from geotiff_spark.operators.textstats import WS_CHARS
+from geotiff_spark.operators.textstats import WS_CHARS, tokens
 
 # Fixed default vocabulary for the oracle-gated registry query: 26
 # merges over lowercase ASCII, hand-ordered to exercise cascades
@@ -62,7 +62,8 @@ DEFAULT_MERGES: list[tuple[str, str]] = [
 # it as a word boundary on BOTH sides makes the equivalence precondition
 # structural instead of an assumption about the corpus. The whitespace
 # part is textstats.WS_CHARS (RE2's \s, no U+000B), and the one string
-# serves the JVM split and the Python UDF alike.
+# serves the JVM split, the Python UDF and the oracle's
+# textstats.sql_tokens(..., sep=_WORD_SEP) alike.
 _WORD_SEP = f"[{WS_CHARS}\x1f]+"
 
 
@@ -204,7 +205,7 @@ def bpe_train_frame(
     :func:`bpe_train`'s). byte_level=True trains over UTF-8 bytes
     (latin-1-char symbols), giving complete input coverage: no word
     can be out-of-vocabulary."""
-    toks = F.filter(F.split(F.col(text), _WORD_SEP), lambda t: t != "")
+    toks = tokens(F.col(text), sep=_WORD_SEP)
     rows = (
         docs.filter(F.col(text).isNotNull())
         .select(F.explode(toks).alias("w"))

@@ -153,17 +153,6 @@ def _shingle_array(text: str, n: int):
     return F.array_distinct(sh)
 
 
-def shingles_df(
-    df: DataFrame, n: int = 3, text: str = "text", key: str = "doc_id"
-) -> DataFrame:
-    """(key, shingle) distinct pairs: n-token shingles, JVM-side.
-    Shingling is what makes MinHash banding discriminative on
-    small-vocabulary text."""
-    return df.select(
-        F.col(key), F.explode(_shingle_array(text, n)).alias("token")
-    )
-
-
 def _base_hash_expr(s: Column, hash_mode: str) -> Column:
     """64-bit base hash of a string Column, JVM-side.
 

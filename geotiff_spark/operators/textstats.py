@@ -16,18 +16,35 @@ STOPWORDS = {
 }
 
 
-# Whitespace run for every engine tokenizer: RE2's \s spelled out as
-# literal characters. Java regex and Python re would also match U+000B
-# under \s, DuckDB's string_split_regex (RE2) does not, so the oracles
-# keep a vertical tab inside a token and so must the engine. Java regex,
-# Python re and RE2 all parse this class identically.
+# Whitespace run for every tokenizer, engine and oracle: RE2's \s spelled
+# out as literal characters. Java regex and Python re would also match
+# U+000B under \s, RE2 does not; a literal class means the same thing to
+# all three, so a vertical tab stays inside a token everywhere. The
+# DuckDB oracles' class is generated from WS_CHARS too (sql_tokens).
 WS_CHARS = " \t\n\f\r"
 WS = f"[{WS_CHARS}]+"
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokens of `text`, empty strings dropped."""
-    return F.filter(F.split(text, WS), lambda t: t != "")
+def tokens(text: Column, sep: str = WS) -> Column:
+    """The `sep`-separated (default: whitespace) tokens of `text`, empty
+    strings dropped."""
+    return F.filter(F.split(text, sep), lambda t: t != "")
+
+
+def sql_regex(pattern: str) -> str:
+    """`pattern` as a DuckDB string literal that RE2 reads as the same
+    regex: control characters become \\xHH escapes, quotes are doubled."""
+    body = "".join(
+        c if c.isprintable() else f"\\x{ord(c):02x}" for c in pattern
+    )
+    return "'" + body.replace("'", "''") + "'"
+
+
+def sql_tokens(expr: str, sep: str = WS) -> str:
+    """DuckDB twin of `tokens`: the list of `sep`-separated tokens of the
+    SQL expression `expr`, empty strings dropped."""
+    split = f"string_split_regex({expr}, {sql_regex(sep)})"
+    return f"list_filter({split}, t -> t <> '')"
 
 
 def token_count(text: Column) -> Column:

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST = "_manifest"
@@ -84,7 +84,3 @@ def resumable_write(
             _mark_done(out_dir, b)
         written.extend(batch)
     return {"written": written, "skipped": skipped}
-
-
-def read_resumable(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotiff_spark import oracle as _oracle
-from geotiff_spark.operators.textstats import tokens
+from geotiff_spark.operators.textstats import sql_tokens, tokens
 from geotiff_spark.pipeline import load_table as _t
 
 
@@ -659,12 +659,9 @@ def q_top_tokens(spark, sf_dir):
     )
 
 
-SQL_TOP_TOKENS = r"""
+SQL_TOP_TOKENS = f"""
 SELECT token, COUNT(*) AS n
-FROM (
-  SELECT unnest(string_split_regex(lower(text), '\s+')) AS token
-  FROM documents
-) WHERE token <> ''
+FROM (SELECT unnest({sql_tokens('lower(text)')}) AS token FROM documents)
 GROUP BY token ORDER BY n DESC, token ASC LIMIT 20
 """
 

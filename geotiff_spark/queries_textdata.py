@@ -11,7 +11,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import functions as F
 
-from geotiff_spark.operators import dedup, packing, similarity, textstats
+from geotiff_spark.operators import (
+    bpe, dedup, packing, similarity, textstats,
+)
 from geotiff_spark.pipeline import load_table as _t
 
 
@@ -33,32 +35,74 @@ def q_token_jaccard_pairs(spark, sf_dir):
     )
 
 
-# DuckDB CTEs of the exact token-set Jaccard oracles: `tok` holds each
-# document's distinct whitespace tokens, `sizes` the set sizes and `inter`
-# the intersection size of every document pair sharing a token.
-_TOKEN_SETS = r"""tok AS (
+# Each concept that several DuckDB oracles share is one SQL fragment,
+# defined beside its first user and interpolated into every oracle that
+# needs it. Every oracle string stays self-contained (no macros or
+# views), because it runs on a fresh connection.
+
+# `toks(doc_id, tk)`: each document's whitespace token list.
+_TOKS = f"""toks AS (
+  SELECT doc_id, {textstats.sql_tokens('text')} AS tk
+  FROM documents
+)"""
+
+
+def _token_set(src: str) -> str:
+    """CTE `tok(doc_id, tok)`: the distinct whitespace tokens of each
+    document of relation `src`."""
+    return f"""tok AS (
   SELECT DISTINCT doc_id, tok
-  FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-    FROM documents
-  ) WHERE tok <> ''
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
+  FROM (SELECT doc_id, unnest({textstats.sql_tokens('text')}) AS tok
+        FROM {src})
+)"""
+
+
+def _jaccard_pairs(threshold: float) -> str:
+    """CTEs over the element sets in `tok(doc_id, tok)`: `sizes` holds the
+    set sizes, `inter` the intersection size of every document pair
+    sharing an element, and `pairs(id_a, id_b, jaccard)` the pairs whose
+    Jaccard similarity reaches `threshold`."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
   FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
+),
+pairs AS (
+  SELECT id_a, id_b, n_inter / (sa.n_tok + sb.n_tok - n_inter) AS jaccard
+  FROM inter
+  JOIN sizes sa ON sa.doc_id = id_a
+  JOIN sizes sb ON sb.doc_id = id_b
+  WHERE n_inter / (sa.n_tok + sb.n_tok - n_inter) >= {threshold}
 )"""
 
 
-SQL_TOKEN_JACCARD_PAIRS = rf"""
-WITH {_TOKEN_SETS}
-SELECT id_a, id_b,
-       ROUND(n_inter / (sa.n_tok + sb.n_tok - n_inter), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE n_inter / (sa.n_tok + sb.n_tok - n_inter) >= 0.8
+def _components(nodes: str) -> str:
+    """CTEs for the connected components of the `pairs` graph (needs WITH
+    RECURSIVE): `comp(doc_id, component_id)` labels every document of
+    relation `nodes` with the least id it reaches, singletons their own."""
+    return f"""edges AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION ALL
+  SELECT id_b, id_a FROM pairs
+),
+reach(a, b) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b
+),
+comp AS (
+  SELECT n.doc_id,
+         LEAST(n.doc_id, COALESCE(MIN(r.b), n.doc_id)) AS component_id
+  FROM {nodes} n LEFT JOIN reach r ON r.a = n.doc_id
+  GROUP BY n.doc_id
+)"""
+
+
+SQL_TOKEN_JACCARD_PAIRS = f"""
+WITH {_token_set('documents')},
+{_jaccard_pairs(0.8)}
+SELECT id_a, id_b, ROUND(jaccard, 6) AS jaccard FROM pairs
 """
 
 
@@ -72,28 +116,18 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     return dedup.char_ngram_jaccard_pairs(docs, n=5, threshold=0.8)
 
 
-SQL_NGRAM_JACCARD_PAIRS = """
-WITH grams AS (
+SQL_NGRAM_JACCARD_PAIRS = f"""
+WITH tok AS (
   SELECT doc_id,
          unnest(list_distinct([
            substr(text, CAST(i AS INTEGER), 5)
            for i in range(1, length(text) - 4 + 1)
-         ])) AS g
+         ])) AS tok
   FROM documents
   WHERE doc_id < 200 AND length(text) >= 5
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_g FROM grams GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b,
-       ROUND(n_inter / (sa.n_g + sb.n_g - n_inter), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE n_inter / (sa.n_g + sb.n_g - n_inter) >= 0.8
+{_jaccard_pairs(0.8)}
+SELECT id_a, id_b, ROUND(jaccard, 6) AS jaccard FROM pairs
 """
 
 
@@ -123,29 +157,11 @@ def q_dedup_components_exact(spark, sf_dir):
     return dedup.connected_components(pairs, nodes=docs)
 
 
-SQL_DEDUP_COMPONENTS = rf"""
-WITH RECURSIVE {_TOKEN_SETS},
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-  WHERE n_inter / (sa.n_tok + sb.n_tok - n_inter) >= 0.8
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-),
-reach(a, b) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b
-)
-SELECT d.doc_id,
-       LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS component_id
-FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-GROUP BY d.doc_id
+SQL_DEDUP_COMPONENTS = f"""
+WITH RECURSIVE {_token_set('documents')},
+{_jaccard_pairs(0.8)},
+{_components('documents')}
+SELECT doc_id, component_id FROM comp
 """
 
 
@@ -352,11 +368,9 @@ def q_corpus_curation_exact(spark, sf_dir):
     return _corpus_curation(spark, sf_dir, exact_pairs=True)
 
 
-SQL_CORPUS_CURATION = r"""
+SQL_CORPUS_CURATION = f"""
 WITH RECURSIVE kept AS (
-  SELECT doc_id, text, lang,
-         len(list_filter(string_split_regex(text, '\s+'), t -> t <> ''))
-           AS n_tokens
+  SELECT doc_id, text, lang, len({textstats.sql_tokens('text')}) AS n_tokens
   FROM documents
   WHERE len(text) >= 20
 ),
@@ -367,42 +381,9 @@ exact_keep AS (
 survivors AS (
   SELECT k.* FROM kept2 k JOIN exact_keep e ON e.doc_id = k.doc_id
 ),
-tok AS (
-  SELECT DISTINCT doc_id, tok
-  FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-    FROM survivors
-  ) WHERE tok <> ''
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-  WHERE n_inter / (sa.n_tok + sb.n_tok - n_inter) >= 0.8
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-),
-reach(a, b) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b
-),
-comp AS (
-  SELECT s.doc_id,
-         LEAST(s.doc_id, COALESCE(MIN(r.b), s.doc_id)) AS component_id
-  FROM survivors s LEFT JOIN reach r ON r.a = s.doc_id
-  GROUP BY s.doc_id
-),
+{_token_set('survivors')},
+{_jaccard_pairs(0.8)},
+{_components('survivors')},
 final AS (
   SELECT s.* FROM survivors s
   JOIN comp c ON c.doc_id = s.doc_id AND s.doc_id = c.component_id
@@ -441,11 +422,7 @@ def _sql_minhash_lsh_pairs() -> str:
         for i in range(64)
     )
     return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tk
-  FROM documents
-),
+WITH {_TOKS},
 sh AS (
   SELECT DISTINCT doc_id,
          array_to_string(tk[CAST(i AS INT):CAST(i + 2 AS INT)], ' ') AS shingle
@@ -506,14 +483,8 @@ def q_simhash_pairs(spark, sf_dir):
     )
 
 
-SQL_SIMHASH_PAIRS = r"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, tok FROM (
-    SELECT doc_id,
-           unnest(list_filter(string_split_regex(text, '\s+'),
-                              t -> t <> '')) AS tok
-    FROM documents)
-),
+SQL_SIMHASH_PAIRS = f"""
+WITH {_token_set('documents')},
 hv AS (
   SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h FROM tok
 ),
@@ -548,7 +519,19 @@ def q_ann_cosine_topk(spark, sf_dir):
     return similarity.brute_force_topk(emb, queries, k=5)
 
 
-SQL_ANN_COSINE_TOPK = """
+# Top-5 re-rank of the ANN oracles over `scored(query_id, nn_id, cos)`,
+# ties broken by the smaller nn_id. Each oracle keeps its own cosine:
+# list_cosine_similarity and the sequential list_dot_product fold pin
+# different engine numerics.
+_TOP5 = """SELECT query_id, nn_id, rank FROM (
+  SELECT query_id, nn_id,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY cos DESC, nn_id ASC) AS rank
+  FROM scored
+) WHERE rank <= 5"""
+
+
+SQL_ANN_COSINE_TOPK = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10),
 scored AS (
   SELECT q.query_id, c.vec_id AS nn_id,
@@ -557,12 +540,7 @@ scored AS (
   FROM q, embeddings c
   WHERE c.vec_id <> q.query_id
 )
-SELECT query_id, nn_id, rank FROM (
-  SELECT query_id, nn_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, nn_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 5
+{_TOP5}
 """
 
 
@@ -704,14 +682,9 @@ def q_dedup_keeper(spark, sf_dir):
     )
 
 
-SQL_DEDUP_KEEPER = rf"""
-WITH {_TOKEN_SETS},
-pairs AS (
-  SELECT id_a, id_b FROM inter
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-  WHERE n_inter / (sa.n_tok + sb.n_tok - n_inter) >= 0.8
-),
+SQL_DEDUP_KEEPER = f"""
+WITH {_token_set('documents')},
+{_jaccard_pairs(0.8)},
 neigh AS (
   SELECT id_a AS doc_id, id_b AS n_id FROM pairs
   UNION ALL
@@ -824,17 +797,17 @@ def chunk_dedup_frame(docs):
     )
 
 
-SQL_CHUNK_DEDUP = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tk
-  FROM documents
-),
+# `chunks(doc_id, pos, chunk)`: the 10-token chunker of chunks_frame.
+_CHUNKS = f"""{_TOKS},
 chunks AS (
   SELECT doc_id, i AS pos,
          array_to_string(tk[i * 10 + 1 : i * 10 + 10], ' ') AS chunk
   FROM toks, UNNEST(range(CAST(CEIL(len(tk) / 10.0) AS BIGINT))) AS u(i)
-),
+)"""
+
+
+SQL_CHUNK_DEDUP = f"""
+WITH {_CHUNKS},
 kept AS (
   SELECT doc_id, pos, chunk,
          ROW_NUMBER() OVER (PARTITION BY md5(chunk)
@@ -912,17 +885,8 @@ def q_bloom_chunk_dedup(spark, sf_dir):
     return out
 
 
-SQL_BLOOM_CHUNK_DEDUP = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tk
-  FROM documents
-),
-chunks AS (
-  SELECT doc_id, i AS pos,
-         array_to_string(tk[i * 10 + 1 : i * 10 + 10], ' ') AS chunk
-  FROM toks, UNNEST(range(CAST(CEIL(len(tk) / 10.0) AS BIGINT))) AS u(i)
-),
+SQL_BLOOM_CHUNK_DEDUP = f"""
+WITH {_CHUNKS},
 seeds AS (SELECT UNNEST(range(1, 5)) AS seed),
 hist_bits AS (
   SELECT DISTINCT seed,
@@ -1103,14 +1067,15 @@ def q_pack_sequences(spark, sf_dir):
     )
 
 
-SQL_PACK_SEQUENCES = r"""
-WITH RECURSIVE docs_t AS (
-  SELECT doc_id, doc_id % 32 AS bucket,
-         CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                              t -> t <> '')) AS BIGINT) AS n_tokens,
+def _next_fit_pack(counts: str) -> str:
+    """The trailing CTEs and SELECT of a pack_sequences oracle (needs WITH
+    RECURSIVE): next-fit packing of relation `counts(doc_id, n_tokens)`
+    into 512-token bins within 32 doc_id buckets, in doc_id order."""
+    return f"""docs_t AS (
+  SELECT doc_id, doc_id % 32 AS bucket, n_tokens,
          ROW_NUMBER() OVER (PARTITION BY doc_id % 32
                             ORDER BY doc_id) AS rn
-  FROM documents WHERE text IS NOT NULL
+  FROM {counts}
 ),
 pack AS (
   SELECT bucket, rn, doc_id, n_tokens,
@@ -1125,7 +1090,16 @@ pack AS (
   FROM pack p
   JOIN docs_t d ON d.bucket = p.bucket AND d.rn = p.rn + 1
 )
-SELECT doc_id, n_tokens, bucket, bin_id FROM pack
+SELECT doc_id, n_tokens, bucket, bin_id FROM pack"""
+
+
+SQL_PACK_SEQUENCES = f"""
+WITH RECURSIVE counts AS (
+  SELECT doc_id, CAST(len({textstats.sql_tokens('lower(text)')}) AS BIGINT)
+           AS n_tokens
+  FROM documents WHERE text IS NOT NULL
+),
+{_next_fit_pack('counts')}
 """
 
 
@@ -1151,9 +1125,9 @@ def rep_signals_frame(docs):
     interpreted higher-order aggregate (~24 s at 2M pages); one Python
     dict-count per doc over the same tokens is ~5× cheaper and still
     row-local — zero shuffle either way. The token split is
-    textstats.WS, the tokenizer of every engine query, so it tokenizes
-    exactly as the DuckDB oracle's string_split_regex(text, '\\s+')
-    does; every count is an exact integer, and the fraction arithmetic
+    textstats.WS, the class that textstats.tokens and the DuckDB
+    oracle's textstats.sql_tokens are built from, so all three tokenize
+    alike; every count is an exact integer, and the fraction arithmetic
     (division + round) stays in the SAME JVM expressions as before, so
     the output doubles are bit-identical to the previous form and to
     the oracle (equality pinned by tests/test_plan_shapes.py semantics
@@ -1222,12 +1196,8 @@ def rep_signals_frame(docs):
     )
 
 
-SQL_REP_SIGNALS = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tk
-  FROM documents
-),
+SQL_REP_SIGNALS = f"""
+WITH {_TOKS},
 g AS (
   SELECT doc_id,
          CASE WHEN len(tk) >= 2 THEN
@@ -1408,11 +1378,9 @@ def q_tfidf_top_terms(spark, sf_dir):
     )
 
 
-SQL_TFIDF_TOP_TERMS = r"""
+SQL_TFIDF_TOP_TERMS = f"""
 WITH tok AS (
-  SELECT doc_id, lang,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                            t -> t <> '')) AS token
+  SELECT doc_id, lang, unnest({textstats.sql_tokens('lower(text)')}) AS token
   FROM documents
 ),
 tf AS (SELECT lang, token, COUNT(*) AS tf_sum FROM tok GROUP BY 1, 2),
@@ -1444,12 +1412,32 @@ def q_ann_lsh_topk(spark, sf_dir):
     return similarity.lsh_topk(emb, queries, k=5, plane_mode="md5")
 
 
+def _dot_cos(a: str, b: str) -> str:
+    """Cosine of the DOUBLE[] expressions `a` and `b` through
+    list_dot_product, which equals the engine's sequential float64 fold
+    (the md5 ANN paths) bit for bit."""
+    return (f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
+            f" * sqrt(list_dot_product({b}, {b})))")
+
+
+# `emb(vec_id, e)` and, after the oracle's `cand(query_id, nn_id)`, the
+# exact re-rank of the md5 ANN oracles.
+_EMB = "emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)"
+_RERANK = f"""scored AS (
+  SELECT cand.query_id, cand.nn_id, {_dot_cos('qe.e', 'ce.e')} AS cos
+  FROM cand
+  JOIN emb qe ON qe.vec_id = cand.query_id
+  JOIN emb ce ON ce.vec_id = cand.nn_id
+)
+{_TOP5}"""
+
+
 # DuckDB twin of q_ann_lsh_topk (dim=64, n_planes=4, n_tables=8, k=5):
 # identical md5-derived planes, list_dot_product == the engine's
 # sequential float64 fold (verified bit-exact), identical bucket ids
 # (sum of sign bits + table offset), then exact cosine re-rank on the
 # candidate union with the same (cos DESC, nn_id ASC) tie-break.
-SQL_ANN_LSH_TOPK = """
+SQL_ANN_LSH_TOPK = f"""
 WITH planes AS (
   SELECT j, d,
          ('0x' || substr(md5('plane:' || j || ':' || d), 1, 16))
@@ -1457,7 +1445,7 @@ WITH planes AS (
   FROM range(0, 32) t1(j), range(0, 64) t2(d)
 ),
 pv AS (SELECT j, list(w ORDER BY d) AS p FROM planes GROUP BY j),
-emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+{_EMB},
 sv AS (
   SELECT emb.vec_id, pv.j,
          CASE WHEN list_dot_product(emb.e, pv.p) > 0 THEN 1 ELSE 0 END AS s
@@ -1473,21 +1461,7 @@ cand AS (
   FROM buckets q JOIN buckets c USING (bucket)
   WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id
 ),
-scored AS (
-  SELECT cand.query_id, cand.nn_id,
-         list_dot_product(qe.e, ce.e)
-           / (sqrt(list_dot_product(qe.e, qe.e))
-              * sqrt(list_dot_product(ce.e, ce.e))) AS cos
-  FROM cand
-  JOIN emb qe ON qe.vec_id = cand.query_id
-  JOIN emb ce ON ce.vec_id = cand.nn_id
-)
-SELECT query_id, nn_id, rank FROM (
-  SELECT query_id, nn_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, nn_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 5
+{_RERANK}
 """
 
 
@@ -1504,8 +1478,8 @@ def q_ann_ivf_topk(spark, sf_dir):
     )
 
 
-SQL_ANN_IVF_TOPK = """
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+SQL_ANN_IVF_TOPK = f"""
+WITH {_EMB},
 anch AS (
   SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
            - 1 AS aid,
@@ -1515,10 +1489,7 @@ anch AS (
   LIMIT 16
 ),
 cosines AS (
-  SELECT emb.vec_id, anch.aid,
-         list_dot_product(emb.e, anch.a)
-           / (sqrt(list_dot_product(emb.e, emb.e))
-              * sqrt(list_dot_product(anch.a, anch.a))) AS cos
+  SELECT emb.vec_id, anch.aid, {_dot_cos('emb.e', 'anch.a')} AS cos
   FROM emb, anch
 ),
 assigned AS (
@@ -1540,21 +1511,7 @@ cand AS (
   FROM probes p JOIN assigned a USING (cid)
   WHERE a.nn_id <> p.query_id
 ),
-scored AS (
-  SELECT cand.query_id, cand.nn_id,
-         list_dot_product(qe.e, ce.e)
-           / (sqrt(list_dot_product(qe.e, qe.e))
-              * sqrt(list_dot_product(ce.e, ce.e))) AS cos
-  FROM cand
-  JOIN emb qe ON qe.vec_id = cand.query_id
-  JOIN emb ce ON ce.vec_id = cand.nn_id
-)
-SELECT query_id, nn_id, rank FROM (
-  SELECT query_id, nn_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, nn_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 5
+{_RERANK}
 """
 
 
@@ -1588,13 +1545,10 @@ def q_minhash_recall(spark, sf_dir):
     )
 
 
-SQL_MINHASH_RECALL = rf"""
-WITH {_TOKEN_SETS}
-SELECT COUNT(*) AS n_exact, TRUE AS subset_ok, TRUE AS recall_ok
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE n_inter / (sa.n_tok + sb.n_tok - n_inter) >= 0.7
+SQL_MINHASH_RECALL = f"""
+WITH {_token_set('documents')},
+{_jaccard_pairs(0.7)}
+SELECT COUNT(*) AS n_exact, TRUE AS subset_ok, TRUE AS recall_ok FROM pairs
 """
 
 
@@ -1628,11 +1582,22 @@ def q_simhash_complete(spark, sf_dir):
     )
 
 
-SQL_SIMHASH_COMPLETE = r"""
+SQL_SIMHASH_COMPLETE = f"""
 SELECT COUNT(*) AS n_docs, TRUE AS complete_ok, TRUE AS sound_ok
 FROM documents
-WHERE len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) > 0
+WHERE len({textstats.sql_tokens('text')}) > 0
 """
+
+
+def _exact_top5(emb, queries):
+    """Exact brute-force top-5 (query_id, nn_id) that the ANN gates
+    score against, materialized once: each gate reads it more than once
+    (a count plus one join per approximate variant)."""
+    return (
+        similarity.brute_force_topk(emb, queries, k=5)
+        .select("query_id", "nn_id")
+        .localCheckpoint(eager=True)
+    )
 
 
 def q_ann_recall(spark, sf_dir):
@@ -1640,12 +1605,7 @@ def q_ann_recall(spark, sf_dir):
     10 queries): flags pinned TRUE by the oracle."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    # three consumers (count + two recall joins) — materialize once
-    exact = (
-        similarity.brute_force_topk(emb, queries, k=5)
-        .select("query_id", "nn_id")
-        .localCheckpoint(eager=True)
-    )
+    exact = _exact_top5(emb, queries)
     n_exact = exact.count()
 
     def recall(approx):
@@ -1682,11 +1642,7 @@ def q_ann_ivf_gate(spark, sf_dir):
     deterministic; the oracle pins them TRUE and pins n_exact."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    exact = (
-        similarity.brute_force_topk(emb, queries, k=5)
-        .select("query_id", "nn_id")
-        .localCheckpoint(eager=True)
-    )
+    exact = _exact_top5(emb, queries)
     n_exact = exact.count()
     res = similarity.ivf_topk(
         emb, queries, k=5, n_centroids=16, n_probe=4
@@ -1736,11 +1692,11 @@ def q_token_count(spark, sf_dir):
     )
 
 
-SQL_TOKEN_COUNT = rf"""
+SQL_TOKEN_COUNT = f"""
 SELECT doc_id,
-       len(list_filter(string_split_regex(lower(text), '\s+'),
-                       t -> t <> '')) AS n_tokens,
-       len(regexp_extract_all(text, '{textstats.BPE_REGEX.replace("'", "''")}')) AS n_bpe_tokens
+       len({textstats.sql_tokens('lower(text)')}) AS n_tokens,
+       len(regexp_extract_all(text, {textstats.sql_regex(textstats.BPE_REGEX)}))
+         AS n_bpe_tokens
 FROM documents
 """
 
@@ -1754,10 +1710,8 @@ def q_language_id(spark, sf_dir):
 
 def _sql_stopword_hits(lang: str) -> str:
     words = ", ".join(f"'{w}'" for w in textstats.STOPWORDS[lang])
-    return (
-        f"len(list_intersect(list_distinct(list_filter("
-        f"string_split_regex(lower(text), '\\s+'), t -> t <> '')), [{words}]))"
-    )
+    toks = textstats.sql_tokens("lower(text)")
+    return f"len(list_intersect(list_distinct({toks}), [{words}]))"
 
 
 SQL_LANGUAGE_ID = f"""
@@ -1795,16 +1749,15 @@ def q_quality_features(spark, sf_dir):
     )
 
 
-SQL_QUALITY_FEATURES = rf"""
+SQL_QUALITY_FEATURES = f"""
 WITH base AS (
   SELECT doc_id, text,
          len(text) AS n_chars_m,
-         len(list_filter(string_split_regex(lower(text), '\s+'),
-                         t -> t <> '')) AS n_tokens
+         len({textstats.sql_tokens('lower(text)')}) AS n_tokens
   FROM documents
 )
 SELECT doc_id, n_chars_m, n_tokens,
-       ROUND(len(regexp_replace(text, '\s+', '', 'g')) / GREATEST(n_tokens, 1), 6) AS mean_tok_len,
+       ROUND(len(regexp_replace(text, {textstats.sql_regex(textstats.WS)}, '', 'g')) / GREATEST(n_tokens, 1), 6) AS mean_tok_len,
        ROUND(len(regexp_replace(text, '[^0-9]', '', 'g')) / GREATEST(n_chars_m, 1), 6) AS digit_ratio,
        ROUND({_sql_stopword_hits('en')} / GREATEST(n_tokens, 1), 6) AS stopword_ratio
 FROM base
@@ -1876,12 +1829,8 @@ def q_decontaminate(spark, sf_dir):
     )
 
 
-SQL_DECONTAMINATE = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tk
-  FROM documents
-),
+SQL_DECONTAMINATE = f"""
+WITH {_TOKS},
 grams AS (
   SELECT doc_id,
          array_to_string(tk[i : i + 7], ' ') AS gram
@@ -1920,18 +1869,23 @@ def q_substring_dedup(spark, sf_dir):
     return dedup.exact_substring_dedup(docs, k=50)
 
 
-SQL_SUBSTRING_DEDUP = """
+def _substring_dedup(fps: str, select: str = "") -> str:
+    """ExactSubstr oracle: `win(doc_id, i, d)` holds the digest of every
+    50-char window, `select` adds CTEs that pick the fingerprints
+    `fps(doc_id, i, d)` out of it, and every character covered by a
+    fingerprint whose digest occurs twice or more is removed."""
+    return f"""
 WITH docs_t AS (
   SELECT doc_id, text FROM documents WHERE text IS NOT NULL
 ),
 win AS (
   SELECT doc_id, i, substr(md5(substr(text, CAST(i AS INT), 50)), 1, 16) AS d
   FROM docs_t, unnest(range(1, len(text) - 48)) t(i)
-),
-dup AS (SELECT d FROM win GROUP BY d HAVING COUNT(*) >= 2),
+),{select}
+dup AS (SELECT d FROM {fps} GROUP BY d HAVING COUNT(*) >= 2),
 cover AS (
-  SELECT DISTINCT w.doc_id, w.i + o AS p
-  FROM win w JOIN dup USING (d), range(0, 50) t(o)
+  SELECT DISTINCT f.doc_id, f.i + o AS p
+  FROM {fps} f JOIN dup USING (d), range(0, 50) t(o)
 ),
 chars AS (
   SELECT doc_id, p, substr(text, CAST(p AS INT), 1) AS ch
@@ -1956,6 +1910,9 @@ FROM docs_t d LEFT JOIN cleaned cl USING (doc_id)
 """
 
 
+SQL_SUBSTRING_DEDUP = _substring_dedup("win")
+
+
 def q_substring_dedup_sampled(spark, sf_dir):
     """Winnowed ExactSubstr (Schleimer et al. 2003 selection over Lee
     et al. 2022 spans): only the leftmost-minimal digest per sliding
@@ -1966,14 +1923,7 @@ def q_substring_dedup_sampled(spark, sf_dir):
     return dedup.exact_substring_dedup(docs, k=50, winnow=8)
 
 
-SQL_SUBSTRING_DEDUP_SAMPLED = """
-WITH docs_t AS (
-  SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-),
-win AS (
-  SELECT doc_id, i, substr(md5(substr(text, CAST(i AS INT), 50)), 1, 16) AS d
-  FROM docs_t, unnest(range(1, len(text) - 48)) t(i)
-),
+SQL_SUBSTRING_DEDUP_SAMPLED = _substring_dedup("selected", """
 npos AS (
   SELECT doc_id, len(text) - 49 AS n_pos FROM docs_t WHERE len(text) >= 50
 ),
@@ -1998,33 +1948,7 @@ sel AS (
 selected AS (
   SELECT s.doc_id, s.i, w.d
   FROM sel s JOIN win w ON w.doc_id = s.doc_id AND w.i = s.i
-),
-dup AS (SELECT d FROM selected GROUP BY d HAVING COUNT(*) >= 2),
-cover AS (
-  SELECT DISTINCT s.doc_id, s.i + o AS p
-  FROM selected s JOIN dup USING (d), range(0, 50) t(o)
-),
-chars AS (
-  SELECT doc_id, p, substr(text, CAST(p AS INT), 1) AS ch
-  FROM docs_t, unnest(range(1, len(text) + 1)) t(p)
-),
-cleaned AS (
-  SELECT c.doc_id,
-         COALESCE(
-           string_agg(CASE WHEN v.p IS NULL THEN c.ch END, ''
-                      ORDER BY c.p),
-           '') AS cleaned
-  FROM chars c LEFT JOIN cover v ON v.doc_id = c.doc_id AND v.p = c.p
-  GROUP BY c.doc_id
-)
-SELECT d.doc_id,
-       CAST(len(d.text) AS INT) AS n_chars,
-       CAST(len(d.text) - len(COALESCE(cl.cleaned, d.text)) AS INT)
-         AS n_removed,
-       CAST(len(COALESCE(cl.cleaned, d.text)) AS INT) AS cleaned_len,
-       md5(COALESCE(cl.cleaned, d.text)) AS cleaned_md5
-FROM docs_t d LEFT JOIN cleaned cl USING (doc_id)
-"""
+),""")
 
 
 def q_bpe_encode(spark, sf_dir):
@@ -2033,26 +1957,24 @@ def q_bpe_encode(spark, sf_dir):
     DuckDB oracle replays the greedy merge loop exactly with a
     recursive CTE over separator-joined token states (first-occurrence
     string surgery == bpe_apply's leftmost-lowest-rank step)."""
-    from geotiff_spark.operators import bpe
-
     return bpe.bpe_encode_counts(_t(spark, sf_dir, "documents"))
 
 
-def _sql_bpe_encode() -> str:
-    from geotiff_spark.operators.bpe import DEFAULT_MERGES
-
-    rows = ",\n  ".join(
-        f"({i}, '{l}', '{r}')" for i, (l, r) in enumerate(DEFAULT_MERGES)
-    )
-    return f"""
-WITH RECURSIVE
-merges(rank, l, r) AS (VALUES
-  {rows}
+# CTEs of the BPE oracles (need WITH RECURSIVE), replaying bpe_apply's
+# greedy merge loop over DEFAULT_MERGES: `docw(doc_id, w)` holds every
+# word occurrence, split on bpe._WORD_SEP, and `final(word, n_tok)` the
+# BPE token count of each distinct word. A state is the word's tokens
+# joined and framed by chr(31); each step rewrites the first occurrence
+# of the lowest-rank pair present (== bpe_apply's leftmost-lowest-rank
+# step).
+_BPE_MERGES = ",\n  ".join(
+    f"({i}, '{l}', '{r}')" for i, (l, r) in enumerate(bpe.DEFAULT_MERGES)
+)
+_BPE_WORDS = f"""merges(rank, l, r) AS (VALUES
+  {_BPE_MERGES}
 ),
 docw AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(text, '[\\s\\x1f]+'),
-                            t -> t <> '')) AS w
+  SELECT doc_id, unnest({textstats.sql_tokens('text', sep=bpe._WORD_SEP)}) AS w
   FROM documents WHERE text IS NOT NULL
 ),
 words(word) AS (SELECT DISTINCT w FROM docw),
@@ -2086,7 +2008,11 @@ final AS (
   WHERE NOT EXISTS (
     SELECT 1 FROM merges m
     WHERE contains(e.state, chr(31)||m.l||chr(31)||m.r||chr(31)))
-),
+)"""
+
+
+SQL_BPE_ENCODE = f"""
+WITH RECURSIVE {_BPE_WORDS},
 per_doc AS (
   SELECT d.doc_id, COUNT(*) AS n_words, SUM(f.n_tok) AS n_bpe_tokens
   FROM docw d JOIN final f ON f.word = d.w
@@ -2100,16 +2026,11 @@ LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-SQL_BPE_ENCODE = _sql_bpe_encode()
-
-
 def q_pack_sequences_bpe(spark, sf_dir):
     """Sequence packing keyed on REAL BPE token counts (the production
     pairing: context windows are budgeted in model tokens, not
     whitespace words): bpe_encode_counts feeds pack_sequences. Same
     next-fit recurrence, same 512/32 shape as pack_sequences."""
-    from geotiff_spark.operators import bpe
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     counts = bpe.bpe_encode_counts(docs).select(
         "doc_id", F.col("n_bpe_tokens").alias("n_tokens")
@@ -2117,57 +2038,10 @@ def q_pack_sequences_bpe(spark, sf_dir):
     return packing.pack_sequences(counts, capacity=512, n_buckets=32)
 
 
-def _sql_pack_sequences_bpe() -> str:
-    """Compose the BPE recursive replay with the next-fit pack
-    recursion — two recursive CTEs in one WITH RECURSIVE."""
-    from geotiff_spark.operators.bpe import DEFAULT_MERGES
-
-    rows = ",\n  ".join(
-        f"({i}, '{l}', '{r}')" for i, (l, r) in enumerate(DEFAULT_MERGES)
-    )
-    return f"""
-WITH RECURSIVE
-merges(rank, l, r) AS (VALUES
-  {rows}
-),
-docw AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(text, '[\\s\\x1f]+'),
-                            t -> t <> '')) AS w
-  FROM documents WHERE text IS NOT NULL
-),
-words(word) AS (SELECT DISTINCT w FROM docw),
-enc AS (
-  SELECT word,
-         chr(31) || array_to_string(
-           list_transform(range(1, len(word) + 1), i -> word[i:i]),
-           chr(31)) || chr(31) AS state
-  FROM words
-  UNION ALL
-  SELECT word,
-         substr(state, 1,
-                strpos(state, chr(31)||m.l||chr(31)||m.r||chr(31)) - 1)
-           || chr(31) || m.l || m.r || chr(31)
-           || substr(state,
-                     strpos(state, chr(31)||m.l||chr(31)||m.r||chr(31))
-                     + len(chr(31)||m.l||chr(31)||m.r||chr(31)))
-  FROM (
-    SELECT e.word, e.state,
-           (SELECT m2.rank FROM merges m2
-            WHERE contains(e.state, chr(31)||m2.l||chr(31)||m2.r||chr(31))
-            ORDER BY m2.rank LIMIT 1) AS best
-    FROM enc e
-  ) e JOIN merges m ON m.rank = e.best
-),
-final AS (
-  SELECT word,
-         len(list_filter(string_split(state, chr(31)), t -> t <> ''))
-           AS n_tok
-  FROM enc e
-  WHERE NOT EXISTS (
-    SELECT 1 FROM merges m
-    WHERE contains(e.state, chr(31)||m.l||chr(31)||m.r||chr(31)))
-),
+# The BPE merge replay composed with the next-fit pack recursion: two
+# recursive CTEs in one WITH RECURSIVE.
+SQL_PACK_SEQUENCES_BPE = f"""
+WITH RECURSIVE {_BPE_WORDS},
 per_doc AS (
   SELECT doc.doc_id, CAST(COALESCE(SUM(f.n_tok), 0) AS BIGINT) AS n_tokens
   FROM (SELECT doc_id FROM documents WHERE text IS NOT NULL) doc
@@ -2175,30 +2049,8 @@ per_doc AS (
   LEFT JOIN final f ON f.word = d.w
   GROUP BY doc.doc_id
 ),
-docs_t AS (
-  SELECT doc_id, doc_id % 32 AS bucket, n_tokens,
-         ROW_NUMBER() OVER (PARTITION BY doc_id % 32
-                            ORDER BY doc_id) AS rn
-  FROM per_doc
-),
-pack AS (
-  SELECT bucket, rn, doc_id, n_tokens,
-         CAST(0 AS BIGINT) AS bin_id, n_tokens AS fill
-  FROM docs_t WHERE rn = 1
-  UNION ALL
-  SELECT d.bucket, d.rn, d.doc_id, d.n_tokens,
-         CASE WHEN p.fill + d.n_tokens <= 512
-              THEN p.bin_id ELSE p.bin_id + 1 END,
-         CASE WHEN p.fill + d.n_tokens <= 512
-              THEN p.fill + d.n_tokens ELSE d.n_tokens END
-  FROM pack p
-  JOIN docs_t d ON d.bucket = p.bucket AND d.rn = p.rn + 1
-)
-SELECT doc_id, n_tokens, bucket, bin_id FROM pack
+{_next_fit_pack('per_doc')}
 """
-
-
-SQL_PACK_SEQUENCES_BPE = _sql_pack_sequences_bpe()
 
 
 def q_repeated_ngrams(spark, sf_dir):
@@ -2210,10 +2062,9 @@ def q_repeated_ngrams(spark, sf_dir):
     return dedup.repeated_ngram_mine(docs, n=13, min_count=2, top_n=50)
 
 
-SQL_REPEATED_NGRAMS = r"""
+SQL_REPEATED_NGRAMS = f"""
 WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tk
+  SELECT doc_id, {textstats.sql_tokens('text')} AS tk
   FROM documents WHERE text IS NOT NULL
 ),
 g AS (
