@@ -5,12 +5,15 @@ task, and each stage of a row-local chain such as decode → tiles → stats
 ships its whole output across Arrow to the JVM and back into the next
 runner although no row ever leaves the partition between the stages.
 Fusing saves one Arrow round trip (serialize, copy, deserialize) per
-fused stage. It was first measured against a larger fixed cost, ~0.3 s
-of worker CPU per operator per task: ``worker_util.setup_spark_files``
-calls ``importlib.invalidate_caches()``, which made each zipimporter on
-the worker path re-read the directory of ``pyspark.zip``. That cost is
-now removed at its root by ``geotiff_spark.worker_daemon`` (see
-``session.py``), which keeps Spark's archives off the worker path.
+fused stage. It was first measured against larger fixed costs per Python
+task, which fusion only spread over fewer operators:
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``,
+which made each zipimporter on the worker path re-read the directory of
+``pyspark.zip`` (~0.3 s of worker CPU), and the daemon's ``gc.collect()``
+after each task walked the ~74k objects of the worker's imports (33-43 ms).
+Both are now removed at their root by ``geotiff_spark.worker_daemon`` (see
+``session.py``), which keeps Spark's archives off the worker path and
+freezes the imports before it forks the workers.
 
 ``map_in_pandas(df, fn, schema)`` returns a DataFrame that remembers its
 input and its function. When exactly that DataFrame object is handed to

@@ -4,16 +4,21 @@ Scale posture (SURVEY.md §4): AQE on (incl. skew-join splitting), Arrow on
 with large batches (all custom kernels are vectorized pandas UDFs), shuffle
 partitions sized for the sandbox but overridable for a real cluster.
 
-Python workers: Spark puts ``pyspark.zip``, the py4j zip and the
-spark-core jar first on every worker's ``sys.path``, and each task's
-``importlib.invalidate_caches()`` then makes every zipimporter re-read its
-archive (0.2-0.3 s of CPU per task). On a ``local[...]`` master with the
+Python workers: two fixed costs are paid on every Python task. Spark puts
+``pyspark.zip``, the py4j zip and the spark-core jar first on every
+worker's ``sys.path``, and each task's ``importlib.invalidate_caches()``
+then makes every zipimporter re-read its archive (0.2-0.3 s of CPU per
+task). And a reused worker runs a full ``gc.collect()`` after each task,
+which walks the ~74k objects the pyspark, pandas, pyarrow and numpy
+imports left (33-43 ms per task). On a ``local[...]`` master with the
 package imported from a plain directory, the workers start through
 ``geotiff_spark.worker_daemon``, which drops those archives when pyspark is
-importable without them, and the package's parent directory goes first
-on the executors' ``PYTHONPATH`` so the daemon module is found from any
-working directory. When the package comes from a zip (``spark-submit
---py-files``) or the master is a cluster, the stock daemon is kept.
+importable without them and forks the workers from a heap whose imports
+are frozen out of the collector (``gc.freeze()``), and the package's
+parent directory goes first on the executors' ``PYTHONPATH`` so the daemon
+module is found from any working directory. When the package comes from a
+zip (``spark-submit --py-files``) or the master is a cluster, the stock
+daemon is kept.
 """
 
 from __future__ import annotations

@@ -8,11 +8,11 @@ For each seed, runs ``perfbench/run.py --workload W --seed S --seconds 10
 --trace T`` in both checkouts back to back; even seeds run BASE first, odd
 seeds CHANGE first, so a drift of the host's load does not favour one side.
 Exits non-zero on a run whose result is not ``correct``. Prints one line per
-run, then per compared metric each side's median and q1/q3, and the number of
-pairs the change won. An untraced run reports the end-to-end metrics of
-BENCHMARK.json and a traced one its per-layer metrics, so ``--trace 0``
-compares the former and ``--trace 1`` the per-layer metrics named in
-``--metrics``.
+run, then per compared metric each side's median and q1/q3, the number of
+pairs the change won and a verdict (``verdict``). An untraced run reports the
+end-to-end metrics of BENCHMARK.json and a traced one its per-layer metrics,
+so ``--trace 0`` compares the former and ``--trace 1`` the per-layer metrics
+named in ``--metrics``.
 """
 
 from __future__ import annotations
@@ -34,6 +34,32 @@ def run(checkout: str, workload: str, seed: int, trace: int) -> dict:
     if not result.get("correct"):
         sys.exit(f"{checkout} seed {seed}: not correct\n{proc.stderr[-2000:]}")
     return {k: m["value"] for k, m in result["metrics"].items()}
+
+
+def pairs_won(base: list[float], change: list[float], better: str) -> int:
+    """Pairs in which the change is strictly better than the base."""
+    sign = 1 if better == "lower" else -1
+    return sum(sign * (c - b) < 0 for b, c in zip(base, change))
+
+
+def verdict(base: list[float], change: list[float], better: str,
+            bound: float | None = None) -> str:
+    """``gain`` if the change wins at least 9 in 10 pairs and its median
+    is better than the base's by more than the base's interquartile range;
+    ``worse`` if its median is worse than the base's by more than ``bound``
+    (a fraction of the base median; per-layer metrics have none);
+    otherwise ``unresolved`` if the medians differ by more than that range
+    or the range itself is wider than ``bound``, else ``same``."""
+    sign = 1 if better == "lower" else -1
+    q1, base_med, q3 = statistics.quantiles(base, n=4, method="inclusive")
+    shift = sign * (statistics.median(change) - base_med)  # > 0: worse
+    spread = q3 - q1
+    if pairs_won(base, change, better) >= 0.9 * len(base) and -shift > spread:
+        return "gain"
+    limit = float("inf") if bound is None else bound * abs(base_med)
+    if shift > limit:
+        return "worse"
+    return "unresolved" if abs(shift) > spread or spread > limit else "same"
 
 
 def main() -> None:
@@ -69,17 +95,20 @@ def main() -> None:
                      for m in metrics}
             print(f"seed {seed} {side}: {json.dumps(shown)}", flush=True)
     for m in metrics:
-        name, sign = m["name"], (1 if m["better"] == "lower" else -1)
+        name = m["name"]
         base = [r[name] for r in sides["base"]]
         change = [r[name] for r in sides["change"]]
-        won = sum(sign * (c - b) < 0 for b, c in zip(base, change))
         summary = []
         for side, vals in (("base", base), ("change", change)):
             q1, med, q3 = statistics.quantiles(vals, n=4, method="inclusive")
             summary.append(f"{side} {med:.4g} (q1 {q1:.4g}, q3 {q3:.4g})")
+        won = pairs_won(base, change, m["better"])
+        base_med = statistics.median(base)
+        pct = (f"{(statistics.median(change) / base_med - 1) * 100:+.1f}%"
+               if base_med else "base median 0")
         print(f"{args.workload} {name}: {'; '.join(summary)}; "
-              f"change won {won}/{len(base)} pairs "
-              f"({(statistics.median(change) / statistics.median(base) - 1) * 100:+.1f}%)")
+              f"change won {won}/{len(base)} pairs ({pct}): "
+              f"{verdict(base, change, m['better'], m.get('bound'))}")
 
 
 if __name__ == "__main__":
