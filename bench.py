@@ -1,5 +1,6 @@
 """Benchmark harness: the bench table's entries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on get_spark's default master.
+(default /root/testdata/sf0.1) on get_spark's default master, whose cores
+$SPARK_GRAFT_CPUS sets (default: the CPUs this process may use).
 
 Every entry is forced with force_all, `--runs` times (default 3), under a
 job group named after it; its figure is the median of its runs, and every
@@ -18,8 +19,7 @@ in /tmp, so the benchmark measures the ENGINE, not the generator.
 Usage: python bench.py                    # every table entry, three runs each
        python bench.py --only cell_compact zonal_stats --runs 3
                                           # any table or registry names
-       python bench.py --parallelism 8    # local[8] instead of get_spark's
-                                          # default master (scaling runs)
+       SPARK_GRAFT_CPUS=8 python bench.py # local[8] (scaling runs)
 """
 
 from __future__ import annotations
@@ -36,17 +36,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 PAGES_PER_SF = 2_000_000  # sf0.1 -> 200k pages
 STEADY_MIN_PAGES = 2_000_000  # big-n steady state: amortize worker spin-up
 RES = 7  # H3-style cell resolution of the pages pipeline
-
-
-def build_spark(cpus: int | None = None):
-    """local[cpus], or get_spark's default master when cpus is None;
-    shuffle partitions follow the parallelism the session reports."""
-    from geotiff_spark.session import get_spark
-
-    spark = get_spark("bench", master=f"local[{cpus}]" if cpus else None)
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(max(spark.sparkContext.defaultParallelism * 2, 8)))
-    return spark
 
 
 def scale_factor(sf_dir: str) -> float:
@@ -342,7 +331,6 @@ def run(spark, sf_dir: str, only: list[str] | None = None,
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--only", nargs="*", default=None,
                     help="table or registry entries (default: the table)")
     ap.add_argument("--runs", type=int, default=3,
@@ -350,7 +338,9 @@ def main() -> int:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = build_spark(args.parallelism)
+    from geotiff_spark.session import get_spark
+
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     try:
         print(json.dumps(run(spark, sf_dir, args.only, args.runs)))

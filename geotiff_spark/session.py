@@ -1,8 +1,10 @@
 """SparkSession builder with the engine's tuned defaults.
 
 Scale posture (SURVEY.md §4): AQE on (incl. skew-join splitting), Arrow on
-with large batches (all custom kernels are vectorized pandas UDFs), shuffle
-partitions sized for the sandbox but overridable for a real cluster.
+with large batches (all custom kernels are vectorized pandas UDFs), and
+shuffle partitions set to twice the session's ``defaultParallelism`` once
+the context is up, so the shuffle follows the master's cores on every
+entry point; a value in ``extra`` wins.
 
 Python workers: two fixed costs are paid on every Python task. Spark puts
 ``pyspark.zip``, the py4j zip and the spark-core jar first on every
@@ -34,7 +36,6 @@ DEFAULT_CONFIGS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "8192",
-    "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "134217728",
     # broadcast the polygon cell index / raster dim tables aggressively
     "spark.sql.autoBroadcastJoinThreshold": "67108864",
@@ -90,6 +91,7 @@ def _heap_configs() -> dict[str, str]:
 
 _PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 _DAEMON = "spark.python.daemon.module"
+_SHUFFLE = "spark.sql.shuffle.partitions"
 
 
 def _worker_configs(master: str, extra: dict[str, str]) -> dict[str, str]:
@@ -120,4 +122,7 @@ def get_spark(
     for k, v in {**DEFAULT_CONFIGS, **_heap_configs(), **extra,
                  **_worker_configs(master, extra)}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if _SHUFFLE not in extra:
+        spark.conf.set(_SHUFFLE, str(2 * spark.sparkContext.defaultParallelism))
+    return spark

@@ -13,9 +13,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 def spark():
     from geotiff_spark.session import get_spark
 
-    s = get_spark("pytest", master="local[4]", extra={
-        "spark.sql.shuffle.partitions": "8",
-    })
+    s = get_spark("pytest", master="local[4]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

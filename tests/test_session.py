@@ -1,7 +1,8 @@
 """Session start-up: Python workers import pyspark from its installation,
 not from the archives Spark puts first on the worker path, fork from a
-daemon whose imports are frozen out of the garbage collector, and the
-worker daemon module is found from any working directory."""
+daemon whose imports are frozen out of the garbage collector, the
+worker daemon module is found from any working directory, and shuffle
+partitions are twice the session's parallelism."""
 
 from __future__ import annotations
 
@@ -71,6 +72,7 @@ def plus_one(batches):
         yield b + 1
 print("SUM", spark.range(10).mapInPandas(plus_one, "id long")
       .groupBy().sum("id").first()[0])
+print("SHUFFLE", spark.conf.get("spark.sql.shuffle.partitions"))
 spark.stop()
 """
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -80,6 +82,14 @@ spark.stop()
                           timeout=300)
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "SUM 55" in proc.stdout
+    assert "SHUFFLE 2\n" in proc.stdout  # 2 x local[1]'s parallelism
+
+
+def test_shuffle_partitions_follow_parallelism(spark):
+    """The shared session passes no shuffle setting, so it gets the rule:
+    twice its default parallelism."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+        2 * spark.sparkContext.defaultParallelism)
 
 
 def _package(root, name: str) -> str:

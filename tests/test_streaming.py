@@ -319,7 +319,8 @@ def test_stream_stream_join_checkpoint_resume(spark, tmp_path):
 
     out = str(tmp_path / "joined_out")
     # stream-stream joins keep 4 state stores per shuffle partition;
-    # at this state size 4 partitions run ~5x faster than 32
+    # at this state size 4 partitions beat the batch default of 8
+    # (queries._drain_stream)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
