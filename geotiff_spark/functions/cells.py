@@ -139,8 +139,8 @@ def cell_bounds(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
 
 def ring_cells(cell: int, k: int) -> np.ndarray:
     """All cells at Chebyshev grid distance exactly k from `cell` (k=0 →
-    the cell itself). Longitude wraps; latitude clips at the poles. Used by
-    the kNN join's ring-expansion candidate generator."""
+    the cell itself). Longitude wraps; latitude clips at the poles. The
+    test reference for disk_cells: a k-disk is the union of rings 0..k."""
     res, ix, iy = cell_to_grid(np.asarray([cell]))
     res, ix, iy = int(res[0]), int(ix[0]), int(iy[0])
     n = 1 << res

@@ -15,9 +15,8 @@ an STR R-tree we test faces in mesh order per batch (meshes here are tiny;
 shared edges/rays are sign-disambiguated exactly like the reference, so
 the first containing face is unique).
 
-Triangulation is a from-scratch Bowyer–Watson (no scipy in the sandbox),
-oriented to the delaunator convention the reference depends on: CCW
-triangles, CCW hull.
+Triangulation is functions/delaunay.py's port of delaunator, the crate the
+reference depends on (CCW triangles, CCW hull).
 """
 
 from __future__ import annotations
@@ -25,99 +24,6 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-
-
-# ---------------------------------------------------------------------------
-# Delaunay (Bowyer–Watson), CCW triangles + CCW hull
-# ---------------------------------------------------------------------------
-
-def _circumcircle_contains(tri_pts: np.ndarray, p: np.ndarray) -> bool:
-    """Standard inCircle determinant for a CCW triangle."""
-    ax, ay = tri_pts[0]
-    bx, by = tri_pts[1]
-    cx, cy = tri_pts[2]
-    dx, dy = p
-    m = np.array(
-        [
-            [ax - dx, ay - dy, (ax - dx) ** 2 + (ay - dy) ** 2],
-            [bx - dx, by - dy, (bx - dx) ** 2 + (by - dy) ** 2],
-            [cx - dx, cy - dy, (cx - dx) ** 2 + (cy - dy) ** 2],
-        ]
-    )
-    return float(np.linalg.det(m)) > 0.0
-
-
-def _ccw(pts: np.ndarray, tri: tuple[int, int, int]) -> tuple[int, int, int]:
-    a, b, c = tri
-    cross = (pts[b, 0] - pts[a, 0]) * (pts[c, 1] - pts[a, 1]) - (
-        pts[b, 1] - pts[a, 1]
-    ) * (pts[c, 0] - pts[a, 0])
-    return tri if cross > 0 else (a, c, b)
-
-
-def delaunay(points: np.ndarray) -> tuple[list[tuple[int, int, int]], list[int]]:
-    """Bowyer–Watson. Returns (triangles CCW, hull indices CCW)."""
-    pts = np.asarray(points, dtype=np.float64)
-    n = len(pts)
-    if n < 3:
-        raise ValueError("need at least 3 tie points for a triangulation")
-
-    # super-triangle
-    mid = pts.mean(axis=0)
-    span = max(float(np.ptp(pts[:, 0])), float(np.ptp(pts[:, 1])), 1.0) * 64.0
-    sup = np.array(
-        [
-            [mid[0] - span, mid[1] - span],
-            [mid[0] + span, mid[1] - span],
-            [mid[0], mid[1] + span],
-        ]
-    )
-    allp = np.vstack([pts, sup])
-    s0, s1, s2 = n, n + 1, n + 2
-    tris: list[tuple[int, int, int]] = [_ccw(allp, (s0, s1, s2))]
-
-    for i in range(n):
-        p = allp[i]
-        bad = [t for t in tris if _circumcircle_contains(allp[list(t)], p)]
-        # cavity boundary = edges of bad triangles appearing once
-        edge_count: dict[tuple[int, int], int] = {}
-        for t in bad:
-            for e in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0])):
-                key = (min(e), max(e))
-                edge_count[key] = edge_count.get(key, 0) + 1
-        boundary = []
-        for t in bad:
-            for e in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0])):
-                if edge_count[(min(e), max(e))] == 1:
-                    boundary.append(e)
-        tris = [t for t in tris if t not in bad]
-        for a, b in boundary:
-            tris.append(_ccw(allp, (a, b, i)))
-
-    tris = [t for t in tris if all(v < n for v in t)]
-    if not tris:
-        raise ValueError("degenerate tie points (collinear?)")
-
-    # hull: edges appearing exactly once, chained CCW
-    edge_count = {}
-    directed = {}
-    for t in tris:
-        for e in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0])):
-            key = (min(e), max(e))
-            edge_count[key] = edge_count.get(key, 0) + 1
-            directed[e] = True
-    hull_edges = {}
-    for t in tris:
-        for e in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0])):
-            if edge_count[(min(e), max(e))] == 1:
-                hull_edges[e[0]] = e[1]  # CCW triangle edge on hull is CCW
-    start = next(iter(hull_edges))
-    hull = [start]
-    cur = hull_edges[start]
-    while cur != start:
-        hull.append(cur)
-        cur = hull_edges[cur]
-    return tris, hull
 
 
 # ---------------------------------------------------------------------------

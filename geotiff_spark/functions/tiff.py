@@ -18,10 +18,8 @@ The decoder is deliberately *whole-image eager* per raster, matching
 raster row is the unit of parallelism and each one is decoded once inside a
 ``mapInPandas`` batch.
 
-One segment plan (``segment_plan``) serves both readers: the per-file
-``decode_tiff_ifd`` decodes its segments in turn, and the strip-parallel
-``sources/rasters.read_rasters_parallel`` decodes them on any executor;
-both place them with ``assemble_segments``.
+One segment plan (``segment_plan``) is the layout model: ``decode_tiff_ifd``
+decodes its segments in turn and places them with ``assemble_segments``.
 
 No Spark imports here — keep this importable on bare executors.
 """
@@ -407,9 +405,7 @@ def segment_plan(ifd: Ifd) -> tuple[dict, list[dict]]:
     Returns (image_meta, segments): image_meta carries dims/spp/dtype/
     compression/predictor/photometric; each segment dict holds the byte
     range plus placement (y0/x0/rows/cols/band). Segments decode in any
-    order on any executor and reassemble by placement — the engine's
-    within-file parallelism for large rasters (SURVEY.md B2). Every
-    layout check lives here, so both readers reject the same files; the
+    order and reassemble by placement. Every layout check lives here: the
     offsets and byte counts must list exactly one entry per segment, so
     every pixel is placed by exactly one segment.
     """

@@ -21,9 +21,6 @@ word-frequency table. Both halves live here with that shape:
   DuckDB oracle drives the same loop with a recursive CTE over
   separator-joined states and first-occurrence string surgery, so the
   bpe_encode registry query is hash-gated end to end.
-- :func:`bpe_token_count_udf` — the scale path: merges broadcast
-  (closure-captured), per-batch word memoization (Zipf makes the cache
-  hit rate ~1), zero shuffle — a pure map at any corpus size.
 
 No counterpart in the reference (a raster library); this implements the
 tokenizer leg of the LLM-data-pipeline mandate (BASELINE.json
@@ -240,40 +237,6 @@ def bpe_apply(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
         # rank, which is precisely the leftmost occurrence of that pair
         toks[best_i:best_i + 2] = [toks[best_i] + toks[best_i + 1]]
     return toks
-
-
-def bpe_token_count_udf(merges: list[tuple[str, str]],
-                        byte_level: bool = False):
-    """pandas UDF: array<string> of words -> total BPE token count.
-    Word-level memoization per batch; the merges table rides the UDF
-    closure (broadcast-equivalent for the ~50k-entry tables real
-    tokenizers ship). byte_level=True tokenizes each word's UTF-8
-    bytes (latin-1-char symbols) — complete coverage, no OOV."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    @pandas_udf("long")
-    def n_bpe_tokens(words: pd.Series) -> pd.Series:
-        cache: dict[str, int] = {}
-        out = []
-        for arr in words:
-            if arr is None:
-                out.append(None)
-                continue
-            total = 0
-            for w in arr:
-                n = cache.get(w)
-                if n is None:
-                    t = w.encode("utf-8").decode("latin-1") \
-                        if byte_level else w
-                    n = len(bpe_apply(t, ranks))
-                    cache[w] = n
-                total += n
-            out.append(total)
-        return pd.Series(out, dtype="Int64")
-
-    # nondeterministic marking forbids alias-inlining into filters —
-    # the repo-wide double-ArrowEvalPython guard (see dedup signatures)
-    return n_bpe_tokens.asNondeterministic()
 
 
 def bpe_encode_counts(

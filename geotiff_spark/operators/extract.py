@@ -74,10 +74,6 @@ def extract_text_from_html(html_col: Column) -> Column:
     return F.substring_index(F.substring_index(s, "<article>", -1), "</article>", 1)
 
 
-def with_extracted_text(df: DataFrame, html: str = "html", out: str = "extracted_text") -> DataFrame:
-    return df.withColumn(out, extract_text_from_html(F.col(html)))
-
-
 def with_geotag(df: DataFrame, text: str = "text") -> DataFrame:
     """Add lat/lon columns (NULL when the page carries no geotag)."""
     lat = F.regexp_extract(F.col(text), GEO_PATTERN, 1)
@@ -174,19 +170,14 @@ def with_fused_geo(
     return df.select(*in_cols).mapInPandas(run, schema=out_schema)
 
 
-def with_cell_token(df: DataFrame, res: int, lat: str = "lat", lon: str = "lon",
+def with_cell_token(df: DataFrame, cell: str = "cell",
                     out: str = "cell_token") -> DataFrame:
-    """Base-4 token variant — prefix-prunable partition key."""
+    """Base-4 token of the cell id: the prefix-prunable partition key.
+    The cell column must hold no NULLs: Arrow hands pandas a batch with
+    NULLs as float64, which would quantize 2^60-scale cell ids."""
 
     @pandas_udf("string")
-    def encode(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-        lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-        ok = ~(np.isnan(la) | np.isnan(lo))
-        out = np.full(la.shape, None, dtype=object)
-        if ok.any():
-            cell_ids = cellmod.latlon_to_cell(la[ok], lo[ok], res)
-            out[ok] = cellmod.cell_to_token(cell_ids)
-        return pd.Series(out)
+    def encode(cell_s: pd.Series) -> pd.Series:
+        return pd.Series(cellmod.cell_to_token(cell_s.to_numpy(dtype="int64")))
 
-    return df.withColumn(out, encode(F.col(lat), F.col(lon)))
+    return df.withColumn(out, encode(F.col(cell)))

@@ -525,28 +525,36 @@ def multimodal_queries() -> Registry:
 # availableNow — batch-equivalent output, so plain SQL oracles apply)
 # --------------------------------------------------------------------------
 
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+
+
+def events_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a directory of events parquet files: each
+    file is one micro-batch, taken in modification-time order."""
+    return (
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+
+
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table (the file stream source
-    needs a DIRECTORY; the testdata table is a single parquet file —
-    stage a symlink dir keyed by sf_dir)."""
+    """The events table as a stream. The file source needs a DIRECTORY
+    and the testdata table is one parquet file, so stage a symlink dir
+    keyed by sf_dir."""
     import hashlib
     import os
 
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
     src = os.path.abspath(f"{sf_dir}/events.parquet")
     d = "/tmp/geotiff_spark_stream/" + hashlib.md5(src.encode()).hexdigest()[:12]
     os.makedirs(d, exist_ok=True)
     link = f"{d}/events.parquet"
     if not os.path.exists(link):
         os.symlink(src, link)
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    return events_stream(spark, d)
 
 
 def _drain_stream(spark: SparkSession, agg: DataFrame, name: str,
@@ -577,22 +585,22 @@ def _drain_stream(spark: SparkSession, agg: DataFrame, name: str,
     return spark.table(name)
 
 
+def window_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event counts per event type (complete mode: no
+    watermark, every window stays open)."""
+    return events.groupBy(
+        F.window("ts", "1 hour").alias("w"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n_events"))
+
+
 def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event counts computed by an actual streaming query
     (file-source micro-batches → windowed agg → memory sink, complete
-    mode). Late-data/watermark semantics are pytest-pinned separately
-    (tests/test_streaming.py); this puts the streaming surface under the
-    driver's hash-match gate via the batch-equivalent oracle."""
-    stream = _events_stream(spark, sf_dir)
-    agg = stream.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    name = "stream_window_counts"
-    # streaming aggs materialize one state store PER shuffle partition,
-    # each with its own checkpoint I/O — at this state size (thousands of
-    # windows) 4 stores beat 32 by ~5× wall; a real deployment sizes this
-    # to state volume, not to the batch-join default
-    return _drain_stream(spark, agg, name).select(
+    mode), under the driver's hash-match gate via the batch-equivalent
+    oracle. Restart from a checkpoint across micro-batches is pinned by
+    tests/test_streaming.py::test_window_counts_checkpoint_resume."""
+    agg = window_counts(_events_stream(spark, sf_dir))
+    return _drain_stream(spark, agg, "stream_window_counts").select(
         F.col("w.start").alias("window_start"),
         F.col("event_type"),
         F.col("n_events"),
@@ -712,16 +720,13 @@ GROUP BY n_name
 """
 
 
-def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed stream-stream INNER join — click→purchase attribution
-    within 30 minutes per user. Both sides carry watermarks so the join
-    state is bounded (clicks are droppable once purchase_ts can no longer
-    land in their window — the production requirement at 10^12 events);
-    the match set of an inner time-bounded join is deterministic, so the
-    batch self-join SQL is an exact oracle."""
+def click_purchase_join(events: DataFrame) -> DataFrame:
+    """Windowed stream-stream INNER join: each click matched to the same
+    user's purchases within 30 minutes. Both sides carry a 1-hour
+    watermark, so the join state is bounded: a click is droppable once
+    no purchase can still land in its window."""
     clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
+        events.filter(F.col("event_type") == "click")
         .withWatermark("ts", "1 hour")
         .select(
             F.col("event_id").alias("click_id"),
@@ -730,8 +735,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        events.filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "1 hour")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -739,7 +743,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("purchase_ts"),
         )
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
@@ -749,6 +753,13 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "inner",
     ).select("user_id", "click_id", "purchase_id")
+
+
+def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Click→purchase attribution as a streaming query. The match set of
+    an inner time-bounded join is deterministic, so the batch self-join
+    SQL is an exact oracle."""
+    joined = click_purchase_join(_events_stream(spark, sf_dir))
     return _drain_stream(
         spark, joined, "stream_stream_join", output_mode="append"
     )
@@ -764,19 +775,13 @@ WHERE a.event_type = 'click' AND b.event_type = 'purchase'
 """
 
 
-def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSTOM stateful streaming operator under the driver gate:
-    per-user running event counts via applyInPandasWithState — the
-    arbitrary-state accumulator built-in windowed aggs can't express.
-    The per-batch emission schedule depends on micro-batch boundaries,
-    so the gated output is the FINAL running total per user (max over
-    emissions), which must equal the batch COUNT(*); state crossing
-    micro-batches is pytest-pinned separately
-    (tests/test_streaming.py::test_running_cell_counts_stateful)."""
+def running_counts(events: DataFrame) -> DataFrame:
+    """CUSTOM stateful operator: per-user running event counts via
+    applyInPandasWithState, the arbitrary-state accumulator built-in
+    windowed aggs can't express. Each micro-batch emits, per user it
+    saw, the total so far (state + that batch's rows)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stream = _events_stream(spark, sf_dir).withWatermark("ts", "24 hours")
 
     def update(key, pdfs, state):
         n = 0
@@ -789,15 +794,25 @@ def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"user_id": [key[0]], "running_total": [total]}
         )
 
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    by_user = events.withWatermark("ts", "24 hours").groupBy("user_id")
+    return by_user.applyInPandasWithState(
         update,
         outputStructType="user_id long, running_total long",
         stateStructType="total long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """running_counts under the driver gate. The per-batch emission
+    schedule depends on micro-batch boundaries, so the gated output is
+    the FINAL running total per user (max over emissions), which must
+    equal the batch COUNT(*); state crossing micro-batches is pinned by
+    tests/test_streaming.py::test_running_counts_carry_state_across_batches."""
     drained = _drain_stream(
-        spark, out, "stream_custom_state", output_mode="append"
+        spark, running_counts(_events_stream(spark, sf_dir)),
+        "stream_custom_state", output_mode="append",
     )
     return drained.groupBy("user_id").agg(
         F.max("running_total").alias("n_events")

@@ -28,9 +28,6 @@ import json
 import sys
 import time
 
-import numpy as np  # noqa: F401  (udf type-hint resolution)
-import pandas as pd
-
 try:  # packaged run: geotiff_spark arrives via spark-submit --py-files
     import geotiff_spark  # noqa: F401
 except ImportError:  # direct `python scripts/run_pipeline.py` from a checkout
@@ -51,9 +48,7 @@ def main() -> int:
     ap.add_argument("--fail-after", type=int, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from geotiff_spark.functions import cells as cellmod
+    from geotiff_spark.operators.extract import with_cell_token
     from geotiff_spark.operators.spatial_join import fused_pages_pip
     from geotiff_spark.plans.checkpoint import resumable_write
     from geotiff_spark.plans.lineage import StageMetrics
@@ -73,15 +68,7 @@ def main() -> int:
     hits = metrics.instrument(hits, "pip_join")
 
     # cell token for prefix partitioning (prefix of the quadkey)
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("string")
-    def token(cell: pd.Series) -> pd.Series:
-        return pd.Series(
-            cellmod.cell_to_token(cell.to_numpy(dtype="int64"))
-        )
-
-    hits = hits.withColumn("cell_token", token(F.col("cell")))
+    hits = with_cell_token(hits)
     # persist: the histogram pass and the bucketed writes reuse this stage
     hits = hits.persist()
     # measured histogram -> variable-depth prefix: hot cities split deeper

@@ -22,11 +22,12 @@ def test_entry_smoke(spark):
 
 def test_text_extraction_byte_identical(spark):
     """north-rule invariant: extracted text == source text per url."""
-    from geotiff_spark.operators.extract import with_extracted_text
+    from geotiff_spark.operators.extract import extract_text_from_html
     from geotiff_spark.sources.pages import synth_pages
 
     pages = synth_pages(spark, 2000, partitions=4)
-    ext = with_extracted_text(pages)
+    ext = pages.withColumn("extracted_text",
+                           extract_text_from_html(F.col("html")))
     bad = ext.filter(F.col("extracted_text") != F.col("text")).count()
     assert bad == 0
     # and not vacuous

@@ -38,17 +38,16 @@ def test_hot_keys_detects_skew(spark):
 
 
 def test_adaptive_prefix_balances_hot_cells(spark):
-    from geotiff_spark.operators.extract import with_cell_token
+    from geotiff_spark.operators.extract import with_cell_token, with_fused_geo
     from geotiff_spark.plans.partitioning import (
         adaptive_prefix_column, choose_prefix_depth, deep_histogram,
     )
     from geotiff_spark.sources.pages import synth_pages
-    from geotiff_spark.operators.extract import with_geotag
 
-    pages = with_geotag(synth_pages(spark, 4000, partitions=4)).filter(
-        F.col("lat").isNotNull()
+    cells = with_fused_geo(synth_pages(spark, 4000, partitions=4), 10).filter(
+        F.col("cell").isNotNull()
     )
-    tok = with_cell_token(pages, res=10)
+    tok = with_cell_token(cells)
     depth = choose_prefix_depth(deep_histogram(tok, "cell_token"),
                                 target_rows=800)
     assert 1 <= depth <= 10

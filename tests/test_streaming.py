@@ -1,312 +1,158 @@
-"""Structured Streaming: streamed results must equal the batch results on
-the same data (the streaming kernels are the batch kernels)."""
+"""Structured Streaming: the registry's stream builders (queries.py)
+driven over events written as several parquet files, so each file is one
+micro-batch and state has to cross batches and restarts."""
 
 from __future__ import annotations
 
-import pytest
+import os
+import time
+from collections import Counter
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from geotiff_spark.queries import (
+    EVENTS_SCHEMA, click_purchase_join, events_stream, running_counts,
+    window_counts,
+)
 
-@pytest.fixture(scope="module")
-def pages_dir(spark, tmp_path_factory):
-    from geotiff_spark.sources.pages import synth_pages
-
-    path = str(tmp_path_factory.mktemp("stream") / "pages")
-    # several files -> several micro-batches
-    synth_pages(spark, 3000, partitions=6).write.parquet(path)
-    return path
+COLUMNS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+BASE = pd.Timestamp("2024-01-01 00:00:00")
 
 
-def _drain(q):
+def _write_events(path, rows) -> pd.DataFrame:
+    """One parquet FILE of events rows: the file-stream source does not
+    recurse into the directories spark's own .write.parquet produces."""
+    pdf = pd.DataFrame(rows, columns=COLUMNS).astype({"ts": "datetime64[us]"})
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), str(path))
+    return pdf
+
+
+def _random_events(seed: int, n: int, first_id: int) -> list[tuple]:
+    """n events over 40 users and 6 hours."""
+    rng = np.random.default_rng(seed)
+    mins = rng.integers(0, 6 * 60, n)
+    users = rng.integers(0, 40, n)
+    kinds = rng.choice(["view", "click", "purchase"], n)
+    return [(first_id + i, BASE + pd.Timedelta(minutes=int(m)), int(u), str(k),
+             1.0, "{}") for i, (m, u, k) in enumerate(zip(mins, users, kinds))]
+
+
+def test_running_counts_carry_state_across_batches(spark, tmp_path):
+    """running_counts over four files (four micro-batches): each user's
+    final running total equals its batch COUNT(*), and some user is
+    updated in more than one batch, so a total that ignored the prior
+    state would fall short."""
+    src = tmp_path / "events"
+    src.mkdir()
+    users: Counter = Counter()
+    for k in range(4):
+        pdf = _write_events(src / f"part{k}.parquet",
+                            _random_events(k, 150, 1000 * k))
+        users.update(pdf["user_id"].tolist())
+
+    q = (
+        running_counts(events_stream(spark, str(src)))
+        .writeStream.format("memory").queryName("running_counts")
+        .outputMode("append").trigger(availableNow=True).start()
+    )
     q.awaitTermination(120)
+    rows = spark.table("running_counts").collect()
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 4
 
-
-def test_windowed_cell_counts_match_batch(spark, pages_dir):
-    from geotiff_spark.operators.extract import with_fused_geo
-    from geotiff_spark.streaming.ingest import (
-        pages_stream, run_to_memory, windowed_cell_counts,
-    )
-
-    stream = pages_stream(spark, pages_dir, max_files_per_trigger=2)
-    # watermark covers the full 30-day generator window: no late drops,
-    # so streaming must equal batch exactly (late-drop behavior is
-    # asserted separately below)
-    # complete mode: emit the full aggregate regardless of watermark —
-    # exact parity with batch (append mode only emits closed windows;
-    # late-drop semantics are asserted separately below)
-    q = run_to_memory(
-        windowed_cell_counts(stream, res=6, window="6 hours",
-                             watermark="800 hours"),
-        "cell_counts", output_mode="complete",
-    )
-    _drain(q)
-    got = {
-        (r["window"]["start"], r["cell"]): r["n_pages"]
-        for r in spark.sql("SELECT * FROM cell_counts").collect()
-    }
-
-    batch = with_fused_geo(
-        spark.read.parquet(pages_dir), 6, carry=("url", "warc_ts")
-    ).filter(F.col("cell").isNotNull())
-    want = {
-        (r["window"]["start"], r["cell"]): r["n_pages"]
-        for r in batch.groupBy(
-            F.window("warc_ts", "6 hours").alias("window"), "cell"
-        )
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .collect()
-    }
-    assert got == want
-    assert len(got) > 10
-
-
-def test_tight_watermark_drops_late_rows(spark, pages_dir):
-    """With a tight watermark and time-unordered file arrival, late rows
-    are dropped — counts must be <= batch and strictly fewer rows total."""
-    from geotiff_spark.streaming.ingest import (
-        pages_stream, run_to_memory, windowed_cell_counts,
-    )
-
-    stream = pages_stream(spark, pages_dir, max_files_per_trigger=1)
-    q = run_to_memory(
-        windowed_cell_counts(stream, res=6, window="6 hours",
-                             watermark="1 hour"),
-        "cell_counts_tight", output_mode="append",
-    )
-    _drain(q)
-    tight = spark.sql(
-        "SELECT COALESCE(SUM(n_pages), 0) AS t FROM cell_counts_tight"
-    ).collect()[0]["t"]
-    from geotiff_spark.operators.extract import with_fused_geo
-    from pyspark.sql import functions as F
-    full = (
-        with_fused_geo(spark.read.parquet(pages_dir), 6, carry=("url",))
-        .filter(F.col("cell").isNotNull())
-        .count()
-    )
-    assert tight < full
-
-
-def test_streaming_dedup(spark, pages_dir):
-    from geotiff_spark.streaming.ingest import (
-        pages_stream, run_to_memory, streaming_dedup,
-    )
-
-    stream = pages_stream(spark, pages_dir)
-    q = run_to_memory(streaming_dedup(stream), "deduped")
-    _drain(q)
-    n = spark.sql("SELECT COUNT(*) AS n FROM deduped").collect()[0]["n"]
-    n_urls = (
-        spark.read.parquet(pages_dir).select("url").distinct().count()
-    )
-    # urls are unique in the generator -> dedup keeps everything; the
-    # operator's correctness on real dups is covered below
-    assert n == n_urls
-
-
-def test_streaming_dedup_drops_duplicates(spark, tmp_path):
-    from geotiff_spark.sources.pages import synth_pages
-    from geotiff_spark.streaming.ingest import (
-        pages_stream, run_to_memory, streaming_dedup,
-    )
-
-    path = str(tmp_path / "dup_pages")
-    p = synth_pages(spark, 400, partitions=2)
-    p.union(p).write.parquet(path)  # exact duplicates
-    stream = pages_stream(spark, path)
-    q = run_to_memory(streaming_dedup(stream), "deduped2")
-    _drain(q)
-    n = spark.sql("SELECT COUNT(*) AS n FROM deduped2").collect()[0]["n"]
-    assert n == 400
-
-
-def test_session_windows_run(spark, pages_dir):
-    from geotiff_spark.streaming.ingest import (
-        pages_stream, run_to_memory, session_cell_activity,
-    )
-
-    q = run_to_memory(
-        session_cell_activity(pages_stream(spark, pages_dir), res=4),
-        "sessions",
-    )
-    _drain(q)
-    rows = spark.sql(
-        "SELECT COUNT(*) AS n, SUM(n_pages) AS tot FROM sessions"
-    ).collect()[0]
-    assert rows["n"] > 0 and rows["tot"] > 0
-
-
-def test_running_cell_counts_stateful(spark, pages_dir):
-    """Custom applyInPandasWithState operator: final running totals must
-    equal the batch per-cell counts, with state carried across batches."""
-    from geotiff_spark.operators.extract import with_fused_geo
-    from geotiff_spark.streaming.ingest import (
-        pages_stream, run_to_memory, running_cell_counts,
-    )
-
-    stream = pages_stream(spark, pages_dir, max_files_per_trigger=2)
-    q = run_to_memory(running_cell_counts(stream, res=6), "running")
-    _drain(q)
-    rows = spark.sql("SELECT * FROM running").collect()
     finals: dict[int, int] = {}
-    multi_batch = 0
+    updates: Counter = Counter()
     for r in rows:
-        finals[r.cell] = max(finals.get(r.cell, 0), r.running_total)
-    per_cell_updates = {}
-    for r in rows:
-        per_cell_updates[r.cell] = per_cell_updates.get(r.cell, 0) + 1
-    multi_batch = sum(1 for v in per_cell_updates.values() if v > 1)
-
-    batch = (
-        with_fused_geo(spark.read.parquet(pages_dir), 6, carry=("url",))
-        .filter(F.col("cell").isNotNull())
-        .groupBy("cell").count().collect()
-    )
-    want = {r.cell: r["count"] for r in batch}
-    assert finals == want
-    assert multi_batch > 0  # state genuinely carried across micro-batches
+        finals[r.user_id] = max(finals.get(r.user_id, 0), r.running_total)
+        updates[r.user_id] += 1
+    assert finals == dict(users)
+    assert max(updates.values()) > 1
 
 
-def test_streaming_checkpoint_resume(spark, tmp_path):
-    """Kill-and-restart drill for the streaming path: a query restarted
-    from its checkpointLocation must pick up only NEW files and end with
+def test_window_counts_checkpoint_resume(spark, tmp_path):
+    """Kill-and-restart drill for window_counts: a query restarted from
+    its checkpointLocation must pick up only the NEW files and end with
     exactly the batch answer — no reprocessing, no gaps."""
-    from geotiff_spark.sources.pages import PAGES_SCHEMA, synth_pages
-    from geotiff_spark.streaming.ingest import windowed_cell_counts
-
-    src = tmp_path / "pages"
+    src = tmp_path / "events"
+    src.mkdir()
     ckpt = str(tmp_path / "ckpt")
-    first = synth_pages(spark, 1500, partitions=3)
-    first.write.parquet(str(src))
+    for k in range(3):
+        _write_events(src / f"first{k}.parquet",
+                      _random_events(k, 200, 1000 * k))
 
     def start(name):
-        stream = (
-            spark.readStream.schema(PAGES_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        agg = windowed_cell_counts(
-            stream, res=6, window="6 hours", watermark="800 hours"
-        )
-        return (
-            agg.writeStream.format("memory")
-            .queryName(name)
+        q = (
+            window_counts(events_stream(spark, str(src)))
+            .writeStream.format("memory").queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True).start()
         )
+        q.awaitTermination(120)
+        return q
 
-    q1 = start("resume_a")
-    q1.awaitTermination(120)
-    n_first = spark.table("resume_a").count()
-    assert n_first > 0
+    start("window_resume_a")
+    assert spark.table("window_resume_a").count() > 0
 
     # new arrivals while the query is down
-    import shutil
-    extra_dir = tmp_path / "extra"
-    synth_pages(spark, 1500, partitions=3).filter(
-        F.col("url").isNotNull()
-    ).write.parquet(str(extra_dir))
-    import os
-    for i, f in enumerate(sorted(os.listdir(extra_dir))):
-        if f.endswith(".parquet"):
-            shutil.copy(extra_dir / f, src / f"late_{i}.parquet")
-
-    q2 = start("resume_b")
-    q2.awaitTermination(120)
-    got = {
-        (r.window, r.cell): r.n_pages for r in spark.table("resume_b").collect()
-    }
-
-    # batch answer over everything now in src
-    from geotiff_spark.operators.extract import with_fused_geo
+    for k in range(3, 5):
+        _write_events(src / f"late{k}.parquet",
+                      _random_events(k, 200, 1000 * k))
+    q2 = start("window_resume_b")
+    assert sum(p["numInputRows"] for p in q2.recentProgress) == 400
+    got = {(r.w, r.event_type): r.n_events
+           for r in spark.table("window_resume_b").collect()}
 
     batch = (
-        with_fused_geo(spark.read.parquet(str(src)), 6,
-                       carry=("url", "warc_ts", "lang"))
-        .filter(F.col("cell").isNotNull())
-        .groupBy(F.window("warc_ts", "6 hours").alias("window"), "cell")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
+        spark.read.schema(EVENTS_SCHEMA).parquet(str(src))
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    want = {(r.window, r.cell): r.n_pages for r in batch.collect()}
+    want = {(r.w, r.event_type): r.n_events for r in batch.collect()}
     assert got == want
+
+
+def _matches(pdf: pd.DataFrame) -> set[tuple[int, int, int]]:
+    """(user, click, purchase) with the purchase 0-30 min after the click."""
+    clicks = pdf[pdf.event_type == "click"]
+    buys = pdf[pdf.event_type == "purchase"]
+    m = clicks.merge(buys, on="user_id", suffixes=("_c", "_p"))
+    m = m[(m.ts_p >= m.ts_c) & (m.ts_p <= m.ts_c + pd.Timedelta(minutes=30))]
+    return set(zip(m.user_id, m.event_id_c, m.event_id_p))
 
 
 def test_stream_stream_join_checkpoint_resume(spark, tmp_path):
-    """Kill-and-restart drill for the stream-stream join: clicks ingested
+    """Kill-and-restart drill for click_purchase_join: clicks ingested
     BEFORE the restart must still match purchases arriving AFTER it (the
     join state lives in the checkpoint), and the union of both runs'
     appended output must equal the batch join exactly."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
     # crafted timeline: user u clicks at base+u min, purchases 10 min
     # later; the split at +45 min strands several click→purchase pairs
     # across the restart. Watermark delay (1h) > join window (30 min),
     # so pre-split clicks are still in state when their purchase lands.
-    base = pd.Timestamp("2024-01-01 00:00:00")
     rows = []
     for u in range(30):
-        c = base + pd.Timedelta(minutes=u * 3)
+        c = BASE + pd.Timedelta(minutes=u * 3)
         rows.append((1000 + u, c, u, "click", 1.0, "{}"))
         rows.append((2000 + u, c + pd.Timedelta(minutes=10), u,
                      "purchase", 2.0, "{}"))
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type",
-                       "value", "props"]
-    )
-    split = base + pd.Timedelta(minutes=45)
+    pdf = pd.DataFrame(rows, columns=COLUMNS)
+    split = BASE + pd.Timedelta(minutes=45)
     src = tmp_path / "events"
     src.mkdir()
-
-    def write_half(mask, name):
-        # plain parquet FILES — the file-stream source does not recurse
-        # into the directories spark's own .write.parquet produces
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        half = pdf[mask].copy()
-        half["ts"] = half["ts"].astype("datetime64[us]")
-        pq.write_table(pa.Table.from_pandas(half, preserve_index=False),
-                       str(src / name))
-
-    write_half(pdf.ts < split, "half1.parquet")
+    _write_events(src / "half1.parquet", pdf[pdf.ts < split])
     ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "joined_out")
 
-    def start(name):
-        schema = ("event_id long, ts timestamp, user_id long, "
-                  "event_type string, value double, props string")
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .withWatermark("ts", "1 hour")
-            .select(F.col("event_id").alias("click_id"), "user_id",
-                    F.col("ts").alias("click_ts"))
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .withWatermark("ts", "1 hour")
-            .select(F.col("event_id").alias("purchase_id"),
-                    F.col("user_id").alias("p_user"),
-                    F.col("ts").alias("purchase_ts"))
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts")
-               <= F.col("click_ts") + F.expr("interval 30 minutes")),
-        ).select("user_id", "click_id", "purchase_id")
+    def start():
         # memory sink cannot recover a checkpoint in append mode — the
         # restart drill needs a real (file) sink, as production would
         q = (
-            joined.writeStream.format("parquet")
+            click_purchase_join(events_stream(spark, str(src)))
+            .writeStream.format("parquet")
             .option("path", out)
             .outputMode("append")
             .option("checkpointLocation", ckpt)
@@ -317,74 +163,46 @@ def test_stream_stream_join_checkpoint_resume(spark, tmp_path):
         return {(r.user_id, r.click_id, r.purchase_id)
                 for r in spark.read.parquet(out).collect()}
 
-    out = str(tmp_path / "joined_out")
     # stream-stream joins keep 4 state stores per shuffle partition;
     # at this state size 4 partitions beat the batch default of 8
     # (queries._drain_stream)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        got_a = start("ssj_resume_a")
+        got_a = start()
 
-        write_half(pdf.ts >= split, "half2.parquet")
-        got_all = start("ssj_resume_b")
+        _write_events(src / "half2.parquet", pdf[pdf.ts >= split])
+        got_all = start()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     got_b = got_all - got_a
 
-    ev = spark.createDataFrame(pdf)
-    a = ev.filter("event_type = 'click'").select(
-        F.col("event_id").alias("click_id"), "user_id",
-        F.col("ts").alias("click_ts"))
-    b = ev.filter("event_type = 'purchase'").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
-    want = {
-        (r.user_id, r.click_id, r.purchase_id)
-        for r in a.join(
-            b,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts")
-               <= F.col("click_ts") + F.expr("interval 30 minutes")),
-        ).select("user_id", "click_id", "purchase_id").collect()
-    }
+    want = _matches(pdf)
     assert got_all == want
     # pairs whose click predates the restart and purchase follows it:
     # only reachable through checkpointed join state
-    straddling = {
-        (u, c, p) for (u, c, p) in want
-        if pdf.set_index("event_id").ts[c] < split
-        and pdf.set_index("event_id").ts[p] >= split
-    }
+    ts = pdf.set_index("event_id").ts
+    straddling = {(u, c, p) for (u, c, p) in want
+                  if ts[c] < split and ts[p] >= split}
     assert straddling and straddling <= got_b
 
 
 def test_stream_stream_join_state_is_bounded(spark, tmp_path):
-    """VERDICT r3 next #6: the watermarked stream-stream join must EVICT
-    state, not only survive restarts. 12 one-hour blocks arrive as 12
-    micro-batches (mtime-ordered, maxFilesPerTrigger=1); with a 30-min
-    watermark delay and a 10-min join window, rows older than the
-    watermark horizon are droppable, so the state-store row count must
-    plateau at ~a horizon's worth of rows instead of growing linearly
-    with total input. Late rows beyond the watermark ride along in the
-    last block and must not resurrect state."""
-    import os
-    import time
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    base = pd.Timestamp("2024-01-01 00:00:00")
+    """The watermarked click_purchase_join must EVICT state, not only
+    survive restarts. 12 one-hour blocks arrive as 12 micro-batches
+    (mtime-ordered); with its 1-hour watermark delay and 30-min join
+    window, rows older than the watermark horizon are droppable, so the
+    state-store row count must plateau at ~a horizon's worth of rows
+    instead of growing linearly with total input. Late rows beyond the
+    watermark ride along in the last block and must not resurrect
+    state."""
     src = tmp_path / "events"
     src.mkdir()
     n_blocks, per_block = 12, 30
     for blk in range(n_blocks):
         rows = []
         for i in range(per_block):
-            t = base + pd.Timedelta(hours=blk, minutes=i * 2)
+            t = BASE + pd.Timedelta(hours=blk, minutes=i * 2)
             u = blk * per_block + i
             rows.append((10_000 + u, t, u, "click", 1.0, "{}"))
             rows.append((20_000 + u, t + pd.Timedelta(minutes=5), u,
@@ -392,50 +210,18 @@ def test_stream_stream_join_state_is_bounded(spark, tmp_path):
         if blk == n_blocks - 1:
             # late data far beyond the watermark: must be dropped, not
             # re-grow state
-            rows.append((99_999, base, 7, "click", 1.0, "{}"))
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type",
-                           "value", "props"])
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        path = str(src / f"blk{blk:02d}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
+            rows.append((99_999, BASE, 7, "click", 1.0, "{}"))
+        path = src / f"blk{blk:02d}.parquet"
+        _write_events(path, rows)
         ts = time.time() - (n_blocks - blk) * 10
         os.utime(path, (ts, ts))
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(src))
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "30 minutes")
-        .select(F.col("event_id").alias("click_id"), "user_id",
-                F.col("ts").alias("click_ts"))
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "30 minutes")
-        .select(F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"))
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts")
-           <= F.col("click_ts") + F.expr("interval 10 minutes")),
-    ).select("user_id", "click_id", "purchase_id")
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
         q = (
-            joined.writeStream.format("parquet")
+            click_purchase_join(events_stream(spark, str(src)))
+            .writeStream.format("parquet")
             .option("path", str(tmp_path / "out"))
             .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
