@@ -264,11 +264,10 @@ def encode_gif(
     palette: np.ndarray,
     interlace: bool = False,
     delays: list[int] | None = None,
-    bg: int = 0,
 ) -> bytes:
-    """(h, w) or (n, h, w) palette indices + (k, 3) palette → GIF89a.
-    Multi-frame input writes an animation (full-frame frames, graphic
-    control with per-frame delay)."""
+    """(h, w) or (n, h, w) palette indices + (k, 3) palette → GIF89a
+    with background index 0. Multi-frame input writes an animation
+    (full-frame frames, graphic control with per-frame delay)."""
     if indices.ndim == 2:
         indices = indices[None]
     nf, h, w = indices.shape
@@ -285,7 +284,7 @@ def encode_gif(
     pal[:k] = palette
     min_code = max(size_field + 1, 2)
     out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | size_field, bg, 0)
+    out += struct.pack("<HHBBB", w, h, 0x80 | size_field, 0, 0)
     out += pal.tobytes()
     for f in range(nf):
         if nf > 1 or delays:

@@ -178,7 +178,6 @@ def encode_png(
     arr: np.ndarray,
     filters: int | list[int] | None = None,
     palette: np.ndarray | None = None,
-    level: int = 6,
 ) -> bytes:
     """(h, w[, c]) uint8/uint16 → PNG bytes. `filters` picks the per-row
     filter (int for all rows, list per row, None → row_idx % 5 so every
@@ -235,6 +234,6 @@ def encode_png(
     chunks = [chunk(b"IHDR", ihdr)]
     if palette is not None:
         chunks.append(chunk(b"PLTE", palette.astype(np.uint8).tobytes()))
-    chunks.append(chunk(b"IDAT", zlib.compress(bytes(out), level)))
+    chunks.append(chunk(b"IDAT", zlib.compress(bytes(out), 6)))
     chunks.append(chunk(b"IEND", b""))
     return PNG_MAGIC + b"".join(chunks)

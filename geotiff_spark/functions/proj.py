@@ -29,17 +29,16 @@ def _q(sin_phi: np.ndarray) -> np.ndarray:
     )
 
 
-def laea_constants(
-    lon0_deg: float = 10.0,
-    lat0_deg: float = 52.0,
-    false_easting: float = 4321000.0,
-    false_northing: float = 3210000.0,
-) -> dict[str, float]:
-    """Point-independent LAEA terms (qp, beta1 trig, rq, d…) computed with
-    the same numpy arithmetic as laea_forward — used to embed the
-    projection into ANSI-SQL oracles with only per-point trig left to the
-    SQL engine."""
-    lat0 = np.radians(lat0_deg)
+# EPSG:3035 (ETRS89-extended / LAEA Europe): origin and false origin.
+LON0_DEG, LAT0_DEG = 10.0, 52.0
+FALSE_EASTING, FALSE_NORTHING = 4321000.0, 3210000.0
+
+
+def laea_constants() -> dict[str, float]:
+    """Point-independent EPSG:3035 LAEA terms (qp, beta1 trig, rq, d…):
+    laea_forward's own, and embedded into ANSI-SQL oracles with only
+    per-point trig left to the SQL engine."""
+    lat0 = np.radians(LAT0_DEG)
     qp = float(_q(np.array(1.0)))
     q1 = float(_q(np.sin(lat0)))
     beta1 = np.arcsin(q1 / qp)
@@ -54,50 +53,32 @@ def laea_constants(
         "cos_beta1": float(np.cos(beta1)),
         "rq": float(rq),
         "d": float(d),
-        "lon0": float(np.radians(lon0_deg)),
-        "fe": false_easting,
-        "fn": false_northing,
+        "lon0": float(np.radians(LON0_DEG)),
+        "fe": FALSE_EASTING,
+        "fn": FALSE_NORTHING,
     }
 
 
-def laea_forward(
-    lon_deg,
-    lat_deg,
-    lon0_deg: float = 10.0,
-    lat0_deg: float = 52.0,
-    false_easting: float = 4321000.0,
-    false_northing: float = 3210000.0,
-):
-    """Ellipsoidal LAEA forward (Snyder 24-2..24-8, 3-11, 3-12).
-
-    Defaults = EPSG:3035. Returns (x, y) float64 arrays.
+def laea_forward(lon_deg, lat_deg):
+    """Ellipsoidal LAEA forward (Snyder 24-2..24-8, 3-11, 3-12) to
+    EPSG:3035. Returns (x, y) float64 arrays.
     """
+    c = laea_constants()
     lon = np.radians(np.asarray(lon_deg, dtype=np.float64))
     lat = np.radians(np.asarray(lat_deg, dtype=np.float64))
-    lat0 = np.radians(lat0_deg)
-    lon0 = np.radians(lon0_deg)
-
-    qp = _q(np.array(1.0))
-    q1 = _q(np.sin(lat0))
-    q = _q(np.sin(lat))
-
-    beta1 = np.arcsin(q1 / qp)
-    beta = np.arcsin(np.clip(q / qp, -1.0, 1.0))
-    rq = _A * np.sqrt(qp / 2.0)
-    m1 = np.cos(lat0) / np.sqrt(1.0 - _E2 * np.sin(lat0) ** 2)
-    d = _A * m1 / (rq * np.cos(beta1))
-
-    dlon = lon - lon0
-    b = rq * np.sqrt(
+    beta = np.arcsin(np.clip(_q(np.sin(lat)) / c["qp"], -1.0, 1.0))
+    dlon = lon - c["lon0"]
+    b = c["rq"] * np.sqrt(
         2.0
         / (
             1.0
-            + np.sin(beta1) * np.sin(beta)
-            + np.cos(beta1) * np.cos(beta) * np.cos(dlon)
+            + c["sin_beta1"] * np.sin(beta)
+            + c["cos_beta1"] * np.cos(beta) * np.cos(dlon)
         )
     )
-    x = false_easting + b * d * np.cos(beta) * np.sin(dlon)
-    y = false_northing + (b / d) * (
-        np.cos(beta1) * np.sin(beta) - np.sin(beta1) * np.cos(beta) * np.cos(dlon)
+    d = c["d"]
+    x = c["fe"] + b * d * np.cos(beta) * np.sin(dlon)
+    y = c["fn"] + (b / d) * (
+        c["cos_beta1"] * np.sin(beta) - c["sin_beta1"] * np.cos(beta) * np.cos(dlon)
     )
     return x, y

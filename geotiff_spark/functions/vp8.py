@@ -479,11 +479,9 @@ def _parse_segmentation(bd: _Bool, hdr) -> None:
                 hdr.seg_tree_probs[i] = bd.literal(8)
 
 
-def decode_vp8_frame(data: bytes, debug: dict | None = None):
+def decode_vp8_frame(data: bytes):
     """Decode one VP8 key frame → (y, u, v) uint8 planes (cropped to
-    the frame's stated dimensions; u/v are ceil(w/2) x ceil(h/2)).
-    `debug`, when given, is filled with the parsed per-MB mode maps and
-    header fields (test/bring-up instrumentation)."""
+    the frame's stated dimensions; u/v are ceil(w/2) x ceil(h/2))."""
     if len(data) < 10:
         raise VP8Error("short frame")
     tag = data[0] | (data[1] << 8) | (data[2] << 16)
@@ -619,11 +617,6 @@ def decode_vp8_frame(data: bytes, debug: dict | None = None):
                 above_b[mx] = bm
                 left_b[:] = bm
             uvmodes[my, mx] = bd.tree(UV_MODE_TREE, KF_UV_PROBS)
-
-    if debug is not None:
-        debug.update(ymodes=ymodes, uvmodes=uvmodes, skips=skips,
-                     segids=segids, bmodes=bmodes, hdr=hdr,
-                     y_ac_qi=y_ac_qi, n_parts=n_parts)
 
     # plane buffers with virtual borders: +1 top row, +1 left col,
     # +4 right cols (i4 above-right). Borders: above=127, left=129.
@@ -924,7 +917,7 @@ def _filt_h(P, y, x0, n, elim, ilim, hev_t, mb=False, simple=False):
             P[y + d, cols] = _u(v)
 
 
-def decode_webp_lossy_yuv(data: bytes, debug: dict | None = None):
+def decode_webp_lossy_yuv(data: bytes):
     """RIFF/WEBP container → decode the 'VP8 ' (lossy) chunk to YUV420
     planes (y, u, v)."""
     if len(data) < 20 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
@@ -934,60 +927,7 @@ def decode_webp_lossy_yuv(data: bytes, debug: dict | None = None):
         fourcc = data[pos:pos + 4]
         size = struct.unpack_from("<I", data, pos + 4)[0]
         if fourcc == b"VP8 ":
-            return decode_vp8_frame(data[pos + 8:pos + 8 + size],
-                                    debug=debug)
+            return decode_vp8_frame(data[pos + 8:pos + 8 + size])
         pos += 8 + size + (size & 1)
     raise VP8Error("no VP8 chunk")
 
-
-# ---------------------------------------------------------------------------
-# RGB output (libwebp-compatible fancy upsampler + YUV->RGB)
-# ---------------------------------------------------------------------------
-
-def _fancy_upsample(c: np.ndarray, H: int, W: int) -> np.ndarray:
-    """Chroma half-res plane → full-res int64 plane with libwebp's
-    'fancy' bilinear scheme: each output pixel mixes the four
-    surrounding half-pel-sited chroma samples with (9,3,3,1)/16
-    weights, border-replicated; even output rows/cols lean on the
-    -1 neighbor, odd on +1 (phase pinned empirically bit-exact
-    against WebPDecodeRGBA)."""
-    ch, cw = c.shape
-    ci = c.astype(np.int64)
-    ys = np.arange(H)
-    xs = np.arange(W)
-    cy = ys >> 1
-    oy = np.clip(np.where(ys & 1 == 0, cy - 1, cy + 1), 0, ch - 1)
-    cx = xs >> 1
-    ox = np.clip(np.where(xs & 1 == 0, cx - 1, cx + 1), 0, cw - 1)
-    return (
-        9 * ci[cy[:, None], cx[None, :]]
-        + 3 * ci[cy[:, None], ox[None, :]]
-        + 3 * ci[oy[:, None], cx[None, :]]
-        + ci[oy[:, None], ox[None, :]]
-        + 8
-    ) >> 4
-
-
-def yuv_to_rgb(y: np.ndarray, u_full: np.ndarray,
-               v_full: np.ndarray) -> np.ndarray:
-    """Full-res YUV → (h, w, 3) uint8 RGB with libwebp's fixed-point
-    coefficients (yuv.h: MultHi >>8 then >>6; constants verified
-    bit-exact against WebPDecodeRGBA)."""
-    yv = (y.astype(np.int64) * 19077) >> 8
-    uu = u_full.astype(np.int64)
-    vv = v_full.astype(np.int64)
-    r = (yv + ((vv * 26149) >> 8) - 14234) >> 6
-    g = (yv - ((uu * 6419) >> 8) - ((vv * 13320) >> 8) + 8708) >> 6
-    b = (yv + ((uu * 33050) >> 8) - 17685) >> 6
-    return np.stack(
-        [np.clip(c, 0, 255).astype(np.uint8) for c in (r, g, b)], axis=2
-    )
-
-
-def decode_webp_lossy_rgb(data: bytes) -> np.ndarray:
-    """Lossy WebP → (h, w, 3) uint8 RGB, bit-identical to libwebp's
-    default WebPDecodeRGBA (fancy upsampling): the YUV420 decode of
-    decode_webp_lossy_yuv + _fancy_upsample + yuv_to_rgb."""
-    y, u, v = decode_webp_lossy_yuv(data)
-    H, W = y.shape
-    return yuv_to_rgb(y, _fancy_upsample(u, H, W), _fancy_upsample(v, H, W))

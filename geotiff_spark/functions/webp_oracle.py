@@ -61,27 +61,6 @@ def encode_lossy(rgb: np.ndarray, quality: float = 75.0) -> bytes:
     return data
 
 
-def decode_rgba(data: bytes) -> np.ndarray:
-    """lossy WebP bytes → (h, w, 4) uint8 RGBA via libwebp (its default
-    fancy-upsampling path — the reference for decode_webp_lossy_rgb)."""
-    lib = _load()
-    if not hasattr(lib.WebPDecodeRGBA, "_configured"):
-        lib.WebPDecodeRGBA.restype = ctypes.POINTER(ctypes.c_uint8)
-        lib.WebPDecodeRGBA.argtypes = [
-            ctypes.c_char_p, ctypes.c_size_t,
-            ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-        ]
-        lib.WebPDecodeRGBA._configured = True
-    w = ctypes.c_int()
-    h = ctypes.c_int()
-    p = lib.WebPDecodeRGBA(data, len(data), ctypes.byref(w), ctypes.byref(h))
-    if not p:
-        raise RuntimeError("WebPDecodeRGBA failed")
-    arr = np.ctypeslib.as_array(p, shape=(h.value, w.value, 4)).copy()
-    lib.WebPFree(ctypes.cast(p, ctypes.c_void_p))
-    return arr
-
-
 def decode_yuv(data: bytes):
     """lossy WebP bytes → (y, u, v) uint8 planes via libwebp."""
     lib = _load()

@@ -9,7 +9,7 @@ word-frequency table. Both halves live here with that shape:
   word→count dict (pure python), the reference for the heap-indexed
   :func:`bpe_train_fast`. :func:`bpe_train_frame` feeds the latter the
   Spark-aggregated word counts: ONE distributed aggregation with a
-  min_count cutoff bounds the dict (a 100 TB corpus's cutoff vocabulary
+  max_vocab cap bounds the dict (a 100 TB corpus's capped vocabulary
   is ~10^6-10^7 words — driver-feasible, same tier as the IVF centroid
   matrix), then the merge loop never touches the cluster again.
 - :func:`bpe_apply` — greedy apply: repeatedly merge the LEFTMOST
@@ -189,25 +189,22 @@ def byte_word(w: str) -> str:
 def bpe_train_frame(
     docs: DataFrame,
     n_merges: int = 64,
-    text: str = "text",
-    min_count: int = 1,
     max_vocab: int = 1_000_000,
     byte_level: bool = False,
 ) -> list[tuple[str, str]]:
-    """Train merges from a corpus: one Spark aggregation builds the
-    (word, count) table — partial-aggregated, min_count-cut, capped at
-    max_vocab by frequency (ties toward the lexicographically smaller
+    """Train merges from the `text` column of a corpus: one Spark
+    aggregation builds the (word, count) table — partial-aggregated,
+    capped at max_vocab by frequency (ties toward the lexicographically smaller
     word, so the pull is deterministic) — then the merge loop runs
     driver-side (:func:`bpe_train_fast`, whose merges equal
     :func:`bpe_train`'s). byte_level=True trains over UTF-8 bytes
     (latin-1-char symbols), giving complete input coverage: no word
     can be out-of-vocabulary."""
-    toks = tokens(F.col(text), sep=_WORD_SEP)
+    toks = tokens(F.col("text"), sep=_WORD_SEP)
     rows = (
-        docs.filter(F.col(text).isNotNull())
+        docs.filter(F.col("text").isNotNull())
         .select(F.explode(toks).alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_count)
         .orderBy(F.desc("c"), F.asc("w"))
         .limit(max_vocab)
         .collect()
@@ -242,11 +239,9 @@ def bpe_apply(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 def bpe_encode_counts(
     docs: DataFrame,
     merges: list[tuple[str, str]] | None = None,
-    text: str = "text",
-    key: str = "doc_id",
     byte_level: bool = False,
 ) -> DataFrame:
-    """(key, n_words, n_bpe_tokens) per document under the given merges
+    """(doc_id, n_words, n_bpe_tokens) per document under the given merges
     table (DEFAULT_MERGES if None). Zero shuffle. Round 8: the raw text
     crosses the Arrow boundary as ONE string per row and the split runs
     in Python (the same explicit separator class as the JVM side) — the
@@ -285,15 +280,15 @@ def bpe_encode_counts(
         return pd.DataFrame({"n_words": nw_out, "n_bpe_tokens": nb_out})
 
     return (
-        docs.filter(F.col(text).isNotNull())
+        docs.filter(F.col("text").isNotNull())
         .select(
-            F.col(key),
+            "doc_id",
             # nondeterministic: the repo-wide guard against the struct
             # alias inlining into two ArrowEvalPython stages
-            counts.asNondeterministic()(F.col(text)).alias("c"),
+            counts.asNondeterministic()(F.col("text")).alias("c"),
         )
         .select(
-            F.col(key),
+            "doc_id",
             F.col("c.n_words").alias("n_words"),
             F.col("c.n_bpe_tokens").alias("n_bpe_tokens"),
         )

@@ -32,96 +32,87 @@ from geotiff_spark.operators.textstats import tokens
 from geotiff_spark.plans.partitioning import ensure_map_parallelism
 
 
-def exact_dedup(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
-    """Exact duplicate groups: md5(text) groupBy; keeper = min key.
+# Every operator here reads documents as (doc_id, text).
+
+# Character n-gram width and Jaccard threshold of char_ngram_jaccard_pairs.
+CHAR_NGRAM = 5
+CHAR_NGRAM_THRESHOLD = 0.8
+# MinHash signature length of minhash_lsh_pairs.
+NUM_HASHES = 64
+
+
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact duplicate groups: md5(text) groupBy; keeper = min doc_id.
 
     Shuffles 16-byte digests + keys, never the documents themselves.
     """
     return (
-        df.select(F.col(key), F.md5(F.col(text)).alias("digest"))
+        df.select("doc_id", F.md5("text").alias("digest"))
         .groupBy("digest")
         .agg(
-            F.min(key).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count(F.lit(1)).alias("n_dups"),
         )
     )
 
 
-def tokens_df(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
-    """(key, token) distinct pairs — whitespace tokenization, JVM-side
+def tokens_df(df: DataFrame) -> DataFrame:
+    """(doc_id, token) distinct pairs — whitespace tokenization, JVM-side
     (the exploded form of the shared shingle/token array)."""
-    return df.select(
-        F.col(key), F.explode(_shingle_array(text, 1)).alias("token")
-    )
+    return df.select("doc_id", F.explode(_shingle_array(1)).alias("token"))
 
 
-def char_ngram_df(
-    df: DataFrame, n: int = 5, text: str = "text", key: str = "doc_id"
-) -> DataFrame:
-    """(key, token) distinct pairs — character n-gram shingles, JVM-side
+def char_ngram_df(df: DataFrame) -> DataFrame:
+    """(doc_id, token) distinct pairs — CHAR_NGRAM-character shingles, JVM-side
     (sequence → substr → array_distinct → explode). The finer-grained
     sibling of tokens_df for boilerplate-heavy web text, where word-level
     Jaccard under-weights small in-word edits. Docs shorter than n emit
     no grams (mirroring how tokens_df drops tokenless docs) — a truncated
     gram would let two unrelated short docs score jaccard 1.0."""
+    n = CHAR_NGRAM
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.length(text) - F.lit(n - 1)),
-            lambda i: F.col(text).substr(i, F.lit(n)),
+            F.sequence(F.lit(1), F.length("text") - F.lit(n - 1)),
+            lambda i: F.col("text").substr(i, F.lit(n)),
         )
     )
-    return df.filter(F.length(text) >= n).select(
-        F.col(key), F.explode(grams).alias("token")
+    return df.filter(F.length("text") >= n).select(
+        "doc_id", F.explode(grams).alias("token")
     )
 
 
-def token_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    text: str = "text",
-    key: str = "doc_id",
-) -> DataFrame:
-    """Exact n-gram(word) Jaccard pairs ≥ threshold, key_a < key_b.
+def token_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact n-gram(word) Jaccard pairs ≥ threshold, id_a < id_b.
 
     inter via token self-join, union = |A|+|B|−inter. All built-ins.
     """
-    return jaccard_pairs_from_tokens(tokens_df(df, text, key), threshold, key)
+    return jaccard_pairs_from_tokens(tokens_df(df), threshold)
 
 
-def char_ngram_jaccard_pairs(
-    df: DataFrame,
-    n: int = 5,
-    threshold: float = 0.8,
-    text: str = "text",
-    key: str = "doc_id",
-) -> DataFrame:
-    """Exact character-n-gram Jaccard pairs ≥ threshold — the n-gram
-    Jaccard dedup baseline. Same inverted-index shape (and the same
+def char_ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Exact character-n-gram Jaccard pairs ≥ CHAR_NGRAM_THRESHOLD — the
+    n-gram Jaccard dedup baseline. Same inverted-index shape (and the same
     quadratic-worst-case caveat) as token_jaccard_pairs: this is the
     exact small-scale oracle; the 100 TB path is MinHash-LSH over the
     same shingle stream."""
-    return jaccard_pairs_from_tokens(
-        char_ngram_df(df, n, text, key), threshold, key
-    )
+    return jaccard_pairs_from_tokens(char_ngram_df(df), CHAR_NGRAM_THRESHOLD)
 
 
-def jaccard_pairs_from_tokens(
-    toks: DataFrame, threshold: float, key: str = "doc_id"
-) -> DataFrame:
-    """Exact Jaccard ≥ threshold over any (key, token) distinct-pair
+def jaccard_pairs_from_tokens(toks: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard ≥ threshold over any (doc_id, token) distinct-pair
     table: inter via token self-join, union = |A|+|B|−inter."""
     toks = toks.cache()
-    sizes = toks.groupBy(key).agg(F.count(F.lit(1)).alias("n_tok"))
-    a = toks.withColumnRenamed(key, "id_a")
-    b = toks.withColumnRenamed(key, "id_b")
+    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
+    a = toks.withColumnRenamed("doc_id", "id_a")
+    b = toks.withColumnRenamed("doc_id", "id_b")
     inter = (
         a.join(b, "token")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.withColumnRenamed(key, "id_a").withColumnRenamed("n_tok", "n_a")
-    sb = sizes.withColumnRenamed(key, "id_b").withColumnRenamed("n_tok", "n_b")
+    sa = sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_tok", "n_a")
+    sb = sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_tok", "n_b")
     return (
         inter.join(F.broadcast(sa), "id_a")
         .join(F.broadcast(sb), "id_b")
@@ -134,13 +125,13 @@ def jaccard_pairs_from_tokens(
     )
 
 
-def _shingle_array(text: str, n: int):
+def _shingle_array(n: int):
     """Row-local n-token shingle set as an array<string> Column, JVM-side
     (split → sequence → slice → concat_ws → array_distinct). Docs with
     fewer than n tokens yield NULL (no shingles) — a truncated shingle
     would let unrelated short docs collide at jaccard 1.0, the same
     accidental semantics ADVICE r3 flagged for char n-grams."""
-    toks = tokens(F.col(text))
+    toks = tokens(F.col("text"))
     if n <= 1:
         return F.array_distinct(toks)
     sh = F.when(
@@ -190,24 +181,19 @@ def _minhash_params(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 64,
-    text: str = "text",
-    key: str = "doc_id",
-    shingle: int = 3,
-    hash_mode: str = "xxhash64",
+    df: DataFrame, shingle: int = 3, hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """(key, sigs: array<long>) MinHash signatures with ZERO shuffle.
+    """(doc_id, sigs: array<long>) MinHash signatures with ZERO shuffle.
 
     The signature is row-local, so no explode/groupBy: the shingle array
     is built JVM-side, one xxhash64 pass produces a base hash per shingle
-    (still JVM-side), and all `num_hashes` minwise values come from one
+    (still JVM-side), and all NUM_HASHES minwise values come from one
     Arrow-batched numpy pass — sig_i = min over shingles of
     (mult_i * h + add_i mod 2^64), a bijective multiply-shift re-hash of
     the base hash. At 10^12 docs this stage is a pure map: the only
     shuffle left in LSH dedup is the banded candidate join.
     """
-    mult, add = _minhash_params(num_hashes)
+    mult, add = _minhash_params(NUM_HASHES)
 
     @pandas_udf("array<long>")
     def sigs_udf(hashes: pd.Series) -> pd.Series:
@@ -227,8 +213,8 @@ def minhash_signatures(
             ).view(np.uint64)
             starts = np.zeros(len(nz), dtype=np.int64)
             np.cumsum(lens[nz][:-1], out=starts[1:])
-            sig = np.empty((len(nz), num_hashes), dtype=np.uint64)
-            for i in range(num_hashes):
+            sig = np.empty((len(nz), NUM_HASHES), dtype=np.uint64)
+            for i in range(NUM_HASHES):
                 v = mult[i] * flat + add[i]  # wraps mod 2^64 by design
                 sig[:, i] = np.minimum.reduceat(v, starts)
             signed = sig.view(np.int64)
@@ -253,11 +239,11 @@ def minhash_signatures(
     # ArrowEvalPython (pinned by test_plan_shapes).
     df = ensure_map_parallelism(df)
     base = F.transform(
-        _shingle_array(text, shingle),
+        _shingle_array(shingle),
         lambda s: _base_hash_expr(s, hash_mode),
     )
     return (
-        df.select(F.col(key), sigs_udf.asNondeterministic()(base).alias("sigs"))
+        df.select("doc_id", sigs_udf.asNondeterministic()(base).alias("sigs"))
         .filter(F.col("sigs").isNotNull())
     )
 
@@ -266,7 +252,7 @@ def bucket_candidate_pairs(
     stacked: DataFrame,
     key: str,
     bucket_cols: list[str],
-    max_inline_bucket: int = 256,
+    max_inline_bucket: int,
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) from a bucketed table —
     the shared core of every LSH family here (MinHash bands, sign-LSH
@@ -322,10 +308,7 @@ def bucket_candidate_pairs(
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    num_hashes: int = 64,
     bands: int = 16,
-    text: str = "text",
-    key: str = "doc_id",
     verify: bool = True,
     shingle: int = 3,
     max_inline_bucket: int = 256,
@@ -335,20 +318,20 @@ def minhash_lsh_pairs(
     optionally verified with exact token jaccard (verification only
     touches candidates).
 
-    Recall is a deterministic function of (num_hashes, bands) given the
+    Recall is a deterministic function of (NUM_HASHES, bands) given the
     fixed hash family: a jaccard-j pair collides in a band of r rows with
     probability ~j^r, missing all b bands with (1-j^r)^b — at the default
     64/16 (r=4) a 0.8-jaccard pair escapes with ~2e-4; at 64 hashes in 32
     bands (r=2) with ~6e-15, which is the configuration the exact-match
     registry queries use (verified pair set == the exact jaccard pair set
     on the test corpora)."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, num_hashes, text, key, shingle, hash_mode)
+    rows_per_band = NUM_HASHES // bands
+    sigs = minhash_signatures(df, shingle, hash_mode)
     # band hash = xxhash64 of the band's signature slice (hashing the
     # array directly — identical sig slices collide, which is the LSH
     # semantics; `sigs` is a materialized column so slices are cheap)
     stacked = sigs.select(
-        F.col(key),
+        "doc_id",
         F.explode(
             F.array(*[
                 F.struct(
@@ -360,10 +343,10 @@ def minhash_lsh_pairs(
                 for b in range(bands)
             ])
         ).alias("band"),
-    ).select(key, "band.band_id", "band.h")
+    ).select("doc_id", "band.band_id", "band.h")
 
     cand = bucket_candidate_pairs(
-        stacked, key, ["band_id", "h"], max_inline_bucket
+        stacked, "doc_id", ["band_id", "h"], max_inline_bucket
     )
     if not verify:
         return cand
@@ -371,9 +354,9 @@ def minhash_lsh_pairs(
     # hash (n-token shingles): join the shingle arrays back and compute
     # jaccard with JVM array ops — cost is O(|candidates|), never the
     # all-pairs self-join
-    arrs = df.select(F.col(key), _shingle_array(text, shingle).alias("toks"))
-    a = arrs.select(F.col(key).alias("id_a"), F.col("toks").alias("toks_a"))
-    b = arrs.select(F.col(key).alias("id_b"), F.col("toks").alias("toks_b"))
+    arrs = df.select("doc_id", _shingle_array(shingle).alias("toks"))
+    a = arrs.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"))
+    b = arrs.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"))
     n_inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
     return (
         cand.join(a, "id_a")
@@ -388,10 +371,7 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text: str = "text", key: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """64-bit SimHash per document with ZERO shuffle: the signature is
     row-local, so no explode/collect_list round trip — the distinct-token
     array and one xxhash64 per token stay JVM-side, and the bit-vote fold
@@ -439,36 +419,24 @@ def simhash_signatures(
     # and the UDF marked nondeterministic so the alias can't inline into
     # the filter and double-plan the Python stage (see minhash_signatures).
     df = ensure_map_parallelism(df)
-    toks = F.array_distinct(tokens(F.col(text)))
+    toks = F.array_distinct(tokens(F.col("text")))
     hashes = F.transform(toks, lambda t: _base_hash_expr(t, hash_mode))
     return (
-        df.select(F.col(key), fold.asNondeterministic()(hashes).alias("simhash"))
+        df.select("doc_id", fold.asNondeterministic()(hashes).alias("simhash"))
         .filter(F.col("simhash").isNotNull())
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text: str = "text",
-    key: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) ≤ max_hamming, found by the
-    pigeonhole trick: split 64 bits into (max_hamming+1) segments — any
-    pair within distance shares at least one exact segment → equi-join on
-    (segment_id, segment_bits), then exact popcount filter."""
-    return simhash_pairs_from_sigs(
-        simhash_signatures(df, text, key, hash_mode), max_hamming, key
-    )
+def simhash_pairs(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
+    """Near-dup pairs with Hamming(simhash) ≤ 3, found by the pigeonhole
+    trick: split 64 bits into 4 segments — any pair within distance
+    shares at least one exact segment → equi-join on (segment_id,
+    segment_bits), then exact popcount filter."""
+    return simhash_pairs_from_sigs(simhash_signatures(df, hash_mode), 3)
 
 
-def simhash_pairs_from_sigs(
-    sigs: DataFrame,
-    max_hamming: int = 3,
-    key: str = "doc_id",
-) -> DataFrame:
-    """Pigeonhole Hamming search over a precomputed (key, simhash) table —
+def simhash_pairs_from_sigs(sigs: DataFrame, max_hamming: int) -> DataFrame:
+    """Pigeonhole Hamming search over a precomputed (doc_id, simhash) table —
     the bucketing core of simhash_pairs, testable with crafted signatures.
 
     max_hamming must be in [1, 31]: 0 would need a single full-width
@@ -500,9 +468,9 @@ def simhash_pairs_from_sigs(
         ).alias(f"seg_{i}")
         for i in range(segs)
     ]
-    t = sigs.select(F.col(key), F.col("simhash"), *seg_cols)
+    t = sigs.select("doc_id", "simhash", *seg_cols)
     stacked = t.select(
-        key,
+        "doc_id",
         "simhash",
         F.explode(
             F.array(*[
@@ -510,16 +478,16 @@ def simhash_pairs_from_sigs(
                 for i in range(segs)
             ])
         ).alias("s"),
-    ).select(key, "simhash", "s.seg_id", "s.seg").localCheckpoint(eager=True)
+    ).select("doc_id", "simhash", "s.seg_id", "s.seg").localCheckpoint(eager=True)
     # materialized once: both sides of the pigeonhole self-join read the
     # same subtree, and without this the (Python) signature stage
     # upstream would evaluate once PER SIDE (plan-verified, round 4) —
     # same single-host caveat as bucket_candidate_pairs' checkpoint
     a = stacked.select(
-        F.col(key).alias("id_a"), F.col("simhash").alias("sh_a"), "seg_id", "seg"
+        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"), "seg_id", "seg"
     )
     b = stacked.select(
-        F.col(key).alias("id_b"), F.col("simhash").alias("sh_b"), "seg_id", "seg"
+        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"), "seg_id", "seg"
     )
     return (
         a.join(b, ["seg_id", "seg"])
@@ -534,15 +502,13 @@ def simhash_pairs_from_sigs(
 
 def connected_components(
     pairs: DataFrame,
-    key_a: str = "id_a",
-    key_b: str = "id_b",
     nodes: DataFrame | None = None,
-    node_col: str = "doc_id",
     max_iters: int = 25,
 ) -> DataFrame:
     """Duplicate-cluster assembly: connected components over a near-dup
-    pair graph by min-label propagation. Returns (node_col, component_id)
-    with component_id = the smallest member id (any orderable key type);
+    (id_a, id_b) pair graph by min-label propagation. Returns (doc_id,
+    component_id) with component_id = the smallest member id (any
+    orderable key type); `nodes` lists every doc_id, and
     nodes absent from any pair keep their own id (singleton components).
 
     Each iteration is one equi-join + groupBy(min) — O(diameter) rounds,
@@ -560,7 +526,7 @@ def connected_components(
     For adversarially long chains swap the propagation step for
     large-star/small-star — the surrounding contract is unchanged.
     """
-    e = pairs.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
+    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     # materialize once: every propagation round joins edges, and without
@@ -570,7 +536,7 @@ def connected_components(
     if nodes is None:
         node_df = edges.select(F.col("src").alias("node")).distinct()
     else:
-        node_df = nodes.select(F.col(node_col).alias("node")).distinct()
+        node_df = nodes.select(F.col("doc_id").alias("node")).distinct()
     labels = node_df.withColumn("label", F.col("node")).localCheckpoint(
         eager=True
     )
@@ -609,18 +575,15 @@ def connected_components(
             "doubling scheme"
         )
     return labels.select(
-        F.col("node").alias(node_col), F.col("label").alias("component_id")
+        F.col("node").alias("doc_id"), F.col("label").alias("component_id")
     )
 
 
-def repeated_ngram_mine(
-    df: DataFrame,
-    n: int = 13,
-    min_count: int = 2,
-    top_n: int = 50,
-    text: str = "text",
-    key: str = "doc_id",
-) -> DataFrame:
+# repeated_ngram_mine's gram length, minimum occurrences and result size.
+NGRAM_N, NGRAM_MIN_COUNT, NGRAM_TOP_N = 13, 2, 50
+
+
+def repeated_ngram_mine(df: DataFrame) -> DataFrame:
     """Corpus-wide repeated n-token-gram miner — the cross-boundary
     complement to fixed-boundary chunk dedup: a duplicated passage that
     STRADDLES chunk_dedup's 10-token boundaries never produces equal
@@ -629,19 +592,21 @@ def repeated_ngram_mine(
     offsets. The classic boilerplate/contamination signal (the
     repeated-13-gram statistic of web-corpus dedup pipelines).
 
-    Returns (gram, n_docs, n_occ, rank): the top_n most frequent grams
-    occurring ≥ min_count times, ranked by (n_occ DESC, gram ASC).
+    Returns (gram, n_docs, n_occ, rank): the NGRAM_TOP_N most frequent
+    NGRAM_N-grams occurring ≥ NGRAM_MIN_COUNT times, ranked by (n_occ
+    DESC, gram ASC).
 
     Scale shape: gram extraction is row-local JVM codegen (split →
     sequence → slice → concat_ws); the aggregation groups on md5(gram)
     so the exchange key is fixed-width and partial-aggregates map-side —
     each map task ships one (digest, gram, partial count) per distinct
     gram it saw, never one row per occurrence; n_docs adds one
-    (digest, doc_id)-distinct pass of integer pairs. The final top_n is
+    (digest, doc_id)-distinct pass of integer pairs. The final top N is
     TakeOrdered (per-partition k, no global sort)."""
     from pyspark.sql.window import Window
 
-    toks = tokens(F.col(text))
+    n = NGRAM_N
+    toks = tokens(F.col("text"))
     grams = F.when(
         F.size(toks) >= n,
         F.transform(
@@ -649,7 +614,7 @@ def repeated_ngram_mine(
             lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
         ),
     ).otherwise(F.array())
-    g = df.select(F.col(key).alias("doc_id"), F.explode(grams).alias("gram"))
+    g = df.select("doc_id", F.explode(grams).alias("gram"))
     agg = (
         g.groupBy(F.md5("gram").alias("digest"))
         .agg(
@@ -657,9 +622,9 @@ def repeated_ngram_mine(
             F.count(F.lit(1)).alias("n_occ"),
             F.countDistinct("doc_id").alias("n_docs"),
         )
-        .filter(F.col("n_occ") >= min_count)
+        .filter(F.col("n_occ") >= NGRAM_MIN_COUNT)
     )
-    top = agg.orderBy(F.desc("n_occ"), F.asc("gram")).limit(top_n)
+    top = agg.orderBy(F.desc("n_occ"), F.asc("gram")).limit(NGRAM_TOP_N)
     w = Window.orderBy(F.desc("n_occ"), F.asc("gram"))
     return top.select(
         "gram", "n_docs", "n_occ", F.row_number().over(w).alias("rank")
@@ -667,13 +632,9 @@ def repeated_ngram_mine(
 
 
 def substring_fingerprints(
-    df: DataFrame,
-    k: int = 50,
-    text: str = "text",
-    key: str = "doc_id",
-    winnow: int | None = None,
+    df: DataFrame, k: int = 50, winnow: int | None = None,
 ) -> DataFrame:
-    """(key, i, d) fingerprint rows for :func:`exact_substring_dedup`:
+    """(doc_id, i, d) fingerprint rows for :func:`exact_substring_dedup`:
     one row per selected k-char window start (1-based i), with d = the
     first 16 md5 hex chars of the window reinterpreted as a SIGNED
     64-bit int (conv(hex, 16, -10) semantics) — bijective with the hex
@@ -693,23 +654,23 @@ def substring_fingerprints(
         IntegerType, LongType, StructField, StructType,
     )
 
-    base_docs = df.filter(F.col(text).isNotNull())
+    base_docs = df.filter(F.col("text").isNotNull())
     if winnow is None:
         dig = F.when(
-            F.length(text) >= k,
+            F.length("text") >= k,
             F.transform(
-                F.sequence(F.lit(1), F.length(text) - F.lit(k - 1)),
+                F.sequence(F.lit(1), F.length("text") - F.lit(k - 1)),
                 lambda i: F.conv(
                     F.substring(
-                        F.md5(F.col(text).substr(i, F.lit(k))), 1, 16
+                        F.md5(F.col("text").substr(i, F.lit(k))), 1, 16
                     ),
                     16, -10,
                 ).cast("long"),
             ),
         ).otherwise(F.array().cast("array<long>"))
         return base_docs.select(
-            F.col(key), F.posexplode(dig).alias("i0", "d")
-        ).select(key, (F.col("i0") + 1).alias("i"), "d")
+            "doc_id", F.posexplode(dig).alias("i0", "d")
+        ).select("doc_id", (F.col("i0") + 1).alias("i"), "d")
     w = int(winnow)
     if w < 1:
         raise ValueError("winnow window must be >= 1")
@@ -718,7 +679,7 @@ def substring_fingerprints(
     from numpy.lib.stride_tricks import sliding_window_view
 
     schema = StructType([
-        base_docs.schema[key],
+        base_docs.schema["doc_id"],
         StructField("i", IntegerType()),
         StructField("d", LongType()),
     ])
@@ -728,7 +689,7 @@ def substring_fingerprints(
             keys: list = []
             i_parts: list = []
             d_parts: list = []
-            for kv, t in zip(pdf[key], pdf[text]):
+            for kv, t in zip(pdf["doc_id"], pdf["text"]):
                 n_pos = len(t) - (k - 1)
                 if n_pos <= 0:
                     continue
@@ -752,20 +713,16 @@ def substring_fingerprints(
                 d_parts.append(dig[sel])
             if keys:
                 yield pd.DataFrame({
-                    key: keys,
+                    "doc_id": keys,
                     "i": np.concatenate(i_parts).astype(np.int32),
                     "d": np.concatenate(d_parts).view(np.int64),
                 })
 
-    return base_docs.select(key, text).mapInPandas(fp, schema)
+    return base_docs.select("doc_id", "text").mapInPandas(fp, schema)
 
 
 def exact_substring_dedup(
-    df: DataFrame,
-    k: int = 50,
-    text: str = "text",
-    key: str = "doc_id",
-    winnow: int | None = None,
+    df: DataFrame, k: int = 50, winnow: int | None = None,
 ) -> DataFrame:
     """Exact substring deduplication (the Lee et al. 2022 "Deduplicating
     Training Data" ExactSubstr operation, Spark-shaped): any k-char
@@ -785,7 +742,7 @@ def exact_substring_dedup(
     exhaustive mode's exchange carries one fingerprint per corpus
     character, winnowed mode one per ~(w+1)/2 characters.
 
-    Returns (key, n_chars, n_removed, cleaned_len, cleaned_md5) — the
+    Returns (doc_id, n_chars, n_removed, cleaned_len, cleaned_md5) — the
     decision/verification plane; producing the cleaned corpus itself is
     the same plan minus the md5 projection.
 
@@ -808,7 +765,7 @@ def exact_substring_dedup(
     one row-local Arrow batch pass (numpy code-point mask, not the old
     per-character generator). The text crosses the wire exactly once
     (the final doc join), like chunk_dedup's data plane."""
-    win = substring_fingerprints(df, k, text, key, winnow)
+    win = substring_fingerprints(df, k, winnow)
     # materialize the fingerprints ONCE: both the digest count and the
     # semi-join probe read this frame (without it the fingerprint stage
     # would run per consumer — the r06 double-compute). Single-host
@@ -829,7 +786,7 @@ def exact_substring_dedup(
         .select("d")
     )
     dup_win = win.join(dup_d, "d", "leftsemi")
-    marks = dup_win.groupBy(key).agg(
+    marks = dup_win.groupBy("doc_id").agg(
         F.collect_list(F.col("i")).alias("starts")
     )
 
@@ -851,14 +808,14 @@ def exact_substring_dedup(
             out.append(codes[~mask].tobytes().decode("utf-32-le"))
         return pd.Series(out, dtype=object)
 
-    base = df.filter(F.col(text).isNotNull()).join(marks, key, "left")
+    base = df.filter(F.col("text").isNotNull()).join(marks, "doc_id", "left")
     cleaned = cleaned_udf.asNondeterministic()(
-        F.col(text), F.col("starts")
+        F.col("text"), F.col("starts")
     ).alias("cleaned")
-    return base.select(F.col(key), F.col(text), cleaned).select(
-        F.col(key),
-        F.length(text).alias("n_chars"),
-        (F.length(text) - F.length("cleaned")).alias("n_removed"),
+    return base.select("doc_id", "text", cleaned).select(
+        "doc_id",
+        F.length("text").alias("n_chars"),
+        (F.length("text") - F.length("cleaned")).alias("n_removed"),
         F.length("cleaned").alias("cleaned_len"),
         F.md5("cleaned").alias("cleaned_md5"),
     )

@@ -74,10 +74,11 @@ def extract_text_from_html(html_col: Column) -> Column:
     return F.substring_index(F.substring_index(s, "<article>", -1), "</article>", 1)
 
 
-def with_geotag(df: DataFrame, text: str = "text") -> DataFrame:
-    """Add lat/lon columns (NULL when the page carries no geotag)."""
-    lat = F.regexp_extract(F.col(text), GEO_PATTERN, 1)
-    lon = F.regexp_extract(F.col(text), GEO_PATTERN, 2)
+def with_geotag(df: DataFrame) -> DataFrame:
+    """Add lat/lon columns from `text` (NULL when the page carries no
+    geotag)."""
+    lat = F.regexp_extract(F.col("text"), GEO_PATTERN, 1)
+    lon = F.regexp_extract(F.col("text"), GEO_PATTERN, 2)
     return df.withColumn(
         "lat", F.when(lat != "", lat.cast("double"))
     ).withColumn(
@@ -111,21 +112,18 @@ def cell_udf(res: int):
     return encode.asNondeterministic()
 
 
-def with_cell(df: DataFrame, res: int, lat: str = "lat", lon: str = "lon",
-              out: str = "cell") -> DataFrame:
-    """Encode geotag into the cell id at resolution `res` (NULL-safe)."""
-    return df.withColumn(out, cell_udf(res)(F.col(lat), F.col(lon)))
+def with_cell(df: DataFrame, res: int) -> DataFrame:
+    """Encode lat/lon into the `cell` id at resolution `res` (NULL-safe)."""
+    return df.withColumn("cell", cell_udf(res)(F.col("lat"), F.col("lon")))
 
 
 def with_fused_geo(
     df: DataFrame,
     res: int,
-    html: str = "html",
     carry: tuple[str, ...] = ("url", "warc_ts", "lang"),
-    keep_html: bool = False,
 ) -> DataFrame:
-    """Attach extracted_text/lat/lon/cell from html in one fused
-    mapInPandas pass.
+    """Attach extracted_text/lat/lon/cell from `html` in one fused
+    mapInPandas pass, keeping the `carry` columns.
 
     mapInPandas, NOT a pandas_udf: EvalPythonExec buffers every input row
     in a HybridRowQueue (spilling to disk) while Python computes — with a
@@ -137,11 +135,8 @@ def with_fused_geo(
         DoubleType, LongType, StringType, StructField, StructType,
     )
 
-    in_cols = [*carry, html]
-    carry_fields = [df.schema[c] for c in carry]
     out_schema = StructType(
-        carry_fields
-        + ([df.schema[html]] if keep_html else [])
+        [df.schema[c] for c in carry]
         + [
             StructField("extracted_text", StringType()),
             StructField("lat", DoubleType()),
@@ -153,26 +148,26 @@ def with_fused_geo(
     def run(batches):
         for pdf in batches:
             n = len(pdf)
-            texts, lats, lons = extract_batch(pdf[html])
+            texts, lats, lons = extract_batch(pdf["html"])
             ok = ~np.isnan(lats)
             # Int64 (masked): cell ids exceed 2^53 — no float intermediate
             cell = pd.array(np.zeros(n, dtype=np.int64), dtype="Int64")
             cell[~ok] = pd.NA
             if ok.any():
                 cell[ok] = cellmod.latlon_to_cell(lats[ok], lons[ok], res)
-            out = pdf[list(carry) + ([html] if keep_html else [])].copy()
+            out = pdf[list(carry)].copy()
             out["extracted_text"] = texts
             out["lat"] = pd.Series(lats).where(pd.Series(ok))
             out["lon"] = pd.Series(lons).where(pd.Series(ok))
             out["cell"] = cell
             yield out
 
-    return df.select(*in_cols).mapInPandas(run, schema=out_schema)
+    return df.select(*carry, "html").mapInPandas(run, schema=out_schema)
 
 
-def with_cell_token(df: DataFrame, cell: str = "cell",
-                    out: str = "cell_token") -> DataFrame:
-    """Base-4 token of the cell id: the prefix-prunable partition key.
+def with_cell_token(df: DataFrame) -> DataFrame:
+    """Adds `cell_token`, the base-4 token of the `cell` id: the
+    prefix-prunable partition key.
     The cell column must hold no NULLs: Arrow hands pandas a batch with
     NULLs as float64, which would quantize 2^60-scale cell ids."""
 
@@ -180,4 +175,4 @@ def with_cell_token(df: DataFrame, cell: str = "cell",
     def encode(cell_s: pd.Series) -> pd.Series:
         return pd.Series(cellmod.cell_to_token(cell_s.to_numpy(dtype="int64")))
 
-    return df.withColumn(out, encode(F.col(cell)))
+    return df.withColumn("cell_token", encode(F.col("cell")))

@@ -13,7 +13,7 @@ the vectorized cell UDF, disk-cell candidates explode from an Arrow-batched
 ``array<long>`` pandas UDF, settlement is a window-flag + anti-join — no
 ``.collect()`` anywhere, so the operator is the same plan at 10^2 or 10^8
 queries. Each escalation round localCheckpoints its (small, k-rows-per-
-query) top-k output to truncate lineage: max_rounds Spark jobs total, each
+query) top-k output to truncate lineage: MAX_ROUNDS Spark jobs total, each
 a cell equi-join of candidates against the cell-indexed corpus.
 
 Distance metric: planar degrees sqrt(dlat² + dlon²) — deterministic and
@@ -31,6 +31,10 @@ from pyspark.sql.window import Window
 
 from geotiff_spark.functions import cells as cellmod
 
+# Neighbours per query, and ring-doubling rounds before the last round
+# settles every query still pending.
+K, MAX_ROUNDS = 5, 4
+
 
 def disk_cells_udf(radius: int):
     """cell id → array<long> of all cells within Chebyshev `radius`."""
@@ -44,37 +48,28 @@ def disk_cells_udf(radius: int):
 
 
 def knn_join(
-    spark: SparkSession,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    res: int = 7,
-    key: str = "doc_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    initial_radius: int = 1,
-    max_rounds: int = 4,
+    spark: SparkSession, corpus: DataFrame, queries: DataFrame, res: int = 7,
 ) -> DataFrame:
-    """Exact kNN join. corpus: (key, lat, lon [+cell]); queries: same.
+    """Exact kNN join. corpus: (doc_id, lat, lon [+cell]); queries: same.
 
-    Returns (qid, nn_id, dist, rank), rank 1..k, self excluded, planar
+    Returns (qid, nn_id, dist, rank), rank 1..K, self excluded, planar
     degree distance, ties broken by nn_id.
     """
     from geotiff_spark.operators.extract import cell_udf
 
     if "cell" not in corpus.columns:
-        corpus = corpus.withColumn("cell", cell_udf(res)(F.col(lat), F.col(lon)))
+        corpus = corpus.withColumn("cell", cell_udf(res)(F.col("lat"), F.col("lon")))
     corpus = corpus.select(
-        F.col(key).alias("nn_id"),
-        F.col(lat).alias("nlat"),
-        F.col(lon).alias("nlon"),
+        F.col("doc_id").alias("nn_id"),
+        F.col("lat").alias("nlat"),
+        F.col("lon").alias("nlon"),
         "cell",
     )
 
     pending = queries.select(
-        F.col(key).alias("qid"),
-        F.col(lat).alias("qlat"),
-        F.col(lon).alias("qlon"),
+        F.col("doc_id").alias("qid"),
+        F.col("lat").alias("qlat"),
+        F.col("lon").alias("qlon"),
     ).withColumn("qcell", cell_udf(res)(F.col("qlat"), F.col("qlon")))
 
     cell_h_deg, _cell_w_deg = cellmod.cell_size_degrees(res)
@@ -82,9 +77,9 @@ def knn_join(
     w_all = Window.partitionBy("qid")
 
     results: DataFrame | None = None
-    radius = initial_radius
-    for _round in range(max_rounds):
-        last = _round == max_rounds - 1
+    radius = 1
+    for _round in range(MAX_ROUNDS):
+        last = _round == MAX_ROUNDS - 1
         cand = pending.withColumn(
             "cell", F.explode(disk_cells_udf(radius)(F.col("qcell")))
         ).drop("qcell")
@@ -110,13 +105,13 @@ def knn_join(
         safe = float(radius) * cell_h_deg
         topk = (
             scored.withColumn("rank", F.row_number().over(w_rank))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= K)
         )
         flagged = topk.withColumn(
             "settled",
             F.lit(True)
             if last
-            else (F.count(F.lit(1)).over(w_all) >= k)
+            else (F.count(F.lit(1)).over(w_all) >= K)
             & (F.max("dist").over(w_all) < F.lit(safe)),
         ).select("qid", "nn_id", "dist", "rank", "settled")
         # truncate lineage: each round's top-k is k rows per live query —

@@ -296,8 +296,12 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     return _map_payloads(media, "image", out_schema, resize)
 
 
-def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
-    """Explode every `every`-th frame as its own image row."""
+# sample_video_frames keeps frames 0, FRAME_EVERY, 2 * FRAME_EVERY, ...
+FRAME_EVERY = 2
+
+
+def sample_video_frames(media: DataFrame) -> DataFrame:
+    """Explode every FRAME_EVERY-th frame as its own image row."""
     out_schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -327,7 +331,7 @@ def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
                 "frame": struct.pack("<4sHHB", b"FIMG", w, h, 1)
                 + frames[i].tobytes(),
             }
-            for i in range(0, nf, every)
+            for i in range(0, nf, FRAME_EVERY)
         ]
 
     return _map_payloads(media, "video", out_schema, sample)

@@ -113,14 +113,14 @@ def _row_record(r) -> dict:
     }
 
 
-def _gather(rec: dict, xs, ys, sample: int, strict: bool):
-    """One record's pixel values at model-space points: (values in the
-    raster dtype, valid mask; invalid values are arbitrary)."""
+def _gather(rec: dict, xs, ys, strict: bool):
+    """One record's band-0 pixel values at model-space points: (values
+    in the raster dtype, valid mask; invalid values are arbitrary)."""
     flat = np.frombuffer(rec["data"], dtype=np.dtype(rec["dtype"]))
     kind, coeffs = rec["transform"]
     idx, valid = tf.sample_indices(
         kind, coeffs, rec["width"], rec["height"], rec["num_samples"],
-        rec["raster_type"], xs, ys, sample, strict,
+        rec["raster_type"], xs, ys, 0, strict,
     )
     return flat[idx], valid
 
@@ -226,12 +226,8 @@ def _total_decoded_bytes(spark: SparkSession, paths: list[str]) -> int:
     return _cache_put(_SIZES_CACHE, key, total)
 
 
-def sample_udf(
-    spark: SparkSession,
-    records: dict[str, dict],
-    sample: int = 0,
-    strict: bool = True,
-):
+def sample_udf(spark: SparkSession, records: dict[str, dict],
+               strict: bool = True):
     """Arrow UDF (raster_id, x, y) → double value: NULL out of bounds,
     on an unknown raster_id and on a NaN pixel. strict=False maps
     tie-points coverage holes to NULL instead of failing the task
@@ -251,7 +247,7 @@ def sample_udf(
             if rec is None:
                 continue
             mask = codes == code
-            vals, valid = _gather(rec, xs[mask], ys[mask], sample, strict)
+            vals, valid = _gather(rec, xs[mask], ys[mask], strict)
             out[mask] = np.where(valid, vals, np.nan)
         return pa.array(out, mask=np.isnan(out))
 
@@ -266,18 +262,15 @@ def sample_join_copartitioned(
     df: DataFrame,
     rasters: DataFrame,
     raster_id: Column,
-    x: str = "x",
-    y: str = "y",
-    out: str = "value",
-    sample: int = 0,
     strict: bool = True,
 ) -> DataFrame:
     """Sampling join for raster corpora too large to broadcast: cogroup
-    points (shuffled by raster_id) with the decoded rasters DataFrame
-    (each raster row ships once), and run the same vectorized gather
-    group-locally. The pixel data never touches the driver."""
+    (x, y) points (shuffled by raster_id) with the decoded rasters
+    DataFrame (each raster row ships once), and run the same vectorized
+    gather group-locally into column `value`. The pixel data never
+    touches the driver."""
     point_cols = [f.name for f in df.schema.fields]
-    out_schema = StructType(df.schema.fields + [StructField(out, DoubleType())])
+    out_schema = StructType(df.schema.fields + [StructField("value", DoubleType())])
     pts = df.withColumn("__rid", raster_id)
     r = rasters.select(
         "raster_id", "width", "height", "num_samples", "dtype",
@@ -287,17 +280,17 @@ def sample_join_copartitioned(
     def kernel(_key: tuple, points: pa.Table, raster: pa.Table) -> pa.Table:
         res = points.select(point_cols)
         if raster.num_rows == 0:  # unknown raster_id → NULL, like broadcast
-            return res.append_column(out, pa.nulls(res.num_rows, pa.float64()))
+            return res.append_column("value", pa.nulls(res.num_rows, pa.float64()))
         if raster.num_rows > 1:
             raise _duplicate_basename(raster.column("raster_id")[0].as_py())
         vals, valid = _gather(
             _row_record(raster.to_pylist()[0]),
-            points.column(x).to_numpy(), points.column(y).to_numpy(),
-            sample, strict,
+            points.column("x").to_numpy(), points.column("y").to_numpy(),
+            strict,
         )
         vals = vals.astype(np.float64)
         return res.append_column(
-            out, pa.array(vals, mask=~valid | np.isnan(vals))
+            "value", pa.array(vals, mask=~valid | np.isnan(vals))
         )
 
     # cogroup pairs the two sides' keys by position, not by name
@@ -313,15 +306,12 @@ def with_raster_sample(
     spark: SparkSession,
     raster_paths: list[str],
     raster_id: str | Column,
-    x: str = "x",
-    y: str = "y",
-    out: str = "value",
-    sample: int = 0,
     strict: bool = True,
     mode: str = "auto",
 ) -> DataFrame:
-    """Attach a sampled raster value column. `raster_id` may be a literal
-    (every row samples one raster) or a column (per-row raster routing).
+    """Attach column `value`: band 0 of the raster at each row's
+    model-space point (`x`, `y`). `raster_id` may be a literal (every row
+    samples one raster) or a column (per-row raster routing).
 
     mode: 'auto' (header-probe the decoded size, broadcast at or under
     MAX_BROADCAST_BYTES, co-partition above it), 'broadcast', or
@@ -333,21 +323,19 @@ def with_raster_sample(
         mode = "broadcast" if total <= MAX_BROADCAST_BYTES else "copartition"
     if mode == "broadcast":
         records = load_raster_records_distributed(spark, raster_paths)
-        udf = sample_udf(spark, records, sample, strict)
-        return df.withColumn(out, udf(rid_col, F.col(x), F.col(y)))
+        udf = sample_udf(spark, records, strict)
+        return df.withColumn("value", udf(rid_col, F.col("x"), F.col("y")))
     if mode == "copartition":
         from geotiff_spark.sources.rasters import read_rasters
 
         rasters = read_rasters(spark, list(raster_paths), glob="*")
-        return sample_join_copartitioned(
-            df, rasters, rid_col, x, y, out, sample, strict
-        )
+        return sample_join_copartitioned(df, rasters, rid_col, strict)
     raise ValueError(f"unknown sampling mode {mode!r}")
 
 
-def sample_exact_udf(spark: SparkSession, records: dict[str, dict], sample: int = 0):
-    """Exact-value variant: returns struct<dtype, int_val (decimal(20,0)),
-    float_val> so u64 samples above 2^63 and i64 extremes survive without
+def sample_exact_udf(spark: SparkSession, records: dict[str, dict]):
+    """Exact-value variant (band 0): returns struct<dtype, int_val
+    (decimal(20,0)), float_val> so u64 samples above 2^63 and i64 extremes survive without
     a float round trip (SURVEY.md §1.3 / hard part #4 — Spark has no
     unsigned types; DecimalType(20,0) holds the full u64 range).
     """
@@ -370,7 +358,7 @@ def sample_exact_udf(spark: SparkSession, records: dict[str, dict], sample: int 
                 continue
             mask = rids == rid
             dt = np.dtype(rec["dtype"])
-            vals, valid = _gather(rec, xs[mask], ys[mask], sample, True)
+            vals, valid = _gather(rec, xs[mask], ys[mask], True)
             midx = np.nonzero(mask)[0]
             for j, (v, ok) in enumerate(zip(vals, valid)):
                 if not ok:
@@ -389,13 +377,13 @@ def sample_exact_udf(spark: SparkSession, records: dict[str, dict], sample: int 
     return sample_value
 
 
-def zonal_stats(joined: DataFrame, value: str = "value", key: str = "poly_id") -> DataFrame:
-    """Zonal statistics: sample join → groupBy(polygon).agg — the raster
-    zonal-stats operator (SURVEY.md §2.C aggregations). Partial aggregation
-    (map-side combine) is automatic."""
-    return joined.groupBy(key).agg(
+def zonal_stats(joined: DataFrame) -> DataFrame:
+    """Zonal statistics: sample join → groupBy(poly_id).agg of `value` —
+    the raster zonal-stats operator (SURVEY.md §2.C aggregations). Partial
+    aggregation (map-side combine) is automatic."""
+    return joined.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"),
-        F.avg(value).alias("avg_value"),
-        F.min(value).alias("min_value"),
-        F.max(value).alias("max_value"),
+        F.avg("value").alias("avg_value"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
     )

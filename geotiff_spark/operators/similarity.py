@@ -8,10 +8,13 @@
   probe multiple hash tables to trade cost for recall.
 - ivf_topk: the other canonical scale path — a coarse quantizer (spherical
   k-means trained by distributed Lloyd iterations) partitions the corpus
-  into inverted lists; queries probe the n_probe nearest centroids and
-  re-rank exactly inside them. Centroids are model state (n_centroids ×
+  into inverted lists; queries probe the N_PROBE nearest centroids and
+  re-rank exactly inside them. Centroids are model state (N_CENTROIDS ×
   dim doubles) — the only driver-side materialization, same tier as the
   salting histogram.
+
+Every operator here reads vectors as (vec_id, embedding), and every top-k
+keeps TOP_K neighbours per query.
 """
 
 from __future__ import annotations
@@ -23,6 +26,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
+
+TOP_K = 5
+# lsh_topk's hyperplane layout over 64-dim embeddings.
+LSH_TOPK_DIM, LSH_TOPK_PLANES, LSH_TOPK_TABLES = 64, 4, 8
+# lsh_near_dup_pairs' hash tables.
+NEAR_DUP_TABLES = 32
+# Inverted lists, lists probed per query, and k-means rounds of the IVF
+# operators.
+N_CENTROIDS, N_PROBE, IVF_ITERS = 16, 4, 3
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -85,14 +97,8 @@ def cosine_batch_udf():
     return cosine_batch.asNondeterministic()
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Exact top-k neighbors per query vector (cosine, self excluded).
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact TOP_K neighbors per query vector (cosine, self excluded).
 
     Broadcast the (small) query side against the corpus — at 100 TB the
     corpus scan is embarrassingly parallel, one shuffle for the per-query
@@ -103,12 +109,12 @@ def brute_force_topk(
     # blow-up (cos = dot/(nq*nc) is the same doubles as cosine(), but the
     # norm aggregates run n times instead of n*q times)
     q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec).alias("qvec"),
-        _norm(F.col(vec)).alias("qnorm"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"),
+        _norm(F.col("embedding")).alias("qnorm"),
     )
     c = corpus.select(
-        F.col(key).alias("nn_id"), F.col(vec).alias("cvec"),
-        _norm(F.col(vec)).alias("cnorm"),
+        F.col("vec_id").alias("nn_id"), F.col("embedding").alias("cvec"),
+        _norm(F.col("embedding")).alias("cnorm"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -122,7 +128,7 @@ def brute_force_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nn_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "nn_id", "rank")
     )
 
@@ -162,7 +168,7 @@ def _seq_matmul(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
     return acc
 
 
-def bucket_udf(dim: int, n_planes: int, n_tables: int, seed: int = 1337,
+def bucket_udf(dim: int, n_planes: int, n_tables: int,
                plane_mode: str = "gaussian"):
     """Sign-LSH buckets for all tables in one Arrow-batched pandas UDF:
     one (dim x n_planes*n_tables) matmul per batch. Deterministic (fixed
@@ -178,7 +184,7 @@ def bucket_udf(dim: int, n_planes: int, n_tables: int, seed: int = 1337,
         planes = md5_planes(dim, n_planes * n_tables)
     else:
         planes = (
-            np.random.default_rng(seed)
+            np.random.default_rng(1337)
             .standard_normal((dim, n_planes * n_tables))
             .astype(np.float64)
         )
@@ -201,29 +207,21 @@ def bucket_udf(dim: int, n_planes: int, n_tables: int, seed: int = 1337,
 
 
 def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    plane_mode: str = "gaussian",
+    corpus: DataFrame, queries: DataFrame, plane_mode: str = "gaussian",
 ) -> DataFrame:
     """Approximate top-k: candidates = union over hash tables of same-bucket
     vectors (one explode + equi-join), exact cosine re-rank on candidates
-    only. Recall tunes via (n_planes, n_tables)."""
-    bu = bucket_udf(dim, n_planes, n_tables, plane_mode=plane_mode)
+    only. Recall tunes via (LSH_TOPK_PLANES, LSH_TOPK_TABLES)."""
+    bu = bucket_udf(LSH_TOPK_DIM, LSH_TOPK_PLANES, LSH_TOPK_TABLES,
+                    plane_mode=plane_mode)
+    vec = F.col("embedding")
     q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec).alias("qvec"),
-        _norm(F.col(vec)).alias("qnorm"),
-        F.explode(bu(F.col(vec))).alias("bucket"),
+        F.col("vec_id").alias("query_id"), vec.alias("qvec"),
+        _norm(vec).alias("qnorm"), F.explode(bu(vec)).alias("bucket"),
     )
     c = corpus.select(
-        F.col(key).alias("nn_id"), F.col(vec).alias("cvec"),
-        _norm(F.col(vec)).alias("cnorm"),
-        F.explode(bu(F.col(vec))).alias("bucket"),
+        F.col("vec_id").alias("nn_id"), vec.alias("cvec"),
+        _norm(vec).alias("cnorm"), F.explode(bu(vec)).alias("bucket"),
     )
     cand = (
         c.join(F.broadcast(q), "bucket")
@@ -238,7 +236,7 @@ def lsh_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nn_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "nn_id", "rank")
     )
 
@@ -246,11 +244,9 @@ def lsh_topk(
 def lsh_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.4,
-    key: str = "vec_id",
     vec: str = "embedding",
     dim: int = 64,
     n_planes: int = 3,
-    n_tables: int = 32,
     max_local_bucket: int = 4096,
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold via sign-LSH self-bucketing + exact
@@ -260,14 +256,14 @@ def lsh_near_dup_pairs(
     groupBy per-bucket candidate generation (the only shuffle of vectors'
     ids), exact JVM cosine on candidates only. Output ⊆ the exact pair
     set always (every candidate is re-scored); recall is governed by
-    (n_planes, n_tables): a pair at angle θ shares a table's bucket with
-    probability (1-θ/π)^n_planes and escapes all tables with
-    (1-(1-θ/π)^n_planes)^n_tables — deterministic here because the
+    (n_planes, NEAR_DUP_TABLES): a pair at angle θ shares a table's bucket
+    with probability (1-θ/π)^n_planes and escapes all tables with
+    (1-(1-θ/π)^n_planes)^NEAR_DUP_TABLES — deterministic here because the
     hyperplanes are seeded. At the defaults a cos=0.4 pair (θ≈66°)
     escapes with ~1e-4; the registry pins equality against the exact
     crossJoin oracle on the test corpora.
 
-    Scale honesty: the candidate volume is ~n_tables/2^n_planes of the
+    Scale honesty: the candidate volume is ~tables/2^n_planes of the
     full cross product per table-bucket population, so at a *permissive*
     threshold like 0.4 (random-vector tail, near-orthogonal pairs) the
     pruning factor is modest — production near-dup thresholds (cos ≥
@@ -294,15 +290,14 @@ def lsh_near_dup_pairs(
     hash-pinned at sf0.01, equality-checked vs the pair-stream form
     at sf0.1/sf1.0).
     """
-    key_dt = corpus.schema[key].dataType.simpleString()
+    key_dt = corpus.schema["vec_id"].dataType.simpleString()
+    bu = bucket_udf(dim, n_planes, NEAR_DUP_TABLES)
     stacked = corpus.select(
-        F.col(key).alias("id"), F.col(vec).alias("v"),
-        F.explode(bucket_udf(dim, n_planes, n_tables)(F.col(vec))).alias(
-            "bucket"
-        ),
+        F.col("vec_id").alias("id"), F.col(vec).alias("v"),
+        F.explode(bu(F.col(vec))).alias("bucket"),
     # materialized once: the size census, the group verify and the big-
     # bucket arm all read it (single-host caveat as elsewhere).
-    # DISK_ONLY: vectors × n_tables is the biggest frame this operator
+    # DISK_ONLY: vectors × tables is the biggest frame this operator
     # holds — keeping it out of the heap stops repeated calls from
     # squeezing every later query's execution memory (see the matching
     # note in exact_substring_dedup).
@@ -436,21 +431,15 @@ def _assign_udf(spark, centroids: np.ndarray, n_probe: int = 1):
     return assign
 
 
-def train_ivf_centroids(
-    spark,
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> np.ndarray:
-    """Spherical k-means by distributed Lloyd iterations: assignment is an
-    Arrow-batched matmul over the corpus; the update is a per-cluster mean
-    (applyInPandas — n_centroids tiny groups). Deterministic: seeded from
-    the n_centroids lowest-key corpus vectors. Only the (n_centroids, dim)
-    centroid matrix ever reaches the driver."""
+def train_ivf_centroids(spark, corpus: DataFrame) -> np.ndarray:
+    """Spherical k-means by IVF_ITERS distributed Lloyd iterations:
+    assignment is an Arrow-batched matmul over the corpus; the update is a
+    per-cluster mean (applyInPandas — N_CENTROIDS tiny groups).
+    Deterministic: seeded from the N_CENTROIDS lowest-key corpus vectors.
+    Only the (N_CENTROIDS, dim) centroid matrix ever reaches the driver."""
     seed_rows = (
-        corpus.orderBy(key).limit(n_centroids).select(vec).collect()
+        corpus.orderBy("vec_id").limit(N_CENTROIDS).select("embedding")
+        .collect()
     )
     cents = _normalize_rows(
         np.vstack([np.asarray(r[0], dtype=np.float64) for r in seed_rows])
@@ -460,10 +449,11 @@ def train_ivf_centroids(
         m = np.vstack(pdf["v"].to_numpy()).astype(np.float64).mean(axis=0)
         return pd.DataFrame({"cid": [int(pdf["cid"].iloc[0])], "c": [list(m)]})
 
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         assign = _assign_udf(spark, cents, 1)
         assigned = corpus.select(
-            F.col(vec).alias("v"), assign(F.col(vec))[0].alias("cid")
+            F.col("embedding").alias("v"),
+            assign(F.col("embedding"))[0].alias("cid"),
         )
         rows = (
             assigned.groupBy("cid")
@@ -477,14 +467,9 @@ def train_ivf_centroids(
     return cents
 
 
-def md5_anchor_centroids(
-    corpus: DataFrame,
-    n_centroids: int,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> np.ndarray:
+def md5_anchor_centroids(corpus: DataFrame) -> np.ndarray:
     """Oracle-replayable coarse quantizer: the anchors are the corpus
-    vectors with the n_centroids smallest (md5(key), key) — a legitimate
+    vectors with the N_CENTROIDS smallest (md5(key), key) — a legitimate
     IVF variant (random-anchor inverted file, the 0-iteration special
     case of k-means) whose anchor choice a SQL oracle reproduces with
     ORDER BY md5(CAST(key AS VARCHAR)), key LIMIT n. Unlike trained
@@ -492,10 +477,11 @@ def md5_anchor_centroids(
     ulp differences cannot cascade into different centroids."""
     rows = (
         corpus.select(
-            F.md5(F.col(key).cast("string")).alias("h"), F.col(key), F.col(vec)
+            F.md5(F.col("vec_id").cast("string")).alias("h"), "vec_id",
+            "embedding",
         )
-        .orderBy("h", key)
-        .limit(n_centroids)
+        .orderBy("h", "vec_id")
+        .limit(N_CENTROIDS)
         .collect()
     )
     return np.vstack([np.asarray(r[2], dtype=np.float64) for r in rows])
@@ -533,17 +519,18 @@ def _anchor_assign_udf(spark, anchors: np.ndarray, n_probe: int = 1):
     return assign
 
 
-def _ivf_search(corpus, queries, k, key, vec, one, probe) -> DataFrame:
+def _ivf_search(corpus, queries, one, probe) -> DataFrame:
     """The IVF search body shared by both quantizers: `one` assigns each
-    corpus row its list, `probe` each query its n_probe lists (both
+    corpus row its list, `probe` each query its N_PROBE lists (both
     array<int> UDFs); candidates are re-ranked by exact JVM cosine."""
+    vec = F.col("embedding")
     c = corpus.select(
-        F.col(key).alias("nn_id"), F.col(vec).alias("cvec"),
-        one(F.col(vec))[0].alias("cid"),
+        F.col("vec_id").alias("nn_id"), vec.alias("cvec"),
+        one(vec)[0].alias("cid"),
     )
     q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec).alias("qvec"),
-        F.explode(probe(F.col(vec))).alias("cid"),
+        F.col("vec_id").alias("query_id"), vec.alias("qvec"),
+        F.explode(probe(vec)).alias("cid"),
     )
     # corpus row sits in exactly one list and probe cids are distinct per
     # query, so (query, candidate) pairs are already unique — no distinct
@@ -555,44 +542,26 @@ def _ivf_search(corpus, queries, k, key, vec, one, probe) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nn_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "nn_id", "rank")
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    iters: int = 3,
-) -> DataFrame:
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate top-k via inverted lists: corpus rows live in their
-    nearest-centroid list; each query probes its n_probe nearest lists and
+    nearest-centroid list; each query probes its N_PROBE nearest lists and
     re-ranks exactly (JVM cosine) inside them. Candidate volume is
-    ~corpus × n_probe / n_centroids instead of corpus × queries."""
+    ~corpus × N_PROBE / N_CENTROIDS instead of corpus × queries."""
     spark = corpus.sparkSession
-    cents = train_ivf_centroids(spark, corpus, n_centroids, iters, key, vec)
-    return _ivf_search(corpus, queries, k, key, vec,
-                       _assign_udf(spark, cents, 1),
-                       _assign_udf(spark, cents, n_probe))
+    cents = train_ivf_centroids(spark, corpus)
+    return _ivf_search(corpus, queries, _assign_udf(spark, cents, 1),
+                       _assign_udf(spark, cents, N_PROBE))
 
 
-def ivf_topk_md5(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
+def ivf_topk_md5(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF top-k with the md5-anchor coarse quantizer — identical search
     shape to :func:`ivf_topk` (one inverted-list assignment per corpus
-    row, n_probe lists per query, exact JVM-cosine re-rank inside them)
+    row, N_PROBE lists per query, exact JVM-cosine re-rank inside them)
     but with an oracle-replayable quantizer: anchors come from
     md5-ordered ids and assignment scores are sequential-fold cosines,
     so a DuckDB oracle reproduces the whole pipeline bit-for-bit (see
@@ -600,7 +569,6 @@ def ivf_topk_md5(
     variant stays the bench/production path; this is the registry's
     oracle-gated form."""
     spark = corpus.sparkSession
-    anchors = md5_anchor_centroids(corpus, n_centroids, key, vec)
-    return _ivf_search(corpus, queries, k, key, vec,
-                       _anchor_assign_udf(spark, anchors, 1),
-                       _anchor_assign_udf(spark, anchors, n_probe))
+    anchors = md5_anchor_centroids(corpus)
+    return _ivf_search(corpus, queries, _anchor_assign_udf(spark, anchors, 1),
+                       _anchor_assign_udf(spark, anchors, N_PROBE))

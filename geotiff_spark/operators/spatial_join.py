@@ -153,10 +153,9 @@ def fused_pages_pip(
     spark: SparkSession,
     pages: DataFrame,
     res: int,
-    html: str = "html",
     carry: tuple[str, ...] = ("url",),
 ) -> DataFrame:
-    """The single-stage fast path: html decode → text extraction → geotag
+    """The single-stage fast path: `html` decode → text extraction → geotag
     → the PIP stage, all in ONE mapInPandas pass.
 
     Why: every pandas-UDF stage costs a wave of Python workers plus a JVM
@@ -170,8 +169,8 @@ def fused_pages_pip(
     from geotiff_spark.operators.extract import extract_batch
 
     def points(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        _texts, lats, lons = extract_batch(pdf[html])
+        _texts, lats, lons = extract_batch(pdf["html"])
         return lats, lons
 
-    return _pip_stage(spark, pages, res, carry, (html,), points,
+    return _pip_stage(spark, pages, res, carry, ("html",), points,
                       "fused_pages_pip")

@@ -80,12 +80,12 @@ def stopword_hits(text: Column, lang: str) -> Column:
     )
 
 
-def language_scores(df: DataFrame, text: str = "text") -> DataFrame:
-    """Stopword-hit score per language + argmax prediction (deterministic
-    lexicographic tiebreak)."""
+def language_scores(df: DataFrame) -> DataFrame:
+    """Stopword-hit score per language of the `text` column + argmax
+    prediction (deterministic lexicographic tiebreak)."""
     out = df
     for lang in STOPWORDS:
-        out = out.withColumn(f"score_{lang}", stopword_hits(F.col(text), lang))
+        out = out.withColumn(f"score_{lang}", stopword_hits(F.col("text"), lang))
     # argmax with lang-name tiebreak: pack (score, neglang) and take max
     pairs = F.array(*[
         F.struct(
@@ -98,10 +98,10 @@ def language_scores(df: DataFrame, text: str = "text") -> DataFrame:
     return out.withColumn("pred_lang", best["l"])
 
 
-def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
-    """Quality heuristics: length, token count, mean token length,
-    uppercase ratio, digit ratio, stopword ratio (en)."""
-    t = F.col(text)
+def quality_features(df: DataFrame) -> DataFrame:
+    """Quality heuristics of the `text` column: length, token count, mean
+    token length, uppercase ratio, digit ratio, stopword ratio (en)."""
+    t = F.col("text")
     n_tok = token_count(t)
     return (
         df.withColumn("n_chars_m", F.length(t))
@@ -131,20 +131,24 @@ def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, text: str = "text", key: str = "doc_id",
-                shingle: int = 20) -> DataFrame:
-    """Document fingerprint: md5 of the full text (exact identity) + the
-    minimum md5 over all `shingle`-char windows (shift-robust near-dup
-    fingerprint, winnowing-style). Both JVM-side: sequence → transform →
-    array_min."""
-    t = F.col(text)
+# fingerprint's window width in characters.
+FINGERPRINT_SHINGLE = 20
+
+
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Document fingerprint of (doc_id, text): md5 of the full text (exact
+    identity) + the minimum md5 over all FINGERPRINT_SHINGLE-char windows
+    (shift-robust near-dup fingerprint, winnowing-style). Both JVM-side:
+    sequence → transform → array_min."""
+    shingle = FINGERPRINT_SHINGLE
+    t = F.col("text")
     n_windows = F.greatest(F.length(t) - F.lit(shingle - 1), F.lit(1))
     shingle_hashes = F.transform(
         F.sequence(F.lit(1), n_windows),
         lambda i: F.md5(t.substr(i, F.lit(shingle))),
     )
     return df.select(
-        F.col(key),
+        "doc_id",
         F.md5(t).alias("digest"),
         F.array_min(shingle_hashes).alias("min_shingle_hash"),
     )

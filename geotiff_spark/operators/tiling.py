@@ -39,6 +39,14 @@ from pyspark.sql.types import (
 
 from geotiff_spark.plans.fusion import map_in_pandas
 
+# Tile edge in pixels; focal_stats' default window radius; build_pyramid's
+# overview levels; vectorize_threshold's cell resolution and value cut.
+# The raster oracles (oracle_raster) read the same values.
+TILE_SIZE = 256
+FOCAL_RADIUS = 1
+PYRAMID_LEVELS = 2
+VECTORIZE_RES, VECTORIZE_THRESHOLD = 7, 200.0
+
 TILE_SCHEMA = StructType(
     [
         StructField("raster_id", StringType()),
@@ -53,7 +61,7 @@ TILE_SCHEMA = StructType(
 )
 
 
-def raster_to_tiles(rasters: DataFrame, tile_size: int = 256) -> DataFrame:
+def raster_to_tiles(rasters: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
     """Explode rasters (RASTER_SCHEMA rows) into edge-clipped tiles."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -87,10 +95,11 @@ def raster_to_tiles(rasters: DataFrame, tile_size: int = 256) -> DataFrame:
     return map_in_pandas(rasters, run, TILE_SCHEMA)
 
 
-def tiles_to_raster(tiles_pdf: pd.DataFrame, tile_size: int = 256) -> np.ndarray:
-    """Driver/test-side inverse: reassemble one raster's tiles."""
+def tiles_to_raster(tiles_pdf: pd.DataFrame) -> np.ndarray:
+    """Driver/test-side inverse: reassemble one raster's TILE_SIZE tiles."""
     from geotiff_spark.functions.tiff import NUMPY_BY_NAME
 
+    tile_size = TILE_SIZE
     dt = NUMPY_BY_NAME[tiles_pdf["dtype"].iloc[0]]
     spp = int(tiles_pdf["num_samples"].iloc[0])
     w = int(
@@ -170,7 +179,7 @@ _HALO_SCHEMA = StructType([
 
 
 def focal_stats(
-    tiles: DataFrame, radius: int = 1, tile_size: int = 256
+    tiles: DataFrame, radius: int = FOCAL_RADIUS, tile_size: int = TILE_SIZE
 ) -> DataFrame:
     """(2r+1)×(2r+1) focal-SUM stats per tile, computed with halo
     exchange (r = `radius`, default the classic 3×3).
@@ -299,19 +308,19 @@ def focal_stats(
     )
 
 
-def build_pyramid(
-    tiles: DataFrame, levels: int = 3, tile_size: int = 256
-) -> DataFrame:
+def build_pyramid(tiles: DataFrame) -> DataFrame:
     """Tile pyramid (overview levels): level k+1 halves level k by 2×2
     mean (integer floor-mean for integer dtypes — deterministic).
 
-    Level-0 tiles in → all levels out with a `level` column. Each level
-    derives from the previous by one grouped shuffle on the parent tile
-    key: 4 child tiles (2×2 block) aggregate into one parent tile — a
-    logarithmic number of shrinking jobs, classic map-reduce pyramid.
+    Level-0 TILE_SIZE tiles in → levels 0..PYRAMID_LEVELS out with a
+    `level` column. Each level derives from the previous by one grouped
+    shuffle on the parent tile key: 4 child tiles (2×2 block) aggregate
+    into one parent tile — a logarithmic number of shrinking jobs,
+    classic map-reduce pyramid.
     """
     from pyspark.sql.types import IntegerType
 
+    tile_size = TILE_SIZE
     levelled = tiles.withColumn("level", F.lit(0))
     out = levelled
     schema = StructType(
@@ -367,7 +376,7 @@ def build_pyramid(
         }])
 
     current = levelled
-    for _lvl in range(levels):
+    for _lvl in range(PYRAMID_LEVELS):
         parents = (
             current.withColumn("px", (F.col("tile_x") / 2).cast("int"))
             .withColumn("py", (F.col("tile_y") / 2).cast("int"))
@@ -379,13 +388,12 @@ def build_pyramid(
     return out
 
 
-def vectorize_threshold(
-    rasters: DataFrame, res: int, threshold: float, sample: int = 0
-) -> DataFrame:
-    """Raster → vector: distinct cells (at `res`) whose covering pixel
-    value exceeds `threshold` — the cell-space footprint of a value mask.
-    Each pixel center is transformed to model space, encoded to a cell;
-    output (raster_id, cell, n_pixels, v_max)."""
+def vectorize_threshold(rasters: DataFrame) -> DataFrame:
+    """Raster → vector: distinct cells (at VECTORIZE_RES) whose covering
+    band-0 pixel value exceeds VECTORIZE_THRESHOLD — the cell-space
+    footprint of a value mask. Each pixel center is transformed to model
+    space, encoded to a cell; output (raster_id, cell, n_pixels, v_max)."""
+    res, threshold = VECTORIZE_RES, VECTORIZE_THRESHOLD
     schema = StructType([
         StructField("raster_id", StringType()),
         StructField("cell", LongType()),
@@ -406,7 +414,7 @@ def vectorize_threshold(
                 dt = NUMPY_BY_NAME[r["dtype"]]
                 h, w, spp = r["height"], r["width"], r["num_samples"]
                 arr = np.frombuffer(bytes(r["data"]), dtype=dt).reshape(h, w, spp)
-                vals = arr[:, :, sample].astype(np.float64)
+                vals = arr[:, :, 0].astype(np.float64)
                 ys, xs = np.nonzero(vals > threshold)
                 if len(ys) == 0:
                     continue

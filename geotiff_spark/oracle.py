@@ -42,10 +42,10 @@ def morton_sql(res: int, ix: str = "ix", iy: str = "iy") -> str:
     return f"CAST({res} AS BIGINT) * {1 << 57} + ({morton})"
 
 
-def cell_sql(res: int, lat_expr: str = LAT_SQL, lon_expr: str = LON_SQL) -> str:
-    """SELECT-able expression set: a CTE producing (doc_id, cell) that
-    matches cells.latlon_to_cell exactly."""
-    ix, iy = grid_exprs_sql(res, lat_expr, lon_expr)
+def cell_sql(res: int) -> str:
+    """SELECT-able expression set: a CTE producing (doc_id, cell) of the
+    documents' geo enrichment that matches cells.latlon_to_cell exactly."""
+    ix, iy = grid_exprs_sql(res, LAT_SQL, LON_SQL)
     return f"""
 WITH grid AS (
   SELECT doc_id, {ix} AS ix, {iy} AS iy FROM documents
@@ -75,14 +75,14 @@ def _edges_values() -> str:
     return ",\n    ".join(rows)
 
 
-def pip_join_sql(lat_expr: str = LAT_SQL, lon_expr: str = LON_SQL) -> str:
-    """(doc_id, poly_id) pairs where the point lies inside the polygon,
-    by even-odd crossing count — semantics identical to
+def pip_join_sql() -> str:
+    """(doc_id, poly_id) pairs where the document's geo point lies inside
+    the polygon, by even-odd crossing count — semantics identical to
     functions.pip.points_in_polygon (strict 'px < xin', half-open y test).
     """
     return f"""
 WITH pts AS (
-  SELECT doc_id, {lat_expr} AS lat, {lon_expr} AS lon FROM documents
+  SELECT doc_id, {LAT_SQL} AS lat, {LON_SQL} AS lon FROM documents
 ),
 edges(poly_id, x0, y0, x1, y1) AS (
   VALUES

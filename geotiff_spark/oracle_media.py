@@ -92,8 +92,10 @@ def _audio(row: dict) -> tuple:
 
 
 def _frames(row: dict) -> tuple:
-    """Frames the queries' sample_video_frames(every=2) keeps."""
-    return (-(-row["meta"]["n_frames"] // 2),)
+    """Frames sample_video_frames keeps."""
+    from geotiff_spark.operators.multimodal import FRAME_EVERY
+
+    return (-(-row["meta"]["n_frames"] // FRAME_EVERY),)
 
 
 # registry query -> (corpus in multimodal.CORPORA, kind the engine keeps,

@@ -400,9 +400,11 @@ LEFT JOIN (
 """
 
 
-def tile_stats_sql(tile_size: int = 256) -> str:
+def tile_stats_sql() -> str:
     """Tiling oracle: band-0 pixel table → tile coords by integer
     division → per-tile min/mean/max."""
+    from geotiff_spark.operators.tiling import TILE_SIZE as tile_size
+
     _, all_path = pixel_tables()
     return f"""
 SELECT raster_id,
@@ -416,13 +418,16 @@ GROUP BY raster_id, tile_x, tile_y
 """
 
 
-def focal_stats_sql(tile_size: int = 256, radius: int = 1) -> str:
+def focal_stats_sql() -> str:
     """Oracle for the halo-exchange focal op: the semantics re-expressed
     as the naive (2r+1)²-offset pixel self-join (fine at fixture scale,
     the exact shape the distributed engine must NOT use at 100 TB) — per
     pixel, SUM/COUNT over the in-bounds window of band 0, then per-tile
     SUM/MIN/MAX. All values integral (see module docstring), so every
     aggregate is exact in int64."""
+    from geotiff_spark.operators.tiling import FOCAL_RADIUS as radius
+    from geotiff_spark.operators.tiling import TILE_SIZE as tile_size
+
     _, all_path = pixel_tables()
     offs = ",".join(
         f"({dx},{dy})"
@@ -463,12 +468,14 @@ GROUP BY 1, 2, 3
 """
 
 
-def vectorize_sql(res: int = 7, threshold: float = 200.0) -> str:
+def vectorize_sql() -> str:
     """Oracle for raster→vector on the identity-transform marbles fixture:
     pixel centers ARE model coords, so cell assignment is the plain
     clip + grid + Morton arithmetic (shared with oracle.cell_sql) over
     the pixel parquet; per-cell count + max of passing values."""
     from geotiff_spark import oracle
+    from geotiff_spark.operators.tiling import VECTORIZE_RES as res
+    from geotiff_spark.operators.tiling import VECTORIZE_THRESHOLD as threshold
 
     _, all_path = pixel_tables()
     # vectorize_threshold clips model coords to the lat/lon domain before
@@ -493,10 +500,10 @@ GROUP BY cell
 """
 
 
-def pyramid_stats_sql(levels: int = 2, tile_size: int = 256) -> str:
-    """Oracle for pyramid levels 1..levels: the engine's 2x2 floor-mean
-    downsample (with edge-replication padding) equals FLOOR(AVG(children))
-    grouped by (ix//2, iy//2) — the replicated row/col is a copy of the
+def pyramid_stats_sql() -> str:
+    """Oracle for pyramid levels 1..PYRAMID_LEVELS: the engine's 2x2
+    floor-mean downsample (with edge-replication padding) equals
+    FLOOR(AVG(children)) grouped by (ix//2, iy//2) — the replicated row/col is a copy of the
     only real row/col inside the same parent block, so duplicates never
     change the mean; the argument applies recursively, so level k is k
     nested FLOOR(AVG) groupings. CONSTRAINT: exact only for integer-dtype
@@ -504,6 +511,9 @@ def pyramid_stats_sql(levels: int = 2, tile_size: int = 256) -> str:
     (operators/tiling.py), so a float-typed fixture added to FIXTURE_DIR
     would need the FLOOR() dropped per-raster here. All current corpus
     fixtures are u8/u16; integer values keep every aggregate exact."""
+    from geotiff_spark.operators.tiling import PYRAMID_LEVELS as levels
+    from geotiff_spark.operators.tiling import TILE_SIZE as tile_size
+
     _, all_path = pixel_tables()
     lvl_sql = []
     prev = f"SELECT raster_id, ix, iy, value FROM read_parquet('{all_path}')"

@@ -29,7 +29,8 @@ from geotiff_spark.operators import spatial_join as sj
 from geotiff_spark.oracle_raster import AUSTRIAN
 from geotiff_spark.plans.partitioning import ensure_map_parallelism
 
-DEFAULT_RES = 7
+# Cell resolution of the documents' geo pipeline.
+RES = 7
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str,
@@ -73,13 +74,13 @@ def geo_documents(spark: SparkSession, sf_dir: str,
     return _with_latlon(load_table(spark, sf_dir, "documents", parallel))
 
 
-def geo_documents_with_cell(spark: SparkSession, sf_dir: str, res: int = DEFAULT_RES) -> DataFrame:
-    return ex.with_cell(geo_documents(spark, sf_dir), res)
+def geo_documents_with_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ex.with_cell(geo_documents(spark, sf_dir), RES)
 
 
-def doc_pip_join(spark: SparkSession, sf_dir: str, res: int = DEFAULT_RES) -> DataFrame:
+def doc_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents ⋈ admin polygons → (doc_id, lat, lon, cell, poly_id)."""
-    return sj.pip_join(spark, geo_documents(spark, sf_dir), res,
+    return sj.pip_join(spark, geo_documents(spark, sf_dir), RES,
                        carry=("doc_id",))
 
 
@@ -96,8 +97,7 @@ def laea_udf():
 
 
 def flagship_sampled(
-    spark: SparkSession, sf_dir: str, res: int = DEFAULT_RES,
-    sample_mode: str = "auto",
+    spark: SparkSession, sf_dir: str, sample_mode: str = "auto",
 ) -> DataFrame:
     """The flagship pipeline up to the per-document sampled value:
     geo documents → PIP join → project to EPSG:3035 → sample the
@@ -105,7 +105,7 @@ def flagship_sampled(
     sample_mode passes through to with_raster_sample ('auto' broadcasts
     here — the corpus is tiny; 'copartition' forces the large-corpus
     branch, driver-gated by zonal_stats_copart)."""
-    hits = doc_pip_join(spark, sf_dir, res)
+    hits = doc_pip_join(spark, sf_dir)
     proj = laea_udf()
     hits = hits.withColumn("xy", proj(F.col("lon"), F.col("lat")))
     return smp.with_raster_sample(
@@ -117,7 +117,7 @@ def flagship_sampled(
     )
 
 
-def flagship(spark: SparkSession, sf_dir: str, res: int = DEFAULT_RES) -> DataFrame:
+def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end: geo documents → PIP join → project to EPSG:3035 →
     sample the austrian coverage raster → zonal stats per polygon.
 
@@ -125,7 +125,7 @@ def flagship(spark: SparkSession, sf_dir: str, res: int = DEFAULT_RES) -> DataFr
     kernel is an Arrow-batched pandas UDF.
     """
     return (
-        smp.zonal_stats(flagship_sampled(spark, sf_dir, res))
+        smp.zonal_stats(flagship_sampled(spark, sf_dir))
         .withColumnRenamed("n_points", "n_docs")
         .orderBy("poly_id")
     )

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 
 DRIVER_HISTOGRAM_BUDGET = 100_000
+# Deepest token prefix considered.
+MAX_DEPTH = 12
 
 
 def ensure_map_parallelism(df: DataFrame) -> DataFrame:
@@ -56,19 +58,16 @@ def ensure_map_parallelism(df: DataFrame) -> DataFrame:
 
 
 def deep_histogram(
-    df: DataFrame,
-    token: str,
-    max_depth: int = 12,
-    driver_budget: int = DRIVER_HISTOGRAM_BUDGET,
+    df: DataFrame, token: str, driver_budget: int = DRIVER_HISTOGRAM_BUDGET,
 ) -> pd.DataFrame:
-    """(prefix@depth, n) — the exact histogram at the deepest depth whose
-    distinct prefixes fit the driver budget. One groupBy per depth tried,
+    """(prefix@depth, n) — the exact histogram at the deepest depth (up
+    to MAX_DEPTH) whose distinct prefixes fit the driver budget. One groupBy per depth tried,
     collected through limit(driver_budget + 1): a result that fits is the
     histogram, one that overflows is dropped and the next shallower depth
     is tried. So the driver never holds more than budget + 1 rows however
     dense the cells are, and a res-7 token (at most 4^7 prefixes) costs one
     job."""
-    for depth in range(max_depth, 0, -1):
+    for depth in range(MAX_DEPTH, 0, -1):
         hist = (
             df.groupBy(F.substring(F.col(token), 1, depth).alias("prefix"))
             .agg(F.count(F.lit(1)).alias("n"))
@@ -85,34 +84,25 @@ def _histogram_at(hist: pd.DataFrame, depth: int) -> pd.Series:
     return hist.groupby(hist["prefix"].str[:depth])["n"].sum()
 
 
-def choose_prefix_depth(
-    hist: pd.DataFrame,
-    target_rows: int = 100_000,
-    max_depth: int = 12,
-) -> int:
+def choose_prefix_depth(hist: pd.DataFrame, target_rows: int = 100_000) -> int:
     """Shallowest depth whose largest prefix bucket ≤ target_rows."""
-    for depth in range(1, max_depth + 1):
+    for depth in range(1, MAX_DEPTH + 1):
         if _histogram_at(hist, depth).max() <= target_rows:
             return depth
-    return max_depth
+    return MAX_DEPTH
 
 
 def adaptive_prefix_column(
-    df: DataFrame,
-    token: str,
-    target_rows: int,
-    max_depth: int = 12,
+    df: DataFrame, token: str, target_rows: int,
 ) -> DataFrame:
     """Adds `cell_prefix`, a variable-depth prefix: the shallowest uniform
     depth for the bulk, two extra levels for prefixes still above
     target_rows. Balanced against the measured distribution — hot cities
     split finer, oceans stay coarse. Costs deep_histogram's one groupBy
     over df (one more per depth it has to back off)."""
-    hist = deep_histogram(df, token, max_depth)
-    depth = choose_prefix_depth(
-        hist, target_rows=target_rows * 4, max_depth=max_depth
-    )
-    deep = min(depth + 2, max_depth)
+    hist = deep_histogram(df, token)
+    depth = choose_prefix_depth(hist, target_rows=target_rows * 4)
+    deep = min(depth + 2, MAX_DEPTH)
     at_depth = _histogram_at(hist, depth)
     hot = list(at_depth[at_depth > target_rows].index)
     col = F.when(

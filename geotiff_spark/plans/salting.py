@@ -6,7 +6,7 @@ whose fan-out we control, or (b) a downstream groupBy on the hot key needs
 pre-aggregation. The protocol:
 
 1. measure: hot_keys() runs a cheap count-by-key and flags keys above a
-   quantile-based threshold,
+   median-based threshold,
 2. big side: salt = pmod(xxhash64(row-unique-col), n_salt) on hot keys,
    0 elsewhere,
 3. small side: hot rows exploded × n_salt, cold rows get salt 0,
@@ -20,24 +20,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hot_keys(
-    df: DataFrame,
-    key: str,
-    quantile: float = 0.99,
-    min_ratio: float = 4.0,
-) -> list:
-    """Keys whose row count exceeds max(q-quantile, min_ratio × median).
+def hot_keys(df: DataFrame, key: str) -> list:
+    """Keys whose row count exceeds 4 × the median count, at most 64.
 
     One cheap aggregation over the keys — at 10^12 rows this is the
     histogram you were going to need anyway for partition sizing.
     """
     counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-    qs = counts.approxQuantile("n", [0.5, quantile], 0.01)
+    qs = counts.approxQuantile("n", [0.5], 0.01)
     if not qs or qs[0] == 0:
         return []
     # a key is hot when it dwarfs the median; cap the list so the
     # small-side explode stays bounded
-    threshold = qs[0] * min_ratio
+    threshold = qs[0] * 4.0
     return [
         r[key]
         for r in counts.filter(F.col("n") > threshold)
@@ -55,31 +50,21 @@ def salted_join(
     n_salt: int = 8,
     hot: list | None = None,
     salt_source: str | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join on `key` with hot keys salted across n_salt buckets.
+    """Inner equi-join on `key` with hot keys salted across n_salt
+    buckets.
 
     `salt_source`: a column of `big` whose hash spreads rows (defaults to
     spark_partition_id + monotonically_increasing_id mix, which is
     deterministic within a run but not across runs — pass a real column
     for reproducible plans).
 
-    Result rows are EXACTLY those of big.join(small, key, how) for
-    inner/left joins. Right/full outer are rejected: an unmatched hot
-    small-side row is exploded n_salt times and every copy would surface
-    as its own outer row — not equivalent to the plain join.
+    Result rows are EXACTLY those of big.join(small, key).
     """
-    if how not in ("inner", "left", "left_outer", "leftouter",
-                   "left_semi", "leftsemi", "left_anti", "leftanti", "cross"):
-        raise ValueError(
-            f"salted_join supports inner/left-flavored joins only, got {how!r}: "
-            "unmatched exploded small-side rows would duplicate under "
-            "right/full outer"
-        )
     if hot is None:
         hot = hot_keys(big, key)
     if not hot:
-        return big.join(small, key, how)
+        return big.join(small, key)
 
     hot_col = F.col(key).isin([h for h in hot])
     src = (
@@ -95,4 +80,4 @@ def salted_join(
         "_salt",
         F.explode(F.when(hot_col, salts).otherwise(F.array(F.lit(0)))),
     )
-    return big_salted.join(small_salted, [key, "_salt"], how).drop("_salt")
+    return big_salted.join(small_salted, [key, "_salt"]).drop("_salt")

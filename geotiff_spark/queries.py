@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from geotiff_spark import oracle, pipeline
 from geotiff_spark.operators import extract as ex
+from geotiff_spark.operators import knn
 
 Registry = dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
 
@@ -26,19 +27,19 @@ Registry = dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
 def q_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geo documents → cell id at res 7 (tile assignment)."""
     return (
-        pipeline.geo_documents_with_cell(spark, sf_dir, res=7)
+        pipeline.geo_documents_with_cell(spark, sf_dir)
         .select("doc_id", "cell")
     )
 
 
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact point-in-polygon join (broadcast cell index + refine)."""
-    return pipeline.doc_pip_join(spark, sf_dir, res=7).select("doc_id", "poly_id")
+    return pipeline.doc_pip_join(spark, sf_dir).select("doc_id", "poly_id")
 
 
 def q_pip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        pipeline.doc_pip_join(spark, sf_dir, res=7)
+        pipeline.doc_pip_join(spark, sf_dir)
         .groupBy("poly_id")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -49,7 +50,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes the raster as a pixel parquet and the oracle SQL
     re-expresses projection + inverse transform + gather + groupBy
     (geotiff_spark.oracle_raster)."""
-    return pipeline.flagship(spark, sf_dir, res=7)
+    return pipeline.flagship(spark, sf_dir)
 
 
 def q_zonal_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,7 +62,7 @@ def q_zonal_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics pinned by crafted pytest."""
     from pyspark.sql import Window
 
-    sampled = pipeline.flagship_sampled(spark, sf_dir, res=7)
+    sampled = pipeline.flagship_sampled(spark, sf_dir)
     counts = (
         sampled.filter(F.col("value").isNotNull())
         .groupBy("poly_id", "value")
@@ -88,9 +89,7 @@ def q_zonal_stats_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     same semantics."""
     from geotiff_spark.operators import sample as smp
 
-    sampled = pipeline.flagship_sampled(
-        spark, sf_dir, res=7, sample_mode="copartition"
-    )
+    sampled = pipeline.flagship_sampled(spark, sf_dir, sample_mode="copartition")
     return (
         smp.zonal_stats(sampled)
         .withColumnRenamed("n_points", "n_docs")
@@ -129,11 +128,9 @@ def q_u64_exact_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN join via cell ring expansion (k=5, first 10 docs as
     queries, planar-degree metric)."""
-    from geotiff_spark.operators.knn import knn_join
-
     docs = pipeline.geo_documents(spark, sf_dir)
     queries = docs.filter(F.col("doc_id") < 10)
-    return knn_join(spark, docs, queries, k=5, res=7)
+    return knn.knn_join(spark, docs, queries)
 
 
 KNN_ORACLE = f"""
@@ -154,7 +151,7 @@ SELECT qid, nn_id, ROUND(dist, 9) AS dist, rank FROM (
          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist ASC, nn_id ASC)
          AS rank
   FROM scored
-) WHERE rank <= 5
+) WHERE rank <= {knn.K}
 """
 
 
@@ -234,7 +231,7 @@ def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotiff_spark.sources.rasters import read_rasters
 
     rasters = read_rasters(spark, FIXTURE_DIR)
-    return focal_stats(raster_to_tiles(rasters, tile_size=256))
+    return focal_stats(raster_to_tiles(rasters))
 
 
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,7 +260,7 @@ def spatial_queries() -> Registry:
     from geotiff_spark import oracle_raster
 
     return {
-        "cell_assign": (q_cell_assign, oracle.cell_sql(7)),
+        "cell_assign": (q_cell_assign, oracle.cell_sql(pipeline.RES)),
         "pip_join": (q_pip_join, oracle.pip_join_sql()),
         "pip_counts": (q_pip_counts, oracle.pip_counts_sql()),
         "zonal_stats": (q_zonal_stats, oracle_raster.zonal_stats_sql()),
@@ -405,7 +402,7 @@ def q_y4m_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         mm.sample_video_frames(
-            mm.synth_media(spark, *mm.CORPORA["y4m"]), every=2)
+            mm.synth_media(spark, *mm.CORPORA["y4m"]))
         .groupBy("media_id")
         .agg(F.count(F.lit(1)).alias("n_frames_sampled"))
     )
@@ -416,7 +413,7 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         mm.sample_video_frames(
-            mm.synth_media(spark, *mm.CORPORA["fake"]), every=2)
+            mm.synth_media(spark, *mm.CORPORA["fake"]))
         .groupBy("media_id")
         .agg(F.count(F.lit(1)).alias("n_frames_sampled"))
     )
@@ -434,7 +431,7 @@ def q_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotiff_spark.sources.rasters import read_rasters
 
     rasters = read_rasters(spark, FIXTURE_DIR)
-    return tile_stats(raster_to_tiles(rasters, tile_size=256))
+    return tile_stats(raster_to_tiles(rasters))
 
 
 def q_pyramid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,15 +441,15 @@ def q_pyramid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (oracle_raster.pyramid_stats_sql), which pins the recursive
     downsample (floor-mean of floor-mean), not just one level."""
     from geotiff_spark.operators.tiling import (
-        build_pyramid, raster_to_tiles, tile_stats,
+        PYRAMID_LEVELS, build_pyramid, raster_to_tiles, tile_stats,
     )
     from geotiff_spark.oracle_raster import FIXTURE_DIR
     from geotiff_spark.sources.rasters import read_rasters
 
     rasters = read_rasters(spark, FIXTURE_DIR)
-    pyr = build_pyramid(raster_to_tiles(rasters, tile_size=256), levels=2)
+    pyr = build_pyramid(raster_to_tiles(rasters))
     out = None
-    for lvl in (1, 2):
+    for lvl in range(1, PYRAMID_LEVELS + 1):
         stats = tile_stats(
             pyr.filter(F.col("level") == lvl).drop("level")
         ).withColumn("level", F.lit(lvl))
@@ -473,7 +470,7 @@ def q_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rasters = read_rasters(spark, FIXTURE_DIR).filter(
         F.col("raster_id") == "marbles.tif"
     )
-    return vectorize_threshold(rasters, res=7, threshold=200.0)
+    return vectorize_threshold(rasters)
 
 
 def q_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,7 +510,7 @@ def multimodal_queries() -> Registry:
     return {
         **{name: (fn, oracle_media.feature_sql(name)) for name, fn in media},
         "tile_stats": (q_tile_stats, oracle_raster.tile_stats_sql()),
-        "pyramid_stats": (q_pyramid_stats, oracle_raster.pyramid_stats_sql(levels=2)),
+        "pyramid_stats": (q_pyramid_stats, oracle_raster.pyramid_stats_sql()),
         "focal_stats": (q_focal_stats, oracle_raster.focal_stats_sql()),
         "vectorize": (q_vectorize, oracle_raster.vectorize_sql()),
         "median_price": (q_median_price, SQL_MEDIAN_PRICE),

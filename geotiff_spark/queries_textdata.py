@@ -113,20 +113,20 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     bounds the corpus to doc_id < 200; the 100 TB path is MinHash-LSH
     over the same shingle stream (minhash_lsh_pairs)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return dedup.char_ngram_jaccard_pairs(docs, n=5, threshold=0.8)
+    return dedup.char_ngram_jaccard_pairs(docs)
 
 
 SQL_NGRAM_JACCARD_PAIRS = f"""
 WITH tok AS (
   SELECT doc_id,
          unnest(list_distinct([
-           substr(text, CAST(i AS INTEGER), 5)
-           for i in range(1, length(text) - 4 + 1)
+           substr(text, CAST(i AS INTEGER), {dedup.CHAR_NGRAM})
+           for i in range(1, length(text) - {dedup.CHAR_NGRAM - 1} + 1)
          ])) AS tok
   FROM documents
-  WHERE doc_id < 200 AND length(text) >= 5
+  WHERE doc_id < 200 AND length(text) >= {dedup.CHAR_NGRAM}
 ),
-{_jaccard_pairs(0.8)}
+{_jaccard_pairs(dedup.CHAR_NGRAM_THRESHOLD)}
 SELECT id_a, id_b, ROUND(jaccard, 6) AS jaccard FROM pairs
 """
 
@@ -142,7 +142,7 @@ def q_dedup_components(spark, sf_dir):
     keep their own id."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, threshold=0.8, shingle=1, num_hashes=64, bands=32
+        docs, threshold=0.8, shingle=1, bands=32
     )
     return dedup.connected_components(pairs, nodes=docs)
 
@@ -337,7 +337,7 @@ def _corpus_curation(spark, sf_dir, exact_pairs: bool):
         pairs = dedup.token_jaccard_pairs(survivors, threshold=0.8)
     else:
         pairs = dedup.minhash_lsh_pairs(
-            survivors, threshold=0.8, shingle=1, num_hashes=64, bands=32
+            survivors, threshold=0.8, shingle=1, bands=32
         )
     comps = dedup.connected_components(pairs, nodes=survivors)
     final = survivors.join(comps, "doc_id").filter(
@@ -416,10 +416,10 @@ def _sql_minhash_lsh_pairs() -> str:
     signature-slice tuple (Spark's xxhash64 band key is injective on
     slices up to 2^-64 collisions), then exact jaccard on candidates
     only — the same verify the engine runs."""
-    mult, add = dedup._minhash_params(64)
+    mult, add = dedup._minhash_params(dedup.NUM_HASHES)
     rows = ",\n    ".join(
         f"({i}, {int(mult[i])}::UBIGINT, {int(add[i])}::UBIGINT)"
-        for i in range(64)
+        for i in range(dedup.NUM_HASHES)
     )
     return f"""
 WITH {_TOKS},
@@ -479,7 +479,7 @@ def q_simhash_pairs(spark, sf_dir):
     the pigeonhole bucketing is exact, so bucketed == brute force; the
     simhash_complete gate pins that equivalence on the engine side)."""
     return dedup.simhash_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=3, hash_mode="md5"
+        _t(spark, sf_dir, "documents"), hash_mode="md5"
     )
 
 
@@ -516,19 +516,19 @@ def q_ann_cosine_topk(spark, sf_dir):
     """Exact brute-force cosine top-5 for the first 10 vectors as queries."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.brute_force_topk(emb, queries, k=5)
+    return similarity.brute_force_topk(emb, queries)
 
 
-# Top-5 re-rank of the ANN oracles over `scored(query_id, nn_id, cos)`,
+# Top-k re-rank of the ANN oracles over `scored(query_id, nn_id, cos)`,
 # ties broken by the smaller nn_id. Each oracle keeps its own cosine:
 # list_cosine_similarity and the sequential list_dot_product fold pin
 # different engine numerics.
-_TOP5 = """SELECT query_id, nn_id, rank FROM (
+_TOPK = f"""SELECT query_id, nn_id, rank FROM (
   SELECT query_id, nn_id,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cos DESC, nn_id ASC) AS rank
   FROM scored
-) WHERE rank <= 5"""
+) WHERE rank <= {similarity.TOP_K}"""
 
 
 SQL_ANN_COSINE_TOPK = f"""
@@ -540,7 +540,7 @@ scored AS (
   FROM q, embeddings c
   WHERE c.vec_id <> q.query_id
 )
-{_TOP5}
+{_TOPK}
 """
 
 
@@ -553,10 +553,7 @@ def q_embedding_near_dups(spark, sf_dir):
     seeded hyperplanes make recall deterministic, and at (3 planes × 32
     tables) it is 1.0 on the test corpora — pinned by the exact crossJoin
     SQL oracle and by pytest against the _exact baseline."""
-    return similarity.lsh_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4,
-        n_planes=3, n_tables=32,
-    )
+    return similarity.lsh_near_dup_pairs(_t(spark, sf_dir, "embeddings"))
 
 
 def q_embedding_near_dups_exact(spark, sf_dir):
@@ -628,8 +625,7 @@ def q_embedding_near_dups_planted(spark, sf_dir):
     planted corpus is SQL-derivable, so DuckDB crossJoins it exactly."""
     corpus = planted_embedding_corpus(spark, sf_dir)
     return similarity.lsh_near_dup_pairs(
-        corpus, threshold=0.9, key="vec_id", vec="v",
-        n_planes=10, n_tables=32,
+        corpus, threshold=0.9, vec="v", n_planes=10,
     )
 
 
@@ -930,19 +926,19 @@ WHERE doc.doc_id % 5 = 0
 """
 
 
-def bloom_incremental_frame(docs, m: int = 1 << 22, k: int = 4,
-                            hist_mod: int = 5):
+def bloom_incremental_frame(docs):
     """Production-shaped incremental chunk dedup over any (doc_id,
     text) frame — the engine core of :func:`q_bloom_chunk_dedup` at
     LARGE m, benched over the 2M-row synthetic pages corpus
-    (bench.py). History docs (doc_id % hist_mod != 0) build the filter
-    once: k packed uint64 bitmaps (driver collect bounded by k*m/64
-    words — m=2^22 → 2 MB total), broadcast to a single vectorized
-    Arrow probe over the new batch's chunks, so the batch side never
-    shuffles to be filtered and the history is never joined against.
-    Returns per new doc: (doc_id, n_chunks, n_maybe_seen)."""
-    hist = docs.filter(F.col("doc_id") % hist_mod != 0)
-    new_docs = docs.filter(F.col("doc_id") % hist_mod == 0)
+    (bench.py). History docs (doc_id % 5 != 0) build the filter
+    once: k=4 packed uint64 bitmaps of m=2^22 bits (driver collect
+    bounded by k*m/64 words — 2 MB total), broadcast to a single
+    vectorized Arrow probe over the new batch's chunks, so the batch
+    side never shuffles to be filtered and the history is never joined
+    against. Returns per new doc: (doc_id, n_chunks, n_maybe_seen)."""
+    m, k = 1 << 22, 4
+    hist = docs.filter(F.col("doc_id") % 5 != 0)
+    new_docs = docs.filter(F.col("doc_id") % 5 == 0)
     packed = dedup.bloom_pack(chunks_frame(hist), value_col="chunk", m=m, k=k)
     probed = dedup.bloom_membership(
         chunks_frame(new_docs), packed, value_col="chunk", m=m, k=k)
@@ -1062,18 +1058,18 @@ def q_pack_sequences(spark, sf_dir):
     with_tokens = docs.select(
         "doc_id", textstats.token_count(F.col("text")).alias("n_tokens")
     )
-    return packing.pack_sequences(
-        with_tokens, capacity=512, n_buckets=32
-    )
+    return packing.pack_sequences(with_tokens)
 
 
 def _next_fit_pack(counts: str) -> str:
     """The trailing CTEs and SELECT of a pack_sequences oracle (needs WITH
     RECURSIVE): next-fit packing of relation `counts(doc_id, n_tokens)`
-    into 512-token bins within 32 doc_id buckets, in doc_id order."""
+    into packing.CAPACITY-token bins within packing.BUCKETS doc_id
+    buckets, in doc_id order."""
+    cap, buckets = packing.CAPACITY, packing.BUCKETS
     return f"""docs_t AS (
-  SELECT doc_id, doc_id % 32 AS bucket, n_tokens,
-         ROW_NUMBER() OVER (PARTITION BY doc_id % 32
+  SELECT doc_id, doc_id % {buckets} AS bucket, n_tokens,
+         ROW_NUMBER() OVER (PARTITION BY doc_id % {buckets}
                             ORDER BY doc_id) AS rn
   FROM {counts}
 ),
@@ -1083,9 +1079,9 @@ pack AS (
   FROM docs_t WHERE rn = 1
   UNION ALL
   SELECT d.bucket, d.rn, d.doc_id, d.n_tokens,
-         CASE WHEN p.fill + d.n_tokens <= 512
+         CASE WHEN p.fill + d.n_tokens <= {cap}
               THEN p.bin_id ELSE p.bin_id + 1 END,
-         CASE WHEN p.fill + d.n_tokens <= 512
+         CASE WHEN p.fill + d.n_tokens <= {cap}
               THEN p.fill + d.n_tokens ELSE d.n_tokens END
   FROM pack p
   JOIN docs_t d ON d.bucket = p.bucket AND d.rn = p.rn + 1
@@ -1409,7 +1405,7 @@ def q_ann_lsh_topk(spark, sf_dir):
     BLAS path stays the production default (ann_recall still gates it)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.lsh_topk(emb, queries, k=5, plane_mode="md5")
+    return similarity.lsh_topk(emb, queries, plane_mode="md5")
 
 
 def _dot_cos(a: str, b: str) -> str:
@@ -1429,20 +1425,22 @@ _RERANK = f"""scored AS (
   JOIN emb qe ON qe.vec_id = cand.query_id
   JOIN emb ce ON ce.vec_id = cand.nn_id
 )
-{_TOP5}"""
+{_TOPK}"""
 
 
-# DuckDB twin of q_ann_lsh_topk (dim=64, n_planes=4, n_tables=8, k=5):
+# DuckDB twin of q_ann_lsh_topk (similarity's LSH_TOPK_* layout, TOP_K):
 # identical md5-derived planes, list_dot_product == the engine's
 # sequential float64 fold (verified bit-exact), identical bucket ids
 # (sum of sign bits + table offset), then exact cosine re-rank on the
 # candidate union with the same (cos DESC, nn_id ASC) tie-break.
+_LSH_P = similarity.LSH_TOPK_PLANES
+_LSH_PLANES_TOTAL = _LSH_P * similarity.LSH_TOPK_TABLES
 SQL_ANN_LSH_TOPK = f"""
 WITH planes AS (
   SELECT j, d,
          ('0x' || substr(md5('plane:' || j || ':' || d), 1, 16))
            ::UBIGINT::DOUBLE / 18446744073709551616.0 - 0.5 AS w
-  FROM range(0, 32) t1(j), range(0, 64) t2(d)
+  FROM range(0, {_LSH_PLANES_TOTAL}) t1(j), range(0, {similarity.LSH_TOPK_DIM}) t2(d)
 ),
 pv AS (SELECT j, list(w ORDER BY d) AS p FROM planes GROUP BY j),
 {_EMB},
@@ -1453,8 +1451,8 @@ sv AS (
 ),
 buckets AS (
   SELECT vec_id,
-         CAST(SUM(s * (1 << (j % 4))) + (j // 4) * 16 AS BIGINT) AS bucket
-  FROM sv GROUP BY vec_id, j // 4
+         CAST(SUM(s * (1 << (j % {_LSH_P}))) + (j // {_LSH_P}) * {1 << _LSH_P} AS BIGINT) AS bucket
+  FROM sv GROUP BY vec_id, j // {_LSH_P}
 ),
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS nn_id
@@ -1469,13 +1467,11 @@ def q_ann_ivf_topk(spark, sf_dir):
     """IVF top-k with the md5-anchor coarse quantizer (oracle-exact; see
     similarity.ivf_topk_md5). The spherical-k-means-trained variant
     stays exercised by ann_recall / ann_ivf_gate — this registry entry
-    pins the inverted-list SEARCH machinery (assignment, n_probe,
+    pins the inverted-list SEARCH machinery (assignment, probing,
     candidate join, re-rank) against a bit-for-bit DuckDB replay."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk_md5(
-        emb, queries, k=5, n_centroids=16, n_probe=4
-    )
+    return similarity.ivf_topk_md5(emb, queries)
 
 
 SQL_ANN_IVF_TOPK = f"""
@@ -1486,7 +1482,7 @@ anch AS (
          e AS a
   FROM emb
   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-  LIMIT 16
+  LIMIT {similarity.N_CENTROIDS}
 ),
 cosines AS (
   SELECT emb.vec_id, anch.aid, {_dot_cos('emb.e', 'anch.a')} AS cos
@@ -1504,7 +1500,7 @@ probes AS (
     SELECT vec_id, aid,
            ROW_NUMBER() OVER (PARTITION BY vec_id
                               ORDER BY cos DESC, aid ASC) AS r
-    FROM cosines WHERE vec_id < 10) WHERE r <= 4
+    FROM cosines WHERE vec_id < 10) WHERE r <= {similarity.N_PROBE}
 ),
 cand AS (
   SELECT p.query_id, a.nn_id
@@ -1560,7 +1556,7 @@ def q_simhash_complete(spark, sf_dir):
     are deterministic, so the oracle pins them."""
     docs = _t(spark, sf_dir, "documents")
     sigs = dedup.simhash_signatures(docs).localCheckpoint(eager=True)
-    bucketed = dedup.simhash_pairs_from_sigs(sigs, max_hamming=3).select(
+    bucketed = dedup.simhash_pairs_from_sigs(sigs, 3).select(
         "id_a", "id_b", "hamming"
     )
     a = sigs.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"))
@@ -1594,7 +1590,7 @@ def _exact_top5(emb, queries):
     score against, materialized once: each gate reads it more than once
     (a count plus one join per approximate variant)."""
     return (
-        similarity.brute_force_topk(emb, queries, k=5)
+        similarity.brute_force_topk(emb, queries)
         .select("query_id", "nn_id")
         .localCheckpoint(eager=True)
     )
@@ -1614,18 +1610,16 @@ def q_ann_recall(spark, sf_dir):
         ).count()
         return hits / n_exact
 
-    r_lsh = recall(similarity.lsh_topk(emb, queries, k=5))
-    r_ivf = recall(
-        similarity.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4)
-    )
+    r_lsh = recall(similarity.lsh_topk(emb, queries))
+    r_ivf = recall(similarity.ivf_topk(emb, queries))
     return spark.createDataFrame(
         [(n_exact, r_lsh >= 0.5, r_ivf >= 0.5)],
         "n_exact long, lsh_recall_ok boolean, ivf_recall_ok boolean",
     )
 
 
-SQL_ANN_RECALL = """
-SELECT CAST(5 * COUNT(DISTINCT vec_id) AS BIGINT) AS n_exact,
+SQL_ANN_RECALL = f"""
+SELECT CAST({similarity.TOP_K} * COUNT(DISTINCT vec_id) AS BIGINT) AS n_exact,
        TRUE AS lsh_recall_ok, TRUE AS ivf_recall_ok
 FROM embeddings WHERE vec_id < 10
 """
@@ -1634,7 +1628,7 @@ FROM embeddings WHERE vec_id < 10
 def q_ann_ivf_gate(spark, sf_dir):
     """IVF-specific driver gate (its own named companion, separate from
     the shared ann_recall row): (a) recall vs exact brute force >= 0.5 at
-    n_probe=4, and (b) *soundness of the probe structure* — every
+    similarity.N_PROBE lists, and (b) *soundness of the probe structure* — every
     returned neighbor must live in an inverted list the query probed.
     Training is deterministic (centroids seeded from the lowest-key
     vectors, fixed Lloyd iterations), so re-deriving the assignment
@@ -1644,16 +1638,14 @@ def q_ann_ivf_gate(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = _exact_top5(emb, queries)
     n_exact = exact.count()
-    res = similarity.ivf_topk(
-        emb, queries, k=5, n_centroids=16, n_probe=4
-    ).localCheckpoint(eager=True)
+    res = similarity.ivf_topk(emb, queries).localCheckpoint(eager=True)
     hits = res.select("query_id", "nn_id").join(
         exact, ["query_id", "nn_id"]
     ).count()
     # independent re-derivation of the probe structure
-    cents = similarity.train_ivf_centroids(spark, emb, n_centroids=16, iters=3)
+    cents = similarity.train_ivf_centroids(spark, emb)
     one = similarity._assign_udf(spark, cents, 1)
-    probe = similarity._assign_udf(spark, cents, 4)
+    probe = similarity._assign_udf(spark, cents, similarity.N_PROBE)
     c_assign = emb.select(
         F.col("vec_id").alias("nn_id"), one(F.col("embedding"))[0].alias("cid")
     )
@@ -1672,8 +1664,8 @@ def q_ann_ivf_gate(spark, sf_dir):
     )
 
 
-SQL_ANN_IVF_GATE = """
-SELECT CAST(5 * COUNT(DISTINCT vec_id) AS BIGINT) AS n_exact,
+SQL_ANN_IVF_GATE = f"""
+SELECT CAST({similarity.TOP_K} * COUNT(DISTINCT vec_id) AS BIGINT) AS n_exact,
        TRUE AS ivf_recall_ok, TRUE AS probes_sound_ok
 FROM embeddings WHERE vec_id < 10
 """
@@ -1768,12 +1760,12 @@ def q_fingerprint(spark, sf_dir):
     return textstats.fingerprint(_t(spark, sf_dir, "documents"))
 
 
-SQL_FINGERPRINT = """
+SQL_FINGERPRINT = f"""
 SELECT doc_id, md5(text) AS digest,
-       MIN(md5(substr(text, i, 20))) AS min_shingle_hash
+       MIN(md5(substr(text, i, {textstats.FINGERPRINT_SHINGLE}))) AS min_shingle_hash
 FROM (
   SELECT doc_id, text,
-         unnest(range(1, GREATEST(len(text) - 19, 1) + 1)) AS i
+         unnest(range(1, GREATEST(len(text) - {textstats.FINGERPRINT_SHINGLE - 1}, 1) + 1)) AS i
   FROM documents
 )
 GROUP BY doc_id, text
@@ -1866,7 +1858,7 @@ def q_substring_dedup(spark, sf_dir):
     corpus-wide. Position-exact — no chunk-boundary or tokenization
     blind spots (dedup.exact_substring_dedup)."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.exact_substring_dedup(docs, k=50)
+    return dedup.exact_substring_dedup(docs)
 
 
 def _substring_dedup(fps: str, select: str = "") -> str:
@@ -1920,7 +1912,7 @@ def q_substring_dedup_sampled(spark, sf_dir):
     volume); any duplicated span of length ≥ 57 (= k + w - 1) is still
     caught deterministically. The 100-TB fingerprint-volume knob."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.exact_substring_dedup(docs, k=50, winnow=8)
+    return dedup.exact_substring_dedup(docs, winnow=8)
 
 
 SQL_SUBSTRING_DEDUP_SAMPLED = _substring_dedup("selected", """
@@ -2035,7 +2027,7 @@ def q_pack_sequences_bpe(spark, sf_dir):
     counts = bpe.bpe_encode_counts(docs).select(
         "doc_id", F.col("n_bpe_tokens").alias("n_tokens")
     )
-    return packing.pack_sequences(counts, capacity=512, n_buckets=32)
+    return packing.pack_sequences(counts)
 
 
 # The BPE merge replay composed with the next-fit pack recursion: two
@@ -2059,7 +2051,7 @@ def q_repeated_ngrams(spark, sf_dir):
     duplicated passages that straddle chunk_dedup's fixed 10-token
     boundaries (VERDICT r05 'What's missing' #6)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    return dedup.repeated_ngram_mine(docs, n=13, min_count=2, top_n=50)
+    return dedup.repeated_ngram_mine(docs)
 
 
 SQL_REPEATED_NGRAMS = f"""
@@ -2069,20 +2061,20 @@ WITH toks AS (
 ),
 g AS (
   SELECT doc_id,
-         array_to_string(tk[CAST(i AS INT):CAST(i + 12 AS INT)], ' ') AS gram
-  FROM toks, unnest(range(1, len(tk) - 11)) t(i)
+         array_to_string(tk[CAST(i AS INT):CAST(i + {dedup.NGRAM_N - 1} AS INT)], ' ') AS gram
+  FROM toks, unnest(range(1, len(tk) - {dedup.NGRAM_N - 2})) t(i)
 ),
 agg AS (
   SELECT MIN(gram) AS gram, COUNT(*) AS n_occ,
          COUNT(DISTINCT doc_id) AS n_docs
   FROM g GROUP BY md5(gram)
-  HAVING COUNT(*) >= 2
+  HAVING COUNT(*) >= {dedup.NGRAM_MIN_COUNT}
 )
 SELECT gram, n_docs, n_occ, rank FROM (
   SELECT gram, n_docs, n_occ,
          ROW_NUMBER() OVER (ORDER BY n_occ DESC, gram ASC) AS rank
   FROM agg
-) WHERE rank <= 50
+) WHERE rank <= {dedup.NGRAM_TOP_N}
 """
 
 

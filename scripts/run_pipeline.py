@@ -64,7 +64,7 @@ def main() -> int:
     pages = load_pages(spark, args.pages)
     pages = metrics.instrument(pages, "scan")
 
-    hits = fused_pages_pip(spark, pages, args.res, carry=("url",))
+    hits = fused_pages_pip(spark, pages, args.res)
     hits = metrics.instrument(hits, "pip_join")
 
     # cell token for prefix partitioning (prefix of the quadkey)
@@ -77,8 +77,7 @@ def main() -> int:
     )
 
     stats = resumable_write(
-        hits, args.out, "cell_prefix", batch_size=8,
-        fail_after=args.fail_after,
+        hits, args.out, "cell_prefix", fail_after=args.fail_after,
     )
     metrics.flush(args.metrics)
 

@@ -42,8 +42,7 @@ def main() -> int:
 
     t0 = time.time()
     merges = bpe_train_frame(
-        docs, n_merges=n_merges, min_count=1, max_vocab=max_vocab,
-        byte_level=True,
+        docs, n_merges=n_merges, max_vocab=max_vocab, byte_level=True,
     )
     dt = time.time() - t0
     out_dir = os.path.join(

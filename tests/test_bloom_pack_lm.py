@@ -80,28 +80,26 @@ def test_pack_sequences_greedy_semantics(spark):
     """Next-fit greedy within one bucket: bins break exactly where the
     running fill would exceed capacity; an oversized doc gets a bin of
     its own without erroring."""
-    rows = [  # all doc_ids ≡ 0 (mod 8) → one bucket, ordered packing
-        (0, 300), (8, 200),          # 300+200=500 ≤ 512 → bin 0
-        (16, 100),                   # 500+100 > 512 → bin 1
-        (24, 9000),                  # oversized → bin 2 alone
-        (32, 512),                   # 9000+512 > 512 → bin 3 (exact fit)
-        (40, 1),                     # 512+1 > 512 → bin 4
+    rows = [  # all doc_ids ≡ 0 (mod 32) → one bucket, ordered packing
+        (0, 300), (32, 200),         # 300+200=500 ≤ 512 → bin 0
+        (64, 100),                   # 500+100 > 512 → bin 1
+        (96, 9000),                  # oversized → bin 2 alone
+        (128, 512),                  # 9000+512 > 512 → bin 3 (exact fit)
+        (160, 1),                    # 512+1 > 512 → bin 4
     ]
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
-    out = packing.pack_sequences(
-        df, capacity=512, n_buckets=8
-    ).orderBy("doc_id").collect()
+    out = packing.pack_sequences(df).orderBy("doc_id").collect()
     assert [r["bin_id"] for r in out] == [0, 0, 1, 2, 3, 4]
     assert all(r["bucket"] == 0 for r in out)
 
 
 def test_pack_sequences_buckets_are_independent(spark):
-    rows = [(i, 256) for i in range(10)]  # 2 docs per bucket at n=5
+    rows = [(i, 256) for i in range(64)]  # 2 docs in each of 32 buckets
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
-    out = packing.pack_sequences(df, capacity=512, n_buckets=5).collect()
+    out = packing.pack_sequences(df).collect()
     # 256+256 = 512 fits → every bucket packs its two docs into bin 0
     assert all(r["bin_id"] == 0 for r in out)
-    assert sorted(set(r["bucket"] for r in out)) == [0, 1, 2, 3, 4]
+    assert sorted(set(r["bucket"] for r in out)) == list(range(32))
 
 
 def test_trigram_lm_score_matches_hand_computation(spark, tmp_path):
@@ -325,7 +323,7 @@ def test_repeated_ngram_mine_catches_straddling_duplicates(spark):
     )
 
     # the miner sees it: the shared 13-gram is the top repeated gram
-    top = dedup.repeated_ngram_mine(df, n=13, min_count=2, top_n=5).collect()
+    top = dedup.repeated_ngram_mine(df).collect()
     assert top, "no repeated gram found"
     assert top[0]["gram"] == passage
     assert top[0]["n_docs"] == 2 and top[0]["n_occ"] == 2

@@ -163,7 +163,7 @@ def test_char_ngram_jaccard_crafted(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in char_ngram_jaccard_pairs(docs, n=5, threshold=0.5).collect()
+        for r in char_ngram_jaccard_pairs(docs).collect()
     }
     assert got == {(1, 2): 1.0}
 
@@ -176,7 +176,7 @@ def test_char_ngram_short_text(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": [1, 2], "text": ["ab", "ab"]})
     )
-    got = char_ngram_jaccard_pairs(docs, n=5, threshold=0.9).collect()
+    got = char_ngram_jaccard_pairs(docs).collect()
     assert got == []
 
 

@@ -31,7 +31,7 @@ def test_embedding_lsh_near_dups_equal_exact(spark):
         map(
             tuple,
             similarity.lsh_near_dup_pairs(
-                emb, threshold=0.4, n_planes=3, n_tables=32
+                emb, threshold=0.4, n_planes=3
             ).collect(),
         )
     )
@@ -43,7 +43,7 @@ def test_lsh_fed_components_equal_exact_fed(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     lsh_pairs = dedup.minhash_lsh_pairs(
-        docs, threshold=0.8, shingle=1, num_hashes=64, bands=32
+        docs, threshold=0.8, shingle=1, bands=32
     )
     exact_pairs = dedup.token_jaccard_pairs(docs, threshold=0.8)
     assert set(map(tuple, lsh_pairs.select("id_a", "id_b").collect())) == set(
@@ -156,7 +156,7 @@ def test_null_text_docs_drop_from_signatures(spark):
     assert sorted(r.doc_id for r in sh) == [1, 3]
     # end-to-end: the LSH pair path survives NULL-text rows
     pairs = dedup.minhash_lsh_pairs(
-        docs, threshold=0.8, shingle=1, num_hashes=64, bands=32
+        docs, threshold=0.8, shingle=1, bands=32
     ).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 3)]
 
@@ -170,9 +170,9 @@ def test_char_ngram_short_docs_emit_no_grams(spark):
         [(1, "ab"), (2, "xy"), (3, ""), (4, "abcdefgh"), (5, "abcdefgh")],
         "doc_id long, text string",
     )
-    grams = dedup.char_ngram_df(docs, n=5).collect()
+    grams = dedup.char_ngram_df(docs).collect()
     assert {r.doc_id for r in grams} == {4, 5}
-    pairs = dedup.char_ngram_jaccard_pairs(docs, n=5, threshold=0.5).collect()
+    pairs = dedup.char_ngram_jaccard_pairs(docs).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(4, 5)]
 
 

@@ -72,7 +72,7 @@ def test_y4m_frame_sampling_dispatch(spark):
     )
 
     media = synth_media(spark, synth_y4m_row, 9)
-    out = sample_video_frames(media, every=2)
+    out = sample_video_frames(media)
     counts = {
         r.media_id: r.n
         for r in out.groupBy("media_id").agg(F.count(F.lit(1)).alias("n")).collect()

@@ -48,7 +48,7 @@ def test_resize_shapes(spark):
 
 def test_video_frame_sampling(spark):
     media = mm.synth_media(spark, mm.synth_media_row, 30)
-    frames = mm.sample_video_frames(media, every=2).collect()
+    frames = mm.sample_video_frames(media).collect()
     metas = {
         r.media_id: r.meta.n_frames
         for r in media.filter(F.col("kind") == "video").collect()

@@ -56,7 +56,7 @@ def test_simhash_signatures_plan_has_no_exchange(spark):
 def test_pip_join_broadcasts_polygon_index(spark):
     from geotiff_spark.pipeline import doc_pip_join
 
-    plan = _plan(doc_pip_join(spark, SF, res=7))
+    plan = _plan(doc_pip_join(spark, SF))
     # the polygon index rides an sc.broadcast dict into ONE map-side Python
     # stage: no join node, and the big (documents) side is never
     # hash-partitioned (the scan's parallelism-restoring round-robin stays)
@@ -395,7 +395,7 @@ def test_repeated_ngrams_partial_agg_and_take_ordered(spark):
     from geotiff_spark.operators.dedup import repeated_ngram_mine
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(repeated_ngram_mine(docs, n=13, min_count=2, top_n=50))
+    plan = _plan(repeated_ngram_mine(docs))
     assert "TakeOrderedAndProject" in plan, plan
     assert "partial_count" in plan, plan
     # no Python anywhere: gram extraction is JVM codegen

@@ -77,8 +77,7 @@ def test_deep_histogram_driver_pull_is_bounded(spark):
         .alias("cell_token")
     )
     budget = 1000
-    hist = deep_histogram(df, "cell_token", max_depth=8,
-                          driver_budget=budget)
+    hist = deep_histogram(df, "cell_token", driver_budget=budget)
     assert set(hist["prefix"].str.len()) == {4}  # 4^4 = 256 <= 1000 < 4^5
     assert len(hist) <= budget
     assert hist["n"].sum() == 4 ** 8
@@ -104,10 +103,11 @@ def test_deep_histogram_is_exact(spark):
     from geotiff_spark.plans.partitioning import _histogram_at, deep_histogram
 
     tokens, df = _skewed_tokens(spark)
-    for depth in (8, 5):
-        hist = deep_histogram(df, "cell_token", max_depth=depth)
-        assert dict(zip(hist["prefix"], hist["n"])) == (
-            tokens.str[:depth].value_counts().to_dict())
+    hist = deep_histogram(df, "cell_token")
+    assert dict(zip(hist["prefix"], hist["n"])) == (
+        tokens.value_counts().to_dict())
+    assert _histogram_at(hist, 5).to_dict() == (
+        tokens.str[:5].value_counts().to_dict())
     rolled = _histogram_at(hist, 4)
     assert rolled.to_dict() == tokens.str[:4].value_counts().to_dict()
     assert rolled["0123"] >= 6000
@@ -131,7 +131,7 @@ def test_deep_histogram_that_fits_is_one_action(spark, monkeypatch):
             finally:
                 active.pop()
         monkeypatch.setattr(cls, name, counted)
-    hist = deep_histogram(df, "cell_token", max_depth=8)
+    hist = deep_histogram(df, "cell_token")
     assert hist["n"].sum() == 8000
     assert actions == ["toPandas"]
 
@@ -225,9 +225,9 @@ def test_knn_large_query_set_stays_distributed(spark):
         )
         .withColumnRenamed("id", "doc_id")
     )
-    out = knn_join(spark, pts, pts, k=3, res=10, max_rounds=4)
+    out = knn_join(spark, pts, pts, res=10)
     got = out.groupBy("qid").agg(F.count(F.lit(1)).alias("n"))
-    assert got.filter(F.col("n") != 3).count() == 0
+    assert got.filter(F.col("n") != 5).count() == 0
     assert got.count() == n
 
     # spot-check 5 queries against local brute force
@@ -242,7 +242,7 @@ def test_knn_large_query_set_stays_distributed(spark):
     for qid, mine in by_q.items():
         d = np.sqrt((la - la[qid]) ** 2 + (lo - lo[qid]) ** 2)
         mask = ids != qid
-        want = [int(i) for _d, i in sorted(zip(d[mask], ids[mask]))[:3]]
+        want = [int(i) for _d, i in sorted(zip(d[mask], ids[mask]))[:5]]
         assert mine == want, (qid, mine, want)
 
 
@@ -272,7 +272,7 @@ def test_knn_matches_bruteforce(spark):
 
     docs = geo_documents(spark, SF)
     queries = docs.filter(F.col("doc_id") < 5)
-    got = knn_join(spark, docs, queries, k=3, res=7).collect()
+    got = knn_join(spark, docs, queries).collect()
 
     pts = docs.select("doc_id", "lat", "lon").collect()
     import numpy as np
@@ -283,7 +283,7 @@ def test_knn_matches_bruteforce(spark):
     for q in [r for r in pts if r.doc_id < 5]:
         d = np.sqrt((lat - q.lat) ** 2 + (lon - q.lon) ** 2)
         mask = ids != q.doc_id
-        order = sorted(zip(d[mask], ids[mask]))[:3]
+        order = sorted(zip(d[mask], ids[mask]))[:5]
         want = [int(i) for _d, i in order]
         mine = [r.nn_id for r in sorted(got, key=lambda r: r.rank)
                 if r.qid == q.doc_id]

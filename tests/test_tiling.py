@@ -19,7 +19,7 @@ def test_tile_roundtrip_bit_identical(spark):
 
     for rid in ["marbles.tif", "zh_dem_25.tif", "merc.tif"]:
         sub = tiles[tiles["raster_id"] == rid]
-        rebuilt = tiles_to_raster(sub, tile_size=256)
+        rebuilt = tiles_to_raster(sub)
         orig = read_geotiff(reference(rid).read_bytes())["array"]
         np.testing.assert_array_equal(rebuilt, orig)
 
@@ -53,15 +53,15 @@ def test_vectorize_threshold_matches_direct(spark):
     from geotiff_spark.functions import cells as C
     from geotiff_spark.functions import transforms as T
     from geotiff_spark.functions.geotiff import read_geotiff
-    from geotiff_spark.operators.tiling import vectorize_threshold
+    from geotiff_spark.operators import tiling
     from geotiff_spark.sources.rasters import read_rasters
 
-    res, thr = 12, 600.0
+    res, thr = tiling.VECTORIZE_RES, tiling.VECTORIZE_THRESHOLD
     zh = reference("zh_dem_25.tif")
     rasters = read_rasters(spark, str(zh.parent), glob=zh.name)
     got = {
         (r.cell, r.n_pixels, r.v_max)
-        for r in vectorize_threshold(rasters, res, thr).collect()
+        for r in tiling.vectorize_threshold(rasters).collect()
     }
 
     rec = read_geotiff(zh.read_bytes())
@@ -82,27 +82,26 @@ def test_pyramid_levels_match_numpy_downsample(spark):
     direct numpy 2x2 floor-mean of the source raster."""
     from geotiff_spark.functions.geotiff import read_geotiff
     from geotiff_spark.operators.tiling import (
-        build_pyramid, raster_to_tiles, tiles_to_raster,
+        TILE_SIZE as T, build_pyramid, raster_to_tiles, tiles_to_raster,
     )
     from geotiff_spark.sources.rasters import read_rasters
 
     zh = reference("zh_dem_25.tif")
     rasters = read_rasters(spark, str(zh.parent), glob=zh.name)
-    tiles = raster_to_tiles(rasters, tile_size=128)
-    pyr = build_pyramid(tiles, levels=2, tile_size=128).toPandas()
+    pyr = build_pyramid(raster_to_tiles(rasters)).toPandas()
     assert set(pyr["level"]) == {0, 1, 2}
 
     lvl1 = pyr[pyr["level"] == 1].drop(columns=["level"])
-    rebuilt = tiles_to_raster(lvl1, tile_size=128)
+    rebuilt = tiles_to_raster(lvl1)
 
     arr = read_geotiff(zh.read_bytes())["array"].astype(np.float64)
     h, w, _ = arr.shape
     # replicate the operator's per-tile edge handling: tiles are halved
     # independently, so compare tile-by-tile
     import math
-    for ty in range(math.ceil(h / 128)):
-        for tx in range(math.ceil(w / 128)):
-            block = arr[ty * 128:(ty + 1) * 128, tx * 128:(tx + 1) * 128]
+    for ty in range(math.ceil(h / T)):
+        for tx in range(math.ceil(w / T)):
+            block = arr[ty * T:(ty + 1) * T, tx * T:(tx + 1) * T]
             bh, bw = block.shape[:2]
             ph, pw = math.ceil(bh / 2) * 2, math.ceil(bw / 2) * 2
             pad = np.zeros((ph, pw, 1))
@@ -114,9 +113,8 @@ def test_pyramid_levels_match_numpy_downsample(spark):
             want = np.floor(
                 pad.reshape(ph // 2, 2, pw // 2, 2, 1).mean(axis=(1, 3))
             ).astype(np.int16)
-            oy, ox = ty * 64, tx * 64  # parent-tile placement offsets
-            got = rebuilt[
-                (ty // 2) * 128 + (ty % 2) * 64 : (ty // 2) * 128 + (ty % 2) * 64 + want.shape[0],
-                (tx // 2) * 128 + (tx % 2) * 64 : (tx // 2) * 128 + (tx % 2) * 64 + want.shape[1],
-            ]
+            # parent-tile placement offsets
+            oy = (ty // 2) * T + (ty % 2) * (T // 2)
+            ox = (tx // 2) * T + (tx % 2) * (T // 2)
+            got = rebuilt[oy : oy + want.shape[0], ox : ox + want.shape[1]]
             np.testing.assert_array_equal(got, want, err_msg=f"tile {tx},{ty}")

@@ -393,32 +393,6 @@ def test_vp8_lossy_corpus_fallback_arm_without_libwebp(monkeypatch):
         assert y.shape == (row["meta"]["height"], row["meta"]["width"])
 
 
-def test_vp8_rgb_output_bit_exact_vs_libwebp_rgba():
-    """decode_webp_lossy_rgb (fancy upsampler + fixed-point YUV->RGB,
-    constants and interpolation phase pinned empirically) must equal
-    libwebp's default WebPDecodeRGBA bit-for-bit over real encodes AND
-    the registry corpus (which includes crafted every-mode streams)."""
-    wo = _libwebp()
-    if wo is None:
-        pytest.skip("libwebp not available")
-    from geotiff_spark.functions.vp8 import decode_webp_lossy_rgb
-    from geotiff_spark.operators.multimodal import synth_webp_lossy_row
-
-    rng = np.random.default_rng(33)
-    for i in range(12):
-        h, w = int(rng.integers(1, 64)), int(rng.integers(1, 64))
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        data = wo.encode_lossy(img, [6, 45, 80, 96][i % 4])
-        ref = wo.decode_rgba(data)
-        mine = decode_webp_lossy_rgb(data)
-        assert np.array_equal(ref[:, :, :3], mine), (h, w)
-        assert (ref[:, :, 3] == 255).all()
-    for mid in range(0, 40, 3):
-        data = synth_webp_lossy_row(mid)["payload"]
-        assert np.array_equal(
-            wo.decode_rgba(data)[:, :, :3], decode_webp_lossy_rgb(data)), mid
-
-
 def test_vp8_corpus_yuv_bit_exact_vs_libwebp():
     """Every registry-corpus row (real + crafted arms) must decode YUV
     bit-identically to libwebp — the corpus magnitudes are bounded to
