@@ -1,4 +1,4 @@
-"""Query registry: name → (spark_fn, oracle_sql | None).
+"""Query registry: name → (spark_fn, oracle SQL or its zero-argument builder).
 
 Every operator claimed in SURVEY.md §2 gets an entry here; the driver runs
 the Spark side at sf=0.01 and the oracle in DuckDB and compares row count +
@@ -8,6 +8,7 @@ sides (aliases everywhere).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,7 +18,8 @@ from geotiff_spark import oracle, pipeline
 from geotiff_spark.operators import extract as ex
 from geotiff_spark.operators import knn
 
-Registry = dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
+QueryFn = Callable[[SparkSession, str], DataFrame]
+Registry = dict[str, tuple[QueryFn, str | Callable[[], str]]]
 
 
 # --------------------------------------------------------------------------
@@ -263,12 +265,12 @@ def spatial_queries() -> Registry:
         "cell_assign": (q_cell_assign, oracle.cell_sql(pipeline.RES)),
         "pip_join": (q_pip_join, oracle.pip_join_sql()),
         "pip_counts": (q_pip_counts, oracle.pip_counts_sql()),
-        "zonal_stats": (q_zonal_stats, oracle_raster.zonal_stats_sql()),
+        "zonal_stats": (q_zonal_stats, oracle_raster.zonal_stats_sql),
         "zonal_stats_copart": (
-            q_zonal_stats_copart, oracle_raster.zonal_stats_sql()),
-        "zonal_mode": (q_zonal_mode, oracle_raster.zonal_mode_sql()),
-        "tiepoints_sample": (q_tiepoints_sample, oracle_raster.tiepoints_sample_sql()),
-        "u64_exact_sample": (q_u64_exact_sample, oracle_raster.u64_sample_sql()),
+            q_zonal_stats_copart, oracle_raster.zonal_stats_sql),
+        "zonal_mode": (q_zonal_mode, oracle_raster.zonal_mode_sql),
+        "tiepoints_sample": (q_tiepoints_sample, oracle_raster.tiepoints_sample_sql),
+        "u64_exact_sample": (q_u64_exact_sample, oracle_raster.u64_sample_sql),
         "knn_join": (q_knn_join, KNN_ORACLE),
         "cell_compact": (q_cell_compact, _cell_compact_oracle()),
         "salted_join": (q_salted_join, SALTED_JOIN_ORACLE),
@@ -508,11 +510,12 @@ def multimodal_queries() -> Registry:
         ("y4m_frame_sample", q_y4m_frame_sample),
     )
     return {
-        **{name: (fn, oracle_media.feature_sql(name)) for name, fn in media},
-        "tile_stats": (q_tile_stats, oracle_raster.tile_stats_sql()),
-        "pyramid_stats": (q_pyramid_stats, oracle_raster.pyramid_stats_sql()),
-        "focal_stats": (q_focal_stats, oracle_raster.focal_stats_sql()),
-        "vectorize": (q_vectorize, oracle_raster.vectorize_sql()),
+        **{name: (fn, functools.partial(oracle_media.feature_sql, name))
+           for name, fn in media},
+        "tile_stats": (q_tile_stats, oracle_raster.tile_stats_sql),
+        "pyramid_stats": (q_pyramid_stats, oracle_raster.pyramid_stats_sql),
+        "focal_stats": (q_focal_stats, oracle_raster.focal_stats_sql),
+        "vectorize": (q_vectorize, oracle_raster.vectorize_sql),
         "median_price": (q_median_price, SQL_MEDIAN_PRICE),
     }
 
@@ -859,10 +862,7 @@ DRIVER_WINDOW = 50
 # whose CODE changes this round and need fresh driver rows (bpe_encode
 # and pack_sequences_bpe — U+001F separator guard + trained-table
 # plumbing). Exactly 50.
-SELF_RUN_ONLY_NEW: list[str] = []
-
 TAIL_QUERIES = [
-    *SELF_RUN_ONLY_NEW,
     # stale tail (green r05, waiting one round — MUST enter the r08
     # window): long-stable relational fillers, unchanged since round 2,
     # each displaced by a brand-new round-7 query entering the window

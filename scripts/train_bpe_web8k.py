@@ -31,7 +31,7 @@ def main() -> int:
     from geotiff_spark.session import get_spark
     from geotiff_spark.sources.pages import synth_pages
 
-    spark = get_spark("bpe-train", master="local[32]")
+    spark = get_spark("bpe-train")
     spark.sparkContext.setLogLevel("ERROR")
 
     path = f"/tmp/geotiff_spark_bench/pages_bign{N_PAGES}"

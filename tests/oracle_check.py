@@ -75,8 +75,8 @@ def main() -> int:
             failures.append(name)
             continue
         if name not in oq:
-            print(f"ok-   {name}: rows={len(spark_pdf)} (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
+            print(f"FAIL  {name}: no oracle [{time.time()-t0:.1f}s]")
+            failures.append(name)
             continue
         try:
             duck_pdf = con.execute(oq[name]).df()

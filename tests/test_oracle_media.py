@@ -20,8 +20,8 @@ def test_media_queries_match_duckdb_oracle(spark, name):
 
     from geotiff_spark.queries import multimodal_queries
 
-    fn, sql = multimodal_queries()[name]
-    want = duckdb.connect().execute(sql).df()
+    fn, build_sql = multimodal_queries()[name]
+    want = duckdb.connect().execute(build_sql()).df()
     got = fn(spark, SF).toPandas()
     assert len(want) > 0
     assert sorted(got.columns) == sorted(want.columns)

@@ -5,13 +5,12 @@ correctness gate: 12 new queries were appended past the window and never
 got a driver row (VERDICT round 2, "What's wrong" #1).
 """
 
-import glob
 import json
 import os
 
-from geotiff_spark.queries import (
-    DRIVER_WINDOW, SELF_RUN_ONLY_NEW, TAIL_QUERIES, registry,
-)
+import __spark_entry__
+from geotiff_spark import oracle_media, oracle_raster
+from geotiff_spark.queries import DRIVER_WINDOW, TAIL_QUERIES, registry
 
 R05 = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r05.json")
 R06 = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r06.json")
@@ -19,10 +18,22 @@ R06 = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r06.json")
 
 def test_every_query_has_fn_and_registry_is_well_formed():
     reg = registry()
-    assert len(reg) == len(set(reg)), "duplicate names"
-    for name, (fn, sql) in reg.items():
+    oq = __spark_entry__.oracle_sql()
+    for name, (fn, _oracle) in reg.items():
         assert callable(fn), name
-        assert sql is None or isinstance(sql, str), name
+        assert isinstance(oq.get(name), str) and oq[name].strip(), name
+
+
+def test_listing_queries_builds_no_oracle_table(monkeypatch):
+    """The registry and queries() hold oracle builders, not their SQL:
+    neither encodes a media corpus nor materializes an oracle table."""
+    def refuse(*_args):
+        raise AssertionError("an oracle table was built")
+
+    monkeypatch.setattr(oracle_raster, "cached_tables", refuse)
+    monkeypatch.setattr(oracle_media, "cached_tables", refuse)
+    monkeypatch.setattr(oracle_media, "_corpus_key", refuse)
+    assert len(registry()) == len(__spark_entry__.queries()) == 103
 
 
 def test_window_contains_everything_not_explicitly_tailed():
@@ -44,12 +55,8 @@ def test_tail_entries_are_individually_justified():
     hash-green in one of the last two recorded driver rounds (the
     rotation rule: nothing waits outside the window for more than two
     rounds — entries green only in the OLDER round must rotate back in
-    next round), (b) it is an `_exact` baseline sharing its oracle
-    string with an in-window primary, or (c) it was born after the
-    current round's window filled AND the committed current-round
-    full-registry self-run records it oracle-hash-green (declared in
-    SELF_RUN_ONLY_NEW, capped at 3, first in line for the next
-    rotation)."""
+    next round), or (b) it is an `_exact` baseline sharing its oracle
+    string with an in-window primary."""
     reg = registry()
     names = list(reg)
     head = set(names[:DRIVER_WINDOW])
@@ -58,29 +65,8 @@ def test_tail_entries_are_individually_justified():
     with open(R06) as fh:
         r06 = json.load(fh)
 
-    assert len(SELF_RUN_ONLY_NEW) <= 3, (
-        "SELF_RUN_ONLY_NEW is a narrow escape hatch for queries born "
-        "after the window filled, not a parking lot"
-    )
-    self_runs = sorted(glob.glob(
-        os.path.join(os.path.dirname(__file__), "..", "BENCH",
-                     "ORACLE_SELF_r*.txt")
-    ))
-    latest_self_run = open(self_runs[-1]).read() if self_runs else ""
-
     stale = []
     for q in names[DRIVER_WINDOW:]:
-        if q in SELF_RUN_ONLY_NEW:
-            assert f"ok    {q}:" in latest_self_run and \
-                "hash match" in next(
-                    ln for ln in latest_self_run.splitlines()
-                    if ln.startswith(f"ok    {q}:")
-                ), (
-                f"{q} is declared self-run-only but the committed "
-                f"self-run {self_runs[-1] if self_runs else '<none>'} "
-                "has no hash-green row for it"
-            )
-            continue
         if q.endswith("_exact"):
             primary = q[: -len("_exact")]
             assert primary in head, q
@@ -110,12 +96,11 @@ def test_oracle_coverage_bookkeeping():
     stay at FULL oracle coverage — and the quality gates that pin the
     production (xxhash64 / Gaussian-plane / k-means) fast paths must
     stay registered with oracles of their own."""
-    reg = registry()
-    no_oracle = [n for n, (_f, sql) in reg.items() if sql is None]
-    assert no_oracle == [], (
-        f"new no_oracle queries appeared: {no_oracle} — give them a "
-        "DuckDB twin (md5-derived randomness if needed) or justify here"
+    oq = __spark_entry__.oracle_sql()
+    assert set(oq) == set(registry()), (
+        "every query needs a DuckDB twin (md5-derived randomness if "
+        "needed)"
     )
     for gate in ("minhash_recall", "simhash_complete", "ann_recall",
                  "ann_ivf_gate"):
-        assert gate in reg and reg[gate][1] is not None, gate
+        assert gate in oq, gate
