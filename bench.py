@@ -119,8 +119,7 @@ def pages_e2e_twostage(spark, sf_dir):
     from geotiff_spark.operators import extract as ex
     from geotiff_spark.operators import spatial_join as sj
 
-    geo = ex.with_fused_geo(pages(spark, n_pages(sf_dir)), RES,
-                            carry=("url",))
+    geo = ex.with_fused_geo(pages(spark, n_pages(sf_dir)), RES)
     hits = sj.pip_join(spark, geo.select("url", "lat", "lon", "cell"), RES)
     return hits.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n_pages"))
 

@@ -190,16 +190,15 @@ def bpe_train_frame(
     docs: DataFrame,
     n_merges: int = 64,
     max_vocab: int = 1_000_000,
-    byte_level: bool = False,
 ) -> list[tuple[str, str]]:
     """Train merges from the `text` column of a corpus: one Spark
     aggregation builds the (word, count) table — partial-aggregated,
     capped at max_vocab by frequency (ties toward the lexicographically smaller
     word, so the pull is deterministic) — then the merge loop runs
     driver-side (:func:`bpe_train_fast`, whose merges equal
-    :func:`bpe_train`'s). byte_level=True trains over UTF-8 bytes
-    (latin-1-char symbols), giving complete input coverage: no word
-    can be out-of-vocabulary."""
+    :func:`bpe_train`'s). It trains over UTF-8 bytes (latin-1-char
+    symbols), giving complete input coverage: no word can be
+    out-of-vocabulary once encoded with byte_level=True."""
     toks = tokens(F.col("text"), sep=_WORD_SEP)
     rows = (
         docs.filter(F.col("text").isNotNull())
@@ -209,9 +208,7 @@ def bpe_train_frame(
         .limit(max_vocab)
         .collect()
     )
-    counts = {
-        (byte_word(r["w"]) if byte_level else r["w"]): r["c"] for r in rows
-    }
+    counts = {byte_word(r["w"]): r["c"] for r in rows}
     return bpe_train_fast(counts, n_merges)
 
 

@@ -85,8 +85,10 @@ def token_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram(word) Jaccard pairs ≥ threshold, id_a < id_b.
 
     inter via token self-join, union = |A|+|B|−inter. All built-ins.
+    The input is fanned out first: tokenizing grows with text length.
     """
-    return jaccard_pairs_from_tokens(tokens_df(df), threshold)
+    return jaccard_pairs_from_tokens(
+        tokens_df(ensure_map_parallelism(df)), threshold)
 
 
 def char_ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
@@ -237,7 +239,6 @@ def minhash_signatures(
     # UDF nondeterministic forbids the alias inlining, so the filter
     # references the materialized column and the plan holds exactly ONE
     # ArrowEvalPython (pinned by test_plan_shapes).
-    df = ensure_map_parallelism(df)
     base = F.transform(
         _shingle_array(shingle),
         lambda s: _base_hash_expr(s, hash_mode),
@@ -324,7 +325,9 @@ def minhash_lsh_pairs(
     64/16 (r=4) a 0.8-jaccard pair escapes with ~2e-4; at 64 hashes in 32
     bands (r=2) with ~6e-15, which is the configuration the exact-match
     registry queries use (verified pair set == the exact jaccard pair set
-    on the test corpora)."""
+    on the test corpora). The input is fanned out once here, so the
+    signature stage and the verify arm's shingle arrays both read it."""
+    df = ensure_map_parallelism(df)
     rows_per_band = NUM_HASHES // bands
     sigs = minhash_signatures(df, shingle, hash_mode)
     # band hash = xxhash64 of the band's signature slice (hashing the
@@ -427,12 +430,13 @@ def simhash_signatures(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     )
 
 
-def simhash_pairs(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ 3, found by the pigeonhole
     trick: split 64 bits into 4 segments — any pair within distance
     shares at least one exact segment → equi-join on (segment_id,
-    segment_bits), then exact popcount filter."""
-    return simhash_pairs_from_sigs(simhash_signatures(df, hash_mode), 3)
+    segment_bits), then exact popcount filter. Tokens hash in "md5"
+    mode, so an oracle can rebuild every signature."""
+    return simhash_pairs_from_sigs(simhash_signatures(df, "md5"), 3)
 
 
 def simhash_pairs_from_sigs(sigs: DataFrame, max_hamming: int) -> DataFrame:
@@ -603,6 +607,7 @@ def repeated_ngram_mine(df: DataFrame) -> DataFrame:
     gram it saw, never one row per occurrence; n_docs adds one
     (digest, doc_id)-distinct pass of integer pairs. The final top N is
     TakeOrdered (per-partition k, no global sort)."""
+    df = ensure_map_parallelism(df)
     from pyspark.sql.window import Window
 
     n = NGRAM_N
@@ -764,7 +769,9 @@ def exact_substring_dedup(
     Marked start-positions then aggregate per doc, and span removal is
     one row-local Arrow batch pass (numpy code-point mask, not the old
     per-character generator). The text crosses the wire exactly once
-    (the final doc join), like chunk_dedup's data plane."""
+    (the final doc join), like chunk_dedup's data plane. The input is
+    fanned out first, so the fingerprint pass and the doc join read it."""
+    df = ensure_map_parallelism(df)
     win = substring_fingerprints(df, k, winnow)
     # materialize the fingerprints ONCE: both the digest count and the
     # semi-join probe read this frame (without it the fingerprint stage
@@ -833,6 +840,11 @@ def exact_substring_dedup(
 # negatives are impossible. Positions use md5 (available verbatim in
 # DuckDB), so the oracle replays the identical filter bit-for-bit.
 
+# The filtered column (chunks of queries_textdata.chunks_frame) and the
+# hash seeds per value; m, the bits per seed, is the caller's.
+BLOOM_COL = "chunk"
+BLOOM_K = 4
+
 
 def bloom_positions(col: Column | str, seed: int, m: int) -> Column:
     """Bit position of `col` under hash-seed `seed`: the top 32 bits of
@@ -857,21 +869,21 @@ class PackedBloom(dict):
     out, as bloom_incremental_frame does."""
 
 
-def bloom_pack(df: DataFrame, value_col: str = "text",
-               m: int = 4096, k: int = 4) -> PackedBloom:
-    """Build the filter over the non-NULL values of df[value_col]: k
-    packed uint64 bitmaps of m bits (seed -> m/64 + 1 words). The k
-    positions of each value are ORed into their words by one word-keyed
-    bit_or, which partial-aggregates map-side, so the exchange and the
-    driver collect carry at most k * m/64 rows whatever the history
-    size. bit_or is idempotent, so duplicate values need no distinct."""
+def bloom_pack(df: DataFrame, m: int) -> PackedBloom:
+    """Build the filter over the non-NULL values of df[BLOOM_COL]:
+    BLOOM_K packed uint64 bitmaps of m bits (seed -> m/64 + 1 words).
+    The BLOOM_K positions of each value are ORed into their words by one
+    word-keyed bit_or, which partial-aggregates map-side, so the
+    exchange and the driver collect carry at most BLOOM_K * m/64 rows
+    whatever the history size. bit_or is idempotent, so duplicate
+    values need no distinct."""
     pos = F.array(*[
         F.struct(F.lit(s).alias("seed"),
-                 bloom_positions(value_col, s, m).alias("pos"))
-        for s in range(1, k + 1)
+                 bloom_positions(BLOOM_COL, s, m).alias("pos"))
+        for s in range(1, BLOOM_K + 1)
     ])
     words = (
-        df.filter(F.col(value_col).isNotNull())
+        df.filter(F.col(BLOOM_COL).isNotNull())
         .select(F.explode(pos).alias("b"))
         .select("b.seed", "b.pos")
         .groupBy("seed", (F.col("pos") / 64).cast("long").alias("w"))
@@ -885,7 +897,7 @@ def bloom_pack(df: DataFrame, value_col: str = "text",
     )
     packed = PackedBloom(
         (s, np.zeros(m // 64 + 1, dtype=np.uint64))
-        for s in range(1, k + 1)
+        for s in range(1, BLOOM_K + 1)
     )
     for s, w, mask in words.itertuples(index=False, name=None):
         # mask arrives as a signed BIGINT; bit 63 set → negative. Take
@@ -928,14 +940,12 @@ def _packed_broadcasts(sc, packed: PackedBloom) -> list:
     return bcasts
 
 
-def bloom_membership(df: DataFrame, packed: PackedBloom,
-                     value_col: str = "text",
-                     m: int = 4096, k: int = 4) -> DataFrame:
+def bloom_membership(df: DataFrame, packed: PackedBloom, m: int) -> DataFrame:
     """Adds `bloom_hit` (1 = possibly-seen, 0 = definitely-new; a NULL
-    value is 0) to df by testing its k positions against the filter from
-    :func:`bloom_pack` with the same (m, k). Positions are JVM-computed
-    (md5 codegen); the bit test is one vectorized Arrow pass against
-    the broadcast bitmaps, with no shuffle anywhere."""
+    value is 0) to df by testing the BLOOM_K positions of its BLOOM_COL
+    against the filter from :func:`bloom_pack` with the same m. Positions
+    are JVM-computed (md5 codegen); the bit test is one vectorized Arrow
+    pass against the broadcast bitmaps, with no shuffle anywhere."""
     bcasts = _packed_broadcasts(df.sparkSession.sparkContext, packed)
 
     @pandas_udf("long")
@@ -950,7 +960,8 @@ def bloom_membership(df: DataFrame, packed: PackedBloom,
             out &= (b.value[p >> 6] >> bit) & np.uint64(1) == 1
         return pd.Series(out.astype("int64"))
 
-    pos_cols = [bloom_positions(value_col, s, m) for s in range(1, k + 1)]
+    pos_cols = [bloom_positions(BLOOM_COL, s, m)
+                for s in range(1, BLOOM_K + 1)]
     out = df.withColumn("bloom_hit", _hit(*pos_cols))
     # pin the filter to the plan the caller holds: a PackedBloom's
     # broadcasts are destroyed when the filter is GC'd, so the probe

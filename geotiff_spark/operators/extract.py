@@ -117,13 +117,9 @@ def with_cell(df: DataFrame, res: int) -> DataFrame:
     return df.withColumn("cell", cell_udf(res)(F.col("lat"), F.col("lon")))
 
 
-def with_fused_geo(
-    df: DataFrame,
-    res: int,
-    carry: tuple[str, ...] = ("url", "warc_ts", "lang"),
-) -> DataFrame:
+def with_fused_geo(df: DataFrame, res: int) -> DataFrame:
     """Attach extracted_text/lat/lon/cell from `html` in one fused
-    mapInPandas pass, keeping the `carry` columns.
+    mapInPandas pass, keeping the `url` column.
 
     mapInPandas, NOT a pandas_udf: EvalPythonExec buffers every input row
     in a HybridRowQueue (spilling to disk) while Python computes — with a
@@ -136,7 +132,7 @@ def with_fused_geo(
     )
 
     out_schema = StructType(
-        [df.schema[c] for c in carry]
+        [df.schema["url"]]
         + [
             StructField("extracted_text", StringType()),
             StructField("lat", DoubleType()),
@@ -155,14 +151,14 @@ def with_fused_geo(
             cell[~ok] = pd.NA
             if ok.any():
                 cell[ok] = cellmod.latlon_to_cell(lats[ok], lons[ok], res)
-            out = pdf[list(carry)].copy()
+            out = pdf[["url"]].copy()
             out["extracted_text"] = texts
             out["lat"] = pd.Series(lats).where(pd.Series(ok))
             out["lon"] = pd.Series(lons).where(pd.Series(ok))
             out["cell"] = cell
             yield out
 
-    return df.select(*carry, "html").mapInPandas(run, schema=out_schema)
+    return df.select("url", "html").mapInPandas(run, schema=out_schema)
 
 
 def with_cell_token(df: DataFrame) -> DataFrame:

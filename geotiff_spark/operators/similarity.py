@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from geotiff_spark.plans.partitioning import ensure_map_parallelism
+
 TOP_K = 5
 # lsh_topk's hyperplane layout over 64-dim embeddings.
 LSH_TOPK_DIM, LSH_TOPK_PLANES, LSH_TOPK_TABLES = 64, 4, 8
@@ -105,6 +107,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     top-k (and that aggregates only k rows per partition thanks to the
     window's partial TakeOrdered behavior under AQE).
     """
+    corpus = ensure_map_parallelism(corpus)
     # norms are per-vector, so compute them once per row BEFORE the pair
     # blow-up (cos = dot/(nq*nc) is the same doubles as cosine(), but the
     # norm aggregates run n times instead of n*q times)
@@ -290,6 +293,7 @@ def lsh_near_dup_pairs(
     hash-pinned at sf0.01, equality-checked vs the pair-stream form
     at sf0.1/sf1.0).
     """
+    corpus = ensure_map_parallelism(corpus)
     key_dt = corpus.schema["vec_id"].dataType.simpleString()
     bu = bucket_udf(dim, n_planes, NEAR_DUP_TABLES)
     stacked = corpus.select(

@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geotiff_spark.plans.partitioning import ensure_map_parallelism
+
 # tiny deterministic stopword inventories for the n-gram/stopword heuristic
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "it", "for", "on"],
@@ -139,7 +141,8 @@ def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprint of (doc_id, text): md5 of the full text (exact
     identity) + the minimum md5 over all FINGERPRINT_SHINGLE-char windows
     (shift-robust near-dup fingerprint, winnowing-style). Both JVM-side:
-    sequence → transform → array_min."""
+    sequence → transform → array_min, one md5 per character of text, so
+    the input is fanned out first."""
     shingle = FINGERPRINT_SHINGLE
     t = F.col("text")
     n_windows = F.greatest(F.length(t) - F.lit(shingle - 1), F.lit(1))
@@ -147,7 +150,7 @@ def fingerprint(df: DataFrame) -> DataFrame:
         F.sequence(F.lit(1), n_windows),
         lambda i: F.md5(t.substr(i, F.lit(shingle))),
     )
-    return df.select(
+    return ensure_map_parallelism(df).select(
         "doc_id",
         F.md5(t).alias("digest"),
         F.array_min(shingle_hashes).alias("min_shingle_hash"),

@@ -27,35 +27,18 @@ from geotiff_spark.operators import extract as ex
 from geotiff_spark.operators import sample as smp
 from geotiff_spark.operators import spatial_join as sj
 from geotiff_spark.oracle_raster import AUSTRIAN
-from geotiff_spark.plans.partitioning import ensure_map_parallelism
 
 # Cell resolution of the documents' geo pipeline.
 RES = 7
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str,
-               parallel: bool = True) -> DataFrame:
-    """The one table loader of the query modules: `{sf_dir}/{name}.parquet`.
-
-    `documents` and `embeddings` carry the heavy per-row compute (regex,
-    pandas UDFs, cosine kernels) but ship as ONE parquet row group at
-    every sf, so their scan plans a single partition and serializes
-    every downstream map stage on one core (input skew).
-    For those two tables the scan goes through
-    :func:`~geotiff_spark.plans.partitioning.ensure_map_parallelism`,
-    a no-op whenever the scan already has real parallelism (a 100 TB
-    table never triggers it).
-
-    parallel=False skips the fan-out, for JVM-light consumers: a few
-    cheap expressions feeding an aggregation that reshuffles anyway,
-    where the extra exchange is pure overhead. Medians without → with
-    fan-out at sf0.1, local[4] on a 4-core host: exact_dedup 0.38 →
-    0.51 s and cell_compact 1.49 → 1.55 s (both opt out), chunk_dedup
-    1.92 → 1.08 s and rep_signals 0.50 → 0.42 s."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if parallel and name in ("documents", "embeddings"):
-        df = ensure_map_parallelism(df)
-    return df
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The one table loader of the query modules: `{sf_dir}/{name}.parquet`,
+    read as it is. Fan-out is not the loader's call: an operator whose
+    per-row work grows with the length of a row's text or vector
+    repartitions its own input
+    (:func:`~geotiff_spark.plans.partitioning.ensure_map_parallelism`)."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _with_latlon(docs: DataFrame) -> DataFrame:
@@ -68,10 +51,9 @@ def _with_latlon(docs: DataFrame) -> DataFrame:
     )
 
 
-def geo_documents(spark: SparkSession, sf_dir: str,
-                  parallel: bool = True) -> DataFrame:
+def geo_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + deterministic (lat, lon) — pure JVM expressions."""
-    return _with_latlon(load_table(spark, sf_dir, "documents", parallel))
+    return _with_latlon(load_table(spark, sf_dir, "documents"))
 
 
 def geo_documents_with_cell(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,27 +29,31 @@ MAX_DEPTH = 12
 def ensure_map_parallelism(df: DataFrame) -> DataFrame:
     """Fix DEGENERATE input partitioning before a CPU-heavy map stage.
 
+    The rule: an operator whose per-row work grows with the length of a
+    row's text or vector fans out its own input with this call, at its
+    top; the table loader and the callers never do. The callers are
+    textstats.fingerprint; dedup.minhash_lsh_pairs, simhash_signatures,
+    token_jaccard_pairs, repeated_ngram_mine and exact_substring_dedup;
+    similarity.brute_force_topk and lsh_near_dup_pairs;
+    queries_textdata.chunks_frame and chunk_dedup_frame; and the
+    registry queries that do that work inline (decontaminate, pii_scrub,
+    trigram_lm_score, embedding_near_dups_exact). tests/test_plan_shapes.py
+    pins each; perfbench also calls it on its embeddings corpus.
+
     A small/unsplittable source (one parquet row group) plans as a
-    handful of partitions, serializing the Python stage no matter how
-    many cores exist (measured: sf0.1 documents.parquet = 1 row group →
+    handful of partitions, serializing the stage no matter how many
+    cores exist (measured: sf0.1 documents.parquet = 1 row group →
     the whole signature stage on one core, 4s instead of ~0.3s on 32).
     Repartition ONLY when the scan yields fewer than half the cluster's
     default parallelism — at production scale a 100 TB scan has orders of
     magnitude more splits than cores and this is a no-op with zero
     shuffle; when it does fire, the shuffled bytes are by construction
-    tiny (the input was under a few row groups). This is the same
-    philosophy as AQE's coalescing, in the opposite direction — AQE
-    cannot ADD parallelism to an unsplittable scan.
+    tiny (the input was under a few row groups). AQE cannot ADD
+    parallelism to an unsplittable scan.
 
-    Round-4 note: a data-size-proportional target (1 task / 4 MB) was
-    measured AGAINST full fan-out on the sf0.1 minhash pipeline in an
-    interleaved A/B — fan-out to defaultParallelism won at every width
-    (min wall 5.5 s at 32 parts vs 11.1 s at 4 vs ~7 s single-task-ish),
-    so the per-row Python cost dominates the per-task wave overhead and
-    the core-count target stays. The 4.3–9.1 s bench spread VERDICT r3
-    flagged reproduces as whole-run co-tenant bursts (identical runs
-    5.5 s → 119 s inside one session with load spikes), not as any one
-    engine stage — see PLANS.md §7."""
+    A data-size-proportional target (1 task / 4 MB) lost to full fan-out
+    on the sf0.1 minhash pipeline in an interleaved A/B (min wall 5.5 s
+    at 32 parts vs 11.1 s at 4), so the core-count target stays."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < max(target // 2, 1):

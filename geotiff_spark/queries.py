@@ -190,7 +190,7 @@ def q_cell_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     as chained CTEs (compact_oracle_sql)."""
     from geotiff_spark.operators.compact import compact_cells
 
-    docs = pipeline.geo_documents(spark, sf_dir, parallel=False)
+    docs = pipeline.geo_documents(spark, sf_dir)
     n = 1 << 7
     grid = docs.select(
         F.least(

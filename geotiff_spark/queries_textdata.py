@@ -15,12 +15,13 @@ from geotiff_spark.operators import (
     bpe, dedup, packing, similarity, textstats,
 )
 from geotiff_spark.pipeline import load_table as _t
+from geotiff_spark.plans.partitioning import ensure_map_parallelism
 
 
 # ---- dedup -------------------------------------------------------------------
 
 def q_exact_dedup(spark, sf_dir):
-    return dedup.exact_dedup(_t(spark, sf_dir, "documents", parallel=False))
+    return dedup.exact_dedup(_t(spark, sf_dir, "documents"))
 
 
 SQL_EXACT_DEDUP = """
@@ -478,9 +479,7 @@ def q_simhash_pairs(spark, sf_dir):
     bit-for-bit and pins the full pair set (via brute-force Hamming —
     the pigeonhole bucketing is exact, so bucketed == brute force; the
     simhash_complete gate pins that equivalence on the engine side)."""
-    return dedup.simhash_pairs(
-        _t(spark, sf_dir, "documents"), hash_mode="md5"
-    )
+    return dedup.simhash_pairs(_t(spark, sf_dir, "documents"))
 
 
 SQL_SIMHASH_PAIRS = f"""
@@ -562,7 +561,7 @@ def q_embedding_near_dups_exact(spark, sf_dir):
     tail entry; shares the oracle with the LSH primary."""
     from geotiff_spark.operators.similarity import cosine
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = ensure_map_parallelism(_t(spark, sf_dir, "embeddings"))
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
@@ -718,8 +717,9 @@ def q_chunk_dedup(spark, sf_dir):
 
 def chunks_frame(docs):
     """(doc_id, pos, chunk): the deterministic 10-token chunker shared
-    by chunk_dedup and bloom_chunk_dedup — row-local JVM expressions,
-    no shuffle."""
+    by chunk_dedup and bloom_chunk_dedup — row-local JVM expressions
+    over the fanned-out docs, no other shuffle."""
+    docs = ensure_map_parallelism(docs)
     toks = textstats.tokens(F.col("text"))
     n_chunks = F.ceil(F.size(toks) / F.lit(10)).cast("int")
     # guard: sequence(0, -1) would COUNT DOWN in Spark, not be empty
@@ -750,7 +750,10 @@ def chunk_dedup_frame(docs):
     text through BOTH the digest exchange and the reassembly exchange
     (~2.2× the corpus bytes on the wire vs ~1× plus narrow triples
     now); on one box that made the operator memory-bus-bound (N→4N
-    efficiency 0.70 pre-rewrite — BENCH/BASELINE.md text-op scaling)."""
+    efficiency 0.70 pre-rewrite — BENCH/BASELINE.md text-op scaling).
+    Chunking and md5 cost grow with text length, so `docs` is fanned out
+    first, and both the chunk stream and the final join read it."""
+    docs = ensure_map_parallelism(docs)
     trip = chunks_frame(docs).select(
         F.md5("chunk").alias("digest"), "doc_id", "pos"
     )
@@ -823,6 +826,10 @@ FROM totals t LEFT JOIN reasm r ON r.doc_id = t.doc_id
 """
 
 
+# Bits per seed of q_bloom_chunk_dedup's filter (its oracle reads it too).
+BLOOM_CHUNK_M = 4096
+
+
 def q_bloom_chunk_dedup(spark, sf_dir):
     """Bloom-filter INCREMENTAL chunk dedup — dedup a new crawl batch
     against the whole historical corpus without joining against it.
@@ -842,17 +849,12 @@ def q_bloom_chunk_dedup(spark, sf_dir):
     exact historical digest set is precisely what the filter replaces.
     Bloom trade: over-drop (false positive) possible, under-drop
     impossible."""
-    _BM, _BK = 4096, 4
     docs = _t(spark, sf_dir, "documents")
     packed = dedup.bloom_pack(
-        chunks_frame(docs.filter(F.col("doc_id") % 5 != 0)),
-        value_col="chunk", m=_BM, k=_BK,
-    )
+        chunks_frame(docs.filter(F.col("doc_id") % 5 != 0)), BLOOM_CHUNK_M)
     new_docs = docs.filter(F.col("doc_id") % 5 == 0)
     probed = dedup.bloom_membership(
-        chunks_frame(new_docs), packed, value_col="chunk",
-        m=_BM, k=_BK,
-    )
+        chunks_frame(new_docs), packed, BLOOM_CHUNK_M)
     hist_digests = (
         chunks_frame(docs.filter(F.col("doc_id") % 5 != 0))
         .select(F.md5("chunk").alias("digest")).distinct()
@@ -883,11 +885,11 @@ def q_bloom_chunk_dedup(spark, sf_dir):
 
 SQL_BLOOM_CHUNK_DEDUP = f"""
 WITH {_CHUNKS},
-seeds AS (SELECT UNNEST(range(1, 5)) AS seed),
+seeds AS (SELECT UNNEST(range(1, {dedup.BLOOM_K + 1})) AS seed),
 hist_bits AS (
   SELECT DISTINCT seed,
          ('0x' || substring(md5(chunk || '#' || seed), 1, 8))::BIGINT
-           % 4096 AS pos
+           % {BLOOM_CHUNK_M} AS pos
   FROM chunks CROSS JOIN seeds WHERE doc_id % 5 <> 0
 ),
 hist_digests AS (
@@ -896,13 +898,13 @@ hist_digests AS (
 new_probe AS (
   SELECT c.doc_id, c.pos AS cpos, c.chunk, s.seed,
          ('0x' || substring(md5(c.chunk || '#' || s.seed), 1, 8))::BIGINT
-           % 4096 AS bpos
+           % {BLOOM_CHUNK_M} AS bpos
   FROM chunks c CROSS JOIN seeds s WHERE c.doc_id % 5 = 0
 ),
 per_chunk AS (
   SELECT n.doc_id, n.cpos,
          MAX(n.chunk) AS chunk,
-         CASE WHEN COUNT(h.pos) = 4 THEN 1 ELSE 0 END AS bloom_hit
+         CASE WHEN COUNT(h.pos) = {dedup.BLOOM_K} THEN 1 ELSE 0 END AS bloom_hit
   FROM new_probe n
   LEFT JOIN hist_bits h ON h.seed = n.seed AND h.pos = n.bpos
   GROUP BY n.doc_id, n.cpos
@@ -936,12 +938,11 @@ def bloom_incremental_frame(docs):
     vectorized Arrow probe over the new batch's chunks, so the batch
     side never shuffles to be filtered and the history is never joined
     against. Returns per new doc: (doc_id, n_chunks, n_maybe_seen)."""
-    m, k = 1 << 22, 4
+    m = 1 << 22
     hist = docs.filter(F.col("doc_id") % 5 != 0)
     new_docs = docs.filter(F.col("doc_id") % 5 == 0)
-    packed = dedup.bloom_pack(chunks_frame(hist), value_col="chunk", m=m, k=k)
-    probed = dedup.bloom_membership(
-        chunks_frame(new_docs), packed, value_col="chunk", m=m, k=k)
+    packed = dedup.bloom_pack(chunks_frame(hist), m)
+    probed = dedup.bloom_membership(chunks_frame(new_docs), packed, m)
     out = (
         probed.groupBy("doc_id")
         .agg(
@@ -973,7 +974,8 @@ def q_trigram_lm_score(spark, sf_dir):
     groupBys partial-aggregate map-side and both joins broadcast; the
     per-doc aggregation is the only data-sized shuffle and carries
     (doc_id, two longs)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = ensure_map_parallelism(_t(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull())
     tri = docs.select(
         "doc_id",
         F.explode(
@@ -1784,7 +1786,7 @@ def q_decontaminate(spark, sf_dir):
     aggregation keyed by doc — no train-side text ever shuffles. Exact
     oracle: the same shingle sets in DuckDB via a plain anti/semi
     join."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = ensure_map_parallelism(_t(spark, sf_dir, "documents"))
     toks = textstats.tokens(F.col("text"))
     grams = F.when(
         F.size(toks) >= 8,
@@ -2087,7 +2089,7 @@ def q_pii_scrub(spark, sf_dir):
     scrubbed text to the comparator). Patterns are dialect-portable
     (no lookaround/backrefs) so DuckDB's RE2 reproduces Java's regex
     byte-for-byte on them."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = ensure_map_parallelism(_t(spark, sf_dir, "documents"))
     n_email = F.size(F.regexp_extract_all("text", F.lit(_PII_EMAIL), 0))
     scrub1 = F.regexp_replace("text", _PII_EMAIL, "<EMAIL>")
     n_digits = F.size(

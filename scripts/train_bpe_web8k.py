@@ -1,7 +1,7 @@
 """Train the committed web8k byte-level BPE merges table.
 
 One-time artifact build (VERDICT r06 next-round #4): trains ≥8192
-merges with bpe_train_frame(byte_level=True) over the full
+merges with bpe_train_frame (byte-level) over the full
 2M-page synthetic bench corpus (the same deterministic table bench.py
 uses), then writes geotiff_spark/data/bpe_merges_web8k.json. The
 artifact is committed so the bench and tests load a fixed table — the
@@ -41,9 +41,7 @@ def main() -> int:
         docs = synth_pages(spark, N_PAGES)
 
     t0 = time.time()
-    merges = bpe_train_frame(
-        docs, n_merges=n_merges, max_vocab=max_vocab, byte_level=True,
-    )
+    merges = bpe_train_frame(docs, n_merges=n_merges, max_vocab=max_vocab)
     dt = time.time() - t0
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -37,14 +37,13 @@ def test_bloom_no_false_negatives_and_fp_is_possible(spark):
     must false-positive, proving the filter actually compresses."""
     hist_vals = [f"doc-{i}" for i in range(64)]
     new_vals = hist_vals[:8] + [f"unseen-{i}" for i in range(256)]
-    hist = spark.createDataFrame([(v,) for v in hist_vals], ["text"])
-    new = spark.createDataFrame([(v,) for v in new_vals], ["text"])
-    m, k = 64, 2  # tiny on purpose: ~64% per-seed fill
-    packed = dedup.bloom_pack(hist, "text", m=m, k=k)
+    hist = spark.createDataFrame([(v,) for v in hist_vals], ["chunk"])
+    new = spark.createDataFrame([(v,) for v in new_vals], ["chunk"])
+    m = 64  # tiny on purpose: ~63% per-seed fill
+    packed = dedup.bloom_pack(hist, m)
     out = {
-        r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership(new, packed, "text", m=m, k=k)
-        .collect()
+        r["chunk"]: r["bloom_hit"]
+        for r in dedup.bloom_membership(new, packed, m).collect()
     }
     assert all(out[v] == 1 for v in hist_vals[:8]), "false negative!"
     unseen_hits = sum(out[f"unseen-{i}"] for i in range(256))
@@ -56,11 +55,11 @@ def test_bloom_no_false_negatives_and_fp_is_possible(spark):
 
 def test_bloom_bit_set_is_bounded_and_null_safe(spark):
     df = spark.createDataFrame(
-        [("a",), ("b",), ("a",), (None,)], ["text"]
+        [("a",), ("b",), ("a",), (None,)], ["chunk"]
     )
-    m, k = 16, 3
-    packed = dedup.bloom_pack(df, "text", m=m, k=k)
-    assert sorted(packed) == [1, 2, 3]
+    m, k = 16, dedup.BLOOM_K
+    packed = dedup.bloom_pack(df, m)
+    assert sorted(packed) == list(range(1, k + 1))
     bits = [
         (s, w * 64 + b)
         for s, words in packed.items()
@@ -70,9 +69,9 @@ def test_bloom_bit_set_is_bounded_and_null_safe(spark):
     # distinct values × seeds, minus collisions; every bit inside m
     assert len(bits) <= 2 * k
     assert all(pos < m for _, pos in bits)
-    nulls = spark.createDataFrame([(None,), (None,)], "text string")
+    nulls = spark.createDataFrame([(None,), (None,)], "chunk string")
     assert not any(
-        words.any() for words in dedup.bloom_pack(nulls, "text", m, k).values()
+        words.any() for words in dedup.bloom_pack(nulls, m).values()
     )
 
 
@@ -211,9 +210,9 @@ def test_bloom_probe_equals_python_filter(spark):
     hist_vals = [f"doc-{i}" for i in range(64)]
     new_vals = [f"doc-{i}" for i in range(16)] + \
         [f"unseen-{i}" for i in range(256)]
-    hist = spark.createDataFrame([(v,) for v in hist_vals], ["text"])
-    new = spark.createDataFrame([(v,) for v in new_vals], ["text"])
-    m, k = 128, 3  # tiny m so false positives exercise the bit test
+    hist = spark.createDataFrame([(v,) for v in hist_vals], ["chunk"])
+    new = spark.createDataFrame([(v,) for v in new_vals], ["chunk"])
+    m, k = 128, dedup.BLOOM_K  # tiny m: false positives exercise the bit test
     bits = {(s, _bloom_pos_py(v, s, m))
             for v in hist_vals for s in range(1, k + 1)}
     expected = {
@@ -221,11 +220,10 @@ def test_bloom_probe_equals_python_filter(spark):
                    for s in range(1, k + 1)))
         for v in new_vals
     }
-    packed = dedup.bloom_pack(hist, "text", m=m, k=k)
+    packed = dedup.bloom_pack(hist, m)
     got = {
-        r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership(new, packed, "text", m=m, k=k)
-        .collect()
+        r["chunk"]: r["bloom_hit"]
+        for r in dedup.bloom_membership(new, packed, m).collect()
     }
     assert got == expected
     assert sum(got[v] for v in hist_vals[:16]) == 16  # no false negs
@@ -235,16 +233,15 @@ def test_bloom_probe_equals_python_filter(spark):
 def test_bloom_null_values_never_hit(spark):
     """NULL rows set no bit in the history and probe as bloom_hit = 0
     (their positions are NULL; the probe must not index with them)."""
-    m, k = 4096, 4
-    hist = spark.createDataFrame([("a",), (None,)], "text string")
-    new = spark.createDataFrame([("a",), ("zz",), (None,)], "text string")
+    m = 4096
+    hist = spark.createDataFrame([("a",), (None,)], "chunk string")
+    new = spark.createDataFrame([("a",), ("zz",), (None,)], "chunk string")
     assert not all(_bloom_pos_py("zz", s, m) == _bloom_pos_py("a", s, m)
-                   for s in range(1, k + 1))
-    packed = dedup.bloom_pack(hist, "text", m=m, k=k)
+                   for s in range(1, dedup.BLOOM_K + 1))
+    packed = dedup.bloom_pack(hist, m)
     got = {
-        r["text"]: r["bloom_hit"]
-        for r in dedup.bloom_membership(new, packed, "text", m=m, k=k)
-        .collect()
+        r["chunk"]: r["bloom_hit"]
+        for r in dedup.bloom_membership(new, packed, m).collect()
     }
     assert got == {"a": 1, "zz": 0, None: 0}
 
@@ -257,12 +254,12 @@ def test_bloom_packed_broadcasts_auto_release(spark):
     alive even if the caller dropped its own reference."""
     import gc
 
-    hist = spark.createDataFrame([(f"h{i}",) for i in range(32)], ["text"])
-    new = spark.createDataFrame([(f"h{i}",) for i in range(8)], ["text"])
-    packed = dedup.bloom_pack(hist, "text", m=256, k=2)
+    hist = spark.createDataFrame([(f"h{i}",) for i in range(32)], ["chunk"])
+    new = spark.createDataFrame([(f"h{i}",) for i in range(8)], ["chunk"])
+    packed = dedup.bloom_pack(hist, 256)
     assert isinstance(packed, dedup.PackedBloom)
     key = id(packed)
-    probe = dedup.bloom_membership(new, packed, "text", m=256, k=2)
+    probe = dedup.bloom_membership(new, packed, 256)
     assert key in dedup._PACKED_BCASTS
     bcast = dedup._PACKED_BCASTS[key][1][0]
     # the probe frame pins the filter: dropping the caller's own ref
@@ -286,11 +283,11 @@ def test_bloom_packed_probe_plan_has_no_shuffle(spark):
     """The packed probe is one ArrowEvalPython over JVM-computed
     positions — no Exchange of any kind may appear in its plan."""
     hist = spark.range(50).select(
-        F.concat(F.lit("h"), F.col("id")).alias("text"))
+        F.concat(F.lit("h"), F.col("id")).alias("chunk"))
     new = spark.range(50).select(
-        F.concat(F.lit("n"), F.col("id")).alias("text"))
-    packed = dedup.bloom_pack(hist, "text", m=256, k=4)
-    out = dedup.bloom_membership(new, packed, "text", m=256, k=4)
+        F.concat(F.lit("n"), F.col("id")).alias("chunk"))
+    packed = dedup.bloom_pack(hist, 256)
+    out = dedup.bloom_membership(new, packed, 256)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" in plan, plan

@@ -46,7 +46,7 @@ def test_cell_assignment_golden(spark):
 
     pages = synth_pages(spark, N_PAGES, partitions=8)
     got = (
-        with_fused_geo(pages, RES, carry=("url",))
+        with_fused_geo(pages, RES)
         .select("url", "cell")
         .toPandas()
         .sort_values("url")
@@ -73,7 +73,7 @@ if __name__ == "__main__":
 
     pages = synth_pages(spark, N_PAGES, partitions=8)
     (
-        with_fused_geo(pages, RES, carry=("url",))
+        with_fused_geo(pages, RES)
         .select("url", "cell")
         .toPandas()
         .sort_values("url")

@@ -5,7 +5,10 @@ reaching the scan."""
 
 from __future__ import annotations
 
+import importlib
 import os
+import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,10 +25,9 @@ def _optimized(df) -> str:
 
 
 def test_minhash_signatures_plan_has_no_exchange(spark):
-    """On well-partitioned input the signature stage is a pure map (zero
-    exchanges added); on a degenerate 1-row-group scan exactly one
-    parallelism-restoring repartition fires
-    (plans.partitioning.ensure_map_parallelism) and nothing else."""
+    """The signature stage is a pure map: it adds no exchange, on a
+    1-row-group scan or on a well-partitioned input (its caller,
+    minhash_lsh_pairs, owns the fan-out)."""
     from geotiff_spark.operators.dedup import minhash_signatures
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -33,8 +35,7 @@ def test_minhash_signatures_plan_has_no_exchange(spark):
     # repartition — the signature stage adds none
     wide = docs.repartition(64)
     assert _plan(minhash_signatures(wide)).count("Exchange") == 1
-    # degenerate 1-row-group scan: at most the one adaptive repartition
-    assert _plan(minhash_signatures(docs)).count("Exchange") <= 1
+    assert "Exchange" not in _plan(minhash_signatures(docs))
     # round 4: the NULL-drop filter must not re-plan the UDF — a
     # deterministic UDF gets alias-inlined into the filter and extracted
     # into a SECOND ArrowEvalPython (the whole chain evaluated twice,
@@ -53,13 +54,100 @@ def test_simhash_signatures_plan_has_no_exchange(spark):
     assert _plan(simhash_signatures(docs)).count("ArrowEvalPython") == 1
 
 
+def _brute_force_topk(corpus):
+    """brute_force_topk over its corpus, with ten of its rows as the
+    queries (read up front, so the queries add no scan)."""
+    from geotiff_spark.operators.similarity import brute_force_topk
+
+    spark = corpus.sparkSession
+    queries = spark.createDataFrame(corpus.limit(10).collect(), corpus.schema)
+    return brute_force_topk(corpus, queries)
+
+
+# The operators that fan out their own input: name -> (the operator over
+# one input frame, the sf table it reads).
+FAN_OUT = {
+    "fingerprint": ("geotiff_spark.operators.textstats", "documents"),
+    "chunk_dedup_frame": ("geotiff_spark.queries_textdata", "documents"),
+    "chunks_frame": ("geotiff_spark.queries_textdata", "documents"),
+    "minhash_lsh_pairs": ("geotiff_spark.operators.dedup", "documents"),
+    "simhash_signatures": ("geotiff_spark.operators.dedup", "documents"),
+    "token_jaccard_pairs": ("geotiff_spark.operators.dedup", "documents"),
+    "repeated_ngram_mine": ("geotiff_spark.operators.dedup", "documents"),
+    "exact_substring_dedup": ("geotiff_spark.operators.dedup", "documents"),
+    "brute_force_topk": ("geotiff_spark.operators.similarity", "embeddings"),
+}
+# The registry queries that do their per-row work inline, so fan out the
+# table they read themselves.
+FAN_OUT_QUERIES = ["decontaminate", "pii_scrub", "trigram_lm_score",
+                   "embedding_near_dups_exact"]
+
+
+def _round_robins(plan: str) -> dict[str, int]:
+    """Round-robin exchanges by width, with every read of the input
+    counted under "scans" (an operator that reads its input twice shows
+    the same fan-out above each read; AQE reuses the exchange)."""
+    widths = re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)
+    return {**Counter(widths), "scans": plan.count("FileScan parquet")}
+
+
+@pytest.mark.parametrize("name", sorted(FAN_OUT))
+def test_text_operator_fans_out_its_own_input(spark, name):
+    """An operator whose per-row work grows with the length of a row's
+    text or vector fans out its own input
+    (plans.partitioning.ensure_map_parallelism): exactly one round-robin
+    exchange over each read of the 1-row-group scan, and none beyond the
+    input's own over an input that already has the partitions."""
+    module, table = FAN_OUT[name]
+    op = (_brute_force_topk if name == "brute_force_topk"
+          else getattr(importlib.import_module(module), name))
+    docs = spark.read.parquet(f"{SF}/{table}.parquet")
+    assert docs.rdd.getNumPartitions() == 1
+    n = str(spark.sparkContext.defaultParallelism)
+    got = _round_robins(_plan(op(docs)))
+    assert got == {n: got["scans"], "scans": got["scans"]} and got[n] >= 1
+    got = _round_robins(_plan(op(docs.repartition(64))))
+    assert got == {"64": got["scans"], "scans": got["scans"]}
+
+
+def test_lsh_near_dup_pairs_fans_out_its_own_input(spark):
+    """lsh_near_dup_pairs checkpoints its bucketed corpus as it builds
+    the frame, so its plan reads no scan: the pin is the checkpoint job,
+    whose one-task scan of the 1-row-group embeddings feeds one task per
+    core."""
+    from geotiff_spark.operators.similarity import lsh_near_dup_pairs
+
+    sc = spark.sparkContext
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    assert emb.rdd.getNumPartitions() == 1
+    sc.setJobGroup("lsh-fan-out", "lsh_near_dup_pairs fan-out")
+    try:
+        lsh_near_dup_pairs(emb)
+    finally:
+        sc._jsc.clearJobGroup()
+    st = sc.statusTracker()
+    jobs = [sorted(st.getStageInfo(s).numTasks
+                   for s in st.getJobInfo(j).stageIds)
+            for j in sorted(st.getJobIdsForGroup("lsh-fan-out"))]
+    assert [1, sc.defaultParallelism] in jobs, jobs
+
+
+@pytest.mark.parametrize("name", FAN_OUT_QUERIES)
+def test_inline_query_fans_out_its_table(spark, name):
+    from geotiff_spark.queries import registry
+
+    got = _round_robins(_plan(registry()[name][0](spark, SF)))
+    n = str(spark.sparkContext.defaultParallelism)
+    assert got == {n: got["scans"], "scans": got["scans"]} and got[n] >= 1
+
+
 def test_pip_join_broadcasts_polygon_index(spark):
     from geotiff_spark.pipeline import doc_pip_join
 
     plan = _plan(doc_pip_join(spark, SF))
     # the polygon index rides an sc.broadcast dict into ONE map-side Python
     # stage: no join node, and the big (documents) side is never
-    # hash-partitioned (the scan's parallelism-restoring round-robin stays)
+    # hash-partitioned
     assert "hashpartitioning" not in plan, plan
     assert "Join" not in plan, plan
     assert plan.count("MapInPandas") == 1, plan

@@ -246,24 +246,19 @@ def test_knn_large_query_set_stays_distributed(spark):
         assert mine == want, (qid, mine, want)
 
 
-def test_load_table_fans_out_documents_and_embeddings_only(spark):
-    """documents and embeddings scan as one partition (one row group) and
-    feed the heavy per-row stages, so load_table fans them out with one
-    round-robin exchange; parallel=False and every other table plan
-    none (orders is one row group too)."""
+def test_load_table_plans_no_exchange(spark):
+    """load_table only reads: documents and embeddings scan as one
+    partition (one row group), as orders does, and none of them plans an
+    exchange. The operators whose per-row work needs the cores fan out
+    their own input (tests/test_plan_shapes.py)."""
     from geotiff_spark.pipeline import load_table
 
     sf = os.path.join(os.path.dirname(SF), "sf0.01")
-
-    def exchanges(df):
+    for name in ("documents", "embeddings", "orders"):
+        df = load_table(spark, sf, name)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.count("Exchange"), plan.count("RoundRobinPartitioning")
-
-    assert spark.sparkContext.master == "local[4]"
-    assert exchanges(load_table(spark, sf, "documents")) == (1, 1)
-    assert exchanges(load_table(spark, sf, "embeddings")) == (1, 1)
-    assert exchanges(load_table(spark, sf, "documents", parallel=False)) == (0, 0)
-    assert exchanges(load_table(spark, sf, "orders")) == (0, 0)
+        assert df.rdd.getNumPartitions() == 1, name
+        assert "Exchange" not in plan, (name, plan)
 
 
 def test_knn_matches_bruteforce(spark):

@@ -45,6 +45,12 @@ ALLOWED_PARAMS = {
     "jpeg.encode_jpeg_multiscan.quality": "spans the multi-scan test corpus",
     "jpeg.encode_jpeg_multiscan.subsampling":
         "spans the multi-scan test corpus",
+    "salting.salted_join.n_salt":
+        "plans/salting.py is to be replaced by per-raster replication",
+    "salting.salted_join.hot":
+        "plans/salting.py is to be replaced by per-raster replication",
+    "salting.salted_join.salt_source":
+        "plans/salting.py is to be replaced by per-raster replication",
 }
 CALLERS = [REPO / "bench.py", REPO / "__spark_entry__.py",
            *(REPO / "scripts").glob("*.py")]
@@ -88,31 +94,125 @@ def test_every_public_definition_is_reached():
 
 def _defaults(fn: ast.FunctionDef) -> tuple[list[str], dict[str, str]]:
     """A def's positional parameter names and its defaulted parameters'
-    default source."""
+    default value."""
     a = fn.args
     pos = [x.arg for x in a.posonlyargs + a.args]
-    dflt = dict(zip(pos[len(pos) - len(a.defaults):],
-                    map(ast.unparse, a.defaults)))
-    dflt |= {x.arg: ast.unparse(d)
+    dflt = {p: _literal(d) or ast.unparse(d)
+            for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    dflt |= {x.arg: _literal(d) or ast.unparse(d)
              for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
     return pos, dflt
 
 
+def _literal(node: ast.AST, immutable: bool = False) -> str | None:
+    """The value of an expression built from literals alone (`4`,
+    `1 << 22`, `("url",)`, `[1, 2]`), as its repr; None for anything
+    else, and with `immutable` for a list, dict or set too (one bound to
+    a name may be filled before it is passed)."""
+    if any(isinstance(n, (ast.Name, ast.Attribute, ast.Call, ast.Lambda))
+           for n in ast.walk(node)):
+        return None
+    try:
+        value = eval(compile(ast.Expression(node), "<arg>", "eval"),
+                     {"__builtins__": {}})
+        if immutable:
+            hash(value)
+    except Exception:
+        return None
+    return repr(value)
+
+
+def _bindings(body: list[ast.stmt]) -> dict[str, str | None]:
+    """Names a scope binds: to a literal's value when it binds the name
+    once, to `x = <literal>` or `x, y = <literal>, <literal>`; to None
+    when it binds it any other way (a parameter, a loop target, an
+    import, a second assignment). Nested defs are scopes of their own."""
+    out: dict[str, str | None] = {}
+
+    def bind(name: str, value: ast.AST | None) -> None:
+        out[name] = (None if name in out or value is None
+                     else _literal(value, immutable=True))
+
+    todo = list(body)
+    while todo:
+        n = todo.pop()
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                          ast.ClassDef)):
+            bind(n.name, None)
+            continue
+        if isinstance(n, ast.Assign):
+            for t in n.targets:
+                if isinstance(t, ast.Name):
+                    bind(t.id, n.value)
+                elif (isinstance(t, ast.Tuple) and isinstance(n.value, ast.Tuple)
+                      and len(t.elts) == len(n.value.elts)):
+                    for te, ve in zip(t.elts, n.value.elts):
+                        if isinstance(te, ast.Name):
+                            bind(te.id, ve)
+                        else:
+                            todo.append(te)
+                else:
+                    todo.append(t)
+            todo.append(n.value)
+            continue
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+            bind(n.id, None)
+        elif isinstance(n, ast.alias):
+            bind((n.asname or n.name).split(".")[0], None)
+        elif isinstance(n, ast.arg):
+            bind(n.arg, None)
+        todo.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def _calls(tree: ast.Module):
+    """(call, resolve) for every call in a module, where resolve maps an
+    argument to its literal value: a literal itself, or a name the
+    innermost scope that binds it binds to one literal."""
+    def walk(node, scopes):
+        for child in ast.iter_child_nodes(node):
+            inner = scopes
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.Lambda)):
+                body = child.body if isinstance(child.body, list) else []
+                inner = [_bindings([*child.args.posonlyargs, *child.args.args,
+                                    *child.args.kwonlyargs, *body])
+                         | {a.arg: None for a in (child.args.vararg,
+                                                  child.args.kwarg) if a},
+                         *scopes]
+            if isinstance(child, ast.Call):
+                yield child, inner
+            yield from walk(child, inner)
+
+    def resolve(arg: ast.AST, scopes) -> str | None:
+        if isinstance(arg, ast.Name):
+            for scope in scopes:
+                if arg.id in scope:
+                    return scope[arg.id]
+            return None
+        return _literal(arg)
+
+    for call, scopes in walk(tree, [_bindings(tree.body)]):
+        yield call, lambda arg, s=scopes: resolve(arg, s)
+
+
 def test_every_defaulted_parameter_has_a_second_value():
-    """With one value in use, a parameter is a constant. Calls match by
-    name; perfbench naming a parameter keeps it, and a *args/**kwargs call
-    uses every parameter."""
+    """With one value in use, a parameter is a constant. A call that
+    leaves a parameter out passes its default; an argument that is a
+    literal, or a name bound to one literal in its function or module,
+    passes that value; any other argument may pass anything. Calls match
+    by name; perfbench naming a parameter keeps it, and a *args/**kwargs
+    call uses every parameter."""
     funcs = {}
     pkg = _trees(PKG.rglob("*.py"))
     for path, tree in pkg:
         for fn in tree.body:
             if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
                 funcs[fn.name] = (f"{path.stem}.{fn.name}", *_defaults(fn))
-    live = set()
+    live, values = set(), {}
     for perf, trees in ((False, pkg + _trees(CALLERS)),
                         (True, _trees(PERFBENCH))):
-        for call in (n for _, t in trees for n in ast.walk(t)
-                     if isinstance(n, ast.Call)):
+        for call, resolve in (c for _, t in trees for c in _calls(t)):
             name = getattr(call.func, "id", getattr(call.func, "attr", None))
             if name not in funcs:
                 continue
@@ -121,9 +221,15 @@ def test_every_defaulted_parameter_has_a_second_value():
             passed |= {k.arg: k.value for k in call.keywords}
             if None in passed or any(isinstance(a, ast.Starred)
                                      for a in call.args):
-                passed = dict.fromkeys(dflt)
-            live |= {f"{q}.{p}" for p, v in passed.items() if p in dflt
-                     and (perf or v is None or ast.unparse(v) != dflt[p])}
+                live |= {f"{q}.{p}" for p in dflt}
+                continue
+            for p, d in dflt.items():
+                v = resolve(passed[p]) if p in passed else d
+                if perf and p in passed or v is None:
+                    live.add(f"{q}.{p}")
+                else:
+                    values.setdefault(f"{q}.{p}", set()).add(v)
+    live |= {p for p, vs in values.items() if len(vs) > 1}
     params = {f"{q}.{p}" for q, _, dflt in funcs.values() for p in dflt}
     dead = sorted(params - live - set(ALLOWED_PARAMS))
     assert not dead, f"one value in use, make it a constant: {dead}"
