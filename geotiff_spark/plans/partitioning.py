@@ -31,14 +31,10 @@ def ensure_map_parallelism(df: DataFrame) -> DataFrame:
 
     The rule: an operator whose per-row work grows with the length of a
     row's text or vector fans out its own input with this call, at its
-    top; the table loader and the callers never do. The callers are
-    textstats.fingerprint; dedup.minhash_lsh_pairs, simhash_signatures,
-    token_jaccard_pairs, repeated_ngram_mine and exact_substring_dedup;
-    similarity.brute_force_topk and lsh_near_dup_pairs;
-    queries_textdata.chunks_frame and chunk_dedup_frame; and the
-    registry queries that do that work inline (decontaminate, pii_scrub,
-    trigram_lm_score, embedding_near_dups_exact). tests/test_plan_shapes.py
-    pins each; perfbench also calls it on its embeddings corpus.
+    top, once; the table loader and the operator's callers never do.
+    tests/test_plan_shapes.py's FAN_OUT and FAN_OUT_QUERIES list the
+    callers and pin each one's plan; perfbench also calls it on its
+    embeddings corpus.
 
     A small/unsplittable source (one parquet row group) plans as a
     handful of partitions, serializing the stage no matter how many

@@ -716,10 +716,15 @@ def q_chunk_dedup(spark, sf_dir):
 
 
 def chunks_frame(docs):
-    """(doc_id, pos, chunk): the deterministic 10-token chunker shared
-    by chunk_dedup and bloom_chunk_dedup — row-local JVM expressions
-    over the fanned-out docs, no other shuffle."""
-    docs = ensure_map_parallelism(docs)
+    """(doc_id, pos, chunk): the deterministic 10-token chunker that
+    bloom_chunk_dedup and bloom_incremental_frame probe — row-local JVM expressions over the fanned-out
+    docs, no other shuffle."""
+    return _chunk_rows(ensure_map_parallelism(docs))
+
+
+def _chunk_rows(docs):
+    """The chunker's row-local expressions over `docs` as given; the
+    caller owns the fan-out."""
     toks = textstats.tokens(F.col("text"))
     n_chunks = F.ceil(F.size(toks) / F.lit(10)).cast("int")
     # guard: sequence(0, -1) would COUNT DOWN in Spark, not be empty
@@ -754,7 +759,7 @@ def chunk_dedup_frame(docs):
     Chunking and md5 cost grow with text length, so `docs` is fanned out
     first, and both the chunk stream and the final join read it."""
     docs = ensure_map_parallelism(docs)
-    trip = chunks_frame(docs).select(
+    trip = _chunk_rows(docs).select(
         F.md5("chunk").alias("digest"), "doc_id", "pos"
     )
     # the per-digest winners ARE the kept set — collect each doc's

@@ -110,6 +110,24 @@ def test_text_operator_fans_out_its_own_input(spark, name):
     assert got == {"64": got["scans"], "scans": got["scans"]}
 
 
+def test_chunk_dedup_frame_fans_out_once(spark):
+    """chunk_dedup_frame fans out its docs and chunks them with the
+    helper that does not fan out again: asking the partition count of a
+    frame that already holds the round-robin exchange makes AQE run that
+    shuffle while the frame is being built, so building it runs no job."""
+    from geotiff_spark.queries_textdata import chunk_dedup_frame
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert docs.rdd.getNumPartitions() == 1
+    sc.setJobGroup("chunk-fan-out", "chunk_dedup_frame build")
+    try:
+        chunk_dedup_frame(docs)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("chunk-fan-out")) == []
+
+
 def test_lsh_near_dup_pairs_fans_out_its_own_input(spark):
     """lsh_near_dup_pairs checkpoints its bucketed corpus as it builds
     the frame, so its plan reads no scan: the pin is the checkpoint job,
