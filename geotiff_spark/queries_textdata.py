@@ -717,8 +717,8 @@ def q_chunk_dedup(spark, sf_dir):
 
 def chunks_frame(docs):
     """(doc_id, pos, chunk): the deterministic 10-token chunker that
-    bloom_chunk_dedup and bloom_incremental_frame probe — row-local JVM expressions over the fanned-out
-    docs, no other shuffle."""
+    bloom_chunk_dedup and bloom_incremental_frame probe — row-local JVM
+    expressions over the fanned-out docs, no other shuffle."""
     return _chunk_rows(ensure_map_parallelism(docs))
 
 
