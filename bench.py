@@ -4,7 +4,10 @@ $SPARK_GRAFT_CPUS sets (default: the CPUs this process may use).
 
 Every entry is forced with force_all, `--runs` times (default 3), under a
 job group named after it; its figure is the median of its runs, and every
-run is in the record. Prints ONE JSON line:
+run is in the record. After each entry it prints one flushed JSON line
+{"name": ..., "runs": [sec, ...], "rows": ...} of its own to stderr, so a
+stopped run keeps the figures of its finished entries. At the end it
+prints ONE JSON line to stdout:
   {"metric": "...", "value": <sum of the suite entries' medians>,
    "unit": "sec", "queries": {suite entry: median sec},
    "diagnostics": {diagnostic entry: median sec},
@@ -309,6 +312,11 @@ def run(spark, sf_dir: str, only: list[str] | None = None,
         all_runs[name] = times
         (queries if in_total else diagnostics)[name] = round(
             statistics.median(times), 3)
+        # the leading newline: Spark's console progress bar clears its
+        # line without ending it
+        print("\n" + json.dumps({"name": name, "runs": times,
+                                 "rows": counts[name]}),
+              file=sys.stderr, flush=True)
 
     steady_n = n_pages(sf_dir, True)
     bign = queries.get("pages_e2e_bign")

@@ -6,23 +6,29 @@ lookups become one vectorized gather ``data[(floor(ry)*w + floor(rx))*spp +
 s]`` per Arrow batch (SURVEY.md §1.3). Out-of-bounds → NULL (reference:
 None).
 
-Scale shape (SURVEY.md §4.3): rasters are ALWAYS decoded on executors
-(sources/rasters.py binaryFile → mapInPandas). A cheap header-only probe
-(no pixel decode) sizes the decoded corpus, then:
+Scale shape (SURVEY.md §4.3): rasters are ALWAYS decoded on executors. A
+cheap header-only probe (no pixel decode) sizes the decoded corpus, then:
 
-- ``broadcast`` branch (corpus ≤ the size guard): decoded records are
-  collected once and broadcast; sampling is a zero-shuffle ``arrow_udf``.
-- ``copartition`` branch (corpus above the guard): points shuffle by
-  raster_id, each decoded raster row ships once, and the same gather
-  kernel runs group-locally inside a cogroup ``applyInArrow`` — the pixel
-  data never transits the driver, and per-raster work scales with
+- ``broadcast`` branch (corpus ≤ the size guard): rasters decode in
+  sources/rasters.py (binaryFile → mapInPandas), the records are
+  collected once and broadcast, and sampling is a zero-shuffle
+  ``arrow_udf``.
+- ``copartition`` branch (corpus above the guard): points are hashed by
+  raster_id and sorted within each partition; an iterator ``arrow_udf``
+  decodes each raster straight from its path when the sorted run of
+  raster_ids reaches it. Only the paths leave the driver: a task holds
+  one decoded raster at a time and decodes it once, the pixels never
+  cross a shuffle or reach the driver, and per-raster work scales with
   executors.
 
-Both hand Python pyarrow data, not pandas frames, and sample NULL out of
-bounds, on an unknown raster_id and on a NaN pixel.
+Both hand Python pyarrow data, not pandas frames, run the same per-batch
+gather (:func:`_sample_batch`), and sample NULL out of bounds, on an
+unknown raster_id and on a NaN pixel.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -30,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import arrow_udf, pandas_udf
-from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from geotiff_spark.functions import transforms as tf
 from geotiff_spark.functions.geotiff import read_geotiff
@@ -82,20 +88,24 @@ def _duplicate_basename(rid: str) -> ValueError:
     )
 
 
-def _add_record(records: dict, rid: str, rec: dict) -> None:
+def _add_record(records: dict, rid: str, rec) -> None:
     if rid in records:
         raise _duplicate_basename(rid)
     records[rid] = rec
 
 
+def _decode_failed(rid: str, error: str) -> RuntimeError:
+    """Both sampling modes fail with this error on a raster that does not
+    decode — a silently missing raster would turn into all-NULL samples
+    downstream."""
+    return RuntimeError(f"raster decode failed for {rid!r}: {error}")
+
+
 def _row_record(r) -> dict:
-    """One rasters-DataFrame row (a ``Row`` or an Arrow ``to_pylist``
-    dict) → sampling record. Raises on an error row — a silently missing
-    raster would turn into all-NULL samples downstream."""
+    """One rasters-DataFrame ``Row`` → sampling record. Raises on an
+    error row."""
     if r["error"] is not None:
-        raise RuntimeError(
-            f"raster decode failed for {r['raster_id']}: {r['error']}"
-        )
+        raise _decode_failed(r["raster_id"], r["error"])
     return {
         "width": r["width"],
         "height": r["height"],
@@ -110,6 +120,22 @@ def _row_record(r) -> dict:
             r["extent"]["maxx"], r["extent"]["maxy"],
         ),
         "data": bytes(r["data"]),
+    }
+
+
+def _file_record(path: str) -> dict:
+    """Decode one GeoTIFF file → sampling record."""
+    with open(path, "rb") as fh:
+        rec = read_geotiff(fh.read())
+    return {
+        "width": rec["width"],
+        "height": rec["height"],
+        "num_samples": rec["num_samples"],
+        "dtype": str(rec["array"].dtype),
+        "transform": rec["transform"],
+        "raster_type": rec["raster_type"],
+        "extent": rec["extent"],
+        "data": rec["array"].tobytes(),
     }
 
 
@@ -129,24 +155,13 @@ def load_raster_records(paths: list[str]) -> dict[str, dict]:
     """Driver-side decode of a raster set → broadcastable records.
 
     Test/oracle path only (and the shape contract for the records dict):
-    production queries go through :func:`load_raster_records_distributed`,
-    which produces the identical records via the executor-side decode.
+    production queries decode on executors, through
+    :func:`load_raster_records_distributed` (identical records) or the
+    copartition branch's per-file :func:`_file_record`.
     """
     records = {}
     for p in paths:
-        with open(p, "rb") as fh:
-            rec = read_geotiff(fh.read())
-        rid = p.rsplit("/", 1)[-1]
-        _add_record(records, rid, {
-            "width": rec["width"],
-            "height": rec["height"],
-            "num_samples": rec["num_samples"],
-            "dtype": str(rec["array"].dtype),
-            "transform": rec["transform"],
-            "raster_type": rec["raster_type"],
-            "extent": rec["extent"],
-            "data": rec["array"].tobytes(),
-        })
+        _add_record(records, p.rsplit("/", 1)[-1], _file_record(p))
     return records
 
 
@@ -226,6 +241,29 @@ def _total_decoded_bytes(spark: SparkSession, paths: list[str]) -> int:
     return _cache_put(_SIZES_CACHE, key, total)
 
 
+def _sample_batch(
+    record: Callable[[str], dict | None],
+    raster_id: pa.Array, x: pa.Array, y: pa.Array, strict: bool,
+) -> pa.Array:
+    """One Arrow batch of (raster_id, x, y) → double values. Looks each
+    distinct raster_id up once, in order of first appearance, through
+    `record` (None: unknown raster → NULL); NULL out of bounds and on a
+    NaN pixel."""
+    xs = x.to_numpy(zero_copy_only=False)
+    ys = y.to_numpy(zero_copy_only=False)
+    out = np.full(len(xs), np.nan)
+    rids = raster_id.dictionary_encode()
+    codes = rids.indices.fill_null(-1).to_numpy()
+    for code, rid in enumerate(rids.dictionary.to_pylist()):
+        rec = record(rid)
+        if rec is None:
+            continue
+        mask = codes == code
+        vals, valid = _gather(rec, xs[mask], ys[mask], strict)
+        out[mask] = np.where(valid, vals, np.nan)
+    return pa.array(out, mask=np.isnan(out))
+
+
 def sample_udf(spark: SparkSession, records: dict[str, dict],
                strict: bool = True):
     """Arrow UDF (raster_id, x, y) → double value: NULL out of bounds,
@@ -236,20 +274,7 @@ def sample_udf(spark: SparkSession, records: dict[str, dict],
 
     @arrow_udf("double")
     def sample_value(raster_id: pa.Array, x: pa.Array, y: pa.Array) -> pa.Array:
-        recs = bc.value
-        xs = x.to_numpy(zero_copy_only=False)
-        ys = y.to_numpy(zero_copy_only=False)
-        out = np.full(len(xs), np.nan)
-        rids = raster_id.dictionary_encode()
-        codes = rids.indices.fill_null(-1).to_numpy()
-        for code, rid in enumerate(rids.dictionary.to_pylist()):
-            rec = recs.get(rid)
-            if rec is None:
-                continue
-            mask = codes == code
-            vals, valid = _gather(rec, xs[mask], ys[mask], strict)
-            out[mask] = np.where(valid, vals, np.nan)
-        return pa.array(out, mask=np.isnan(out))
+        return _sample_batch(bc.value.get, raster_id, x, y, strict)
 
     # deterministic in fact; marked otherwise so a downstream filter on
     # the sampled value (e.g. zonal_mode's isNotNull) cannot inline the
@@ -260,44 +285,53 @@ def sample_udf(spark: SparkSession, records: dict[str, dict],
 
 def sample_join_copartitioned(
     df: DataFrame,
-    rasters: DataFrame,
+    raster_paths: list[str],
     raster_id: Column,
     strict: bool = True,
 ) -> DataFrame:
-    """Sampling join for raster corpora too large to broadcast: cogroup
-    (x, y) points (shuffled by raster_id) with the decoded rasters
-    DataFrame (each raster row ships once), and run the same vectorized
-    gather group-locally into column `value`. The pixel data never
-    touches the driver."""
-    point_cols = [f.name for f in df.schema.fields]
-    out_schema = StructType(df.schema.fields + [StructField("value", DoubleType())])
-    pts = df.withColumn("__rid", raster_id)
-    r = rasters.select(
-        "raster_id", "width", "height", "num_samples", "dtype",
-        "transform", "raster_type", "extent", "data", "error",
-    )
+    """Sampling join for raster corpora too large to broadcast: hash the
+    (x, y) points by raster_id, sort each partition by it, and attach
+    column `value` with an iterator Arrow UDF that decodes each raster
+    from its path on the executor when the sorted run reaches it. Only
+    the basename → path map ships with the UDF: a task holds one decoded
+    raster at a time and decodes it once, and the pixels never cross a
+    shuffle or reach the driver. A raster no point names is never read.
 
-    def kernel(_key: tuple, points: pa.Table, raster: pa.Table) -> pa.Table:
-        res = points.select(point_cols)
-        if raster.num_rows == 0:  # unknown raster_id → NULL, like broadcast
-            return res.append_column("value", pa.nulls(res.num_rows, pa.float64()))
-        if raster.num_rows > 1:
-            raise _duplicate_basename(raster.column("raster_id")[0].as_py())
-        vals, valid = _gather(
-            _row_record(raster.to_pylist()[0]),
-            points.column("x").to_numpy(), points.column("y").to_numpy(),
-            strict,
-        )
-        vals = vals.astype(np.float64)
-        return res.append_column(
-            "value", pa.array(vals, mask=~valid | np.isnan(vals))
-        )
+    Raises on the driver on a duplicate basename; a raster that does not
+    decode fails the task with the broadcast branch's error."""
+    paths: dict[str, str] = {}
+    for p in raster_paths:
+        _add_record(paths, p.rsplit("/", 1)[-1], p)
 
-    # cogroup pairs the two sides' keys by position, not by name
+    @arrow_udf("double")
+    def sample_value(
+        batches: Iterator[tuple[pa.Array, pa.Array, pa.Array]],
+    ) -> Iterator[pa.Array]:
+        held: dict[str, dict | None] = {}  # the sorted run's raster
+
+        def record(rid: str) -> dict | None:
+            if rid not in held:
+                held.clear()
+                path = paths.get(rid)
+                try:
+                    held[rid] = None if path is None else _file_record(path)
+                except Exception as exc:
+                    raise _decode_failed(
+                        rid, f"{type(exc).__name__}: {exc}") from exc
+            return held[rid]
+
+        for raster_ids, x, y in batches:
+            yield _sample_batch(record, raster_ids, x, y, strict)
+
+    key = "__rid"
     return (
-        pts.groupBy("__rid")
-        .cogroup(r.groupBy("raster_id"))
-        .applyInArrow(kernel, schema=out_schema)
+        df.withColumn(key, raster_id)
+        .repartition(key)
+        .sortWithinPartitions(key)
+        # nondeterministic for the reason sample_udf gives
+        .withColumn("value", sample_value.asNondeterministic()(
+            F.col(key), F.col("x"), F.col("y")))
+        .drop(key)
     )
 
 
@@ -326,10 +360,7 @@ def with_raster_sample(
         udf = sample_udf(spark, records, strict)
         return df.withColumn("value", udf(rid_col, F.col("x"), F.col("y")))
     if mode == "copartition":
-        from geotiff_spark.sources.rasters import read_rasters
-
-        rasters = read_rasters(spark, list(raster_paths), glob="*")
-        return sample_join_copartitioned(df, rasters, rid_col, strict)
+        return sample_join_copartitioned(df, raster_paths, rid_col, strict)
     raise ValueError(f"unknown sampling mode {mode!r}")
 
 

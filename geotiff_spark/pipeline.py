@@ -86,7 +86,9 @@ def flagship_sampled(
     austrian coverage raster. Shared by zonal_stats and zonal_mode.
     sample_mode passes through to with_raster_sample ('auto' broadcasts
     here — the corpus is tiny; 'copartition' forces the large-corpus
-    branch, driver-gated by zonal_stats_copart)."""
+    branch, driver-gated by zonal_stats_copart: the points are hashed by
+    raster_id and the raster is decoded from its path on the executors,
+    so its pixels never reach the driver)."""
     hits = doc_pip_join(spark, sf_dir)
     proj = laea_udf()
     hits = hits.withColumn("xy", proj(F.col("lon"), F.col("lat")))

@@ -84,11 +84,11 @@ def q_zonal_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zonal_stats_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship zonal stats THROUGH THE LARGE-CORPUS SAMPLING BRANCH:
-    with_raster_sample(mode='copartition') — points cogrouped with the
-    executor-decoded raster rows, no broadcast, pixels never on the
-    driver (operators/sample.py, round 4). Shares zonal_stats' exact
-    oracle, so the driver pins both branches of the size guard to the
-    same semantics."""
+    with_raster_sample(mode='copartition') — points hashed by raster_id,
+    the raster decoded from its path on the executors, no broadcast,
+    pixels never on the driver (operators/sample.py). Shares zonal_stats'
+    exact oracle, so the driver pins both branches of the size guard to
+    the same semantics."""
     from geotiff_spark.operators import sample as smp
 
     sampled = pipeline.flagship_sampled(spark, sf_dir, sample_mode="copartition")

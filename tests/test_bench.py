@@ -1,8 +1,10 @@
 """bench.run: every run of every selected entry is in the record, each
-entry's figure is the median of its runs, and --only names are checked."""
+entry's figure is the median of its runs, each finished entry's runs are
+also printed to stderr at once, and --only names are checked."""
 
 from __future__ import annotations
 
+import json
 import statistics
 
 import pytest
@@ -12,10 +14,16 @@ import bench
 SF = "/root/testdata/sf0.01"
 
 
-def test_run_records_every_run_and_medians(spark):
+def test_run_records_every_run_and_medians(spark, capsys):
     # two cheap suite entries, and a registry query outside the table
     names = ["global_topk", "exact_dedup", "train_split"]
     record = bench.run(spark, SF, only=names, runs=2)
+
+    # one partial line per finished entry, in run order, on stderr
+    partial = [json.loads(line) for line in
+               capsys.readouterr().err.splitlines() if line.startswith("{")]
+    assert partial == [{"name": n, "runs": record["runs"][n],
+                        "rows": record["row_counts"][n]} for n in names]
 
     assert sorted(record["runs"]) == sorted(names)
     for name in names:

@@ -242,21 +242,28 @@ def test_focal_stats_assembles_in_arrow(spark, tiny_raster_dir):
 
 
 def test_sampling_kernels_are_arrow_udfs(spark, tiny_raster_dir):
-    """Copartition sampling cogroups in Arrow; the broadcast gather is a
-    scalar Arrow UDF."""
+    """Copartition sampling hashes the points by raster key, sorts each
+    partition by it and runs one iterator Arrow UDF that reads the
+    rasters from their paths: no cogroup, no binaryFile scan and no
+    raster-side shuffle. The broadcast gather is a scalar Arrow UDF."""
     from pyspark.util import PythonEvalType
 
     from geotiff_spark.operators.sample import (
         sample_join_copartitioned, sample_udf,
     )
-    from geotiff_spark.sources.rasters import read_rasters
 
-    pts = spark.createDataFrame([(0, 1.5, 1.5)], "pid long, x double, y double")
+    pts = spark.createDataFrame(
+        [(0, "t.tif", 1.5, 1.5)], "pid long, rid string, x double, y double"
+    )
     plan = _plan(sample_join_copartitioned(
-        pts, read_rasters(spark, tiny_raster_dir), F.lit("t.tif")
+        pts, [f"{tiny_raster_dir}/t.tif"], F.col("rid")
     ))
-    assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
-    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning(__rid") == 1, plan
+    assert plan.index("Sort [__rid") < plan.index("Exchange"), plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "CoGroup" not in plan, plan
+    assert "binaryfile" not in plan.lower(), plan
     assert sample_udf(spark, {}).evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
 
 
